@@ -36,7 +36,9 @@ def _cpu_ticks() -> tuple[int, int] | None:
             parts = fh.readline().split()
         vals = [int(x) for x in parts[1:]]
         steal = vals[7] if len(vals) > 7 else 0
-        return steal, sum(vals)
+        # guest and guest_nice (fields 9-10) are already counted inside user
+        # and nice, so the total stops at steal.
+        return steal, sum(vals[:8])
     except (OSError, ValueError, IndexError):
         return None
 

@@ -82,7 +82,8 @@ def ledger_new_entries(
 ) -> DataFrame:
     """K4 ledger append rows for events that passed the gate:
     ``(pk, seenAt, expiresAt=now+ttl)`` (ledger.repo.ts:5-35). Caller appends
-    to the ledger table (single-writer; Delta MERGE is the concurrent answer).
+    to the ledger table (single-writer; :func:`ledger_update_atomic` is the
+    concurrent-writer path).
     """
     return survivors.select(
         F.col(key_col).alias("pk"),
@@ -102,11 +103,13 @@ def bloom_words(
     set bits. Only words with at least one set bit appear; the bitmap never
     exists as a single object on any node.
 
-    Each key sets ``num_hashes`` bits at ``xxhash64(key, i) mod num_bits``
-    (identical hashing to :func:`bloom_build` — the two encodings are
-    interchangeable views of the same filter). One shuffle, sized by the
-    KEY table (num_hashes position rows per key), never by the events that
-    will probe it. No UDF anywhere.
+    Each key sets ``num_hashes`` bits at ``xxhash64(key, i) mod num_bits``;
+    ``num_bits`` is rounded UP to a multiple of 64 (the bitmap is long
+    words), and :func:`bloom_maybe_flag_bucketed` applies the same rounding,
+    so build and probe always agree. Size as ``num_bits ≈ 1.44·n·log2(1/fpp)``
+    for n expected keys. One shuffle, sized by the KEY table (num_hashes
+    position rows per key), never by the events that will probe it. No UDF
+    anywhere.
     """
     num_bits = ((num_bits + 63) // 64) * 64
     pos = keys.select(
@@ -131,118 +134,6 @@ def bloom_words(
     )
 
 
-def bloom_build(
-    keys: DataFrame,
-    key_col: str = "pk",
-    num_bits: int = 1 << 16,
-    num_hashes: int = 7,
-) -> list[int]:
-    """Build a Bloom-filter bitmap over ``keys`` distributedly; return it as
-    ``num_bits/64`` longs (driver-sized BY DESIGN — the default 64 Kbit is
-    8 KB; size as ``num_bits ≈ 1.44·n·log2(1/fpp)`` for n expected keys).
-
-    The distributed word aggregation is :func:`bloom_words`; this merely
-    densifies its ≤ num_bits/64 rows into the literal-encoding list —
-    exactly like broadcasting IVF centroids. Past
-    ``MAX_BLOOM_LITERAL_BITS`` skip this densification entirely and keep
-    the word table distributed (:func:`bloom_maybe_flag_bucketed`).
-
-    ``num_bits`` is rounded UP to a multiple of 64 (the bitmap is long
-    words); :func:`bloom_maybe_flag` derives the modulus from the bitmap
-    length, so build and probe always agree.
-    """
-    num_bits = ((num_bits + 63) // 64) * 64
-    words = bloom_words(keys, key_col, num_bits, num_hashes).collect()
-    dense = [0] * (num_bits // 64)
-    for r in words:
-        dense[r["w"]] = r["bits"]
-    return dense
-
-
-# Largest bitmap bloom_maybe_flag will embed in the plan: 2^26 bits = 8 MiB
-# bitmap = a 16 MiB hex literal. Past this the plan itself (serialization,
-# analysis, task-binary broadcast) becomes the bottleneck — the loud error
-# below names the alternatives instead of letting plan construction hang.
-MAX_BLOOM_LITERAL_BITS = 1 << 26
-
-
-def bloom_maybe_flag(
-    df: DataFrame,
-    bitmap: list[int],
-    key_col: str,
-    num_hashes: int = 7,
-    flag_col: str = "__bloom_maybe",
-) -> DataFrame:
-    """Add ``flag_col``: True iff ``key_col`` MIGHT be in the Bloom set
-    (never a false negative).
-
-    The bitmap rides the plan as ONE BINARY literal probed with byte-indexed
-    ``substr`` from a single ``aggregate`` expression — never as a per-row
-    column and never as a character-indexed string. All three rejected
-    encodings failed at scale for different, measured reasons:
-    - a word-per-expression ``array(lit, lit, …)`` creates num_bits/64
-      literal expressions and stops ANALYZING long before the 8 KB-default
-      story breaks (a 10^9-bit sizing would mean ~15M expressions);
-    - ``withColumn("__hex", lit(hex))`` carries the whole bitmap IN EVERY
-      ROW through subsequent projections (UnsafeRow writers memcpy it);
-    - probing a hex STRING literal is O(bitmap) PER PROBE even when the
-      literal stays out of the rows, because SQL ``substring`` on strings is
-      character-indexed and ``UTF8String.substringSQL`` walks the bytes to
-      find char offsets — measured 2.3 s → 11.9 s → 88.9 s for the same
-      500k-row probe as the bitmap grows 2^16 → 2^19 → 2^22 bits.
-    Binary ``substr`` is byte-indexed and O(1), so the probe cost is flat in
-    bitmap size; the 1-byte slice round-trips through hex()/conv() to an
-    int, and the bit test uses floor-division by 2^(p%8) (exact for byte
-    values ≤ 255) because variable-distance ``shiftright`` is not reachable
-    through the column API inside a lambda.
-
-    Sizings beyond ``MAX_BLOOM_LITERAL_BITS`` (2^26 bits ≈ 7M keys at 1%
-    fpp) raise: at that scale the bitmap ships as a broadcast word table
-    instead (:func:`bloom_maybe_flag_bucketed` — :func:`ledger_gate_bloom`
-    dispatches there automatically), or skip the pre-gate — the exact
-    anti-join (ledger_gate) with AQE is the honest fallback, never a
-    multi-hundred-MB plan literal.
-    """
-    num_bits = 64 * len(bitmap)
-    if num_bits > MAX_BLOOM_LITERAL_BITS:
-        raise ValueError(
-            f"Bloom bitmap is {num_bits} bits ({num_bits // (8 << 20)} MiB); "
-            f"embedding more than MAX_BLOOM_LITERAL_BITS="
-            f"{MAX_BLOOM_LITERAL_BITS} as a plan literal makes plan "
-            "construction/serialization the bottleneck. Use "
-            "bloom_maybe_flag_bucketed (broadcast word-table probe; "
-            "ledger_gate_bloom dispatches there automatically), or the "
-            "exact ledger_gate anti-join."
-        )
-    packed = b"".join(
-        (int(w) & ((1 << 64) - 1)).to_bytes(8, "little") for w in bitmap
-    )
-    bin_lit = F.lit(packed)
-    positions = F.array(
-        *[
-            F.pmod(F.xxhash64(F.col(key_col), F.lit(i)), F.lit(num_bits))
-            for i in range(num_hashes)
-        ]
-    )
-
-    def bit_set(p: Column) -> Column:
-        # byte p//8 of the packed little-endian bitmap holds bit p%8.
-        byte = F.conv(
-            F.hex(bin_lit.substr((p / 8).cast("int") + 1, F.lit(1))), 16, 10
-        ).cast("int")
-        return (
-            F.floor(byte / F.pow(F.lit(2.0), F.pmod(p, F.lit(8)).cast("double")))
-            .cast("int")
-            % 2
-            == 1
-        )
-
-    maybe = F.aggregate(
-        positions, F.lit(True), lambda acc, p: acc & bit_set(p)
-    )
-    return df.withColumn(flag_col, maybe)
-
-
 def bloom_maybe_flag_bucketed(
     df: DataFrame,
     words: DataFrame,
@@ -251,40 +142,25 @@ def bloom_maybe_flag_bucketed(
     num_hashes: int = 7,
     flag_col: str = "__bloom_maybe",
 ) -> DataFrame:
-    """Beyond-guard Bloom probe: the bitmap stays the DISTRIBUTED
-    ``(w, bits)`` word table from :func:`bloom_words` and each of the
-    ``num_hashes`` probes is one broadcast equi-join on word index — the
-    switch :func:`bloom_maybe_flag`'s guard prescribes, implemented.
+    """Add ``flag_col``: True iff ``key_col`` MIGHT be in the Bloom set
+    (never a false negative). The bitmap stays the DISTRIBUTED ``(w, bits)``
+    word table from :func:`bloom_words` and each of the ``num_hashes``
+    probes is one broadcast equi-join on word index.
 
-    Why this shape at 100 TB: the literal encoding ships the WHOLE bitmap
-    inside the serialized plan (fine to ~8 MiB, pathological at 100 MiB);
-    here the word table rides an ordinary broadcast (~16 bytes per set
-    word — a 2^30-bit / 112M-key bitmap is a 256 MB broadcast, executor
-    memory not plan bytes), probes stay map-side (no shuffle of the probed
-    events; left 1:≤1 joins on the UNIQUE word index preserve row
-    multiplicity), and a word absent from the table is a zero word — the
-    COALESCE(false) arm — so false negatives remain impossible. The
-    variable-distance bit test uses SQL ``shiftright(bits, pos % 64)``,
-    reachable through ``F.expr`` (only the column-API-inside-lambda form
-    is not, per :func:`bloom_maybe_flag`'s docstring).
+    The word table rides an ordinary broadcast (~16 bytes per set word —
+    executor memory, not plan bytes); probes stay map-side (no shuffle of
+    the probed events; left 1:≤1 joins on the UNIQUE word index preserve
+    row multiplicity), and a word absent from the table is a zero word —
+    the COALESCE(false) arm — so false negatives remain impossible. The
+    variable-distance bit test is SQL ``shiftright(bits, pos % 64)``.
 
     The ``num_hashes`` probe joins all broadcast CANONICALLY-EQUAL
-    subplans — per-probe ``__``-prefixed aliases over the same
-    ``(w, bits)`` word table; plan canonicalization normalizes alias names
-    and expr ids away, so Spark's exchange reuse materializes ONE broadcast
-    and the other k−1 joins read it through ``ReusedExchange``: broadcast
-    traffic is 1× the word table regardless of k, not k×
-    (:func:`tests/test_dedup_gates` pins the single-exchange plan). The
-    per-probe scratch names are load-bearing for CORRECTNESS, not just
-    hygiene: bare ``w``/``bits`` names would silently drop a caller's own
-    ``w`` column and make a caller's ``bits`` ambiguous, and DataFrame-
-    qualified references fail Spark's ambiguous-self-join check once the
-    probe relation appears k times in one tree. The
-    rejected alternative — explode the k probe positions to rows, join
-    once, re-aggregate per event — needs a groupBy over k× the probed
-    events plus a join back (two NEW shuffles of event-scale data, the
-    very thing the pre-gate exists to avoid) and is kept as the measured
-    counterfactual :func:`_bloom_maybe_exploded`.
+    subplans, so Spark's exchange reuse materializes ONE broadcast and the
+    other k−1 joins read it through ``ReusedExchange``: broadcast traffic
+    is 1× the word table regardless of k (tests/test_dedup_gates.py pins
+    the single-exchange plan). Exploding the k probe positions to rows and
+    re-aggregating per event instead needs two event-scale shuffles
+    (measured in SCALE_LADDER.json ``bloom_probe_shapes``).
     """
     num_bits = ((num_bits + 63) // 64) * 64
     # Per-probe __-prefixed scratch names INSIDE the broadcast select keep
@@ -294,8 +170,7 @@ def bloom_maybe_flag_bucketed(
     # DataFrame-qualified refs once the probe relation appears k times in
     # one tree). Exchange reuse is NOT sacrificed: plan canonicalization
     # normalizes alias names and expr ids away, so the k BroadcastExchanges
-    # still canonicalize equal and AQE materializes ONE
-    # (tests/test_dedup_gates.py pins 1 materialized / k−1 ReusedExchange).
+    # still canonicalize equal.
     out = df
     hit_cols: list[str] = []
     for i in range(num_hashes):
@@ -325,57 +200,6 @@ def bloom_maybe_flag_bucketed(
     for h in hit_cols[1:]:
         maybe = maybe & F.col(h)
     return out.withColumn(flag_col, maybe).drop(*hit_cols)
-
-
-def _bloom_maybe_exploded(
-    df: DataFrame,
-    words: DataFrame,
-    num_bits: int,
-    key_col: str,
-    num_hashes: int = 7,
-    flag_col: str = "__bloom_maybe",
-) -> DataFrame:
-    """REJECTED-ALTERNATIVE shape of the beyond-guard probe, kept for the
-    measured comparison (SCALE_LADDER.json ``bloom_probe_shapes``): explode
-    the ``num_hashes`` probe positions to rows, broadcast-join the word
-    table ONCE, re-aggregate ``bool_and`` per event, join the flags back.
-
-    Same result as :func:`bloom_maybe_flag_bucketed` (equality-tested), but
-    the re-aggregation needs a per-row identity
-    (``monotonically_increasing_id`` — plan-internal only: the id never
-    leaves this function, and both its consumers sit in one plan tree so a
-    stage retry recomputes them together), a groupBy over ``num_hashes × n``
-    rows, and an event-scale join back — two shuffles of event-sized data
-    where the production shape has zero. It exists so the shape choice is a
-    measurement, not an opinion.
-    """
-    num_bits = ((num_bits + 63) // 64) * 64
-    with_id = df.withColumn("__brow", F.monotonically_increasing_id())
-    pos = with_id.select(
-        "__brow",
-        F.explode(
-            F.array(
-                *[
-                    F.pmod(F.xxhash64(F.col(key_col), F.lit(i)), F.lit(num_bits))
-                    for i in range(num_hashes)
-                ]
-            )
-        ).alias("__bpos"),
-    ).withColumn("__bw", (F.col("__bpos") / 64).cast("long"))
-    probe = F.broadcast(words.select("w", "bits"))
-    flags = (
-        pos.join(probe, on=pos["__bw"] == probe["w"], how="left")
-        .select(
-            "__brow",
-            F.coalesce(
-                F.expr("(shiftright(bits, CAST(__bpos % 64 AS INT)) & 1) = 1"),
-                F.lit(False),
-            ).alias("__bhit"),
-        )
-        .groupBy("__brow")
-        .agg(F.min("__bhit").alias(flag_col))  # bool AND over the k probes
-    )
-    return with_id.join(flags, on="__brow", how="left").drop("__brow")
 
 
 def anti_join_small_left(
@@ -525,8 +349,8 @@ def probe_volume_estimate(df: DataFrame) -> int | None:
     bytes, from Catalyst's optimized-plan statistics (file-relation sizes
     after pruning). Returns None when the estimate is unavailable or
     meaningless (Spark's sentinel for "unknown" is 8 EiB). Used by
-    ``ledger_gate_bloom(probe="auto")`` to pick the probe encoding without
-    spending a count job on the events side."""
+    :func:`gate_anti_join` to detect the broadcast-flip regime without
+    spending a count job on either side."""
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
@@ -538,24 +362,6 @@ def probe_volume_estimate(df: DataFrame) -> int | None:
     return size
 
 
-# probe="auto" forces the bucketed (word-table) encoding once the probed
-# events exceed this estimated input volume, even when the bitmap would fit
-# the plan literal. De-confounded pricing (SCALE_LADDER.json
-# ["bloom_probe_auto"]: fresh JVM per cell, alternated order, min-of-2)
-# showed the bucketed probe winning BOTH measured extremes — 5.0 vs 5.2 s
-# at 0.5M probed events / 29 MiB scanned (sf1; the r11 re-run — r10's
-# quieter box measured 4.4 vs 5.5, same direction), 53.7 vs 90.1 s at 50M /
-# 2.9 GiB (sf100): the literal's per-row conv(hex(substr)) bit test costs
-# more CPU than the codegen'd hash-join lookup already at half a million
-# rows, and the gap grows without bound with probed volume. The r9
-# assumption that the literal's zero-join setup wins "when the probe side
-# is small" is REFUTED down to 29 MiB, so the threshold sits below that
-# measured win (16 MiB): under it — and when Catalyst can't size the plan
-# at all — the gate is sub-second fixed-cost territory where the literal's
-# simpler zero-join plan is kept for debuggability, not speed.
-AUTO_BUCKETED_PROBE_BYTES = 16 << 20
-
-
 def ledger_gate_bloom(
     events: DataFrame,
     ledger: DataFrame,
@@ -563,103 +369,34 @@ def ledger_gate_bloom(
     now_epoch: int | None = None,
     num_bits: int = 1 << 16,
     num_hashes: int = 7,
-    probe: str = "auto",
-    live: DataFrame | None = None,
 ) -> DataFrame:
     """D3 ledger gate with a Bloom pre-filter — EXACT same result as
     :func:`ledger_gate` (Bloom filters have no false negatives, and every
     "maybe" still goes through the exact anti-join), verified by the same
     oracle.
 
-    Why at 100 TB: the plain gate shuffles EVERY event by ``dedup_key`` for
-    the anti-join (or broadcasts a possibly-large ledger). Here the
-    TTL-pruned ledger folds into an 8 KB bitmap, every event tests it
-    scan-side (pure column expressions inside the scan stage), and only the
-    ~(duplicates + fpp) sliver of events enters the anti-join shuffle —
+    The TTL-pruned ledger folds into the :func:`bloom_words` word table,
+    every event probes it map-side (:func:`bloom_maybe_flag_bucketed`), and
+    only the ~(duplicates + fpp) sliver of events enters the anti-join —
     with a 14-day ledger and ~1% duplicate rate that is a ~50-100× cut in
-    shuffled volume for one cheap extra pass over the batch. The reference's
+    the volume an exact gate would shuffle once the ledger outgrows
+    broadcast, for one extra pass over the batch. The reference's
     DynamoDB-side analog would be a negative cache in front of the
     conditional write.
-
-    Sizings past ``MAX_BLOOM_LITERAL_BITS`` dispatch automatically to the
-    distributed word-table probe (:func:`bloom_maybe_flag_bucketed`) — same
-    filter, no plan literal, no driver densify — so the operator stays
-    scale-safe instead of raising at the ~7M-key boundary the sf100 ladder
-    rung measured (SCALE_LADDER.json ``ledger_gate_crossover.sf100``).
-
-    ``probe`` picks the probe encoding below the guard. The measured rule
-    (SCALE_LADDER.json ``bloom_probe_auto``, fresh-JVM min-of-2 cells): the
-    literal probe's ``conv(hex(substr))`` bit test costs real CPU PER
-    PROBE, while the bucketed probe is a codegen'd hash-join lookup — the
-    bucketed encoding won BOTH measured extremes (5.0 vs 5.2 s at 0.5M
-    probed events on the r11 re-run — r10 measured 4.4 vs 5.5, same
-    direction — and 53.7 vs 90.1 s at 50M, identical survivors). ``"auto"``
-    (default) applies that rule per call: it reads Catalyst's job-free
-    input-size estimate for ``events`` (:func:`probe_volume_estimate`) and
-    forces the word table past ``AUTO_BUCKETED_PROBE_BYTES`` (16 MiB
-    scanned input — below the smallest measured bucketed win) or past
-    ``MAX_BLOOM_LITERAL_BITS``, keeping the plan-literal probe only for
-    tiny or Catalyst-unsizable probe volumes under small filters, where
-    the gate is sub-second either way and the zero-join plan is simpler.
-    When the estimate is unavailable (pure in-memory/streaming plans) auto
-    falls back to the bitmap-size guard alone. ``"bucketed"`` /
-    ``"literal"`` force the encoding (``"literal"`` still raises past the
-    plan-literal guard — that limit protects the driver, not performance);
-    the streaming ledger sink forces bucketed (its pre-gate only pays off
-    on huge batches by construction).
-
-    ``live`` (optional) is a precomputed TTL-filtered live-key DataFrame —
-    one column named ``key_col`` — replacing the internal
-    ``ledger.filter(expiresAt >= now)`` scan. Callers that already
-    materialize the live set for their own purposes (the streaming sink
-    counts it for Bloom sizing every micro-batch) pass it here so the
-    count, the word-table build, and the exact maybe-side re-check share
-    ONE materialization instead of re-scanning the ledger per consumer.
     """
-    if probe not in ("auto", "bucketed", "literal"):
-        raise ValueError(
-            f"probe must be 'auto', 'bucketed' or 'literal', got {probe!r}"
-        )
     if now_epoch is None:
         now_epoch = int(time.time())
-    if live is None:
-        live = ledger.filter(F.col("expiresAt") >= F.lit(now_epoch)).select(
-            F.col("pk").alias(key_col)
-        )
-    rounded_bits = ((num_bits + 63) // 64) * 64
-    if probe == "literal" and rounded_bits > MAX_BLOOM_LITERAL_BITS:
-        raise ValueError(
-            f"probe='literal' with num_bits={num_bits} exceeds "
-            f"MAX_BLOOM_LITERAL_BITS={MAX_BLOOM_LITERAL_BITS}; the literal "
-            "encoding ships the bitmap inside the serialized plan"
-        )
-    if probe == "auto":
-        est = probe_volume_estimate(events)
-        use_bucketed = (
-            rounded_bits > MAX_BLOOM_LITERAL_BITS
-            or (est is not None and est > AUTO_BUCKETED_PROBE_BYTES)
-        )
-    else:
-        use_bucketed = probe == "bucketed" or rounded_bits > MAX_BLOOM_LITERAL_BITS
-    if use_bucketed:
-        # Beyond the plan-literal guard the bitmap stays distributed: word
-        # table + broadcast-join probes (bloom_maybe_flag_bucketed). Same
-        # filter, same no-false-negative contract, no driver densify.
-        words = bloom_words(live, key_col, num_bits, num_hashes)
-        flagged = bloom_maybe_flag_bucketed(
-            events, words, num_bits, key_col, num_hashes
-        )
-    else:
-        bitmap = bloom_build(live, key_col, num_bits, num_hashes)
-        flagged = bloom_maybe_flag(events, bitmap, key_col, num_hashes)
+    live = ledger.filter(F.col("expiresAt") >= F.lit(now_epoch)).select(
+        F.col("pk").alias(key_col)
+    )
+    words = bloom_words(live, key_col, num_bits, num_hashes)
+    flagged = bloom_maybe_flag_bucketed(events, words, num_bits, key_col, num_hashes)
     clean = flagged.filter(~F.col("__bloom_maybe")).drop("__bloom_maybe")
     maybe = flagged.filter(F.col("__bloom_maybe")).drop("__bloom_maybe")
     # The maybe-side exact re-check goes through the same flip-regime
-    # selector as every other gate join (r14 self-review): the maybe
-    # sliver is duplicates+fpp — tiny by construction — so a pruned
-    # just-under-threshold live ledger would otherwise be hash-built
-    # here too. Filtered-plan estimates are often unavailable, in which
-    # case the plain shape stands as before.
+    # selector as every other gate join: the maybe sliver is tiny by
+    # construction, so a pruned just-under-threshold live ledger would
+    # otherwise be hash-built here too.
     return clean.unionByName(gate_anti_join(maybe, live, key_col))
 
 
@@ -671,11 +408,8 @@ class LedgerLock:
     concurrent gate+append cycles could both see a key as new and both mark
     it. This lock serializes whole cycles via atomic ``O_CREAT|O_EXCL`` file
     creation (POSIX-atomic, works on shared filesystems that honor O_EXCL).
-    A stale lock (holder died) is broken after ``stale_sec``.
-
-    On a Delta-capable cluster, prefer ``MERGE ... WHEN NOT MATCHED INSERT``
-    per key instead — the lock is the dependency-free answer for plain
-    parquet storage.
+    A stale lock (holder died) is broken after ``stale_sec``. This lock is
+    the engine's one concurrent-writer mechanism for the ledger.
     """
 
     def __init__(self, ledger_path: str, timeout_sec: float = 60.0, stale_sec: float = 300.0):
@@ -865,151 +599,6 @@ def ledger_update_atomic(
         new_entries = ledger_new_entries(survivors, seen_at, key_col, ttl_days)
         append_ledger(new_entries, ledger_path)
     return survivors
-
-
-def merge_capable(spark, ledger_table: str | None = None) -> bool:
-    """Capability probe: can this session run row-level ``MERGE INTO``
-    against ``ledger_table``? Two conditions, both required:
-
-    1. A Delta Lake or Apache Iceberg session extension is loaded (Spark's
-       built-in parquet/in-memory catalogs cannot MERGE).
-    2. When ``ledger_table`` is given, the TABLE ITSELF is a delta/iceberg
-       table (``DESCRIBE EXTENDED`` Provider row) — a parquet-provider table
-       living in a Delta-extended session would fail at MERGE time, so the
-       session check alone is not sufficient. A missing table is likewise
-       not MERGE-capable (MERGE requires an existing target).
-
-    NOTE (sandbox): neither delta-spark nor an Iceberg runtime jar is
-    available in this environment and dependency installs are disallowed, so
-    the MERGE branch of :func:`ledger_update_auto` is probe-covered and
-    SQL-text tested here, but executed end-to-end only on a cluster that
-    ships one of those formats. The fallback lock path is fully tested.
-    """
-    exts = spark.conf.get("spark.sql.extensions", "") or ""
-    if (
-        "io.delta.sql.DeltaSparkSessionExtension" not in exts
-        and "IcebergSparkSessionExtensions" not in exts
-    ):
-        return False
-    if ledger_table is None:
-        return True
-    return table_provider(spark, ledger_table) in ("delta", "iceberg")
-
-
-def table_provider(spark, table: str) -> str:
-    """The catalog provider of ``table`` (``"parquet"``, ``"delta"``, ...),
-    lower-cased, from the ``DESCRIBE EXTENDED`` Provider row; ``""`` when the
-    table does not exist or reports no provider."""
-    try:
-        rows = spark.sql(f"DESCRIBE EXTENDED {table}").collect()
-    except Exception:
-        return ""
-    return next(
-        (
-            (r["data_type"] or "").strip().lower()
-            for r in rows
-            if (r["col_name"] or "").strip().lower() == "provider"
-        ),
-        "",
-    )
-
-
-def ledger_merge_sql(
-    ledger_table: str, source_view: str, now_epoch: int
-) -> str:
-    """The K4 conditional-write cycle as one ``MERGE`` statement for a
-    Delta/Iceberg ledger table (reference analog: DynamoDB
-    ``attribute_not_exists(pk)`` conditional put, ledger.repo.ts:16-27).
-
-    Claim-then-verify shape: every candidate key carries the writer's run id;
-    ``WHEN NOT MATCHED`` inserts the claim, ``WHEN MATCHED AND expired``
-    reclaims a TTL-dead key (DynamoDB TTL semantics). The table format's
-    optimistic concurrency serializes conflicting commits, so for any pk
-    exactly ONE writer's ``writer_id`` lands — afterwards each writer reads
-    back the ledger and keeps only events whose key it actually won
-    (:func:`ledger_update_auto`). No external lock required.
-    """
-    return f"""
-MERGE INTO {ledger_table} AS l
-USING {source_view} AS s
-ON l.pk = s.pk
-WHEN MATCHED AND l.expiresAt < {now_epoch} THEN UPDATE SET
-  l.seenAt = s.seenAt, l.expiresAt = s.expiresAt, l.writer_id = s.writer_id
-WHEN NOT MATCHED THEN INSERT (pk, seenAt, expiresAt, writer_id)
-  VALUES (s.pk, s.seenAt, s.expiresAt, s.writer_id)
-""".strip()
-
-
-def ledger_update_auto(
-    events: DataFrame,
-    ledger_path: str,
-    seen_at: Column,
-    key_col: str = "dedup_key",
-    ttl_days: int = 14,
-    now_epoch: int | None = None,
-    ledger_table: str | None = None,
-    writer_id: str | None = None,
-) -> DataFrame:
-    """K4 atomic gate+mark cycle, picking the strongest mechanism the
-    session offers:
-
-    * MERGE path (``ledger_table`` given and :func:`merge_capable`): claim
-      keys via :func:`ledger_merge_sql`, then verify by reading back which
-      pks this ``writer_id`` won — per-key atomicity from the table format's
-      optimistic concurrency, no lock, safe under concurrent writers AND
-      writer crashes (a dead writer's committed claims stand; its
-      uncommitted ones simply never existed).
-    * Lock path (plain parquet): :func:`ledger_update_atomic` — whole-cycle
-      mutual exclusion via the O_EXCL :class:`LedgerLock`, stale-broken
-      after its timeout if a writer dies mid-cycle.
-
-    Fallback is taken ONLY when the session has no MERGE-capable extension
-    at all (dev/sandbox catalogs). If the session COULD merge but the named
-    ``ledger_table`` is missing or not a delta/iceberg table, this raises
-    instead of silently marking keys into the parquet path — otherwise the
-    dedup horizon would split across two stores (keys marked in parquet
-    during the fallback era are invisible once the table appears and the
-    MERGE path takes over, readmitting every one of them).
-    """
-    spark = events.sparkSession
-    if now_epoch is None:
-        now_epoch = int(time.time())
-    if ledger_table is None or not merge_capable(spark):
-        return ledger_update_atomic(
-            events, ledger_path, seen_at, key_col, ttl_days, now_epoch
-        )
-    if not merge_capable(spark, ledger_table):
-        raise ValueError(
-            f"ledger_table={ledger_table!r} is not MERGE-capable in this "
-            f"session (provider={table_provider(spark, ledger_table) or 'absent'!r}); "
-            "create it as a delta/iceberg table, or pass ledger_table=None "
-            "to use the locked parquet ledger explicitly."
-        )
-    import uuid
-
-    if writer_id is None:
-        writer_id = uuid.uuid4().hex
-    candidates = (
-        events.select(
-            F.col(key_col).alias("pk"),
-            seen_at.alias("seenAt"),
-            (F.unix_timestamp(seen_at) + ttl_days * 86400).alias("expiresAt"),
-        )
-        .dropDuplicates(["pk"])
-        .withColumn("writer_id", F.lit(writer_id))
-    )
-    view = f"__ledger_candidates_{writer_id}"
-    candidates.createOrReplaceTempView(view)
-    try:
-        spark.sql(ledger_merge_sql(ledger_table, view, now_epoch))
-    finally:
-        spark.catalog.dropTempView(view)
-    won = (
-        spark.table(ledger_table)
-        .filter(F.col("writer_id") == writer_id)
-        .select(F.col("pk").alias(key_col))
-    )
-    return events.join(won, key_col, "left_semi")
 
 
 # --------------------------------------------------------------------------- #

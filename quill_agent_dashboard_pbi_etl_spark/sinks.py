@@ -2,8 +2,8 @@
 
 The reference's sink is the Power BI Push Dataset REST API (append rows, clear
 table, create dataset). Spark-side the table store is date-partitioned parquet
-(Delta `MERGE` noted where concurrent writers need it); a REST push sink is
-kept as a ``foreachPartition`` hook honoring the public Push API limits
+(concurrent ledger writers serialize on ``operators.dedup.LedgerLock``); a
+REST push sink is kept as a ``foreachPartition`` hook honoring the public Push API limits
 (≤10k rows/POST, 120 POSTs/min, 1M rows/hr).
 """
 
@@ -146,8 +146,7 @@ def utc_day_of(epoch: int) -> str:
 def ledger_is_partitioned(path: str) -> bool:
     """True when ``path`` holds an expiry-partitioned ledger
     (``expiryDay=<D>/`` directories). POSIX listing — the partitioned
-    layout is POSIX-scoped like the rest of the parquet-ledger machinery
-    (object-store ledgers belong on Delta/Iceberg MERGE)."""
+    layout is POSIX-scoped like the rest of the parquet-ledger machinery."""
     if "://" in path or not os.path.isdir(path):
         return False
     return any(d.startswith("expiryDay=") for d in os.listdir(path))
@@ -199,8 +198,9 @@ def append_ledger(
     entries: DataFrame, path: str, partition_by_expiry: bool | None = None
 ) -> None:
     """K4 ledger append after a successful gate+post cycle. Single-writer per
-    pipeline run; use Delta ``MERGE ... WHEN NOT MATCHED INSERT`` when
-    concurrent writers exist (SURVEY.md §7 risk register).
+    pipeline run; concurrent writers go through
+    ``operators.dedup.ledger_update_atomic``, which holds the ``LedgerLock``
+    across the whole gate+append cycle (SURVEY.md §7 risk register).
 
     ``partition_by_expiry=True`` lays the ledger out as
     ``expiryDay=<UTC date of expiresAt>/`` partitions — the RUNBOOK "Ledger

@@ -41,16 +41,6 @@ LEDGER_TTL_DAYS = 14  # DYNAMO_TTL_DAYS default (ledger.repo.ts:10-12)
 
 TZ_BY_MOD = ["UTC", "America/New_York", "America/Los_Angeles", "Europe/Berlin", "Asia/Tokyo"]
 
-#: Escape hatch for :func:`_nd_barrier` (r15, VERDICT what's-wrong 2): set to
-#: "off" on deployments where filtering BELOW the spreading exchange moves
-#: less data (e.g. few large files + a highly selective consumer predicate —
-#: the barrier trades pre-exchange filtering for post-exchange parallelism,
-#: which is right for single-row-group inputs and wrong for that layout).
-#: Values are identical either way; only the plan shape changes. See
-#: RUNBOOK.md "Adapter pushdown barrier".
-ND_BARRIER_CONF = "spark.graft.ndBarrier"
-
-
 def _nd_barrier(col: F.Column) -> F.Column:
     """Identity on values, NON-DETERMINISTIC to Catalyst — a predicate-
     pushdown barrier (guide §2.4/§7.2, r14 measurement).
@@ -104,10 +94,6 @@ def events_as_webhooks(events: DataFrame) -> DataFrame:
     """
     from .readers import ensure_min_partitions
 
-    barrier = _nd_barrier
-    if events.sparkSession.conf.get(ND_BARRIER_CONF, "on") == "off":
-        barrier = lambda c: c  # noqa: E731 — identity: let pushdown through
-
     events = ensure_min_partitions(events).withColumn(
         "k", F.get_json_object(F.col("props"), "$.k").cast("long")
     )
@@ -148,7 +134,7 @@ def events_as_webhooks(events: DataFrame) -> DataFrame:
 
     return events.select(
         F.lit("ALOWARE").alias("source"),
-        barrier(event_name).alias("event_name"),
+        _nd_barrier(event_name).alias("event_name"),
         F.when(eid % 10 == 7, F.lit(None).cast("long")).otherwise(eid).alias("ext_id"),
         F.when(eid % 10 == 7, F.concat(F.lit("uuid-"), eid.cast("string")))
         .otherwise(F.lit(None).cast("string"))

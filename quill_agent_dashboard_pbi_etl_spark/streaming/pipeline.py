@@ -124,90 +124,6 @@ def start_fact_sink(
     return writer.start()
 
 
-# bloom_pregate="auto" enables the per-batch Bloom pre-gate only when the
-# micro-batch carries at least this many WITHIN-BATCH-DEDUPED events — the
-# rows the gate actually probes (the sink counts `unique`, after
-# keep_first). From the r10 flip-point grid (SCALE_LADDER.json
-# streaming_ledger_gate.flip_point, min-of-2 with alternated order): at
-# the 5.8M-key decade the pre-gate loses 1.66x at 30M raw events/batch
-# (~15M deduped at the generator's ~50% duplicate rate) and wins 0.60x at
-# 60M raw (~30M deduped) — the floor sits between the measured loss and
-# win in DEDUPED terms, the unit the gate's probe cost actually scales
-# with. Batches this large are replay/backfill drains by construction;
-# SLA-paced triggers never reach it and stay on the plain anti-join.
-PREGATE_AUTO_MIN_BATCH_ROWS = 25_000_000
-
-# ...and only when the TTL-live ledger is past the session's broadcast
-# threshold. History of this axis (all in SCALE_LADDER.json): the r10 grid
-# seemed to show a one-box win at the broadcastable 5.8M-key decade (0.60x
-# at 60M events); an executed-plan re-measure proved BOTH grid decades
-# broadcast (estimates 19.9/58.8 MB under the 64 MB session threshold —
-# `flip_point_mechanism`); a THIRD run of that cell failed to reproduce
-# the win (min walls favor exact 82.8 vs 93.8 s); and the past-broadcast
-# cell itself (17.47M live keys / ~177 MB estimate, two alternated-order
-# passes — `flip_point_auto.vol33pct_seed100pct`) came back NEGATIVE too:
-# clean-position walls exact 111.1 s vs pre-gate 180.8 s (1.63x loss) —
-# the BATCH gate's r10 sf300 fresh-JVM win (66.9 vs 73.3 s — itself
-# demoted r12 to "not reproducible on this box" after bimodal r11/r12
-# re-runs, SCALE_LADDER sf300_ab.r10_pair_status) does not transfer
-# to the sink, which adds per-batch live pinning, the sizing count, and
-# the word-table fold whose bit_or aggregation itself shuffles up to
-# k x live rows (a cost the 8x anti-join-cut accounting does not
-# include). NET ONE-BOX VERDICT: no measured streaming cell where the
-# pre-gate wins — on a single machine leave bloom_pregate=False
-# everywhere. "auto" therefore encodes the FABRIC-structural regime, not
-# a one-box win predictor: it fires where the anti-join volume cut is
-# largest (ledger past broadcast, huge drain batches) for deployments on
-# real network fabrics where shuffle bytes are the scarce resource — an
-# opt-in for clusters, with the caveat above that the fold's own shuffle
-# eats into the cut as live:batch grows.
-
-
-# Canonical definition moved to operators.dedup (the batch gates need it
-# too, and operators must not depend on streaming); aliased here for the
-# sink's conf reads and existing importers.
-from ..operators.dedup import parse_spark_bytes as _parse_spark_bytes  # noqa: E402
-
-
-def should_bloom_pregate(
-    live_est_bytes: int | None,
-    broadcast_threshold_bytes: int | None,
-    batch_rows: int | None,
-    min_batch_rows: int | None = None,
-) -> bool:
-    """The measured pre-gate rule as a pure predicate. Enable only when the
-    micro-batch is a huge drain (>= min_batch_rows DEDUPED rows, default
-    ``PREGATE_AUTO_MIN_BATCH_ROWS``, read at call time so tests can lower
-    the floor) AND the TTL-live ledger is past the session's broadcast
-    threshold (``live_est_bytes > broadcast_threshold_bytes``; threshold
-    <= 0 = broadcast disabled, which counts as not-broadcastable). Past
-    that cliff the exact gate sort-merges the whole batch and the
-    pre-gate's anti-join volume cut is largest — the FABRIC-structural
-    regime this predicate marks for cluster deployments. It is NOT a
-    one-box win predictor: every measured one-box streaming cell,
-    including the past-broadcast one, is negative-to-tie (see the
-    comment block above ``PREGATE_AUTO_MIN_BATCH_ROWS`` for the full
-    history). Unknown live estimate -> False (a pure in-memory ledger
-    bootstrap is tiny).
-
-    ``batch_rows=None`` means "assume a huge batch": only the live-ledger
-    axes are tested. The predicate is monotone in ``batch_rows``, so
-    None ≡ +inf — the sink uses it to ask whether the pre-gate COULD fire
-    at all before paying the batch-sizing count job."""
-    if min_batch_rows is None:
-        min_batch_rows = PREGATE_AUTO_MIN_BATCH_ROWS
-    if live_est_bytes is None:
-        return False
-    if batch_rows is not None and batch_rows < min_batch_rows:
-        return False
-    if broadcast_threshold_bytes is None:
-        return False  # unparseable conf: can't judge the cliff, stay exact
-    return (
-        broadcast_threshold_bytes <= 0
-        or live_est_bytes > broadcast_threshold_bytes
-    )
-
-
 def start_ledger_gated_fact_sink(
     fact_stream: DataFrame,
     ledger_path: str,
@@ -218,7 +134,6 @@ def start_ledger_gated_fact_sink(
     available_now: bool = False,
     now_epoch: int | None = None,
     storage: StateStorage | None = None,
-    bloom_pregate: bool | str = False,
     partition_by_expiry: bool | None = None,
 ) -> StreamingQuery:
     """K4 under streaming: per-micro-batch atomic ledger gate+mark against an
@@ -251,13 +166,13 @@ def start_ledger_gated_fact_sink(
     14-day horizon in an external table exactly like the reference, so a
     brand-new stream instance still dedups against history, multiple
     pipelines can share one horizon, and the TTL is enforced by data
-    (``expiresAt``) rather than by operator state. Cost: one locked
-    gate+append cycle per micro-batch (single-writer per ledger; on a
-    Delta/Iceberg catalog, ``ledger_update_auto`` upgrades it to lock-free
-    MERGE). Within-batch duplicates are collapsed keep-first before the
-    gate, so one micro-batch can never double-mark a key. ``now_epoch``
-    freezes the TTL clock for deterministic backfills/replays of historical
-    event time (default: wall clock per batch).
+    (``expiresAt``) rather than by operator state. Cost: one gate+append
+    cycle per micro-batch under the ``LedgerLock``, which serializes every
+    writer sharing the ledger. Within-batch duplicates are collapsed
+    keep-first before the gate, so one micro-batch can never double-mark a
+    key. ``now_epoch`` freezes the TTL clock for deterministic
+    backfills/replays of historical event time (default: wall clock per
+    batch).
 
     Crash safety (effectively-once output): claims are the commit point.
     Each batch CLAIMS its new keys in the ledger tagged ``writer_id =
@@ -283,71 +198,14 @@ def start_ledger_gated_fact_sink(
     fact — it finds dead-tag claims whose output never committed and either
     releases them (the next replay re-admits the events) or re-emits the
     events to a quarantine output; operationally, still prefer draining the
-    stream before deleting a checkpoint, or the Delta MERGE ledger path
-    (``ledger_update_auto``) where claim+output can share one transactional
-    table. Output layout is ``gen=<id>/batch_id=<n>/FactDateKey=<d>/``;
-    readers of ``output_dir`` see ``gen``/``batch_id`` as partition columns
-    — do not mix differently-laid-out data in one output root.
-
-    ``bloom_pregate="auto"`` is a CLUSTER-FABRIC opt-in that applies the
-    structural regime rule per micro-batch: :func:`should_bloom_pregate`
-    enables the pre-gate only when the deduped micro-batch carries >=
-    ``PREGATE_AUTO_MIN_BATCH_ROWS`` events (one count job over the
-    already-pinned batch, paid only when the ledger signal could fire)
-    AND the TTL-live ledger's Catalyst plan-size estimate (a driver-side
-    stat read, no job) exceeds the session's broadcast threshold — the
-    regime where the exact gate sort-merges the whole batch and the
-    anti-join volume cut is largest. On a SINGLE machine leave the flag
-    False: every measured one-box cell — five decades of them, including
-    the past-broadcast 17.5M-key cell — is negative-to-tie for the
-    streaming pre-gate (full history in the
-    ``PREGATE_AUTO_MIN_BATCH_ROWS`` comment block; the batch operator's
-    sf300 win does not transfer because the sink adds per-batch live
-    pinning, the sizing count, and the word-table fold's own shuffle).
-
-    ``bloom_pregate=True`` runs the batch Bloom pre-gate
-    (:func:`..operators.dedup.ledger_gate_bloom`) in place of the plain
-    anti-join inside each micro-batch: the TTL-live ledger folds into a
-    Bloom filter sized per batch from the live-key count at 1% fpp, every
-    event tests it scan-side, and only the maybes (true duplicates + fpp
-    sliver) enter the exact anti-join — same result by construction (no
-    false negatives; every maybe re-checks exactly), so claims, tags, and
-    crash recovery are untouched. Measured regime (the r10 flip-point grid,
-    SCALE_LADDER.json ``streaming_ledger_gate.flip_point`` — per-batch
-    volume and live-ledger size decoupled, min-of-2 with alternated order):
-    enable ONLY when BOTH hold — the TTL-live ledger has grown to
-    millions of keys (the grid flips between its 1.75M- and 5.8M-key
-    decades; the executed-plan re-measure shows BOTH still broadcast
-    under the session's 64 MB threshold, so the axis is the per-event
-    cost of probing a large broadcast hash relation, not a
-    broadcast-vs-SMJ flip) AND micro-batches carry tens of millions of
-    events (flips positive between 30M and 60M events/batch at the
-    5.8M-key decade, 0.60× at 60M). Against a small ledger the probe
-    pass is pure added CPU that grows with volume (2.05× loss at 100M
-    events over 1.75M keys); at small SLA-paced triggers the per-batch
-    fixed costs dominate (2× at sf0.1) — hence the flag rather than a
-    default. Its cluster-side value once the ledger genuinely stops
-    broadcasting is structural: the anti-join shuffle volume cut holds
-    ~8× per batch. Past ``MAX_BLOOM_LITERAL_BITS`` the sizing
-    auto-dispatches to the distributed word-table probe exactly like the
-    batch operator.
+    stream before deleting a checkpoint. Output layout is
+    ``gen=<id>/batch_id=<n>/FactDateKey=<d>/``; readers of ``output_dir``
+    see ``gen``/``batch_id`` as partition columns — do not mix
+    differently-laid-out data in one output root.
     """
-    import math
-
-    from ..operators.dedup import (
-        LedgerLock,
-        gate_anti_join,
-        keep_first,
-        ledger_gate_bloom,
-        probe_volume_estimate,
-    )
+    from ..operators.dedup import LedgerLock, gate_anti_join, keep_first
     from ..operators.materialize import pin
     from ..sinks import append_ledger, read_ledger, utc_day_of
-
-    if bloom_pregate not in (True, False, "auto"):
-        raise ValueError(
-            f"bloom_pregate must be True, False or 'auto', got {bloom_pregate!r}"
-        )
 
     sink_ledger_schema = "pk string, seenAt timestamp, expiresAt long, writer_id string"
     gen = _generation_id(checkpoint_dir, storage)  # immutable per incarnation
@@ -358,21 +216,19 @@ def start_ledger_gated_fact_sink(
         spark = batch_df.sparkSession
         now = now_epoch if now_epoch is not None else int(time.time())
         tag = f"{gen}-b{batch_id}"
-        # pin: `unique` is consumed 2× on the exact path (claims anti-join +
-        # the survivors semi-join) and 3× on the Bloom path (clean branch,
-        # maybe branch, survivors). Without it, every consumer re-executes
-        # the batch's full upstream lineage — for a file-source batch that
-        # is the ENTIRE JSON parse + normalize + keep_first window again.
-        # Measured at the sf100 single-batch drain (100M envelopes): the
-        # unpinned Bloom path re-parsed ~30 GB of JSONL three times and ran
-        # 744 s vs 330 s exact — lineage cost, not gate cost. The pin is
-        # micro-batch-sized; blocks are released by the ContextCleaner when
-        # the batch's DataFrames go out of scope. This is a PERF pin
-        # (correctness rides on the `claims` pin below), so it honors the
-        # session's `spark.graft.pin=none` escape hatch — at tiny SLA-paced
-        # triggers the eager checkpoint job is measurable overhead
-        # (~2 s/batch at 25k-event batches) while the lineage it saves is
-        # pennies.
+        # pin: `unique` is consumed 2× (claims anti-join + the survivors
+        # semi-join). Without it, every consumer re-executes the batch's
+        # full upstream lineage — for a file-source batch that is the
+        # ENTIRE JSON parse + normalize + keep_first window again (at the
+        # sf100 single-batch drain an unpinned body that consumed it three
+        # times re-parsed ~30 GB of JSONL per consumer: 744 s vs 330 s).
+        # The pin is micro-batch-sized; blocks are released by the
+        # ContextCleaner when the batch's DataFrames go out of scope. This
+        # is a PERF pin (correctness rides on the `claims` pin below), so
+        # it honors the session's `spark.graft.pin=none` escape hatch — at
+        # tiny SLA-paced triggers the eager checkpoint job is measurable
+        # overhead (~2 s/batch at 25k-event batches) while the lineage it
+        # saves is pennies.
         unique = pin(
             keep_first(
                 batch_df, ["EventID"], [F.col("EventTime"), F.col("Notes")]
@@ -391,72 +247,18 @@ def start_ledger_gated_fact_sink(
             live = ledger.filter(F.col("expiresAt") >= F.lit(now)).select(
                 F.col("pk").alias("EventID")
             )
-            use_pregate = bloom_pregate is True
-            if bloom_pregate == "auto":
-                # The live-side signals are driver-side stat/conf reads (no
-                # job); the batch count is one scalar job over blocks the
-                # pin above already materialized — pay it only when the
-                # live axes could fire at all (batch_rows=None = "assume a
-                # huge batch"), so SLA-paced triggers against a small
-                # ledger add zero jobs.
-                est = probe_volume_estimate(live)
-                thresh = _parse_spark_bytes(
-                    spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-                )
-                if should_bloom_pregate(est, thresh, batch_rows=None):
-                    use_pregate = should_bloom_pregate(
-                        est, thresh, unique.count()
-                    )
-            if use_pregate:
-                # Bloom pre-gate: identical survivor set (no false
-                # negatives; maybes re-check via the exact anti-join inside
-                # ledger_gate_bloom), but only the duplicate+fpp sliver of
-                # the batch enters the anti-join shuffle. Sized from the
-                # live-key count at 1% fpp (bloom_build's formula).
-                #
-                # pin: the TTL-filtered live key set is consumed 3× on this
-                # path (the sizing count here, the word-table fold, and the
-                # maybe-side exact anti-join inside ledger_gate_bloom) —
-                # without it each consumer re-scans and re-filters the full
-                # ledger, doubling the per-batch fixed cost that already
-                # bounds the pre-gate's payoff regime. Passing the pinned
-                # frame through `live=` makes all three share one
-                # materialization. PERF pin (the gate is correct with full
-                # lineage), so it honors `spark.graft.pin=none`.
-                live = pin(live, required=False)
-                live_n = live.count()
-                num_bits = max(1 << 16, int(1.44 * live_n * math.log2(1 / 0.01)))
-                new_events = ledger_gate_bloom(
-                    unique,
-                    ledger,
-                    key_col="EventID",
-                    now_epoch=now,
-                    num_bits=num_bits,
-                    # the pre-gate only pays off on huge batches, where the
-                    # literal probe's per-row CPU dominates — always use the
-                    # word-table probe here (measured: 31-79 s literal vs
-                    # 9.9 s bucketed at 50M probes, identical filter).
-                    probe="bucketed",
-                    live=live,
-                )
-            else:
-                # Exact gate through the ONE join-shape selector shared
-                # with the batch gates (directive r13-3): the BROADCAST-
-                # FLIP pathology — Spark can only build the RIGHT side of
-                # a left-anti join, so a live-ledger estimate landing
-                # UNDER the broadcast threshold while being the LARGER
-                # side hash-builds millions of live keys per trigger
-                # (measured ~5.7 s/trigger over a 2x2-reproduced 8-batch
-                # drain on the pruned partitioned layout;
-                # SCALE_LADDER.json streaming_ledger_layout +
-                # small_batch_gate) — auto-inverts to
-                # anti_join_small_left in exactly that regime; outside it
-                # the plain anti-join stands (the inverted shape loses
-                # 0.78× against a healthy sort-merge join). Estimates are
-                # driver-side plan stats (no job); when either is
-                # unavailable the plain shape stands. See
-                # operators.dedup.gate_anti_join.
-                new_events = gate_anti_join(unique, live, "EventID")
+            # Exact gate through the ONE join-shape selector shared with the
+            # batch gates: the BROADCAST-FLIP pathology — Spark can only
+            # build the RIGHT side of a left-anti join, so a live-ledger
+            # estimate landing UNDER the broadcast threshold while being the
+            # LARGER side hash-builds millions of live keys per trigger
+            # (measured ~5.7 s/trigger over an 8-batch drain on the pruned
+            # partitioned layout; SCALE_LADDER.json streaming_ledger_layout
+            # + small_batch_gate) — auto-inverts to anti_join_small_left in
+            # exactly that regime; outside it the plain anti-join stands.
+            # Estimates are driver-side plan stats (no job). See
+            # operators.dedup.gate_anti_join.
+            new_events = gate_anti_join(unique, live, "EventID")
             # pin: the claim set is consumed twice (emptiness check + the
             # append) — materialize the micro-batch-sized result once
             # instead of running the ledger anti-join twice under the lock.
@@ -910,9 +712,7 @@ def reclaim_orphaned_claims(
     ever re-issue (generation ids are unique per incarnation). Run it with
     the FULL list of live checkpoint dirs for every pipeline sharing the
     ledger — omitting one makes its in-flight batch look orphaned. POSIX
-    ledger paths only (the rename swap); on an object store use the Delta
-    MERGE ledger (``ledger_update_auto``) where claim+output share one
-    transactional table and this window does not exist.
+    ledger paths only (the rename swap).
 
     Returns the claim rows actually reclaimed (pk, seenAt, expiresAt,
     writer_id), materialized before the rewrite — all identified orphans
@@ -935,9 +735,8 @@ def reclaim_orphaned_claims(
     if "://" in ledger_path:
         raise NotImplementedError(
             "reclaim_orphaned_claims rewrites the ledger via a POSIX rename "
-            "swap; for object-store ledgers use the Delta/Iceberg MERGE "
-            "ledger (ledger_update_auto), which closes this loss window "
-            "transactionally instead"
+            "swap under the LedgerLock; object-store ledger paths are not "
+            "supported"
         )
 
     ledger_schema = "pk string, seenAt timestamp, expiresAt long, writer_id string"

@@ -160,51 +160,19 @@ def test_simhash_identical_docs_distance_zero(spark):
     assert pairs.get((1, 2)) == 0
 
 
-def test_ledger_update_auto_falls_back_without_merge_catalog(spark, tmp_path):
-    """Capability probe: no Delta/Iceberg extension in this session, so
-    ledger_update_auto must take the LedgerLock parquet path and still gate
-    correctly across two sequential cycles."""
-    assert dedup.merge_capable(spark) is False
-
-    ledger_path = str(tmp_path / "ledger")
-    mk = lambda keys: spark.createDataFrame(  # noqa: E731
-        [(k, dt.datetime(2024, 1, 15, 12)) for k in keys],
-        "dedup_key string, ts timestamp",
-    )
-    out1 = dedup.ledger_update_auto(
-        mk(["B:1", "B:2"]), ledger_path, F.col("ts"), now_epoch=1705320000,
-        ledger_table="ledger_tbl",  # ignored: catalog can't MERGE
-    )
-    assert sorted(r.dedup_key for r in out1.collect()) == ["B:1", "B:2"]
-    out2 = dedup.ledger_update_auto(
-        mk(["B:2", "B:3"]), ledger_path, F.col("ts"), now_epoch=1705320000,
-    )
-    assert [r.dedup_key for r in out2.collect()] == ["B:3"]
-
-
-def test_ledger_merge_sql_claim_and_reclaim_branches():
-    """The MERGE statement must claim unseen keys, reclaim TTL-expired ones,
-    and never touch a live claim (the conditional-write contract,
-    ledger.repo.ts:16-27)."""
-    sql = dedup.ledger_merge_sql("cat.ledger", "cand", now_epoch=1705320000)
-    assert "MERGE INTO cat.ledger" in sql
-    assert "WHEN NOT MATCHED THEN INSERT" in sql
-    assert "l.expiresAt < 1705320000" in sql  # reclaim only when expired
-    assert "writer_id" in sql  # claim-then-verify marker
-
-
 def test_bloom_no_false_negatives_and_sane_fpp(spark):
     """Bloom contract: every inserted key is flagged maybe (NO false
     negatives — this is what makes ledger_gate_bloom exact), and the false-
     positive rate on disjoint keys stays near the design point (64 Kbit / 7
     hashes / 1k keys → well under 5%)."""
     keys = spark.createDataFrame([(f"K:{i}",) for i in range(1000)], "pk string")
-    bitmap = dedup.bloom_build(keys, "pk")
-    flagged = dedup.bloom_maybe_flag(keys, bitmap, "pk")
+    nbits = 1 << 16
+    words = dedup.bloom_words(keys, "pk", num_bits=nbits)
+    flagged = dedup.bloom_maybe_flag_bucketed(keys, words, nbits, "pk")
     assert flagged.filter(~F.col("__bloom_maybe")).count() == 0
 
     other = spark.createDataFrame([(f"X:{i}",) for i in range(2000)], "pk string")
-    fp = dedup.bloom_maybe_flag(other, bitmap, "pk").filter(
+    fp = dedup.bloom_maybe_flag_bucketed(other, words, nbits, "pk").filter(
         F.col("__bloom_maybe")
     ).count()
     assert fp / 2000 < 0.05
@@ -213,26 +181,12 @@ def test_bloom_no_false_negatives_and_sane_fpp(spark):
 def test_bloom_non_word_multiple_bits(spark):
     """num_bits is rounded up to a 64-bit word multiple (a raw 100_000 —
     what the sizing formula actually yields — used to IndexError), and the
-    probe side derives its modulus from the bitmap length so build and test
-    always agree."""
+    probe side applies the same rounding so build and test always agree."""
     keys = spark.createDataFrame([(f"K:{i}",) for i in range(500)], "pk string")
-    bitmap = dedup.bloom_build(keys, "pk", num_bits=100_000)
-    assert len(bitmap) == (100_000 + 63) // 64
-    flagged = dedup.bloom_maybe_flag(keys, bitmap, "pk")
+    words = dedup.bloom_words(keys, "pk", num_bits=100_000)
+    assert words.agg(F.max("w")).first()[0] < (100_000 + 63) // 64
+    flagged = dedup.bloom_maybe_flag_bucketed(keys, words, 100_000, "pk")
     assert flagged.filter(~F.col("__bloom_maybe")).count() == 0
-
-
-def test_bloom_oversized_bitmap_raises_loudly(spark):
-    """Sizings past MAX_BLOOM_LITERAL_BITS must fail with guidance instead
-    of hanging plan construction on a multi-hundred-MB literal (the 100 TB
-    ledger sizing the build formula yields, ~10^9 bits, is deliberately out
-    of literal-embedding range)."""
-    import pytest
-
-    keys = spark.createDataFrame([("K:1",)], "pk string")
-    too_big = [0] * ((dedup.MAX_BLOOM_LITERAL_BITS // 64) + 1)
-    with pytest.raises(ValueError, match="ledger_gate anti-join"):
-        dedup.bloom_maybe_flag(keys, too_big, "pk")
 
 
 def test_ledger_gate_bloom_equals_exact_gate(spark):
@@ -260,51 +214,6 @@ def test_ledger_gate_bloom_equals_exact_gate(spark):
     }
     assert bloomed == exact
     assert len(exact) == 150  # 200 − 50 live
-    # probe="bucketed" forces the word-table path BELOW the literal guard
-    # (the huge-probe-volume caller's knob) — same survivors exactly.
-    forced = {
-        r.dedup_key
-        for r in dedup.ledger_gate_bloom(
-            events, ledger, now_epoch=now, probe="bucketed"
-        ).collect()
-    }
-    assert forced == exact
-    import pytest
-
-    with pytest.raises(ValueError, match="probe"):
-        dedup.ledger_gate_bloom(events, ledger, now_epoch=now, probe="literal?")
-
-
-def test_bloom_bucketed_probe_matches_literal_probe(spark):
-    """The distributed word-table probe (bloom_maybe_flag_bucketed) is the
-    literal probe's beyond-guard twin: identical hashing → identical flags
-    on every row of the same filter, no false negatives, row multiplicity
-    preserved through the k 1:≤1 left joins, scratch columns dropped."""
-    keys = spark.createDataFrame([(f"K:{i}",) for i in range(800)], "pk string")
-    nbits = 100_000
-    bitmap = dedup.bloom_build(keys, "pk", num_bits=nbits)
-    words = dedup.bloom_words(keys, "pk", num_bits=nbits)
-    probe = spark.createDataFrame(
-        [(f"K:{i}",) for i in range(400)]
-        + [(f"X:{i}",) for i in range(1200)]
-        + [("K:7",), ("K:7",)],  # duplicate rows must stay duplicated
-        "pk string",
-    )
-    lit = sorted(
-        (r.pk, r["__bloom_maybe"])
-        for r in dedup.bloom_maybe_flag(probe, bitmap, "pk").collect()
-    )
-    buck = sorted(
-        (r.pk, r["__bloom_maybe"])
-        for r in dedup.bloom_maybe_flag_bucketed(
-            probe, words, nbits, "pk"
-        ).collect()
-    )
-    assert buck == lit
-    assert len(buck) == probe.count()
-    ins = dedup.bloom_maybe_flag_bucketed(keys, words, nbits, "pk")
-    assert ins.filter(~F.col("__bloom_maybe")).count() == 0
-    assert set(ins.columns) == {"pk", "__bloom_maybe"}
 
 
 def test_bloom_bucketed_probe_stays_map_side(spark):
@@ -370,75 +279,6 @@ def test_bloom_bucketed_probe_single_broadcast_materialization(spark):
     assert len(shuffle_stages) == 1, plan
 
 
-def test_bloom_exploded_counterfactual_matches_bucketed(spark):
-    """_bloom_maybe_exploded (the rejected explode→join→re-aggregate shape,
-    kept for the measured comparison) must agree flag-for-flag with the
-    production probe, duplicates preserved — and its plan must contain the
-    event-scale re-aggregation shuffle the production shape avoids, which
-    is exactly WHY it is the counterfactual."""
-    keys = spark.createDataFrame([(f"K:{i}",) for i in range(300)], "pk string")
-    nbits = 1 << 13
-    words = dedup.bloom_words(keys, "pk", num_bits=nbits)
-    probe = spark.createDataFrame(
-        [(f"K:{i}",) for i in range(150)]
-        + [(f"Z:{i}",) for i in range(400)]
-        + [("K:3",), ("K:3",)],
-        "pk string",
-    )
-    buck = sorted(
-        (r.pk, r["__bloom_maybe"])
-        for r in dedup.bloom_maybe_flag_bucketed(probe, words, nbits, "pk").collect()
-    )
-    expl = sorted(
-        (r.pk, r["__bloom_maybe"])
-        for r in dedup._bloom_maybe_exploded(probe, words, nbits, "pk").collect()
-    )
-    assert expl == buck
-    assert len(expl) == probe.count()
-    plan = (
-        dedup._bloom_maybe_exploded(probe, words, nbits, "pk")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "hashpartitioning(__brow" in plan  # the shuffle the prod shape lacks
-
-
-def test_ledger_gate_bloom_beyond_guard_dispatches_and_matches(
-    spark, monkeypatch
-):
-    """Past MAX_BLOOM_LITERAL_BITS the gate must NOT raise: it dispatches to
-    the word-table probe and stays row-identical to the exact gate,
-    including expired-entry readmission (guard shrunk so the dispatch
-    branch runs without building a 67-Mbit bitmap)."""
-    monkeypatch.setattr(dedup, "MAX_BLOOM_LITERAL_BITS", 1 << 10)
-    events = spark.createDataFrame(
-        [(f"E:{i}", dt.datetime(2024, 1, 15, 12)) for i in range(200)],
-        "dedup_key string, ts timestamp",
-    )
-    now = 1705320000
-    ledger = spark.createDataFrame(
-        [(f"E:{i}", dt.datetime(2024, 1, 10), now + 1000) for i in range(50)]
-        + [
-            (f"E:{i}", dt.datetime(2023, 12, 1), now - 1000)
-            for i in range(50, 60)
-        ],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    exact = {
-        r.dedup_key
-        for r in dedup.ledger_gate(events, ledger, now_epoch=now).collect()
-    }
-    bloomed = {
-        r.dedup_key
-        for r in dedup.ledger_gate_bloom(
-            events, ledger, now_epoch=now, num_bits=1 << 16
-        ).collect()
-    }
-    assert bloomed == exact
-    assert len(exact) == 150
-
-
 def test_bloom_bucketed_probe_preserves_caller_w_bits_columns(spark):
     """Regression (r9 ADVICE): the word-table probe's scratch columns were
     briefly bare `w`/`bits`, so a caller df with its own `w` column lost it
@@ -463,137 +303,6 @@ def test_bloom_bucketed_probe_preserves_caller_w_bits_columns(spark):
         else:
             i = int(r.pk[2:])
             assert (r.w, r.bits) == (-i, -i * 10)
-
-
-def test_ledger_gate_bloom_probe_auto_dispatches_on_volume(
-    spark, monkeypatch, tmp_path
-):
-    """probe="auto" must pick the encoding from the PROBE VOLUME, not only
-    the bitmap size: a small in-memory batch keeps the zero-join literal
-    probe; a file-backed events side whose Catalyst input-size estimate
-    exceeds AUTO_BUCKETED_PROBE_BYTES dispatches to the word-table probe
-    even though the bitmap fits the plan literal. (Threshold shrunk so the
-    dispatch runs on test-sized data; the threshold VALUE itself comes from
-    the sf100 literal-vs-bucketed measurement in SCALE_LADDER.json.)"""
-    calls: list[str] = []
-    real_bucketed = dedup.bloom_maybe_flag_bucketed
-    real_literal = dedup.bloom_maybe_flag
-
-    def spy_bucketed(*a, **kw):
-        calls.append("bucketed")
-        return real_bucketed(*a, **kw)
-
-    def spy_literal(*a, **kw):
-        calls.append("literal")
-        return real_literal(*a, **kw)
-
-    monkeypatch.setattr(dedup, "bloom_maybe_flag_bucketed", spy_bucketed)
-    monkeypatch.setattr(dedup, "bloom_maybe_flag", spy_literal)
-
-    now = 1705320000
-    events = spark.createDataFrame(
-        [(f"E:{i}",) for i in range(100)], "dedup_key string"
-    )
-    ledger = spark.createDataFrame(
-        [(f"E:{i}", dt.datetime(2024, 1, 10), now + 1000) for i in range(30)],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    # small probe volume, small filter -> literal
-    out = dedup.ledger_gate_bloom(events, ledger, now_epoch=now, probe="auto")
-    assert out.count() == 70
-    assert calls == ["literal"]
-
-    # file-backed events past the (shrunk) volume threshold -> bucketed
-    calls.clear()
-    pq = str(tmp_path / "events_pq")
-    events.write.parquet(pq)
-    big = spark.read.parquet(pq)
-    est = dedup.probe_volume_estimate(big)
-    assert est is not None and est > 0  # parquet scans are sizeable
-    monkeypatch.setattr(dedup, "AUTO_BUCKETED_PROBE_BYTES", est - 1)
-    out2 = dedup.ledger_gate_bloom(big, ledger, now_epoch=now, probe="auto")
-    assert out2.count() == 70
-    assert calls == ["bucketed"]
-
-
-def test_ledger_gate_bloom_probe_literal_forced_and_guarded(
-    spark, monkeypatch
-):
-    """probe="literal" forces the plan-literal encoding regardless of the
-    volume heuristic, but must still refuse sizings past
-    MAX_BLOOM_LITERAL_BITS — that guard protects the driver (the literal
-    ships the whole bitmap in the serialized plan), not performance."""
-    import pytest
-
-    now = 1705320000
-    events = spark.createDataFrame(
-        [(f"E:{i}",) for i in range(50)], "dedup_key string"
-    )
-    ledger = spark.createDataFrame(
-        [(f"E:{i}", dt.datetime(2024, 1, 10), now + 1000) for i in range(10)],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    # forcing literal under a tiny volume threshold must NOT dispatch bucketed
-    monkeypatch.setattr(dedup, "AUTO_BUCKETED_PROBE_BYTES", 0)
-    out = dedup.ledger_gate_bloom(events, ledger, now_epoch=now, probe="literal")
-    assert out.count() == 40
-    monkeypatch.setattr(dedup, "MAX_BLOOM_LITERAL_BITS", 1 << 10)
-    with pytest.raises(ValueError, match="MAX_BLOOM_LITERAL_BITS"):
-        dedup.ledger_gate_bloom(
-            events, ledger, now_epoch=now, num_bits=1 << 16, probe="literal"
-        )
-
-
-def test_ledger_gate_bloom_accepts_precomputed_live(spark):
-    """The streaming sink materializes the TTL-filtered live key set once
-    per micro-batch (sizing count); passing it through `live=` must yield
-    the exact same survivors as the internal ledger scan — including NOT
-    re-applying the TTL filter (the caller already did)."""
-    now = 1705320000
-    events = spark.createDataFrame(
-        [(f"E:{i}",) for i in range(100)], "dedup_key string"
-    )
-    ledger = spark.createDataFrame(
-        [(f"E:{i}", dt.datetime(2024, 1, 10), now + 1000) for i in range(30)]
-        + [(f"E:{i}", dt.datetime(2023, 12, 1), now - 1000) for i in range(30, 40)],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    internal = {
-        r.dedup_key
-        for r in dedup.ledger_gate_bloom(events, ledger, now_epoch=now).collect()
-    }
-    live = ledger.filter(F.col("expiresAt") >= F.lit(now)).select(
-        F.col("pk").alias("dedup_key")
-    )
-    passed = {
-        r.dedup_key
-        for r in dedup.ledger_gate_bloom(
-            events, ledger, now_epoch=now, live=live
-        ).collect()
-    }
-    assert passed == internal
-    assert len(passed) == 70  # expired 30-39 readmitted
-
-
-def test_merge_capable_rejects_non_merge_table_provider(spark, tmp_path):
-    """The probe must sniff the TARGET TABLE's provider, not just session
-    extensions: a parquet-provider table in a Delta-extended session fails at
-    MERGE time, so merge_capable(table) must be False for it. (No delta jar
-    ships in this sandbox, so the extension leg is exercised as
-    False-everywhere and the provider leg is tested directly.)"""
-    # lands in the session's default warehouse (spark-warehouse/, gitignored;
-    # the warehouse dir is a static conf and can't be pointed at tmp_path)
-    spark.createDataFrame([(1, "a")], "pk long, v string").write.mode(
-        "overwrite"
-    ).saveAsTable("probe_parquet_tbl")
-    try:
-        assert dedup.table_provider(spark, "probe_parquet_tbl") == "parquet"
-        assert dedup.table_provider(spark, "no_such_table_xyz") == ""
-        # parquet provider → not MERGE-capable even if the extension were live
-        assert dedup.merge_capable(spark, "probe_parquet_tbl") is False
-        assert dedup.merge_capable(spark, "no_such_table_xyz") is False
-    finally:
-        spark.sql("DROP TABLE IF EXISTS probe_parquet_tbl")
 
 
 def test_ledger_crash_between_gate_and_append(spark, tmp_path):
@@ -663,31 +372,6 @@ def test_ledger_crash_after_append_before_unlock(spark, tmp_path):
     assert [r.dedup_key for r in out2.collect()] == ["D:2"]  # D:1 gated
     ledger = spark.read.parquet(ledger_path)
     assert sorted(r.pk for r in ledger.collect()) == ["D:1", "D:2"]
-
-
-def test_bloom_probe_is_single_binary_literal_not_row_data(spark):
-    """Pin the probe ENCODING, not just its results — both measured
-    regressions (bloom_maybe_flag docstring): the bitmap carried as a
-    per-row column (every projection memcpys it per row), and a hex STRING
-    literal (character-indexed substring walks the literal per probe,
-    O(bitmap)). The plan must add only the flag column, reference the
-    bitmap as one BINARY literal (plan text shows 0x…, no quoted hex blob),
-    and never materialize a helper column."""
-    df = spark.createDataFrame([(f"K:{i}",) for i in range(10)], "pk string")
-    bitmap = dedup.bloom_build(df, "pk", num_bits=1 << 12)
-    flagged = dedup.bloom_maybe_flag(df, bitmap, "pk")
-    assert set(flagged.columns) == {"pk", "__bloom_maybe"}
-
-    plan = flagged._jdf.queryExecution().optimizedPlan().toString()
-    assert "__bloom_hex" not in plan and "__bpos" not in plan
-    assert "0X" in plan.upper(), "bitmap should appear as a binary literal"
-    packed_hex = b"".join(
-        (int(w) & ((1 << 64) - 1)).to_bytes(8, "little") for w in bitmap
-    ).hex().upper()
-    assert f"'{packed_hex}'" not in plan.upper(), (
-        "bitmap must not appear as a quoted STRING literal (char-indexed "
-        "substring is O(bitmap) per probe)"
-    )
 
 
 def test_anti_join_small_left_parity_and_plan(spark):

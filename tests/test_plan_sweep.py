@@ -73,20 +73,11 @@ def test_nd_barrier_keeps_consumer_filters_above_spreading_exchange(spark):
     ensure_min_partitions round-robin exchange — and the barrier expression
     itself must survive optimization (two earlier spellings were silently
     constant-folded away; a Spark upgrade could fold this one too, which this
-    test would catch). With the escape hatch off, pushdown must return —
-    proving the flag actually controls the plan."""
+    test would catch)."""
     from quill_agent_dashboard_pbi_etl_spark.plans import registry
-    from quill_agent_dashboard_pbi_etl_spark.sources.webhook_mapping import (
-        ND_BARRIER_CONF,
-    )
 
-    def fact_plan() -> str:
-        registry._FACT_PLAN_CACHE.clear()  # memo keyed per session, not per conf
-        df = registry.normalized_fact(spark, SF_SMALL).filter("MetricID = 'CALLS'")
-        registry._FACT_PLAN_CACHE.clear()
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    plan_on = fact_plan()
+    df = registry.normalized_fact(spark, SF_SMALL).filter("MetricID = 'CALLS'")
+    plan_on = df._jdf.queryExecution().executedPlan().toString()
     # 1. barrier alive: the shuffle(array(...)) marker survived optimization
     assert "shuffle(array(" in plan_on, "nd-barrier folded away by the optimizer"
     # 2. the spreading exchange exists on single-file inputs...
@@ -101,9 +92,3 @@ def test_nd_barrier_keeps_consumer_filters_above_spreading_exchange(spark):
             "exchange — the single-task-scan-stage regression is back"
         )
 
-    spark.conf.set(ND_BARRIER_CONF, "off")
-    try:
-        plan_off = fact_plan()
-    finally:
-        spark.conf.unset(ND_BARRIER_CONF)
-    assert "shuffle(array(" not in plan_off, "escape hatch did not disable the barrier"

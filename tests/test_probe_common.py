@@ -60,8 +60,11 @@ def test_committed_ladder_carries_the_flags():
     alternated-order cells do not."""
     data = json.load(open("/root/repo/SCALE_LADDER.json"))
     flip = data["streaming_ledger_gate"]["flip_point"]
-    # the killed 0.60x cell: its pre-gate pair is flagged
-    assert flip["vol60pct_seed100pct"]["bloom_pregate"]["ambient_suspect"]
+    # the killed 0.60x cell: its pre-gate pair (the cell's one strategy
+    # besides "exact") is flagged
+    cell = flip["vol60pct_seed100pct"]
+    pregate = [v for k, v in cell.items() if isinstance(v, dict) and k != "exact"]
+    assert len(pregate) == 1 and pregate[0]["ambient_suspect"]
     # the r12 sf300 A/B: bloom's walls are bimodal (173.3/98.4 — flagged,
     # third consecutive non-reproduction of the r10 win), exact/nobcast
     # consistent; the winner is exact and is NOT suspect, and the r10 pair

@@ -193,45 +193,14 @@ def test_stateful_session_close(spark, tmp_path):
     }
 
 
-@pytest.mark.parametrize("bloom_pregate", [False, True, "auto"])
-def test_ledger_gated_sink_dedups_across_checkpoint_loss(
-    spark, tmp_path, bloom_pregate, monkeypatch, request
-):
+def test_ledger_gated_sink_dedups_across_checkpoint_loss(spark, tmp_path):
     """K4 streaming: the parquet-ledger gate holds the dedup horizon OUTSIDE
     the streaming checkpoint. A second stream instance with a brand-new
     checkpoint (simulating redeploy/checkpoint loss — exactly where
     dropDuplicatesWithinWatermark forgets its state) must still drop keys the
     first instance marked, and within-batch duplicates collapse keep-first
-    before the gate. Parametrized over the Bloom pre-gate: the pre-gated
-    micro-batch must produce the identical survivor set (no false
-    negatives; maybes re-check exactly). The "auto" cell forces the regime
-    rule's thresholds down so the dispatch itself is exercised end-to-end:
-    instance 1 bootstraps from an in-memory empty ledger (no Catalyst
-    estimate -> auto stays exact) and instance 2 reads the parquet ledger
-    with broadcast disabled and a zero batch floor (-> auto pre-gates)."""
+    before the gate."""
     import json as _json
-
-    from quill_agent_dashboard_pbi_etl_spark.streaming import pipeline as _pl
-
-    pregate_calls = []
-    if bloom_pregate == "auto":
-        monkeypatch.setattr(_pl, "PREGATE_AUTO_MIN_BATCH_ROWS", 0)
-        key = "spark.sql.autoBroadcastJoinThreshold"
-        old = spark.conf.get(key)
-        spark.conf.set(key, "-1")
-        request.addfinalizer(lambda: spark.conf.set(key, old))
-        # Spy on the pre-gate so the cell can assert the dispatch really
-        # flipped (the sink imports it at start time, so patching the
-        # operators module is seen by write_batch).
-        from quill_agent_dashboard_pbi_etl_spark.operators import dedup as _dd
-
-        real_gate = _dd.ledger_gate_bloom
-
-        def spy(*args, **kwargs):
-            pregate_calls.append(1)
-            return real_gate(*args, **kwargs)
-
-        monkeypatch.setattr(_dd, "ledger_gate_bloom", spy)
 
     from quill_agent_dashboard_pbi_etl_spark.functions.adapter import (
         normalize_webhooks,
@@ -264,7 +233,6 @@ def test_ledger_gated_sink_dedups_across_checkpoint_loss(
             str(tmp_path / ckpt_name),
             available_now=True,
             now_epoch=now_epoch,
-            bloom_pregate=bloom_pregate,
         )
         q.awaitTermination(180)
 
@@ -284,70 +252,18 @@ def test_ledger_gated_sink_dedups_across_checkpoint_loss(
     got = sorted(r.EventID for r in spark.read.parquet(str(out)).collect())
     assert got == ["ALOWARE:1", "ALOWARE:2", "ALOWARE:3"]
 
-    if bloom_pregate == "auto":
-        # Instance 1 bootstrapped from an in-memory empty ledger (no
-        # Catalyst estimate -> exact path); instance 2 read the parquet
-        # ledger with broadcast disabled and a zero floor -> the auto
-        # dispatch must have pre-gated at least once.
-        assert pregate_calls, "auto never dispatched to the Bloom pre-gate"
-
-
-def test_should_bloom_pregate_regime_rule():
-    """The auto pre-gate predicate encodes the surviving evidence: fire
-    only past the session's broadcast threshold (the regime of the 8x
-    shuffle cut and the sf300 de-confounded win) AND at huge deduped batch
-    volumes; unknown estimate / unparseable conf never pre-gates."""
-    from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
-        should_bloom_pregate,
-    )
-
-    mb = 1 << 20
-    # batch_rows below are DEDUPED (post-keep_first) counts — the unit the
-    # sink actually feeds the predicate (the grid's raw 30/60/100M axes map
-    # to ~15/30/50M deduped at the generator's ~50% duplicate rate).
-    # broadcastable ledger: never, regardless of batch size — the grid's
-    # apparent 0.60x win at 58.8 MB (< the 64 MB session threshold) did
-    # not survive a third run (flip_point_auto: exact min 82.8 s vs
-    # pre-gate 93.8 s) and both grid decades broadcast at executed-plan
-    # level (flip_point_mechanism).
-    assert not should_bloom_pregate(5 * mb, 10 * mb, 10**9)
-    assert not should_bloom_pregate(int(58.8 * mb), 64 * mb, 30_000_000)
-    assert not should_bloom_pregate(int(19.9 * mb), 64 * mb, 50_000_000)
-    # past broadcast but small batch: no
-    assert not should_bloom_pregate(50 * mb, 10 * mb, 10_000_000)
-    # past broadcast + huge deduped batch: yes (sf300-scale live ledgers
-    # at the engine's 64 MB threshold, or a 20 MB ledger under a default
-    # 10 MB threshold — the exact gate would shuffle the whole batch)
-    assert should_bloom_pregate(50 * mb, 10 * mb, 30_000_000)
-    assert should_bloom_pregate(177 * mb, 64 * mb, 30_000_000)
-    assert should_bloom_pregate(20 * mb, 10 * mb, 30_000_000)
-    # broadcast disabled (threshold <= 0) counts as not-broadcastable
-    assert should_bloom_pregate(1, -1, 30_000_000)
-    # unknown estimate or unparseable threshold conf -> exact path
-    assert not should_bloom_pregate(None, 10 * mb, 10**9)
-    assert not should_bloom_pregate(50 * mb, None, 10**9)
-    # explicit floor override (what the e2e "auto" cell uses)
-    assert should_bloom_pregate(1, -1, 1, min_batch_rows=0)
-    # batch_rows=None = "assume a huge batch": only the live axes are
-    # tested (the sink's could-it-fire pre-check before paying the
-    # batch-sizing count job; monotone in batch_rows, so None ≡ +inf)
-    assert should_bloom_pregate(50 * mb, 10 * mb, None)
-    assert not should_bloom_pregate(5 * mb, 10 * mb, None)
-    assert not should_bloom_pregate(None, 10 * mb, None)
-    assert not should_bloom_pregate(50 * mb, None, None)
-
 
 def test_parse_spark_bytes():
-    from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
-        _parse_spark_bytes,
+    from quill_agent_dashboard_pbi_etl_spark.operators.dedup import (
+        parse_spark_bytes,
     )
 
-    assert _parse_spark_bytes("10MB") == 10 << 20
-    assert _parse_spark_bytes("10485760b") == 10 << 20
-    assert _parse_spark_bytes("-1") == -1
-    assert _parse_spark_bytes("1g") == 1 << 30
-    assert _parse_spark_bytes("512k") == 512 << 10
-    assert _parse_spark_bytes("garbage") is None
+    assert parse_spark_bytes("10MB") == 10 << 20
+    assert parse_spark_bytes("10485760b") == 10 << 20
+    assert parse_spark_bytes("-1") == -1
+    assert parse_spark_bytes("1g") == 1 << 30
+    assert parse_spark_bytes("512k") == 512 << 10
+    assert parse_spark_bytes("garbage") is None
 
 
 def test_ledger_gated_sink_backfill_older_than_ttl_still_dedups(spark, tmp_path):
@@ -396,12 +312,9 @@ def test_ledger_gated_sink_backfill_older_than_ttl_still_dedups(spark, tmp_path)
     assert got == ["ALOWARE:1"]
 
 
-@pytest.mark.parametrize(
-    "backend_name, bloom_pregate",
-    [("posix", False), ("fake_remote", False), ("posix", True)],
-)
+@pytest.mark.parametrize("backend_name", ["posix", "fake_remote"])
 def test_ledger_gated_sink_recovers_claimed_but_unwritten_events(
-    spark, tmp_path, backend_name, bloom_pregate
+    spark, tmp_path, backend_name
 ):
     """Crash injection for the claim-then-verify protocol: a prior attempt of
     batch 0 CLAIMED event 1 in the ledger (tagged batch0) and died before
@@ -461,7 +374,6 @@ def test_ledger_gated_sink_recovers_claimed_but_unwritten_events(
     q = start_ledger_gated_fact_sink(
         fact, ledger, str(out), str(tmp_path / "ckpt"),
         available_now=True, now_epoch=now_epoch, storage=storage,
-        bloom_pregate=bloom_pregate,
     )
     q.awaitTermination(180)
 

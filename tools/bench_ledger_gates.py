@@ -12,9 +12,8 @@ Per rung: build the same synthetic prior-run ledger the registry queries use
 anchor), then time
   exact  — operators.dedup.ledger_gate (anti-join, planner's choice)
   bloom  — operators.dedup.ledger_gate_bloom with the bitmap sized to the
-           live-key count at 1% fpp (num_bits ≈ 9.57·n, the formula in
-           bloom_build's docstring), INCLUDING the live-count job and the
-           bitmap build in its timing — production knows ledger cardinality
+           live-key count at 1% fpp (num_bits ≈ 1.44·n·log2(1/fpp) ≈ 9.57·n),
+           INCLUDING the live-count job and the word-table build in its timing — production knows ledger cardinality
            from table metadata, but we charge the honest full price here.
 Both outputs are counted and must match exactly (Bloom has no false
 negatives; every maybe re-checks exactly).
@@ -53,9 +52,7 @@ RUNGS = {
     "sf10": None,
     "sf30": None,
     "sf100": None,
-    "sf300": None,  # opt-in rung (make_scale_ladder.py --sf300): 17.5M live
-    # keys -> 1% sizing 167 Mbits > MAX_BLOOM_LITERAL_BITS, so the PUBLIC
-    # operator's beyond-guard dispatch is the only legal Bloom strategy.
+    "sf300": None,  # opt-in rung (make_scale_ladder.py --sf300)
 }
 
 
@@ -117,49 +114,9 @@ def main() -> None:
         res["live_keys"] = live_n
         res["bloom_mbits"] = round(num_bits / 1e6, 1)
 
-        # Same sizing through the beyond-guard encoding (word table +
-        # broadcast-join probes) — the path ledger_gate_bloom dispatches to
-        # past MAX_BLOOM_LITERAL_BITS, forced here at every rung so the two
-        # encodings price against each other on identical filters.
-        t0 = time.perf_counter()
-        live_keys = ledger.filter(
-            F.col("expiresAt") >= F.lit(now_epoch)
-        ).select(F.col("pk").alias("dedup_key"))
-        words = dedup.bloom_words(live_keys, "dedup_key", num_bits)
-        flagged = dedup.bloom_maybe_flag_bucketed(
-            fact, words, num_bits, "dedup_key"
-        )
-        bucketed = flagged.filter(~F.col("__bloom_maybe")).drop(
-            "__bloom_maybe"
-        ).unionByName(
-            flagged.filter(F.col("__bloom_maybe"))
-            .drop("__bloom_maybe")
-            .join(live_keys, on="dedup_key", how="left_anti")
-        )
-        _noop(bucketed)
-        res["bloom_bucketed_sec"] = round(time.perf_counter() - t0, 3)
-
         n_exact, n_bloom = exact.count(), bloom.count()
-        n_bucketed = bucketed.count()
-        assert n_exact == n_bloom == n_bucketed, (
-            rung, n_exact, n_bloom, n_bucketed,
-        )
+        assert n_exact == n_bloom, (rung, n_exact, n_bloom)
         res["survivors"] = n_exact
-
-        # Where a tighter-fpp sizing genuinely crosses the literal guard,
-        # run the PUBLIC operator at that sizing — the auto-dispatch
-        # executing for real, not via a shrunken test guard.
-        strict_bits = int(1.44 * live_n * math.log2(1 / 0.001))
-        if strict_bits > dedup.MAX_BLOOM_LITERAL_BITS:
-            t0 = time.perf_counter()
-            beyond = dedup.ledger_gate_bloom(
-                fact, ledger, key_col="dedup_key", now_epoch=now_epoch,
-                num_bits=strict_bits,
-            )
-            _noop(beyond)
-            res["bloom_beyond_guard_sec"] = round(time.perf_counter() - t0, 3)
-            res["bloom_beyond_guard_mbits"] = round(strict_bits / 1e6, 1)
-            assert beyond.count() == n_exact, (rung, "beyond-guard mismatch")
 
         # The metric the Bloom gate actually targets: rows entering the
         # anti-join (= shuffle volume once the ledger no longer broadcasts).
@@ -171,22 +128,12 @@ def main() -> None:
         live_for_maybes = ledger.filter(
             F.col("expiresAt") >= F.lit(now_epoch)
         ).select(F.col("pk").alias("dedup_key"))
-        if num_bits > dedup.MAX_BLOOM_LITERAL_BITS:
-            # sf300+: the 1% sizing itself is past the plan-literal guard,
-            # so the ONLY legal probe is the distributed word table — count
-            # the maybes through it (identical filter, identical flags).
-            flagged = dedup.bloom_maybe_flag_bucketed(
-                fact,
-                dedup.bloom_words(live_for_maybes, "dedup_key", num_bits),
-                num_bits,
-                "dedup_key",
-            )
-        else:
-            flagged = dedup.bloom_maybe_flag(
-                fact,
-                dedup.bloom_build(live_for_maybes, "dedup_key", num_bits),
-                "dedup_key",
-            )
+        flagged = dedup.bloom_maybe_flag_bucketed(
+            fact,
+            dedup.bloom_words(live_for_maybes, "dedup_key", num_bits),
+            num_bits,
+            "dedup_key",
+        )
         maybes = flagged.filter(F.col("__bloom_maybe")).count()
         res["antijoin_rows_exact"] = res["events"]
         res["antijoin_rows_bloom"] = maybes

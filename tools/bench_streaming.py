@@ -68,8 +68,8 @@ def write_landing(spark, sf_dir: str, landing: str, n_files: int, events=None) -
     the event count. The aloware body JSON is rebuilt from the same
     webhook-shape mapping the batch oracle uses, so the streamed pipeline
     normalizes byte-identical facts. ``events`` (optional) substitutes a
-    pre-filtered events DataFrame for the rung's full table — the flip-point
-    sweep uses it to vary per-batch volume independently of the rung."""
+    pre-filtered events DataFrame for the rung's full table, so a caller can
+    vary per-batch volume independently of the rung."""
     wh = events_as_webhooks(
         events if events is not None else load_table(spark, sf_dir, "events")
     )
@@ -117,8 +117,8 @@ def run_ledger_mode(
 ) -> None:
     """`--ledger`: time the EXTERNAL-parquet-ledger sink
     (start_ledger_gated_fact_sink) draining each rung against a pre-seeded
-    ledger, exact anti-join vs Bloom pre-gate per rung — the streaming twin
-    of bench_ledger_gates.py. The ledger is seeded with every event before
+    ledger through the exact anti-join gate — the streaming twin of
+    bench_ledger_gates.py. The ledger is seeded with every event before
     2024-01-10 (the batch queries' synthetic prior run, live at the
     NOW_ANCHOR clock), so each micro-batch gates against a realistic
     live-key population instead of an empty table. Streamed survivors must
@@ -126,12 +126,8 @@ def run_ledger_mode(
     equivalence assert that keeps the throughput number honest.
 
     ``single_batch=True`` writes 32 landing files (< maxFilesPerTrigger=64)
-    so the whole rung drains as ONE micro-batch — the knob that locates
-    where the Bloom pre-gate flips positive: its fixed per-batch costs
-    amortize over per-BATCH volume, so the 4-batch sf30 cells (7.5M
-    events/batch, pre-gate 3x slower) and the single-batch cells (whole
-    rung per batch) bracket the crossover. Results land under
-    "<rung>_single_batch".
+    so the whole rung drains as ONE micro-batch, separating per-batch fixed
+    costs from per-event costs. Results land under "<rung>_single_batch".
 
     Results merge into SCALE_LADDER.json["streaming_ledger_gate"]."""
     import datetime as dt
@@ -165,9 +161,7 @@ def run_ledger_mode(
             n_files = 32 if single_batch else 256
             n_events = write_landing(spark, sf_dir, landing, n_files)
 
-            # Seed ledger + batch-side expected survivor count, shared by
-            # both timed cells (each cell copies the seed so the second
-            # cell doesn't gate against the first cell's claims).
+            # Seed ledger + batch-side expected survivor count.
             fact_b = normalized_fact(spark, sf_dir)
             seed = fact_b.filter(
                 F.col("EventTime")
@@ -190,37 +184,29 @@ def run_ledger_mode(
             ).count()
 
             cell: dict = {"events_in": n_events, "expected_survivors": expected}
-            for label, flag in (("exact", False), ("bloom_pregate", True)):
-                ledger_path = os.path.join(work, f"ledger_{label}")
-                sink = os.path.join(work, f"out_{label}")
-                spark.read.parquet(seed_path).write.mode("overwrite").parquet(
-                    ledger_path
-                )
-                t0 = time.perf_counter()
-                stream = envelopes_to_webhook_shape(
-                    read_envelope_stream(spark, landing)
-                )
-                from quill_agent_dashboard_pbi_etl_spark.functions.adapter import (
-                    normalize_webhooks,
-                )
-
-                q = start_ledger_gated_fact_sink(
-                    normalize_webhooks(stream),
-                    ledger_path,
-                    sink,
-                    os.path.join(work, f"ckpt_{label}"),
-                    available_now=True,
-                    now_epoch=now_epoch,
-                    bloom_pregate=flag,
-                )
-                q.awaitTermination(3600)
-                wall = time.perf_counter() - t0
-                written = spark.read.parquet(sink).count()
-                assert written == expected, (rung, label, written, expected)
-                cell[label] = {
-                    "wall_sec": round(wall, 3),
-                    "events_per_sec": int(n_events / wall),
-                }
+            ledger_path = os.path.join(work, "ledger")
+            sink = os.path.join(work, "out")
+            spark.read.parquet(seed_path).write.mode("overwrite").parquet(
+                ledger_path
+            )
+            t0 = time.perf_counter()
+            stream = envelopes_to_webhook_shape(read_envelope_stream(spark, landing))
+            q = start_ledger_gated_fact_sink(
+                normalize_webhooks(stream),
+                ledger_path,
+                sink,
+                os.path.join(work, "ckpt"),
+                available_now=True,
+                now_epoch=now_epoch,
+            )
+            q.awaitTermination(3600)
+            wall = time.perf_counter() - t0
+            written = spark.read.parquet(sink).count()
+            assert written == expected, (rung, written, expected)
+            cell["exact"] = {
+                "wall_sec": round(wall, 3),
+                "events_per_sec": int(n_events / wall),
+            }
             cell["micro_batches"] = math.ceil(n_files / 64)
             key = f"{rung}_single_batch" if single_batch else rung
             out[key] = cell
@@ -234,212 +220,10 @@ def run_ledger_mode(
     data["streaming_ledger_gate"]["note"] = (
         "External-parquet-ledger streaming sink drained against a seeded "
         "prior-run ledger (events before 2024-01-10 live at NOW_ANCHOR), "
-        "exact anti-join vs Bloom pre-gate per micro-batch; survivors "
-        "asserted equal to the batch ledger_gate count."
+        "exact anti-join per micro-batch; survivors asserted equal to the "
+        "batch ledger_gate count."
     )
     json.dump(data, open(path, "w"), indent=1)
-    print(json.dumps(out, indent=1))
-    spark.stop()
-
-
-def run_flip_mode(
-    ladder_root: str,
-    volumes: tuple[float, ...] = (0.3, 0.6, 1.0),
-    seeds: tuple[float, ...] = (0.3, 1.0),
-    rung: str = "sf100",
-    include_auto: bool = False,
-) -> None:
-    """`--flip`: map the streaming Bloom pre-gate's flip point by DECOUPLING
-    the two confounded axes of the rung cells — per-batch event volume and
-    live-ledger size. The r9 single-batch cells had the pre-gate winning at
-    sf30 (30M events/batch, ~1.75M live keys) and losing at sf100 (100M,
-    ~5.8M), but both axes grew 3.3× together, so "when do I set
-    bloom_pregate=True" had no deployable answer.
-
-    Grid: events = the sf100 rung filtered to `volumes` fractions by
-    xxhash64(event_id) — same generator, same duplicate structure, varying
-    only per-batch volume; ledger seed = the rung's synthetic prior run
-    (events before 2024-01-10, live at NOW_ANCHOR) filtered to `seeds`
-    fractions by xxhash64(pk). Every cell drains as ONE micro-batch
-    (32 landing files < maxFilesPerTrigger=64, availableNow), exact
-    anti-join vs Bloom pre-gate, survivors asserted identical to the batch
-    gate on the same inputs. Results →
-    SCALE_LADDER.json["streaming_ledger_gate"]["flip_point"]."""
-    import datetime as dt
-
-    from quill_agent_dashboard_pbi_etl_spark.operators import dedup
-    from quill_agent_dashboard_pbi_etl_spark.plans.registry import (
-        NOW_ANCHOR,
-        normalized_fact,
-    )
-    from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
-        envelopes_to_webhook_shape,
-        start_ledger_gated_fact_sink,
-    )
-
-    sf_dir = os.path.join(ladder_root, rung)
-    if not os.path.isdir(sf_dir):
-        sys.exit(f"flip sweep needs the {rung} rung at {sf_dir}")
-    spark = get_spark(app_name="bench-streaming-flip")
-    spark.sparkContext.setLogLevel("ERROR")
-    now_epoch = int(
-        dt.datetime.strptime(NOW_ANCHOR, "%Y-%m-%d %H:%M:%S")
-        .replace(tzinfo=dt.timezone.utc)
-        .timestamp()
-    )
-
-    # Seed pool: the full rung's synthetic prior run, written once; per-cell
-    # seeds are hash-fraction filters over it.
-    events_full = load_table(spark, sf_dir, "events")
-    fact_full = normalized_fact(spark, sf_dir)
-    seed_pool = fact_full.filter(
-        F.col("EventTime") < F.lit("2024-01-10 00:00:00").cast("timestamp")
-    ).select(
-        F.col("EventID").alias("pk"),
-        F.col("EventTime").alias("seenAt"),
-        (F.unix_timestamp("EventTime") + 14 * 86400).alias("expiresAt"),
-        F.lit("seed").alias("writer_id"),
-    )
-
-    out: dict[str, dict] = {}
-    for vol in volumes:
-        work = tempfile.mkdtemp(prefix=f"flip_v{int(vol * 100)}_")
-        landing = os.path.join(work, "landing")
-        try:
-            ev = (
-                events_full
-                if vol >= 1.0
-                else events_full.filter(
-                    F.pmod(F.xxhash64(F.col("event_id")), F.lit(100))
-                    < F.lit(int(vol * 100))
-                )
-            )
-            n_events = write_landing(spark, sf_dir, landing, 32, events=ev)
-            fact_b = normalize_webhooks(events_as_webhooks(ev))
-            for seed_frac in seeds:
-                seed = (
-                    seed_pool
-                    if seed_frac >= 1.0
-                    else seed_pool.filter(
-                        F.pmod(F.xxhash64(F.col("pk")), F.lit(100))
-                        < F.lit(int(seed_frac * 100))
-                    )
-                )
-                seed_path = os.path.join(work, f"seed_{int(seed_frac * 100)}")
-                seed.write.mode("overwrite").parquet(seed_path)
-                seed_df = spark.read.parquet(seed_path)
-                live_keys = seed_df.filter(
-                    F.col("expiresAt") >= F.lit(now_epoch)
-                ).count()
-                expected = dedup.ledger_gate(
-                    fact_b.dropDuplicates(["EventID"]).withColumnRenamed(
-                        "EventID", "dedup_key"
-                    ),
-                    seed_df,
-                    key_col="dedup_key",
-                    now_epoch=now_epoch,
-                ).count()
-                cell: dict = {
-                    "events_per_batch": n_events,
-                    "live_keys": live_keys,
-                    "expected_survivors": expected,
-                    "micro_batches": 1,
-                }
-                # FLIP_ORDER=reversed runs bloom before exact — the second
-                # pass of a min-of-2 sweep alternates within-cell order so
-                # page-cache warm-up doesn't systematically favor whichever
-                # strategy runs second.
-                strategies = [("exact", False), ("bloom_pregate", True)]
-                if os.environ.get("FLIP_ORDER") == "reversed":
-                    strategies.reverse()
-                if include_auto:
-                    # auto runs LAST in either order: its walls sit in the
-                    # most-degraded JVM position, so a "auto matches the
-                    # faster strategy" verdict is read from its recorded
-                    # DECISION against the forced cells' walls, not from
-                    # its own wall.
-                    strategies.append(("auto", "auto"))
-                for label, flag in strategies:
-                    pregate_calls: list[int] = []
-                    real_gate = None
-                    if flag == "auto":
-                        # Spy on the pre-gate so the cell records which
-                        # path auto actually took (the sink imports it at
-                        # start time, so patching the module is seen).
-                        from quill_agent_dashboard_pbi_etl_spark.operators import (
-                            dedup as _dd,
-                        )
-
-                        real_gate = _dd.ledger_gate_bloom
-
-                        def _spy(*a, **k):
-                            pregate_calls.append(1)
-                            return real_gate(*a, **k)
-
-                        _dd.ledger_gate_bloom = _spy
-                    try:
-                        ledger_path = os.path.join(work, f"ledger_{label}")
-                        sink = os.path.join(work, f"out_{label}")
-                        seed_df.write.mode("overwrite").parquet(ledger_path)
-                        t0 = time.perf_counter()
-                        stream = envelopes_to_webhook_shape(
-                            read_envelope_stream(spark, landing)
-                        )
-                        q = start_ledger_gated_fact_sink(
-                            normalize_webhooks(stream),
-                            ledger_path,
-                            sink,
-                            os.path.join(work, f"ckpt_{label}_{int(seed_frac * 100)}"),
-                            available_now=True,
-                            now_epoch=now_epoch,
-                            bloom_pregate=flag,
-                        )
-                        q.awaitTermination(3600)
-                        wall = time.perf_counter() - t0
-                        written = spark.read.parquet(sink).count()
-                        assert written == expected, (vol, seed_frac, label, written, expected)
-                    finally:
-                        # Restore even when the sink run raises — a leaked
-                        # spy would wrap later auto cells' gates in a chain
-                        # of spies feeding a stale pregate_calls list.
-                        if real_gate is not None:
-                            _dd.ledger_gate_bloom = real_gate
-                    cell[label] = {
-                        "wall_sec": round(wall, 3),
-                        "events_per_sec": int(n_events / wall),
-                    }
-                    if flag == "auto":
-                        chose = "bloom_pregate" if pregate_calls else "exact"
-                        cell[label]["auto_chose"] = chose
-                        if "exact" in cell and "bloom_pregate" in cell:
-                            better = (
-                                "exact"
-                                if cell["exact"]["wall_sec"]
-                                <= cell["bloom_pregate"]["wall_sec"]
-                                else "bloom_pregate"
-                            )
-                            cell[label]["measured_better"] = better
-                            cell[label]["auto_matches_better"] = chose == better
-                    shutil.rmtree(sink, ignore_errors=True)
-                    shutil.rmtree(ledger_path, ignore_errors=True)
-                cell["pregate_vs_exact_ratio"] = round(
-                    cell["bloom_pregate"]["wall_sec"] / cell["exact"]["wall_sec"], 3
-                )
-                key = f"vol{int(vol * 100)}pct_seed{int(seed_frac * 100)}pct"
-                out[key] = cell
-                print(f"{key}: {cell}", flush=True)
-                # persist after every cell — a mid-sweep kill loses nothing.
-                # auto runs land in their own node: they are single-pass
-                # cells and must not overwrite the committed min-of-2 grid.
-                node = "flip_point_auto" if include_auto else "flip_point"
-                path = "/root/repo/SCALE_LADDER.json"
-                data = json.load(open(path)) if os.path.exists(path) else {}
-                data.setdefault("streaming_ledger_gate", {}).setdefault(
-                    node, {}
-                ).update(out)
-                json.dump(data, open(path, "w"), indent=1)
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
     print(json.dumps(out, indent=1))
     spark.stop()
 
@@ -449,26 +233,6 @@ def main() -> None:
     rocksdb = "--rocksdb" in argv
     if rocksdb:
         argv.remove("--rocksdb")
-    if "--flip" in argv:
-        argv.remove("--flip")
-        kw = {}
-        if "--flip-rung" in argv:  # smoke-test hook: sweep a smaller rung
-            i = argv.index("--flip-rung")
-            kw["rung"] = argv[i + 1]
-            argv = argv[:i] + argv[i + 2 :]
-        if "--flip-volumes" in argv:  # e.g. --flip-volumes 0.6,1.0
-            i = argv.index("--flip-volumes")
-            kw["volumes"] = tuple(float(v) for v in argv[i + 1].split(","))
-            argv = argv[:i] + argv[i + 2 :]
-        if "--flip-seeds" in argv:
-            i = argv.index("--flip-seeds")
-            kw["seeds"] = tuple(float(v) for v in argv[i + 1].split(","))
-            argv = argv[:i] + argv[i + 2 :]
-        if "--flip-auto" in argv:  # add the bloom_pregate="auto" strategy
-            argv.remove("--flip-auto")
-            kw["include_auto"] = True
-        run_flip_mode(argv[0] if argv else "/root/repo/scale_ladder", **kw)
-        return
     if "--ledger" in argv:
         argv.remove("--ledger")
         single_batch = "--single-batch" in argv

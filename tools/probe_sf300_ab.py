@@ -13,9 +13,8 @@ its position in the execution ordering.
 
 Strategies:
   exact    — operators.dedup.ledger_gate, planner's choice
-  bloom    — operators.dedup.ledger_gate_bloom at the 1%-fpp sizing (167
-             Mbits at sf300 → past MAX_BLOOM_LITERAL_BITS, so the PUBLIC
-             operator's beyond-guard word-table dispatch is what executes)
+  bloom    — operators.dedup.ledger_gate_bloom (word-table probe) at the
+             1%-fpp sizing (167 Mbits at sf300)
   nobcast  — exact with auto-broadcast disabled: the plan the gate gets once
              the TTL-live ledger outgrows the broadcast threshold (the
              regime sf300's 17.5M live keys are already in on real

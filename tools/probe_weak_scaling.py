@@ -198,28 +198,10 @@ def run_ledger_cell(master: str, sf_dir: str) -> None:
         .replace(tzinfo=dt.timezone.utc)
         .timestamp()
     )
-    raw_fact = normalized_fact(spark, sf_dir).withColumnRenamed(
-        "EventID", "dedup_key"
+    fact = pin(
+        normalized_fact(spark, sf_dir).withColumnRenamed("EventID", "dedup_key"),
+        required=True,
     )
-    # Resolve the byte-threshold half of auto's dispatch on the unpinned
-    # file-backed plan and pass it explicitly. Below the threshold the
-    # remaining bits-guard axis depends on the live-key count, which only
-    # the timed sizing count produces — so the gate gets "auto" there and
-    # the cell records the fully RESOLVED encoding after the run
-    # (bloom_probe_resolved in the output, both guards applied). (Measured
-    # note: pin/localCheckpoint PRESERVES the Catalyst size estimate —
-    # LogicalRDD carries the origin plan's stats, verified identical
-    # pinned vs unpinned at sf10/sf30 — so auto inside the gate would in
-    # fact see the same estimate; the explicit pass is for recording the
-    # choice and robustness to pin implementations that drop stats, not a
-    # functional necessity.)
-    est = dedup.probe_volume_estimate(raw_fact)
-    probe_choice = (
-        "bucketed"
-        if est is not None and est > dedup.AUTO_BUCKETED_PROBE_BYTES
-        else "auto"
-    )
-    fact = pin(raw_fact, required=True)
     ledger = pin(
         fact.filter(
             F.col("EventTime") < F.lit("2024-01-10 00:00:00").cast("timestamp")
@@ -246,7 +228,6 @@ def run_ledger_cell(master: str, sf_dir: str) -> None:
         key_col="dedup_key",
         now_epoch=now_epoch,
         num_bits=num_bits,
-        probe=probe_choice,
     )
     bloom.write.mode("overwrite").format("noop").save()
     bloom_sec = round(time.perf_counter() - t0, 3)
@@ -264,18 +245,6 @@ def run_ledger_cell(master: str, sf_dir: str) -> None:
             "live_keys": live_n,
             "bloom_mbits": round(num_bits / 1e6, 1),
             "survivors": n_exact,
-            # the dispatch SETTING passed to the gate...
-            "bloom_probe": probe_choice,
-            # ...and the encoding it resolves to once live_n fixes num_bits
-            # (the bits-guard forces the word table past the plan-literal
-            # ceiling even under the byte threshold).
-            "bloom_probe_resolved": (
-                "bucketed"
-                if probe_choice == "bucketed"
-                or ((num_bits + 63) // 64) * 64 > dedup.MAX_BLOOM_LITERAL_BITS
-                or (est is not None and est > dedup.AUTO_BUCKETED_PROBE_BYTES)
-                else "literal"
-            ),
             "exact_join_nodes": exact_joins,
             "bloom_join_nodes": bloom_joins,
         }
