@@ -28,6 +28,23 @@ from quill_agent_dashboard_pbi_etl_spark.session import get_spark
 HEADLINE = list(QUERIES)
 
 
+def _prev_details(out_dir: str, sf: float, cpus: int) -> dict:
+    """The previous run's details at the same scale AND core count, or {}.
+
+    Reads ``BENCH_DETAILS_c{cpus}.json`` and uses it only when its recorded
+    ``sf`` and ``cpus`` both match: a c8 run followed by a c4 run would
+    otherwise report the core-count ratio as box shift. Details written
+    before ``cpus`` was recorded never match."""
+    try:
+        with open(os.path.join(out_dir, f"BENCH_DETAILS_c{cpus}.json")) as fh:
+            prev = json.load(fh)
+    except (OSError, ValueError):
+        return {}
+    if prev.get("sf") == sf and prev.get("cpus") == cpus:
+        return prev
+    return {}
+
+
 def _cpu_ticks() -> tuple[int, int] | None:
     """(steal ticks, total ticks) from the aggregate /proc/stat cpu line.
     Returns None where /proc/stat is unavailable (non-Linux)."""
@@ -46,23 +63,15 @@ def _cpu_ticks() -> tuple[int, int] | None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    # Snapshot the PREVIOUS run's details before this run overwrites them —
-    # the basis for box_shift_vs_prev below.
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAILS.json"
-    )
-    prev_medians: dict[str, float] = {}
-    prev_total = None
-    try:
-        with open(detail_path) as fh:
-            prev = json.load(fh)
-        if prev.get("sf") == sf:  # only compare like-for-like scales
-            prev_medians = prev.get("queries_median", {})
-            prev_total = prev.get("value")
-    except (OSError, ValueError):
-        pass
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
+    # Snapshot the PREVIOUS like-for-like run's details before this run
+    # overwrites them — the basis for box_shift_vs_prev below.
+    out_dir = os.path.dirname(os.path.abspath(__file__))
+    prev = _prev_details(out_dir, sf, cpus)
+    prev_medians: dict[str, float] = prev.get("queries_median", {})
+    prev_total = prev.get("value")
 
     # Warm-up: run every headline query once at sf0.001. Spark's generated
     # whole-stage code is keyed by plan shape, not input path, so this
@@ -83,7 +92,7 @@ def main() -> None:
     # Per-query wall-clock = min of 3 measured runs (steady-state; local[N]
     # single-JVM timings are noisy from GC/compilation — min is the standard
     # steady-state estimator and every run executes end-to-end on sf_dir).
-    # The per-query MEDIAN of the same runs goes to BENCH_DETAILS.json:
+    # The per-query MEDIAN of the same runs goes to the details file:
     # NOTES.md documents a ±40% ambient-VM noise band on this box, and
     # round-over-round deltas should be judged on medians, which that band
     # whipsaws far less than single samples.
@@ -142,8 +151,9 @@ def main() -> None:
     #
     # box_shift_vs_prev — the judge's own drift statistic, automated: the
     # median over all common queries of (this run's per-query median /
-    # the per-query median in the BENCH_DETAILS.json found on disk BEFORE
-    # this run overwrites it, i.e. the previously committed snapshot). A
+    # the per-query median in the BENCH_DETAILS_c{cpus}.json found on disk
+    # BEFORE this run overwrites it, i.e. the previous run at the same sf
+    # and core count). A
     # uniform ratio across untouched queries is box state, not code;
     # prev_total is recorded alongside so the comparison basis is
     # self-describing.
@@ -184,7 +194,8 @@ def main() -> None:
     # parsed=null; the capture window is unknown but < 4.5 KB). Keep the
     # stdout line well under 1 KB: total + the slowest queries only, 1 dp.
     # Full detail (3 dp timings for all queries, row-count drift map, errors)
-    # goes to BENCH_DETAILS.json beside this script.
+    # goes to BENCH_DETAILS_c{cpus}.json beside this script, one file per
+    # core count, and BENCH_DETAILS.json keeps a copy of the latest run.
     slowest = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:20]
     )
@@ -210,15 +221,17 @@ def main() -> None:
         "rows": rows,
         "errors": errors,
         "sf": sf,
+        "cpus": cpus,
         "box_health": box_health,
         "box_health_sentinels": sentinel_ratios,
         "box_health_anchor": sentinel_anchor,
         "box_shift_vs_prev": box_shift_vs_prev,
         "prev_total": prev_total,
     }
-    with open(detail_path, "w") as fh:
-        json.dump(detail, fh, indent=1)
-        fh.write("\n")
+    for name in (f"BENCH_DETAILS_c{cpus}.json", "BENCH_DETAILS.json"):
+        with open(os.path.join(out_dir, name), "w") as fh:
+            json.dump(detail, fh, indent=1)
+            fh.write("\n")
     print(json.dumps(out, separators=(",", ":")))
     spark.stop()
 

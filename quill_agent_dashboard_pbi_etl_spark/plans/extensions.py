@@ -524,25 +524,21 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal REAL-decode pipeline: synthesize genuine codec payloads
     per document (mapInPandas, executor-side) and decode them with the
-    in-repo codecs behind decode_asset — PCM RMS features for audio, RGB
-    channel means for images. The stripe set spans the decoders' profile
-    surface: WAV, BMP, PPM, five-filter PNG, baseline 4:4:4 JPEG, plus
-    (r12) 4:2:0-with-restart-markers and progressive SOF2 JPEG and
-    palette / Adam7-interlaced / 16-bit PNG — so the driver-checked query
-    exercises every entropy/layout lane the profile tests pin in
-    isolation. The decode math is not SQL-expressible, so this registers
-    rows-only; exact feature values are locked by
-    tests/test_multimodal_codecs.py golden vectors against a pure-Python
-    reference."""
+    stdlib decoders behind decode_asset — PCM RMS features for the WAV
+    stripe, RGB channel means for the BMP and PPM stripes. The decode math
+    is not SQL-expressible, so this registers rows-only; exact feature
+    values are locked by tests/test_multimodal_codecs.py golden vectors
+    against independent wave/struct references."""
     from ..functions.multimodal import (
         extract_features,
         synthesize_codec_assets_from_documents,
     )
     from ..sources.readers import ensure_min_partitions
 
-    # The codec work (Python entropy decode on the JPEG stripes) is the
-    # CPU-heavy projection ensure_min_partitions exists for: single-file
-    # driver testdata scans as ONE task, serializing the whole decode.
+    # Synthesis and decode run row by row in Python workers (LCG payload,
+    # container write, parse, sha256), a CPU-heavy projection of the kind
+    # ensure_min_partitions exists for: single-file test data scans as ONE
+    # task, which would funnel every document through one worker.
     docs = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
     assets = synthesize_codec_assets_from_documents(docs)
     return extract_features(assets, use_real_decoder=True).select(
