@@ -524,11 +524,14 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal REAL-decode pipeline: synthesize genuine codec payloads
     per document (mapInPandas, executor-side) and decode them with the
-    stdlib decoders behind decode_asset — PCM RMS features for the WAV
-    stripe, RGB channel means for the BMP and PPM stripes. The decode math
-    is not SQL-expressible, so this registers rows-only; exact feature
-    values are locked by tests/test_multimodal_codecs.py golden vectors
-    against independent wave/struct references."""
+    stdlib + numpy decoders behind decode_asset — PCM RMS features for
+    the WAV stripe, RGB channel means for the BMP, PPM and PNG stripes
+    (five-filter truecolor, palette, Adam7 and 16-bit PNG, so the
+    registered query exercises every layout lane the profile tests pin in
+    isolation). The decode math is not SQL-expressible, so this
+    registers rows-only; exact feature values are locked by
+    tests/test_multimodal_codecs.py golden vectors against independent
+    wave/struct references and a per-byte PNG reference."""
     from ..functions.multimodal import (
         extract_features,
         synthesize_codec_assets_from_documents,
@@ -536,9 +539,10 @@ def q_multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.readers import ensure_min_partitions
 
     # Synthesis and decode run row by row in Python workers (LCG payload,
-    # container write, parse, sha256), a CPU-heavy projection of the kind
-    # ensure_min_partitions exists for: single-file test data scans as ONE
-    # task, which would funnel every document through one worker.
+    # container write, parse or inflate + unfilter, sha256), a CPU-heavy
+    # projection of the kind ensure_min_partitions exists for: single-file
+    # test data scans as ONE task, which would funnel every document
+    # through one worker.
     docs = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
     assets = synthesize_codec_assets_from_documents(docs)
     return extract_features(assets, use_real_decoder=True).select(

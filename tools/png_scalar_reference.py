@@ -1,12 +1,10 @@
 """Scalar (per-byte Python) reference implementations of the PNG codec
 lanes, preserved verbatim from the pre-vectorization engine.
 
-Two consumers:
-- ``tests/test_multimodal_codecs.py`` differential tests: the production
-  numpy lanes in ``functions/multimodal.py`` must produce byte-identical
-  decoded rasters / encoder payloads / LCG streams on randomized shapes.
-- ``tools/bench_png_decode.py``: the before/after decode-lane measurement
-  the vectorization claims rest on.
+Consumer: the ``tests/test_multimodal_codecs.py`` differential tests. The
+production numpy lanes in ``functions/multimodal.py`` must produce
+byte-identical decoded rasters / encoder payloads / LCG streams on
+randomized shapes.
 
 These loops are the executable spec of RFC 2083 §6 filtering (the numpy
 lanes are the optimization); do not "fix" them independently of the
