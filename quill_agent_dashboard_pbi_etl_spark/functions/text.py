@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..operators.dedup import normalize_text
+from ..operators.dedup import normalize_text, tokens
 
 # Tiny per-language function-word lists for the n-gram/stopword heuristic.
 # (Real pipelines plug fastText/CLD3 here via a Pandas UDF; the heuristic is
@@ -24,10 +24,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 STOPWORDS = LANG_MARKERS["en"]
-
-
-def tokens(text: Column) -> Column:
-    return F.split(normalize_text(text), " ")
 
 
 def with_text_prep(df, text_col: str = "text"):

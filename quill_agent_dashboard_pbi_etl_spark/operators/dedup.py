@@ -390,7 +390,11 @@ def ledger_gate_bloom(
         F.col("pk").alias(key_col)
     )
     words = bloom_words(live, key_col, num_bits, num_hashes)
-    flagged = bloom_maybe_flag_bucketed(events, words, num_bits, key_col, num_hashes)
+    # pin: both union branches below read `flagged`; unpinned, each branch
+    # re-runs the whole k-join probe chain (and the events' upstream).
+    flagged = pin(
+        bloom_maybe_flag_bucketed(events, words, num_bits, key_col, num_hashes)
+    )
     clean = flagged.filter(~F.col("__bloom_maybe")).drop("__bloom_maybe")
     maybe = flagged.filter(F.col("__bloom_maybe")).drop("__bloom_maybe")
     # The maybe-side exact re-check goes through the same flip-regime
@@ -623,26 +627,47 @@ def exact_dedup(
     return keep.select(id_col, "content_hash")
 
 
+def tokens(col: Column) -> Column:
+    """Whitespace token array of :func:`normalize_text` — the one tokenizer
+    every near-dup, repetition and text-heuristic op reads."""
+    return F.split(normalize_text(col), " ")
+
+
 def shingles(col: Column, n: int = 3, distinct: bool = True) -> Column:
     """Word n-gram shingle array from normalized text (distinct by default;
     ``distinct=False`` keeps multiplicity, for repetition statistics).
 
-    Built-ins only: split → sliding window via transform over index sequence.
+    Built-ins only: tokenize → sliding window via transform over an index
+    sequence. Each row is tokenized exactly ONCE, so the cost is linear in
+    document length. The token array is bound to a lambda variable (a
+    one-element ``transform`` over ``array(tokens)``) because the window
+    reads it once per token slot and Catalyst does not eliminate common
+    subexpressions inside lambda bodies: written inline, the whole
+    lower → regexp_replace → trim → split chain re-ran ~3·T + 2 times for a
+    T-token document. It is not split into its own projection either: the
+    optimizer pushes such a Project below ``ensure_min_partitions``'
+    exchange (see ``ngram_jaccard_pairs``), so the expression stays whole
+    for the caller's ``Generate``/``select``.
     """
-    toks = F.split(normalize_text(col), " ")
-    count = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    # Guard count == 0: sequence(0, -1) is a DESCENDING sequence in Spark, and
-    # its indices would run element_at past the array on sub-n-token docs.
-    grams = F.when(
-        count > 0,
-        F.transform(
-            F.sequence(F.lit(0), count - 1),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)]
+
+    def grams_of(toks: Column) -> Column:
+        count = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+        # Guard count == 0: sequence(0, -1) is a DESCENDING sequence in Spark,
+        # and its indices would run element_at past the array on sub-n-token
+        # docs.
+        grams = F.when(
+            count > 0,
+            F.transform(
+                F.sequence(F.lit(0), count - 1),
+                lambda i: F.concat_ws(
+                    " ",
+                    *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)],
+                ),
             ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams) if distinct else grams
+        ).otherwise(F.array().cast("array<string>"))
+        return F.array_distinct(grams) if distinct else grams
+
+    return F.element_at(F.transform(F.array(tokens(col)), grams_of), 1)
 
 
 # MinHash base: one md5 per shingle → 61-bit integer, then cheap affine
@@ -737,7 +762,7 @@ def minhash_band_buckets(
     # (often single-partition) scan — the full signature computation then
     # executes twice, once serialized on one task.
     with_shingles = docs.filter(
-        F.size(F.split(normalize_text(F.col(text_col)), " ")) >= F.lit(shingle_n)
+        F.size(tokens(F.col(text_col))) >= F.lit(shingle_n)
     )
     sigs = minhash_signature_df(with_shingles, text_col, id_col, num_hashes, shingle_n)
     # One band row per (doc, band) via a single explode — NOT a per-band
@@ -951,7 +976,7 @@ def _ngram_jaccard_pairs_ppjoin(
     from ..sources.readers import ensure_min_partitions
 
     with_shingles = ensure_min_partitions(docs).filter(
-        F.size(F.split(normalize_text(F.col(text_col)), " ")) >= F.lit(shingle_n)
+        F.size(tokens(F.col(text_col))) >= F.lit(shingle_n)
     )
     sh = with_shingles.select(
         F.col(id_col),
@@ -1047,7 +1072,7 @@ def simhash_df(
     docs = ensure_min_partitions(docs)
     toks = docs.select(
         F.col(id_col),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok"),
+        F.explode(tokens(F.col(text_col))).alias("tok"),
     ).select(F.col(id_col), F.md5("tok").alias("m")).select(
         F.col(id_col),
         F.conv(F.substring("m", 1, 8), 16, 10).cast("long").alias("hi"),

@@ -1029,10 +1029,11 @@ FROM documents d LEFT JOIN stats s ON d.doc_id = s.doc_id
 )
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Intra-document repetition filters (Gopher-style): duplicate-2-gram
-    fraction and most-frequent-2-gram coverage per doc. Shape is explode →
-    two-level groupBy — scale-safe for arbitrarily long documents (a per-row
-    array-fold would be O(len²) on monster docs); only (doc_id, gram-hash)
-    tuples shuffle."""
+    fraction and most-frequent-2-gram coverage per doc. Shingling is linear
+    in document length (``dedup.shingles`` tokenizes each row once); the
+    explode → two-level groupBy then counts grams without a per-document
+    map, so a monster doc spreads over the shuffle instead of one task's
+    memory. Only (doc_id, gram) tuples shuffle."""
     from ..sources.readers import ensure_min_partitions
 
     docs = load_table(spark, sf_dir, "documents")

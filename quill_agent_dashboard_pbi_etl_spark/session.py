@@ -18,6 +18,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "quill-agent-dashboard-pbi-etl-spark"
 
+# Directory that holds the package: Python workers put it on their path, so
+# UDF / mapInPandas stages import the same tree the driver loaded, whatever
+# the working directory.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
@@ -64,6 +69,8 @@ def get_spark(
         # truncate ns→µs (same truncation DuckDB applies).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # Spark merges this with its own and the environment's PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if extra_conf:

@@ -25,7 +25,7 @@ from __future__ import annotations
 import time
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -259,9 +259,12 @@ def start_ledger_gated_fact_sink(
             # Estimates are driver-side plan stats (no job). See
             # operators.dedup.gate_anti_join.
             new_events = gate_anti_join(unique, live, "EventID")
-            # pin: the claim set is consumed twice (emptiness check + the
-            # append) — materialize the micro-batch-sized result once
-            # instead of running the ledger anti-join twice under the lock.
+            # pin: materialize the claim set once under the lock; its row
+            # count rides the pin's own job as an Observation, so deciding
+            # whether to append costs no extra Spark job and the append
+            # does not re-run the ledger anti-join. keep_first already
+            # left one row per EventID, so the claims need no dedup.
+            obs = Observation()
             claims = pin(
                 new_events
                 .select(
@@ -277,13 +280,13 @@ def start_ledger_gated_fact_sink(
                     F.lit(now + ttl_days * 86400).cast("long").alias("expiresAt"),
                     F.lit(tag).alias("writer_id"),
                 )
-                .dropDuplicates(["pk"]),
+                .observe(obs, F.count(F.lit(1)).alias("n")),
                 required=True,
             )
             # An all-duplicate batch claims nothing — skip the append so a
             # long-running stream doesn't shed one empty parquet file set
             # per trigger.
-            if not claims.isEmpty():
+            if obs.get["n"] > 0:
                 # The sink's three-valued flag passes through verbatim:
                 # None follows the existing layout, an explicit True/False
                 # establishes-or-enforces it (append_ledger raises on a

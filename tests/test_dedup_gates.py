@@ -4,7 +4,9 @@ fail-open contract and TTL semantics."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from quill_agent_dashboard_pbi_etl_spark.operators import dedup, gates
@@ -208,12 +210,14 @@ def test_ledger_gate_bloom_equals_exact_gate(spark):
         r.dedup_key
         for r in dedup.ledger_gate(events, ledger, now_epoch=now).collect()
     }
-    bloomed = {
-        r.dedup_key
-        for r in dedup.ledger_gate_bloom(events, ledger, now_epoch=now).collect()
-    }
+    gated = dedup.ledger_gate_bloom(events, ledger, now_epoch=now)
+    bloomed = {r.dedup_key for r in gated.collect()}
     assert bloomed == exact
     assert len(exact) == 150  # 200 − 50 live
+    # The probe chain runs once, inside the pin of the flagged events: the
+    # clean and maybe branches both read the pinned rows, so no word-table
+    # probe join is left in the gate's own plan.
+    assert "LeftOuter" not in gated._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_bloom_bucketed_probe_stays_map_side(spark):
@@ -504,3 +508,50 @@ def test_is_broadcast_flip_regime_boundaries():
     assert not flip(10 << 10, 150 << 10, T)     # 150KB ledger: plain wins
     assert flip(1 << 20, 32 << 20, T)           # exactly at the floor
     assert not flip(1 << 20, (32 << 20) - 1, T) # just under the floor
+
+
+SHINGLE_EDGE_TEXTS = [
+    None,
+    "",
+    "   ",
+    "\t\n ",
+    "one",
+    "one two",
+    "One  Two\tthree",
+    "a b a b a b",
+    "x y z x y z x",
+    "The\tQUICK brown  fox jumps over THE quick brown fox",
+]
+
+
+def _ref_shingles(text, n, distinct):
+    """Pure-Python sliding window over the normalized tokens."""
+    if text is None:
+        return []
+    toks = re.sub(r"\s+", " ", text.lower()).strip(" ").split(" ")
+    grams = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+    return list(dict.fromkeys(grams)) if distinct else grams
+
+
+@pytest.mark.parametrize("n", [2, 3])
+@pytest.mark.parametrize("distinct", [True, False])
+def test_shingles_match_python_reference(spark, n, distinct):
+    docs = spark.createDataFrame(
+        list(enumerate(SHINGLE_EDGE_TEXTS)), "doc_id int, text string"
+    )
+    got = {
+        r.doc_id: r.s
+        for r in docs.select(
+            "doc_id", dedup.shingles(F.col("text"), n, distinct).alias("s")
+        ).collect()
+    }
+    for i, text in enumerate(SHINGLE_EDGE_TEXTS):
+        assert got[i] == _ref_shingles(text, n, distinct), (text, got[i])
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_shingles_tokenize_each_row_once(n):
+    """The window reads the token array once per slot; the tokenizer itself
+    (one regexp_replace) must appear once in the expression, not once per
+    slot."""
+    assert str(dedup.shingles(F.col("text"), n)).count("regexp_replace") == 1
