@@ -380,9 +380,10 @@ def ledger_gate_bloom(
     only the ~(duplicates + fpp) sliver of events enters the anti-join —
     with a 14-day ledger and ~1% duplicate rate that is a ~50-100× cut in
     the volume an exact gate would shuffle once the ledger outgrows
-    broadcast, for one extra pass over the batch. The reference's
-    DynamoDB-side analog would be a negative cache in front of the
-    conditional write.
+    broadcast. The price is the word-table build plus a probe chain that
+    runs twice over the batch, once per union branch (pin ``events`` first
+    if its upstream is costly). The reference's DynamoDB-side analog would
+    be a negative cache in front of the conditional write.
     """
     if now_epoch is None:
         now_epoch = int(time.time())
@@ -390,11 +391,9 @@ def ledger_gate_bloom(
         F.col("pk").alias(key_col)
     )
     words = bloom_words(live, key_col, num_bits, num_hashes)
-    # pin: both union branches below read `flagged`; unpinned, each branch
-    # re-runs the whole k-join probe chain (and the events' upstream).
-    flagged = pin(
-        bloom_maybe_flag_bucketed(events, words, num_bits, key_col, num_hashes)
-    )
+    # Not pinned, although both branches below read it: materializing the
+    # batch cost more than the second probe at sf10-sf30 (NOTES.md r16).
+    flagged = bloom_maybe_flag_bucketed(events, words, num_bits, key_col, num_hashes)
     clean = flagged.filter(~F.col("__bloom_maybe")).drop("__bloom_maybe")
     maybe = flagged.filter(F.col("__bloom_maybe")).drop("__bloom_maybe")
     # The maybe-side exact re-check goes through the same flip-regime

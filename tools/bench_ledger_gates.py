@@ -32,7 +32,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -62,7 +63,7 @@ def _noop(df) -> None:
 
 def main() -> None:
     argv = sys.argv[1:]
-    ladder_root = argv[0] if argv else "/root/repo/scale_ladder"
+    ladder_root = argv[0] if argv else os.path.join(ROOT, "scale_ladder")
     wanted = argv[1:] or list(RUNGS)
     now_epoch = int(
         dt.datetime.strptime(NOW_ANCHOR, "%Y-%m-%d %H:%M:%S")
@@ -174,7 +175,7 @@ def main() -> None:
         out[rung] = res
         print(f"{rung}: {res}")
 
-    path = "/root/repo/SCALE_LADDER.json"
+    path = os.path.join(ROOT, "SCALE_LADDER.json")
     data = json.load(open(path)) if os.path.exists(path) else {}
     data.setdefault("ledger_gate_crossover", {}).update(out)
     json.dump(data, open(path, "w"), indent=1)

@@ -12,22 +12,12 @@ execution materialized 1 and reused 6. The REST endpoint
 each completed execution — the ground truth for what ran.
 
 Requires ``spark.ui.enabled=true`` on the session.
-
-Command line: ``python tools/plan_audit.py <sf_dir> <tag> <suffix>
-<query>...`` runs each registry query over ``sf_dir`` to completion in its
-own session and writes the final plan of EVERY SQL execution it ran —
-``pin()`` materializations included, oldest first — to
-``plans/<tag>/<query>_<suffix>_executed.txt``. A pinned stage (the shingle
-index, a Bloom-flagged batch) never shows in the query's own plan, only in
-its pin's execution.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import re
-import sys
 import urllib.request
 
 
@@ -93,35 +83,3 @@ def join_node_names(plan: str) -> list[str]:
             for m in re.findall(r"(\w*Join\w*)", ln)
         }
     )
-
-
-def main(argv: list[str]) -> None:
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, root)
-    from quill_agent_dashboard_pbi_etl_spark.plans import extensions  # noqa: F401
-    from quill_agent_dashboard_pbi_etl_spark.plans.registry import QUERIES
-    from quill_agent_dashboard_pbi_etl_spark.session import get_spark
-
-    sf_dir, tag, suffix, names = argv[0], argv[1], argv[2], argv[3:]
-    out_dir = os.path.join(root, "plans", tag)
-    os.makedirs(out_dir, exist_ok=True)
-    for name in names:
-        spark = get_spark(
-            app_name=f"plan-audit-{name}", extra_conf={"spark.ui.enabled": "true"}
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        QUERIES[name](spark, sf_dir).collect()
-        parts = [
-            f"==== SQL execution {e['id']}: {e['description'].split(' at ')[0]}\n"
-            f"{e['planDescription']}"
-            for e in sql_executions(spark)
-        ]
-        path = os.path.join(out_dir, f"{name}_{suffix}_executed.txt")
-        with open(path, "w") as fh:
-            fh.write("\n".join(parts))
-        print(f"ok   {name}: {len(parts)} executions -> {path}", flush=True)
-        spark.stop()
-
-
-if __name__ == "__main__":
-    main(sys.argv[1:])
