@@ -15,6 +15,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.measure import cpu_ticks, steal_pct
 from quill_agent_dashboard_pbi_etl_spark.operators.materialize import (
     release_dead_blocks,
 )
@@ -43,21 +44,6 @@ def _prev_details(out_dir: str, sf: float, cpus: int) -> dict:
     if prev.get("sf") == sf and prev.get("cpus") == cpus:
         return prev
     return {}
-
-
-def _cpu_ticks() -> tuple[int, int] | None:
-    """(steal ticks, total ticks) from the aggregate /proc/stat cpu line.
-    Returns None where /proc/stat is unavailable (non-Linux)."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        vals = [int(x) for x in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        # guest and guest_nice (fields 9-10) are already counted inside user
-        # and nice, so the total stops at steal.
-        return steal, sum(vals[:8])
-    except (OSError, ValueError, IndexError):
-        return None
 
 
 def main() -> None:
@@ -108,11 +94,11 @@ def main() -> None:
     medians: dict[str, float] = {}
     rows: dict[str, int] = {}
     errors: dict[str, str] = {}
-    steal_pct: dict[str, float] = {}
+    steal_by_query: dict[str, float] = {}
     for name in HEADLINE:
         fn = QUERIES[name]
         samples: list[float] = []
-        ticks0 = _cpu_ticks()
+        ticks0 = cpu_ticks()
         try:
             for _ in range(3):
                 start = time.perf_counter()
@@ -132,11 +118,9 @@ def main() -> None:
                 release_dead_blocks(spark)
             timings[name] = round(min(samples), 3)
             medians[name] = round(sorted(samples)[len(samples) // 2], 3)
-            ticks1 = _cpu_ticks()
-            if ticks0 and ticks1 and ticks1[1] > ticks0[1]:
-                steal_pct[name] = round(
-                    100.0 * (ticks1[0] - ticks0[0]) / (ticks1[1] - ticks0[1]), 1
-                )
+            ticks1 = cpu_ticks()
+            if ticks1[1] > ticks0[1]:  # (0, 0) where /proc/stat is unreadable
+                steal_by_query[name] = round(steal_pct(ticks0, ticks1), 1)
             # Untimed extra pass for the result cardinality — a cross-round
             # drift check (a perf "win" that changes the row count is a bug).
             rows[name] = fn(spark, sf_dir).count()
@@ -217,7 +201,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "queries_median": medians,
-        "queries_steal_pct": steal_pct,
+        "queries_steal_pct": steal_by_query,
         "rows": rows,
         "errors": errors,
         "sf": sf,

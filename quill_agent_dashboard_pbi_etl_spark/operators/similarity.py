@@ -1,103 +1,139 @@
-"""Embedding similarity search (north-star ops, BASELINE.json).
+"""Embedding similarity search: one operator per question.
 
-Brute-force cosine top-k as the exact baseline, an IVF-bucketed variant as the
-scale path. All vector math stays JVM-side via higher-order functions
-(``zip_with`` + ``aggregate``) over ``array<float>`` columns cast to double —
-no Python in the hot loop; a Pandas-UDF path exists for BLAS-heavy workloads
-(see ``functions/vectors.py``).
+- **Exact top-k** — :func:`brute_force_topk`. The query set is collected
+  (a bounded collect, like the IVF model) and every Arrow batch of corpus
+  vectors is scored against all queries in one numpy (B×D)·(D×Q) matmul;
+  each partition keeps its k best rows per query, so the rank window
+  shuffles O(partitions·Q·k) rows, never the corpus.
+- **Approximate top-k** — :func:`ivf_topk`. The corpus goes to its nearest
+  IVF cell, each query to its ``n_probe`` nearest cells, and the match is an
+  equi-join on the cell. The model is either fixed rows
+  (:func:`collect_rows`) or k-means trained (:func:`train_ivf_centroid_rows`).
+- **Exact pairs** — :func:`blocked_near_dup_numpy`. Chunked dense matmuls
+  per block; all-pairs is the one-block case.
+- **Approximate pairs** — :func:`near_dup_by_cosine`. Multi-table
+  random-hyperplane LSH; each bucket is verified with the exact-pairs kernel.
 
-Scale shape: queries are broadcast (top-k against Q query vectors is a
-broadcast nested-loop over the corpus — linear scan, embarrassingly parallel);
-IVF replaces the full scan with a centroid-bucket equi-join, trading recall
-for a ~n_clusters× scan reduction.
+Every operator reads ``(vec_id, embedding)`` and rounds cosine to 6 decimals,
+as the DuckDB oracle's ``round(list_cosine_similarity(...), 6)`` does. Each
+path is the one that measured cheaper than the alternatives it replaced: the
+JVM nested-loop top-k, the crossJoin nearest-cell assignment and the
+triangular all-pairs decomposition (NOTES.md, r17 pricing table).
+
+Limit: nearest-cell assignment embeds the IVF model in the plan as literals,
+so a model of more than ``MAX_LITERAL_CENTROID_ELEMS`` (n_cells × dim)
+elements raises ``ValueError``.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .materialize import local_frame
+ID = "vec_id"
+VEC = "embedding"
+ROUND = 6
+PAIRS_SCHEMA = "vec_a long, vec_b long, cosine_sim double"
 
-
-def dot(a: Column, b: Column) -> Column:
-    """Σ a[i]·b[i] via zip_with + aggregate (JVM codegen, no UDF)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
+#: Largest IVF model (n_cells × dim elements) :func:`_nearest_cells` embeds
+#: as plan literals. The registry's largest model is 8 × 64 = 512 elements;
+#: a production model (4096 cells × 768 dims ≈ 3M) would blow plan size and
+#: parse time, so it is refused instead of planned.
+MAX_LITERAL_CENTROID_ELEMS = 16384
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """a·b / (|a|·|b|) via zip_with + aggregate (JVM codegen, no UDF)."""
 
+    def norm(x: Column) -> Column:
+        return F.sqrt(F.aggregate(x, F.lit(0.0), lambda acc, v: acc + v * v))
 
-def _as_double(col: Column) -> Column:
-    return F.transform(col, lambda v: v.cast("double"))
-
-
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Exact cosine top-k: for each query vector, the k nearest corpus vectors
-    (self-matches excluded). Returns (query_id, neighbor_id, rank, cosine_sim).
-
-    The query side is broadcast; ranking uses the *rounded* similarity with an
-    id tie-break so results are deterministic and engine-portable.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qvec")
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cvec")
-    )
-    scored = (
-        c.join(broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine_sim",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), round_digits),
-        )
-        .select("query_id", "neighbor_id", "cosine_sim")
-    )
+    return dot / (norm(a) * norm(b))
+
+
+def _vectors(df: DataFrame) -> DataFrame:
+    return df.select(ID, F.transform(VEC, lambda v: v.cast("double")).alias("vec"))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine_sim) → the k best rows per query,
+    ranked by similarity descending with the neighbor id ascending as the
+    tie-break, so results are deterministic and engine-portable."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "cosine_sim")
+        .select(
+            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "cosine_sim"
+        )
     )
 
 
-def _collect_centroids(
-    centroids: DataFrame, vec_col: str = "embedding"
-) -> list[tuple[int, list[float]]]:
-    """Centroid DataFrame → driver-side (centroid_id, vector) rows, ordered by
-    centroid_id. Centroid sets are model state (n_cells × dim doubles) —
-    driver-sized BY DEFINITION, so this is a bounded collect, not a data-scale
-    one. Values arrive as exact IEEE doubles (a float column widens exactly),
-    so literal re-embedding preserves every bit."""
-    return [
-        (r["centroid_id"], [float(x) for x in r[vec_col]])
-        for r in centroids.select("centroid_id", vec_col)
-        .orderBy("centroid_id")
-        .collect()
-    ]
+def collect_rows(df: DataFrame, key: str) -> list[tuple[int, list[float]]]:
+    """Model-sized ``(key, embedding)`` rows — an IVF model or a query set —
+    collected to the driver, sorted by key. This is a bounded collect by
+    definition, not a data-scale one. A float column widens to double
+    exactly, so re-embedding the values as literals preserves every bit."""
+    return sorted(
+        (r[0], [float(x) for x in r[1]]) for r in df.select(key, VEC).collect()
+    )
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """Exact cosine top-k: for each query vector, the k nearest corpus vectors
+    (self-matches excluded). Returns (query_id, neighbor_id, rank, cosine_sim).
+
+    The collected query matrix rides in the closure; each Arrow batch is one
+    matmul against it, trimmed to the batch's k best rows per query, and each
+    partition trims its batches again before the rank window."""
+    # pandas is imported where it is used, as in the other kernels below:
+    # importing it with this module adds ~0.4 s to every registry import.
+    import pandas as pd
+
+    rows = collect_rows(queries, ID)
+    qids = np.array([i for i, _ in rows], dtype=np.int64)
+    qmat = np.array([v for _, v in rows], dtype=np.float64)
+    qnorm = np.linalg.norm(qmat, axis=-1)
+
+    def head_k(cand: pd.DataFrame) -> pd.DataFrame:
+        cand = cand.sort_values(
+            ["query_id", "cosine_sim", "neighbor_id"], ascending=[True, False, True]
+        )
+        return cand.groupby("query_id").head(k)
+
+    def score(batches):
+        parts = []
+        for pdf in batches:
+            if not len(pdf) or not len(qids):
+                continue
+            ids = pdf[ID].to_numpy(dtype=np.int64)
+            mat = np.array(list(pdf[VEC]), dtype=np.float64)
+            norms = np.linalg.norm(mat, axis=1)
+            sims = np.round((mat @ qmat.T) / np.outer(norms, qnorm), ROUND)  # B×Q
+            cand = pd.DataFrame(
+                {
+                    "query_id": np.tile(qids, len(ids)),
+                    "neighbor_id": np.repeat(ids, len(qids)),
+                    "cosine_sim": sims.reshape(-1),
+                }
+            )
+            parts.append(head_k(cand[cand.query_id != cand.neighbor_id]))
+        if parts:
+            yield head_k(pd.concat(parts))
+
+    scored = corpus.select(ID, VEC).mapInPandas(
+        score, "query_id long, neighbor_id long, cosine_sim double"
+    )
+    return _top_k(scored, k)
 
 
 def _sql_double(x: float) -> str:
@@ -114,222 +150,128 @@ def _sql_double(x: float) -> str:
     return f"{x!r}D"
 
 
-#: Plan-size guard for :func:`_nearest_cells` (r15, VERDICT what's-wrong 3):
-#: the literal-embedded argmax projection inlines n_cells × dim double
-#: literals into ONE SQL expression — ideal for bench-scale models (8 × 64 =
-#: 512 elements) but a production IVF model (4096 cells × 768 dims ≈ 3M
-#: literals) would blow plan size and parse time long before executor cost
-#: matters. Above this element count the assignment falls back to the
-#: broadcast-crossJoin + window shape (the pre-r14 plan), which computes the
-#: same rounded cosine and the same (sim DESC, centroid_id ASC) order — rows
-#: are identical either way (unit-tested both sides of the threshold).
-MAX_LITERAL_CENTROID_ELEMS = 16384
-
-
 def _centroid_norm(cvec: list[float]) -> float:
-    """Driver-side l2 norm matching Spark's fold bit-for-bit: the SQL form
-    was ``sqrt(aggregate(cvec, 0.0D, (acc, v) -> acc + v * v))`` — a
+    """Driver-side l2 norm matching Spark's fold bit-for-bit:
+    ``sqrt(aggregate(cvec, 0.0D, (acc, v) -> acc + v * v))`` is a
     left-to-right IEEE-double sum of squares then a correctly-rounded sqrt,
     which is exactly this loop (Python floats are IEEE doubles and
-    ``math.sqrt`` is correctly rounded). Binding the result as ONE literal
-    (ADVICE r14) halves the generated SQL (each centroid array was inlined
-    twice: zip_with numerator + norm denominator) and drops a per-row O(dim)
-    fold per centroid."""
+    ``math.sqrt`` is correctly rounded)."""
     acc = 0.0
     for v in cvec:
         acc += v * v
     return math.sqrt(acc)
 
 
-def _nearest_cells_crossjoin(
-    vectors: DataFrame,
-    cent_rows: list[tuple[int, list[float]]],
-    n_probe: int,
-    id_col: str,
-) -> DataFrame:
-    """Broadcast-crossJoin + window nearest-cell assignment — the shape for
-    models too large to embed as plan literals (see
-    ``MAX_LITERAL_CENTROID_ELEMS``). Same rounded cosine, same
-    (sim DESC NaN-first, centroid_id ASC) order as the literal path: Spark
-    orders NaN greatest, so ``desc`` puts it first, exactly like the literal
-    comparator's ``>``/``<`` (NaN compares greater than any double in Spark
-    semantics)."""
-    cent_df = local_frame(
-        vectors.sparkSession,
-        [(int(cid), [float(x) for x in cvec]) for cid, cvec in cent_rows],
-        "centroid_id bigint, cvec array<double>",
-    )
-    scored = vectors.crossJoin(broadcast(cent_df)).withColumn(
-        "__sim", F.round(cosine(F.col("vec"), F.col("cvec")), 6)
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("__sim").desc(), F.col("centroid_id")
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= min(n_probe, len(cent_rows)))
-        .select(id_col, "centroid_id", "vec")
-    )
-
-
 def _nearest_cells(
-    vectors: DataFrame,
-    cent_rows: list[tuple[int, list[float]]],
-    n_probe: int,
-    id_col: str,
-    max_literal_elems: int | None = None,
+    vectors: DataFrame, cent_rows: list[tuple[int, list[float]]], n_probe: int
 ) -> DataFrame:
-    """Narrow nearest-cell assignment against a driver-side centroid list
-    (r14, guide §2.4 "remove shuffles outright"): the old shape cross-joined
-    every vector with the broadcast centroid set (n_cells× row blowup) and
-    picked the argmax with a row_number window — one full Exchange + Sort per
-    assignment call, five calls per trained-IVF query. Centroids are
-    model-sized, so they embed as literal arrays and the argmax becomes a
-    pure projection evaluated inside the scan stage: per row, build
-    (sim, centroid_id) structs, sort with a comparator that reproduces the
-    window's exact order (sim DESC with Spark's NaN-greatest-first semantics,
-    centroid_id ASC tie-break), keep the first ``n_probe``. Zero exchanges.
-    The cosine expression and 6-dp round are byte-identical to the old path,
-    so assignments — and everything downstream — are unchanged (A/B-verified
-    exact at sf0.001/0.01/0.1).
+    """(vec_id, vec: array<double>) → (vec_id, centroid_id, vec), one row for
+    each of the ``n_probe`` nearest cells of each vector.
 
-    Driver-cost note (r14 measurement): the whole projection is composed as
-    ONE ``F.expr`` SQL string — building it Column-by-Column cost one py4j
-    round trip per centroid element (n_cells × dim ≈ 512 ``F.lit`` calls per
-    invocation, ~6 s of pure driver time per call on the bench box; the SQL
-    parser ingests the same expression tree in one call). The SQL spellings
-    (``aggregate(zip_with(...))`` for the dot product, ``0.0D`` seeds,
-    ``CASE`` comparator) parse to exactly the Catalyst expressions the
-    Column API built, so the arithmetic — and every downstream result — is
-    unchanged (oracle + pinned-output tests).
+    The model is embedded as literal arrays, so the argmax is a pure
+    projection evaluated inside the scan stage, with no join and no window
+    exchange: per row, build (sim, centroid_id) structs, sort them by sim
+    descending (Spark's NaN-greatest semantics) with centroid_id ascending as
+    the tie-break, and keep the first ``n_probe``. The projection is composed
+    as ONE SQL string — building it Column by Column cost one py4j round trip
+    per centroid element. The vector norm is computed once per row
+    (``__vnorm``) and each centroid norm is bound as one literal
+    (:func:`_centroid_norm`); the cosine and its 6-dp round match
+    :func:`cosine` bit for bit.
 
-    r15: the vector norm is hoisted to a once-per-row ``__vnorm`` column and
-    each centroid's norm is driver-bound as one literal (ADVICE r14 — halves
-    the SQL text and drops two O(dim) folds per centroid per row; values are
-    bit-identical, gated by the construction-equivalence test). Models larger
-    than ``max_literal_elems`` total elements (default
-    ``MAX_LITERAL_CENTROID_ELEMS``) use the broadcast-crossJoin shape instead
-    — identical rows, plan-sized O(1) in the model.
-
-    Expects ``vectors`` to carry (id_col, vec: array<double>).
+    Raises ``ValueError`` when the model has more than
+    ``MAX_LITERAL_CENTROID_ELEMS`` elements.
     """
     if not cent_rows:
-        # Degenerate empty model: the old crossJoin produced zero rows.
         return vectors.select(
-            F.col(id_col), F.lit(None).cast("long").alias("centroid_id"), "vec"
+            ID, F.lit(None).cast("long").alias("centroid_id"), "vec"
         ).filter(F.lit(False))
+    n_elems = sum(len(cvec) for _, cvec in cent_rows)
+    if n_elems > MAX_LITERAL_CENTROID_ELEMS:
+        raise ValueError(
+            f"IVF model of {n_elems} elements exceeds MAX_LITERAL_CENTROID_ELEMS"
+            f" = {MAX_LITERAL_CENTROID_ELEMS}: centroids are embedded as plan literals"
+        )
 
-    limit = (
-        MAX_LITERAL_CENTROID_ELEMS if max_literal_elems is None else max_literal_elems
-    )
-    if sum(len(cvec) for _, cvec in cent_rows) > limit:
-        return _nearest_cells_crossjoin(vectors, cent_rows, n_probe, id_col)
-
-    def cos_sql(carr: str, cnorm: float) -> str:
-        # Mirrors cosine()/dot()/l2_norm() above expression-for-expression;
-        # the vector norm is hoisted to the __vnorm column (computed once per
-        # row, referenced per centroid — CollapseProject keeps non-cheap
-        # multi-referenced aliases un-inlined) and the centroid norm is a
-        # driver-bound literal (see _centroid_norm: bit-identical fold).
+    def cell_sql(cid: int, cvec: list[float]) -> str:
+        carr = "array(" + ", ".join(_sql_double(x) for x in cvec) + ")"
+        cnorm = _sql_double(_centroid_norm(cvec))
         return (
-            f"aggregate(zip_with(vec, {carr}, (x, y) -> x * y), 0.0D,"
-            " (acc, v) -> acc + v)"
-            f" / (__vnorm * {_sql_double(cnorm)})"
+            f"named_struct('sim', round(aggregate(zip_with(vec, {carr},"
+            " (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
+            f" / (__vnorm * {cnorm}), {ROUND}), 'centroid_id', CAST({int(cid)} AS BIGINT))"
         )
 
-    cell_sql = ", ".join(
-        "named_struct('sim', round("
-        + cos_sql(
-            "array(" + ", ".join(_sql_double(float(x)) for x in cvec) + ")",
-            _centroid_norm([float(x) for x in cvec]),
-        )
-        + f", 6), 'centroid_id', CAST({int(cid)} AS BIGINT))"
-        for cid, cvec in cent_rows
-    )
     ranked = F.expr(
-        f"slice(array_sort(array({cell_sql}), (l, r) -> "
-        "CASE WHEN l.sim > r.sim THEN -1 WHEN l.sim < r.sim THEN 1 "
+        f"slice(array_sort(array({', '.join(cell_sql(c, v) for c, v in cent_rows)}),"
+        " (l, r) -> CASE WHEN l.sim > r.sim THEN -1 WHEN l.sim < r.sim THEN 1 "
         "WHEN l.centroid_id < r.centroid_id THEN -1 "
         "WHEN l.centroid_id > r.centroid_id THEN 1 ELSE 0 END), "
         f"1, {min(n_probe, len(cent_rows))})"
     )
-    with_norm = vectors.select(
-        F.col(id_col),
-        F.col("vec"),
-        F.expr("sqrt(aggregate(vec, 0.0D, (acc, v) -> acc + v * v))").alias(
-            "__vnorm"
-        ),
+    vnorm = F.expr("sqrt(aggregate(vec, 0.0D, (acc, v) -> acc + v * v))")
+    with_norm = vectors.select(ID, "vec", vnorm.alias("__vnorm"))
+    return with_norm.select(ID, F.explode(ranked).alias("__cell"), "vec").select(
+        ID, F.col("__cell.centroid_id").alias("centroid_id"), "vec"
     )
-    return with_norm.select(
-        F.col(id_col), F.explode(ranked).alias("__cell"), "vec"
-    ).select(id_col, F.col("__cell.centroid_id").alias("centroid_id"), "vec")
 
 
-def assign_ivf_cells(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse quantization: assign each vector to its nearest centroid
-    (max cosine, centroid-id tie-break). Centroids are model-sized: collected
-    once and folded into a narrow argmax projection (no crossJoin, no window
-    exchange — see :func:`_nearest_cells`)."""
-    v = vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("vec"))
-    return _nearest_cells(v, _collect_centroids(centroids, vec_col), 1, id_col)
+def train_ivf_centroid_rows(
+    corpus: DataFrame, n_cells: int = 8, iters: int = 3
+) -> list[tuple[int, list[float]]]:
+    """Train IVF centroids with distributed Lloyd's iterations.
+
+    Seeded with the lowest ids, so the model is reproducible. Each iteration
+    is ONE job: the narrow nearest-cell projection, posexplode, two
+    map-side-combined groupBys for the element-wise mean, and a model-sized
+    collect. The model is driver-sized state by definition. A cell that loses
+    all members drops out (standard k-means shrinkage)."""
+    rows = collect_rows(corpus.orderBy(ID).limit(n_cells), ID)
+    v = _vectors(corpus)
+    for _ in range(iters):
+        new = (
+            _nearest_cells(v, rows, 1)
+            .select("centroid_id", F.posexplode("vec").alias("pos", "val"))
+            .groupBy("centroid_id", "pos")
+            .agg(F.avg("val").alias("v"))
+            .groupBy("centroid_id")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "v"))), lambda s: s.v
+                ).alias(VEC)
+            )
+        )
+        rows = collect_rows(new, "centroid_id")
+    return rows
 
 
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    centroids: DataFrame,
+    cent_rows: list[tuple[int, list[float]]],
+    n_probe: int = 1,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: probe only the query's own IVF cell.
+    """Approximate top-k over an IVF index: the corpus is assigned to its
+    nearest cell (nprobe=1), each query to its ``n_probe`` nearest cells, and
+    the exact cosine is computed only within the probed cells — an equi-join
+    on ``centroid_id`` instead of a full scan. Recall grows with ``n_probe``.
 
-    The corpus↔query match becomes an equi-join on ``centroid_id`` — at scale
-    this is the difference between scanning 100 TB per query batch and
-    scanning one cell. Recall loss is the standard IVF nprobe=1 trade; raise
-    recall by unioning more probe cells.
-    """
-    cent_rows = _collect_centroids(centroids, vec_col)
-    c_assigned = _nearest_cells(
-        corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("vec")),
-        cent_rows,
-        1,
-        id_col,
+    No dedup is needed: every corpus vector sits in exactly one cell, so a
+    (query, neighbor) pair joins through at most one shared cell however
+    many cells the query probes."""
+    c = _nearest_cells(_vectors(corpus), cent_rows, 1).alias("c")
+    q = _nearest_cells(_vectors(queries), cent_rows, n_probe).alias("q")
+    on = [
+        F.col("c.centroid_id") == F.col("q.centroid_id"),
+        F.col(f"c.{ID}") != F.col(f"q.{ID}"),
+    ]
+    scored = c.join(broadcast(q), on).select(
+        F.col(f"q.{ID}").alias("query_id"),
+        F.col(f"c.{ID}").alias("neighbor_id"),
+        F.round(cosine(F.col("q.vec"), F.col("c.vec")), ROUND).alias("cosine_sim"),
     )
-    q_assigned = _nearest_cells(
-        queries.select(F.col(id_col), _as_double(F.col(vec_col)).alias("vec")),
-        cent_rows,
-        1,
-        id_col,
-    )
-    scored = (
-        c_assigned.alias("c")
-        .join(
-            broadcast(q_assigned.alias("q")),
-            on=[
-                F.col("c.centroid_id") == F.col("q.centroid_id"),
-                F.col(f"c.{id_col}") != F.col(f"q.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"q.{id_col}").alias("query_id"),
-            F.col(f"c.{id_col}").alias("neighbor_id"),
-            F.round(cosine(F.col("q.vec"), F.col("c.vec")), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "cosine_sim")
-    )
+    return _top_k(scored, k)
 
 
 #: Auto-sizing target: with bucket_bits = ceil(log2(n / target)) each LSH
@@ -353,8 +295,6 @@ def auto_bucket_bits(
     verification turns super-linear — the scale ladder measured p ≈ 1.2 at
     fixed 4 bits vs p = 0.69 with log-n-grown 8 bits at the 200k-vector
     rung. Deterministic, pure, and cheap: callers pass a plain count."""
-    import math
-
     if n_rows <= max(1, target_bucket_rows):
         return min_bits
     return max(min_bits, min(max_bits, math.ceil(math.log2(n_rows / target_bucket_rows))))
@@ -363,8 +303,6 @@ def auto_bucket_bits(
 def sign_agreement_prob(threshold: float) -> float:
     """Cosine similarity → probability two vectors at that angle agree on one
     sign-random-projection bit: p = 1 − θ/π (Goemans–Williamson)."""
-    import math
-
     return 1.0 - math.acos(min(1.0, max(-1.0, threshold))) / math.pi
 
 
@@ -397,8 +335,6 @@ def auto_lsh_shape(
     bits resolves to ~(5, 42), whose verify volume n²·tables/2^bits is
     actually BELOW the floor config's — while at high thresholds bits keep
     their full candidate-cut power with a modest table growth."""
-    import math
-
     if bucket_bits <= base_bits:
         return bucket_bits, base_tables
     p = sign_agreement_prob(threshold)
@@ -424,8 +360,6 @@ def auto_lsh_shape(
 def near_dup_by_cosine(
     corpus: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bucket_bits: int | None = None,
     n_tables: int | None = None,
 ) -> DataFrame:
@@ -482,13 +416,13 @@ def near_dup_by_cosine(
     splitmix64-derived Rademacher matrix), rows fan out to (table, bucket)
     keys carrying their vector, ONE shuffle groups each bucket, and each
     bucket verifies its own pairs locally with a dense matmul (the
-    blocked-numpy kernel). Only SURVIVING pairs (actual near-dups) leave the
+    exact-pairs kernel). Only SURVIVING pairs (actual near-dups) leave the
     bucket, so the global dedupe handles the true-positive set ×tables —
     never the full candidate volume. No cross join; no global candidate
     materialization; a hot bucket is the skew unit (sub-block or cap it at
     extreme skew, same discipline as MinHash banding).
     """
-    v = corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("vec"))
+    v = corpus.select(ID, VEC)
     if bucket_bits is None:
         bucket_bits = auto_bucket_bits(v.count())
         if n_tables is None:
@@ -498,10 +432,10 @@ def near_dup_by_cosine(
             bucket_bits, n_tables = auto_lsh_shape(bucket_bits, threshold)
     if n_tables is None:
         n_tables = 8
-    bucketed = _lsh_buckets_numpy(v, id_col, bucket_bits, n_tables)
-    per_bucket = bucketed.groupBy("tbl", "bucket").applyInPandas(
-        _block_pairs_fn(threshold, id_col, "vec"),
-        "vec_a long, vec_b long, cosine_sim double",
+    per_bucket = (
+        _lsh_buckets_numpy(v, bucket_bits, n_tables)
+        .groupBy("tbl", "bucket")
+        .applyInPandas(_block_pairs_fn(threshold), PAIRS_SCHEMA)
     )
     # A pair colliding in k tables survives k buckets → one row after dedupe.
     # vec_a < vec_b is guaranteed by the per-bucket kernel, so the same pair
@@ -509,13 +443,12 @@ def near_dup_by_cosine(
     return per_bucket.dropDuplicates(["vec_a", "vec_b"])
 
 
-def _block_pairs_fn(threshold: float, id_col: str, vec_col: str):
-    """Factory for the per-block pair-verification kernel shared by
-    :func:`near_dup_by_cosine` (per (tbl, bucket) group) and
-    :func:`blocked_near_dup_numpy` (per label block): returns an
-    ``applyInPandas`` function that, given one group of (id, vec) rows, emits
-    every pair with rounded cosine ≥ ``threshold`` as (vec_a, vec_b,
-    cosine_sim) with ``vec_a < vec_b``. Ids are sorted before the
+def _block_pairs_fn(threshold: float):
+    """The exact-pairs kernel, shared by :func:`blocked_near_dup_numpy` (per
+    block) and :func:`near_dup_by_cosine` (per (tbl, bucket) group): an
+    ``applyInPandas`` function that, given one group of (vec_id, embedding)
+    rows, emits every pair with rounded cosine ≥ ``threshold`` as (vec_a,
+    vec_b, cosine_sim) with ``vec_a < vec_b``. Ids are sorted before the
     upper-triangular sweep, so the ordering invariant holds and cross-table
     duplicates of a pair are byte-identical rows.
 
@@ -527,15 +460,13 @@ def _block_pairs_fn(threshold: float, id_col: str, vec_col: str):
     workers would OOM the host long before the executors blink. Per-pair
     arithmetic (dot, then divide by the norm product, then round to 6) is
     identical to the unchunked form, so results are bit-for-bit unchanged."""
-    import numpy as np
     import pandas as pd
 
-    def block_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        cols = ["vec_a", "vec_b", "cosine_sim"]
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
+    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf[ID].to_numpy(dtype=np.int64)
         if len(ids) < 2:
-            return pd.DataFrame(columns=cols)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
+            return pd.DataFrame(columns=["vec_a", "vec_b", "cosine_sim"])
+        mat = np.array(list(pdf[VEC]), dtype=np.float64)
         order = np.argsort(ids)
         ids, mat = ids[order], mat[order]
         norms = np.linalg.norm(mat, axis=1)
@@ -550,12 +481,8 @@ def _block_pairs_fn(threshold: float, id_col: str, vec_col: str):
         out_s: list = []
         for s in range(0, n - 1, chunk):
             e = min(s + chunk, n)
-            sims = np.round(
-                (mat[s:e] @ mat.T) / np.outer(norms[s:e], norms), 6
-            )
-            keep = (sims >= threshold) & (
-                col_idx[None, :] > np.arange(s, e)[:, None]
-            )
+            sims = np.round((mat[s:e] @ mat.T) / np.outer(norms[s:e], norms), ROUND)
+            keep = (sims >= threshold) & (col_idx[None, :] > np.arange(s, e)[:, None])
             ai, aj = np.nonzero(keep)
             out_a.append(ids[ai + s])
             out_b.append(ids[aj])
@@ -571,20 +498,17 @@ def _block_pairs_fn(threshold: float, id_col: str, vec_col: str):
     return block_pairs
 
 
-def _lsh_buckets_numpy(
-    v: DataFrame, id_col: str, bucket_bits: int, n_tables: int
-) -> DataFrame:
-    """(id, vec) → (id, tbl, bucket, vec) sign-projection rows, one numpy
-    matmul per Arrow batch. The vector rides along (×n_tables fan-out) so each
-    (tbl, bucket) group can verify its candidate pairs locally without a
-    second join back to the corpus — one shuffle total. The hyperplane matrix
-    is Rademacher ±1 derived from splitmix64 over the flat (table, bit, dim)
-    counter — fully deterministic with no RNG state, so every executor
-    materializes the identical planes."""
-    import numpy as np
+def _lsh_buckets_numpy(v: DataFrame, bucket_bits: int, n_tables: int) -> DataFrame:
+    """(vec_id, embedding) → (vec_id, tbl, bucket, embedding: array<double>)
+    sign-projection rows, one numpy matmul per Arrow batch. The vector rides
+    along (×n_tables fan-out) so each (tbl, bucket) group can verify its
+    candidate pairs locally without a second join back to the corpus — one
+    shuffle total. The hyperplane matrix is Rademacher ±1 derived from
+    splitmix64 over the flat (table, bit, dim) counter — fully deterministic
+    with no RNG state, so every executor materializes the identical planes."""
     import pandas as pd
 
-    def planes_for(dim: int) -> "np.ndarray":
+    def planes_for(dim: int) -> np.ndarray:
         x = np.arange(n_tables * bucket_bits * dim, dtype=np.uint64)
         z = x + np.uint64(0x9E3779B97F4A7C15)
         z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
@@ -593,343 +517,47 @@ def _lsh_buckets_numpy(
         signs = np.where((z & np.uint64(1)).astype(bool), 1.0, -1.0)
         return signs.reshape(n_tables * bucket_bits, dim).T  # (dim, T*bits)
 
-    weights = (np.uint64(1) << np.arange(bucket_bits, dtype=np.uint64)).astype(
-        np.int64
-    )
+    weights = (np.uint64(1) << np.arange(bucket_bits, dtype=np.uint64)).astype(np.int64)
 
     def batch(frames):
         planes = None
         for pdf in frames:
             if not len(pdf):
                 continue
-            mat = np.array(list(pdf["vec"]), dtype=np.float64)
+            mat = np.array(list(pdf[VEC]), dtype=np.float64)
             if planes is None:
                 planes = planes_for(mat.shape[1])
             bits = (mat @ planes) >= 0  # (B, T*bits)
-            per_table = bits.reshape(len(pdf), n_tables, bucket_bits)
-            buckets = per_table @ weights  # (B, T)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vecs = pdf["vec"].to_numpy(dtype=object)
+            buckets = bits.reshape(len(pdf), n_tables, bucket_bits) @ weights  # (B, T)
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(ids, n_tables),
+                    ID: np.repeat(pdf[ID].to_numpy(dtype=np.int64), n_tables),
                     "tbl": np.tile(np.arange(n_tables, dtype=np.int32), len(pdf)),
                     "bucket": buckets.reshape(-1),
-                    "vec": np.repeat(vecs, n_tables),
+                    VEC: list(np.repeat(mat, n_tables, axis=0)),
                 }
             )
 
-    return v.mapInPandas(
-        batch, f"{id_col} long, tbl int, bucket long, vec array<double>"
-    )
-
-
-def _pairs_cosine_numpy(
-    pairs_with_vecs: DataFrame, threshold: float
-) -> DataFrame:
-    """(vec_a, vec_b, va, vb) → (vec_a, vec_b, cosine_sim ≥ threshold) via a
-    vectorized per-batch numpy dot — the Arrow fast lane for pair
-    verification (same 6-dp rounding as the JVM/SQL paths)."""
-    import numpy as np
-    import pandas as pd
-
-    def batch(frames):
-        for pdf in frames:
-            if not len(pdf):
-                continue
-            a = np.array(list(pdf["va"]), dtype=np.float64)
-            b = np.array(list(pdf["vb"]), dtype=np.float64)
-            sims = np.round(
-                np.einsum("ij,ij->i", a, b)
-                / (np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)),
-                6,
-            )
-            keep = sims >= threshold
-            yield pd.DataFrame(
-                {
-                    "vec_a": pdf["vec_a"].to_numpy()[keep],
-                    "vec_b": pdf["vec_b"].to_numpy()[keep],
-                    "cosine_sim": sims[keep],
-                }
-            )
-
-    return pairs_with_vecs.mapInPandas(
-        batch, "vec_a long, vec_b long, cosine_sim double"
-    )
-
-
-def train_ivf_centroids(
-    corpus: DataFrame,
-    n_cells: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Train IVF coarse centroids with distributed Lloyd's iterations.
-
-    Each iteration: broadcast the (tiny) centroid set, assign every corpus
-    vector to its nearest cell (one narrow pass), recompute each centroid as
-    the element-wise mean via posexplode → groupBy(cell, pos) — the mean
-    never materializes vectors on the driver except the n_cells × dim model
-    itself, which IS driver-sized state by definition. Deterministic
-    seeding (lowest ids) and tie-breaks make the model reproducible.
-    A cell that loses all members drops out (standard k-means shrinkage).
-    """
-    rows = train_ivf_centroid_rows(corpus, n_cells, iters, id_col, vec_col)
-    # LocalRelation, not a Python-RDD: the plain createDataFrame(list)
-    # path made every later stage scanning the centroids launch 32
-    # near-empty Python-worker tasks (~0.25 s each, ~zero CPU — the
-    # dominant cost of this loop at bench scale, r14 measurement).
-    return local_frame(
-        corpus.sparkSession, rows, f"centroid_id long, {vec_col} array<double>"
-    )
-
-
-def train_ivf_centroid_rows(
-    corpus: DataFrame,
-    n_cells: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Driver-rows form of :func:`train_ivf_centroids` (r14): the model is
-    driver-sized state either way, and the in-loop consumers
-    (:func:`_nearest_cells`) want the literal rows — round-tripping through a
-    DataFrame per iteration bought nothing. Each Lloyd iteration is now ONE
-    job: narrow nearest-cell projection (no crossJoin/window exchange — guide
-    §2.4) → posexplode → two map-side-combined groupBys → a model-sized
-    collect. The mean recompute keeps the exact F.avg aggregation plan, so
-    centroid values are unchanged (within the run-to-run float-merge envelope
-    the 6-dp sim round already absorbs)."""
-    rows = [
-        (r[id_col], [float(x) for x in r[vec_col]])
-        for r in corpus.select(id_col, vec_col).orderBy(id_col).limit(n_cells).collect()
-    ]
-    v = corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("vec"))
-    for _ in range(iters):
-        assigned = _nearest_cells(v, rows, 1, id_col)
-        new = (
-            assigned.select("centroid_id", F.posexplode("vec").alias("pos", "val"))
-            .groupBy("centroid_id", "pos")
-            .agg(F.avg("val").alias("v"))
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "v"))), lambda s: s.v
-                ).alias(vec_col)
-            )
-        )
-        rows = sorted(
-            (r["centroid_id"], [float(x) for x in r[vec_col]]) for r in new.collect()
-        )
-    return rows
-
-
-def assign_ivf_cells_multi(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Like assign_ivf_cells but keeps the ``n_probe`` nearest cells per
-    vector — the query-side recall knob (each extra probe joins one more
-    cell's worth of candidates). Same narrow-projection shape as
-    :func:`_nearest_cells` (no crossJoin, no window exchange)."""
-    v = vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("vec"))
-    return _nearest_cells(v, _collect_centroids(centroids, vec_col), n_probe, id_col)
-
-
-def ivf_topk_trained(
-    corpus: DataFrame,
-    queries: DataFrame,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    iters: int = 3,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """End-to-end trained IVF: k-means centroids → corpus assigned nprobe=1 →
-    queries probe their ``n_probe`` nearest cells → exact cosine within the
-    probed cells only. The scan-reduction ANN path with a learned index."""
-    cent_rows = train_ivf_centroid_rows(corpus, n_cells, iters, id_col, vec_col)
-    c_assigned = _nearest_cells(
-        corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("vec")),
-        cent_rows,
-        1,
-        id_col,
-    )
-    q_assigned = _nearest_cells(
-        queries.select(F.col(id_col), _as_double(F.col(vec_col)).alias("vec")),
-        cent_rows,
-        n_probe,
-        id_col,
-    )
-    scored = (
-        c_assigned.alias("c")
-        .join(
-            broadcast(q_assigned.alias("q")),
-            on=[
-                F.col("c.centroid_id") == F.col("q.centroid_id"),
-                F.col(f"c.{id_col}") != F.col(f"q.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"q.{id_col}").alias("query_id"),
-            F.col(f"c.{id_col}").alias("neighbor_id"),
-            F.round(cosine(F.col("q.vec"), F.col("c.vec")), 6).alias("cosine_sim"),
-        )
-        # No dropDuplicates: it was a per-(query, neighbor) dedup exchange,
-        # but duplicates are structurally impossible — every corpus vector is
-        # assigned to exactly ONE cell (nprobe=1), so a (query, neighbor)
-        # pair joins through at most one shared centroid_id no matter how
-        # many cells the query probes (r14; A/B-verified identical rows).
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "cosine_sim")
-    )
-
-
-def all_pairs_cosine(
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_chunks: int | None = None,
-) -> DataFrame:
-    """EXACT all-pairs cosine ≥ threshold — the ground-truth baseline the LSH
-    recall harness compares against. Deliberately O(n²) in COMPUTE: run it on
-    model-sized corpora (the harness's query/eval sets) or per-block, never
-    on the full 100 TB corpus — that is precisely what
-    :func:`near_dup_by_cosine` exists to avoid.
-
-    Execution shape (r14 optimization): triangular block decomposition.
-    The old single-block delegation ran the whole n² sweep as ONE
-    applyInPandas task (measured: the entire wall of the recall harness was
-    one serialized Python stage). Vectors are chunked by ``pmod(id, C)``;
-    each row fans out to every block-pair group its chunk participates in
-    (C copies/row of a model-sized table), and group (ca, cb) computes only
-    cross-chunk (or, on the diagonal, within-chunk triangular) pairs — each
-    unordered pair lands in exactly one group, C(C+1)/2 independent tasks,
-    and the per-pair dot/norm/round arithmetic is the shared kernel's,
-    bit-for-bit (tests pin the exact output). ``n_chunks=None`` derives
-    C ≈ sqrt(2·defaultParallelism) so the block count tracks the cluster;
-    1 reproduces the single-block shape.
-    """
-    if n_chunks is None:
-        import math
-
-        n_chunks = max(
-            1, math.isqrt(2 * corpus.sparkSession.sparkContext.defaultParallelism)
-        )
-    if n_chunks <= 1:
-        return blocked_near_dup_numpy(
-            corpus.withColumn("__all", F.lit(0)),
-            block_col="__all",
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-    v = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.pmod(F.col(id_col), F.lit(n_chunks)).cast("int").alias("__c"),
-    )
-    exploded = v.withColumn(
-        "__o", F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1)))
-    ).select(
-        id_col,
-        vec_col,
-        "__c",
-        F.least("__c", "__o").alias("__ca"),
-        F.greatest("__c", "__o").alias("__cb"),
-    )
-    return exploded.groupBy("__ca", "__cb").applyInPandas(
-        _cross_block_pairs_fn(threshold, id_col, vec_col),
-        "vec_a long, vec_b long, cosine_sim double",
-    )
-
-
-def _cross_block_pairs_fn(threshold: float, id_col: str, vec_col: str):
-    """Per-(ca, cb) kernel for the triangular decomposition: diagonal groups
-    reuse the shared within-block kernel; off-diagonal groups compute the
-    A×B cross product only (within-A / within-B pairs belong to their own
-    diagonal groups), chunked to the same ≤64 MB similarity-buffer bound.
-    The arithmetic (contiguous float64 dot, norm product, round to 6) is
-    identical to :func:`_block_pairs_fn`, so a pair's cosine is bit-equal
-    regardless of which decomposition computed it."""
-    import numpy as np
-    import pandas as pd
-
-    within = _block_pairs_fn(threshold, id_col, vec_col)
-
-    def block_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        cols = ["vec_a", "vec_b", "cosine_sim"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        ca, cb = int(pdf["__ca"].iloc[0]), int(pdf["__cb"].iloc[0])
-        if ca == cb:
-            return within(pdf)
-        a_pdf = pdf[pdf["__c"] == ca]
-        b_pdf = pdf[pdf["__c"] == cb]
-        if not len(a_pdf) or not len(b_pdf):
-            return pd.DataFrame(columns=cols)
-        a_ids = a_pdf[id_col].to_numpy(dtype=np.int64)
-        b_ids = b_pdf[id_col].to_numpy(dtype=np.int64)
-        a_mat = np.array(list(a_pdf[vec_col]), dtype=np.float64)
-        b_mat = np.array(list(b_pdf[vec_col]), dtype=np.float64)
-        a_norms = np.linalg.norm(a_mat, axis=1)
-        b_norms = np.linalg.norm(b_mat, axis=1)
-        nb = len(b_ids)
-        chunk = max(1, min(4096, (64 << 20) // (8 * nb)))
-        out_a: list = []
-        out_b: list = []
-        out_s: list = []
-        for s in range(0, len(a_ids), chunk):
-            e = min(s + chunk, len(a_ids))
-            sims = np.round(
-                (a_mat[s:e] @ b_mat.T) / np.outer(a_norms[s:e], b_norms), 6
-            )
-            ai, bj = np.nonzero(sims >= threshold)
-            ia, ib = a_ids[ai + s], b_ids[bj]
-            out_a.append(np.minimum(ia, ib))
-            out_b.append(np.maximum(ia, ib))
-            out_s.append(sims[ai, bj])
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a) if out_a else np.array([], np.int64),
-                "vec_b": np.concatenate(out_b) if out_b else np.array([], np.int64),
-                "cosine_sim": (
-                    np.concatenate(out_s) if out_s else np.array([], np.float64)
-                ),
-            }
-        )
-
-    return block_pairs
+    return v.mapInPandas(batch, f"{ID} long, tbl int, bucket long, {VEC} array<double>")
 
 
 def blocked_near_dup_numpy(
-    corpus: DataFrame,
-    block_col: str = "label",
-    threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, threshold: float, block_col: str | None = None
 ) -> DataFrame:
-    """Blocked-exact near-dup pairs via chunked dense matmuls per block
-    (applyInPandas). Within each block: cosine rows in BLAS calls bounded to
-    ~64 MB each (see :func:`_block_pairs_fn`, the shared kernel) instead of
-    one higher-order-function fold per pair — measured ~6× faster than the
-    JVM fold at 200-vector blocks, with bit-identical rounded values. One
-    shuffle (groupBy block); block size is the quadratic COMPUTE knob, while
-    the chunked sweep keeps per-task memory flat no matter how big a block
-    gets."""
-    return corpus.groupBy(block_col).applyInPandas(
-        _block_pairs_fn(threshold, id_col, vec_col),
-        "vec_a long, vec_b long, cosine_sim double",
+    """Exact cosine pairs ≥ ``threshold`` within each ``block_col`` block, or
+    over the whole corpus when ``block_col`` is None (all-pairs: the ground
+    truth the LSH recall harness compares against — O(n²) compute, so only
+    for model-sized corpora).
+
+    One shuffle (groupBy block), then chunked dense matmuls per block (see
+    :func:`_block_pairs_fn`) — measured ~6× faster than a JVM per-pair fold
+    at 200-vector blocks, with bit-identical rounded values. Block size is
+    the quadratic COMPUTE knob; the chunked sweep keeps per-task memory flat
+    however big a block gets."""
+    if block_col is None:
+        corpus, block_col = corpus.withColumn("__block", F.lit(0)), "__block"
+    return (
+        corpus.select(ID, VEC, block_col)
+        .groupBy(block_col)
+        .applyInPandas(_block_pairs_fn(threshold), PAIRS_SCHEMA)
     )

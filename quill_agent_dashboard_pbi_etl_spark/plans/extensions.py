@@ -310,8 +310,9 @@ SELECT query_id, neighbor_id, rank, cosine_sim FROM ranked WHERE rank <= 5
 """,
 )
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for query vectors (vec_id < 10): broadcast
-    queries × linear corpus scan, JVM-side zip_with/aggregate math."""
+    """Exact cosine top-5 for query vectors (vec_id < 10): the collected
+    query matrix against a linear corpus scan, one numpy matmul per Arrow
+    batch (similarity.brute_force_topk)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return similarity.brute_force_topk(emb, queries, k=5)
@@ -333,7 +334,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similarity.blocked_near_dup_numpy) — ~6x the JVM per-pair fold with
     identical rounded values. LSH-bucketed variant: ``embedding_near_dup_lsh``."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.blocked_near_dup_numpy(emb, block_col="label", threshold=0.35)
+    return similarity.blocked_near_dup_numpy(emb, 0.35, block_col="label")
 
 
 @register("embedding_near_dup_lsh")  # approximate — rows-only check
@@ -367,7 +368,7 @@ def q_embedding_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine 0.35 is ≈ 0.97 (sign-agreement p ≈ 0.61); measured ≈ 0.95+ on the
     driver corpus."""
     emb = load_table(spark, sf_dir, "embeddings")
-    exact = similarity.all_pairs_cosine(emb, threshold=0.35).select("vec_a", "vec_b")
+    exact = similarity.blocked_near_dup_numpy(emb, 0.35).select("vec_a", "vec_b")
     approx = similarity.near_dup_by_cosine(emb, threshold=0.35).select(
         "vec_a", "vec_b"
     )
@@ -561,9 +562,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k: nprobe=1 cell probe with the first 8 vectors as fixed
     coarse centroids — the scan-reduction scale path."""
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
+    centroids = similarity.collect_rows(emb.filter(F.col("vec_id") < 8), "vec_id")
     queries = emb.filter(F.col("vec_id") < 10)
     return similarity.ivf_topk(emb, queries, centroids, k=5)
 
@@ -587,30 +586,21 @@ SELECT query_id, neighbor_id, rank, cosine_sim FROM ranked WHERE rank <= 5
 """,
 )
 def q_ann_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow/numpy fast lane for exact cosine top-k: broadcast query matrix,
-    per-batch (B×D)·(D×Q) matmul, per-partition local top-k (functions/
-    vectors.py). Same semantics/oracle as ann_cosine_topk — the BLAS path for
-    high-dim or many-query workloads."""
-    from ..functions.vectors import topk_vs_query_matrix
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    query_rows = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in emb.filter(F.col("vec_id") < 10)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    return topk_vs_query_matrix(emb, query_rows, k=5)
+    """The same exact top-5 as ann_cosine_topk, kept under its own name for
+    the driver window and the oracle sweep: both run
+    similarity.brute_force_topk."""
+    return q_ann_cosine_topk(spark, sf_dir)
 
 
 @register("ann_ivf_trained_topk")  # approximate (learned index) — rows-only
 def q_ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained IVF top-k: k-means centroids (3 distributed Lloyd's
     iterations), nprobe=2 — the iterative-algorithm + learned-index ANN path
-    (operators/similarity.py ivf_topk_trained)."""
+    (similarity.ivf_topk over similarity.train_ivf_centroid_rows)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.ivf_topk_trained(emb, queries, n_cells=8, n_probe=2, iters=3, k=5)
+    model = similarity.train_ivf_centroid_rows(emb, n_cells=8, iters=3)
+    return similarity.ivf_topk(emb, queries, model, n_probe=2, k=5)
 
 
 @register(
@@ -648,9 +638,10 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = similarity.brute_force_topk(emb, queries, k=5).select(
         "query_id", "neighbor_id"
     )
-    approx = similarity.ivf_topk_trained(
-        emb, queries, n_cells=8, n_probe=4, iters=3, k=5
-    ).select("query_id", F.col("neighbor_id").alias("approx_neighbor_id"))
+    model = similarity.train_ivf_centroid_rows(emb, n_cells=8, iters=3)
+    approx = similarity.ivf_topk(emb, queries, model, n_probe=4, k=5).select(
+        "query_id", F.col("neighbor_id").alias("approx_neighbor_id")
+    )
     flagged = exact.join(
         approx,
         (exact["query_id"] == approx["query_id"])
@@ -935,12 +926,17 @@ def q_corpus_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = clustering.canonical_survivors(clustered).select(
         "doc_id", "cluster_size"
     )
-    # r15 (guide §8 "decide with small rows"): evaluate the quality gate on
-    # the survivor rows only, AFTER the join — the gate is row-local on text
-    # and inner joins commute with row-local filters, so this is
-    # row-identical to gating the whole corpus first (the oracle's shape),
-    # while the tokenize/regex/marker expressions run over |survivors| rows
-    # instead of the full corpus.
+    # The quality gate is written after the survivors join, but the plan
+    # does not run it there: the gate is row-local on the documents' text,
+    # so the optimizer pushes the filter below the join onto the raw
+    # `documents` scan and inlines the with_text_prep columns into it. The
+    # gate therefore runs over the whole corpus, with 22 copies of
+    # regexp_replace(lower(text)) in one Filter, and the gated documents
+    # are the broadcast side of the survivors join
+    # (plans/r16/corpus_pipeline_full_after.txt). Rows are the same either
+    # way: inner joins commute with row-local filters, and the oracle gates
+    # first. Keeping the gate on the survivors is a priced candidate in
+    # ROADMAP item 5.
     enriched = (
         T.with_text_prep(
             survivors.join(
@@ -992,9 +988,9 @@ def q_semantic_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator as the lexical path, different pair emitter; singleton vectors
     keep their own id."""
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = similarity.blocked_near_dup_numpy(
-        emb, block_col="label", threshold=0.35
-    ).select("vec_a", "vec_b")
+    pairs = similarity.blocked_near_dup_numpy(emb, 0.35, block_col="label").select(
+        "vec_a", "vec_b"
+    )
     comp = clustering.connected_components(pairs, src="vec_a", dst="vec_b")
     return clustering.attach_clusters(emb, comp, id_col="vec_id").select(
         "vec_id", "cluster_id"

@@ -1,5 +1,6 @@
-"""bench.py's /proc/stat steal instrumentation (also used by
-tools/time_queries.py) and its previous-run lookup for box_shift_vs_prev."""
+"""The /proc/stat steal reader bench.py and tools/time_queries.py share
+(perfbench/measure.py) and bench.py's previous-run lookup for
+box_shift_vs_prev."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import io
 import json
 
 import bench
+from perfbench import measure
 
 
 def test_cpu_ticks_total_excludes_guest_fields(monkeypatch):
@@ -15,8 +17,8 @@ def test_cpu_ticks_total_excludes_guest_fields(monkeypatch):
     ten fields double-counts guest time and understates steal%."""
     # user nice system idle iowait irq softirq steal guest guest_nice
     line = "cpu  100 20 30 400 5 6 7 8 50 10\n"
-    monkeypatch.setattr(bench, "open", lambda *a, **k: io.StringIO(line), raising=False)
-    assert bench._cpu_ticks() == (8, 100 + 20 + 30 + 400 + 5 + 6 + 7 + 8)
+    monkeypatch.setattr(measure, "open", lambda *a, **k: io.StringIO(line), raising=False)
+    assert measure.cpu_ticks() == (8, 100 + 20 + 30 + 400 + 5 + 6 + 7 + 8)
 
 
 def _write_details(path, sf, cpus):

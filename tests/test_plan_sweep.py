@@ -7,10 +7,11 @@ surface fails the suite even if no targeted test covers that query:
 
 - no CartesianProduct, ever — an accidental unkeyed join at 100 TB is a
   job-killer, and no registry query needs one;
-- BroadcastNestedLoopJoin only where it is the DESIGN (a deliberately tiny
-  broadcast side: ANN query sets, IVF centroid probes, LSH recall
-  harnesses, q15's max-join) — the allowlist is explicit so a new BNLJ
-  sneaking into any other query fails loudly;
+- BroadcastNestedLoopJoin exactly where it is the DESIGN (a deliberately
+  tiny broadcast side: contract rows, the DimShift seed, scalar
+  subqueries) — the allowlist is explicit in both directions, so a new BNLJ
+  sneaking into any other query fails loudly, and so does an allowlisted
+  query that no longer plans one (the list cannot go stale);
 - no row-at-a-time Python (BatchEvalPython) anywhere — Python is allowed
   ONLY in Arrow form (ArrowEvalPython / mapInPandas / FlatMapGroupsInPandas)
   and only where the operator is genuinely Python-backed.
@@ -27,14 +28,11 @@ from quill_agent_dashboard_pbi_etl_spark.plans.registry import QUERIES
 
 from conftest import SF_SMALL
 
-# Queries whose plan legitimately contains BroadcastNestedLoopJoin: every
-# entry is a deliberate tiny-broadcast-side design, documented in the query
-# or operator docstring. Anything NOT listed here must stay BNLJ-free.
+# Queries whose plan contains BroadcastNestedLoopJoin: every entry is a
+# deliberate tiny-broadcast-side design, documented in the query or operator
+# docstring. Anything NOT listed here must stay BNLJ-free, and everything
+# listed must still plan one.
 BNLJ_BY_DESIGN = {
-    "ann_cosine_topk",       # corpus × broadcast(5 query vectors)
-    "ann_ivf_topk",          # query probe against broadcast centroid set
-    "ann_ivf_trained_topk",  # same, trained centroids
-    "ann_ivf_recall",        # recall harness embeds the brute-force side
     "frequent_tokens_cms_check",  # contract row × broadcast exact-count row
     "dim_shift_sync",        # DimShift seed IS distinct-agents × calendar-days
     "events_in_shift",       # builds the same DimShift seed inline
@@ -56,7 +54,12 @@ def test_global_plan_invariants(spark, name):
     # into a collect-first test.
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: unkeyed cartesian join"
-    if name not in BNLJ_BY_DESIGN:
+    if name in BNLJ_BY_DESIGN:
+        assert "BroadcastNestedLoopJoin" in plan, (
+            f"{name}: allowlisted in BNLJ_BY_DESIGN but plans no "
+            "BroadcastNestedLoopJoin — remove it from the allowlist"
+        )
+    else:
         assert "BroadcastNestedLoopJoin" not in plan, (
             f"{name}: BroadcastNestedLoopJoin outside the by-design "
             "allowlist — either key the join or document and allowlist it"

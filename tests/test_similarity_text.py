@@ -31,15 +31,43 @@ def test_brute_force_topk_orders_by_cosine(spark):
     assert abs(rows[1].cosine_sim - round(1 / math.sqrt(2), 6)) < 1e-9
 
 
+def test_brute_force_topk_ties_break_by_neighbor_id_and_skip_self(spark):
+    """Equal similarities rank by neighbor id ascending, a query never
+    returns itself, and the per-partition trim before the rank window keeps
+    the global order when tied rows sit in different partitions."""
+    vecs = _emb(
+        spark,
+        [
+            (0, [1.0, 0.0]),
+            (5, [2.0, 0.0]),   # same direction as 0 and 3: sim 1.0
+            (3, [3.0, 0.0]),
+            (7, [1.0, 1.0]),
+            (9, [0.0, 1.0]),
+        ],
+    ).repartition(3)
+    queries = vecs.filter(F.col("vec_id").isin(0, 3))
+    got = sorted(
+        (r.query_id, r.rank, r.neighbor_id, r.cosine_sim)
+        for r in similarity.brute_force_topk(vecs, queries, k=3).collect()
+    )
+    diag = round(1 / math.sqrt(2), 6)
+    assert got == [
+        (0, 1, 3, 1.0),
+        (0, 2, 5, 1.0),
+        (0, 3, 7, diag),
+        (3, 1, 0, 1.0),
+        (3, 2, 5, 1.0),
+        (3, 3, 7, diag),
+    ]
+
+
 def test_ivf_assignment_and_topk(spark):
     corpus = _emb(
         spark,
         [(i, [1.0, 0.0]) for i in range(10, 13)] + [(i, [0.0, 1.0]) for i in range(20, 23)],
     )
-    centroids = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "centroid_id long, embedding array<float>"
-    )
-    assigned = similarity.assign_ivf_cells(corpus, centroids)
+    centroids = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    assigned = similarity._nearest_cells(similarity._vectors(corpus), centroids, 1)
     cells = {r.vec_id: r.centroid_id for r in assigned.collect()}
     assert all(cells[i] == 0 for i in (10, 11, 12))
     assert all(cells[i] == 1 for i in (20, 21, 22))
@@ -117,11 +145,10 @@ def test_trained_ivf_beats_or_matches_fixed_centroids(spark):
         (r.query_id, r.neighbor_id)
         for r in similarity.brute_force_topk(emb, queries, k=5).collect()
     }
+    model = similarity.train_ivf_centroid_rows(emb, n_cells=8, iters=3)
     trained = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.ivf_topk_trained(
-            emb, queries, n_cells=8, n_probe=2, iters=3, k=5
-        ).collect()
+        for r in similarity.ivf_topk(emb, queries, model, n_probe=2, k=5).collect()
     }
     recall = len(exact & trained) / len(exact)
     assert recall >= 0.5, f"recall@5 {recall:.2f}"
@@ -185,7 +212,7 @@ def test_all_pairs_cosine_exact_ground_truth(spark):
     )
     pairs = {
         (r.vec_a, r.vec_b): r.cosine_sim
-        for r in similarity.all_pairs_cosine(vecs, threshold=0.9).collect()
+        for r in similarity.blocked_near_dup_numpy(vecs, 0.9).collect()
     }
     assert set(pairs) == {(1, 2)}
     assert pairs[(1, 2)] > 0.99
@@ -208,7 +235,7 @@ def test_lsh_near_dup_recall_against_exact(spark):
     vecs = _emb(spark, rows)
     exact = set(
         (r.vec_a, r.vec_b)
-        for r in similarity.all_pairs_cosine(vecs, threshold=0.8).collect()
+        for r in similarity.blocked_near_dup_numpy(vecs, 0.8).collect()
     )
     approx = set(
         (r.vec_a, r.vec_b)
@@ -261,12 +288,12 @@ def test_block_pairs_kernel_chunked_equals_dense():
         keep = sims[iu] >= 0.9
         ref = sorted(zip(sids[iu[0][keep]], sids[iu[1][keep]], sims[iu][keep]))
 
-        got_df = _block_pairs_fn(0.9, "vec_id", "embedding")(pdf)
+        got_df = _block_pairs_fn(0.9)(pdf)
         got = sorted(zip(got_df.vec_a, got_df.vec_b, got_df.cosine_sim))
         assert got == ref
         assert all(a < b for a, b, _ in got)
     # degenerate single-row group emits the empty frame with the contract cols
-    empty = _block_pairs_fn(0.9, "vec_id", "embedding")(
+    empty = _block_pairs_fn(0.9)(
         pd.DataFrame({"vec_id": [1], "embedding": [np.ones(4)]})
     )
     assert list(empty.columns) == ["vec_a", "vec_b", "cosine_sim"] and empty.empty
@@ -360,8 +387,11 @@ def test_nearest_cells_sql_form_matches_column_api_reference(spark):
     the Column-by-Column form cost a py4j round trip per centroid element).
     The SQL spellings must parse to the SAME Catalyst expressions — assert
     bit-identical output against a Column-API reference built the old way,
-    over awkward doubles (shortest-repr round-trip: 1/3, 1e-300, -0.0),
-    an exact sim tie (centroid_id ASC break), and n_probe slicing."""
+    over awkward doubles (shortest-repr round-trip: 1/3, 1e-300, -0.0), a
+    vector of tiny but nonzero norm, an exact sim tie (centroid_id ASC
+    break), and n_probe slicing. (A zero-norm vector is not a reachable
+    input: under ANSI mode, the Spark 4 default this engine runs with, the
+    0/0 cosine raises DIVIDE_BY_ZERO on both sides.)"""
     from pyspark.sql import functions as F
 
     from quill_agent_dashboard_pbi_etl_spark.operators.similarity import (
@@ -375,7 +405,11 @@ def test_nearest_cells_sql_form_matches_column_api_reference(spark):
         (9, [-1.0, 0.25, 3.0, -7.5]),
     ]
     vecs = spark.createDataFrame(
-        [(1, [0.1, 0.2, -0.3, 0.7]), (2, [-2.0, 0.5, 1.5, -3.0])],
+        [
+            (1, [0.1, 0.2, -0.3, 0.7]),
+            (2, [-2.0, 0.5, 1.5, -3.0]),
+            (5, [1e-30, -1e-30, 1e-30, -1e-30]),  # tiny but nonzero norm
+        ],
         "vec_id long, embedding array<float>",
     ).select(
         "vec_id", F.transform("embedding", lambda v: v.cast("double")).alias("vec")
@@ -412,77 +446,41 @@ def test_nearest_cells_sql_form_matches_column_api_reference(spark):
     for n_probe in (1, 2, 3):
         got = sorted(
             (r.vec_id, r.centroid_id, tuple(r.vec))
-            for r in _nearest_cells(vecs, cent_rows, n_probe, "vec_id").collect()
+            for r in _nearest_cells(vecs, cent_rows, n_probe).collect()
         )
         want = sorted(
             (r.vec_id, r.centroid_id, tuple(r.vec))
             for r in reference(n_probe).collect()
         )
-        assert got == want and len(got) == 2 * n_probe
+        assert got == want and len(got) == 3 * n_probe
     # tie-break sanity: the duplicated centroid vector must resolve to id 3
     top1 = {
         r.vec_id: r.centroid_id
-        for r in _nearest_cells(vecs, cent_rows, 1, "vec_id").collect()
+        for r in _nearest_cells(vecs, cent_rows, 1).collect()
     }
     assert 9 in top1.values() or 3 in top1.values()
     assert 7 not in top1.values()  # id 3 always beats the tied id 7
     # degenerate empty model: zero rows, stable schema
-    empty = _nearest_cells(vecs, [], 1, "vec_id")
+    empty = _nearest_cells(vecs, [], 1)
     assert empty.count() == 0 and empty.columns == ["vec_id", "centroid_id", "vec"]
 
 
-def test_nearest_cells_size_guard_crossjoin_matches_literal(spark):
-    """r15 plan-size guard: models over MAX_LITERAL_CENTROID_ELEMS total
-    elements take the broadcast-crossJoin + window shape instead of embedding
-    n_cells x dim literals in one SQL expression. Rows must be identical on
-    BOTH sides of the threshold — including an exact sim tie (centroid_id ASC
-    break) and n_probe slicing. (A zero-norm vector is NOT a reachable lane:
-    under ANSI mode — the Spark 4 default this engine runs with — BOTH paths
-    raise DIVIDE_BY_ZERO on the 0/0 cosine, identically.)"""
-    from pyspark.sql import functions as F
+def test_nearest_cells_above_literal_bound_raises(spark):
+    """The IVF model is embedded in the plan as literals, so its size is a
+    documented limit: a model over MAX_LITERAL_CENTROID_ELEMS elements
+    raises ValueError when the plan is built, through ivf_topk as well."""
+    import pytest
 
     from quill_agent_dashboard_pbi_etl_spark.operators.similarity import (
         MAX_LITERAL_CENTROID_ELEMS,
         _nearest_cells,
+        _vectors,
     )
 
-    cent_rows = [
-        (7, [1.0 / 3.0, 1e-300, -0.0, 2.5]),
-        (3, [1.0 / 3.0, 1e-300, -0.0, 2.5]),  # duplicate vector: sim tie
-        (9, [-1.0, 0.25, 3.0, -7.5]),
-    ]
-    assert sum(len(cv) for _, cv in cent_rows) < MAX_LITERAL_CENTROID_ELEMS
-    vecs = spark.createDataFrame(
-        [
-            (1, [0.1, 0.2, -0.3, 0.7]),
-            (2, [-2.0, 0.5, 1.5, -3.0]),
-            (5, [1e-30, -1e-30, 1e-30, -1e-30]),  # tiny but nonzero norm
-        ],
-        "vec_id long, embedding array<float>",
-    ).select(
-        "vec_id", F.transform("embedding", lambda v: v.cast("double")).alias("vec")
-    )
-
-    def rows(max_elems):
-        return sorted(
-            (r.vec_id, r.centroid_id, tuple(r.vec))
-            for r in _nearest_cells(
-                vecs, cent_rows, n_probe, "vec_id", max_literal_elems=max_elems
-            ).collect()
-        )
-
-    for n_probe in (1, 2, 3):
-        lit = rows(10**9)   # far above: literal-embedded path
-        fb = rows(1)        # far below: crossJoin fallback
-        assert lit == fb and len(lit) == 3 * n_probe
-    # Shape assertions: the fallback plans a window (+ broadcast join); the
-    # literal path stays a pure projection with neither.
-    n_probe = 1
-    lit_plan = _nearest_cells(
-        vecs, cent_rows, 1, "vec_id", max_literal_elems=10**9
-    )._jdf.queryExecution().executedPlan().toString()
-    fb_plan = _nearest_cells(
-        vecs, cent_rows, 1, "vec_id", max_literal_elems=1
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in lit_plan and "Join" not in lit_plan
-    assert "Window" in fb_plan
+    dim = MAX_LITERAL_CENTROID_ELEMS // 2 + 1
+    model = [(0, [1.0] * dim), (1, [-1.0] * dim)]
+    vecs = _emb(spark, [(1, [1.0] * dim)])
+    with pytest.raises(ValueError, match="MAX_LITERAL_CENTROID_ELEMS"):
+        _nearest_cells(_vectors(vecs), model, 1)
+    with pytest.raises(ValueError, match="MAX_LITERAL_CENTROID_ELEMS"):
+        similarity.ivf_topk(vecs, vecs, model, k=1)

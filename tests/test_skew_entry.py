@@ -2,9 +2,16 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from quill_agent_dashboard_pbi_etl_spark.operators import skew
+
+# The checkout this test file lives in: the entry module and the
+# CORRECTNESS_r*.json verdicts are read from the tree under test.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_ENTRY = os.path.join(_ROOT, "__spark_entry__.py")
 
 
 def test_salted_agg_count_matches_plain(spark):
@@ -71,7 +78,7 @@ def test_salted_join_equivalence_property(spark, fact_keys, hot_list, buckets):
 def test_entry_contract(spark):
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("entrymod", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entrymod", _ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
@@ -99,7 +106,7 @@ def test_driver_window_invariants():
     design, each paired with an oracle-backed accuracy-contract query)."""
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("entrymod2", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entrymod2", _ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
@@ -134,7 +141,7 @@ def test_driver_window_covers_freshness_contract():
     import re
 
     files = sorted(
-        glob.glob("/root/repo/CORRECTNESS_r*.json"),
+        glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")),
         key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
     )
     if len(files) < 1:
@@ -155,7 +162,7 @@ def test_driver_window_covers_freshness_contract():
                 green.add(name)
 
     spec = importlib.util.spec_from_file_location(
-        "entrymod3", "/root/repo/__spark_entry__.py"
+        "entrymod3", _ENTRY
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

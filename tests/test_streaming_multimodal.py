@@ -1494,9 +1494,12 @@ def test_reclaim_gc_runs_before_ledger_rewrite(spark, tmp_path):
 def test_reclaim_ledger_cli_smoke(spark, tmp_path):
     """tools/reclaim_ledger.py: one command = reclaim (quarantine) +
     compaction, RUNBOOK defaults; prints/returns the JSON summary."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    )
     import reclaim_ledger as _cli
 
     s = _build_orphan_scenario(spark, tmp_path)

@@ -49,11 +49,12 @@ def main() -> None:
         except Exception as exc:  # warm-up is best-effort, but say so
             print(f"WARN warm {name} failed: {exc}", file=sys.stderr)
         release_dead_blocks(spark)
-    from bench import _cpu_ticks  # shared /proc/stat steal instrumentation
+    from perfbench.measure import cpu_ticks, steal_pct
+
 
     for name in names:
         samples = []
-        ticks0 = _cpu_ticks()
+        ticks0 = cpu_ticks()
         for i in range(3):
             spark.sparkContext.setJobDescription(f"timed {name} #{i}")
             t0 = time.perf_counter()
@@ -62,11 +63,9 @@ def main() -> None:
             ).save()
             samples.append(time.perf_counter() - t0)
             release_dead_blocks(spark)
-        ticks1 = _cpu_ticks()
+        ticks1 = cpu_ticks()
         steal = (
-            f" steal={100.0 * (ticks1[0] - ticks0[0]) / (ticks1[1] - ticks0[1]):.1f}%"
-            if ticks0 and ticks1 and ticks1[1] > ticks0[1]
-            else ""
+            f" steal={steal_pct(ticks0, ticks1):.1f}%" if ticks1[1] > ticks0[1] else ""
         )
         s = sorted(samples)
         print(
