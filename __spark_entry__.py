@@ -9,12 +9,13 @@ rows-only).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from quill_agent_dashboard_pbi_etl_spark.plans import extensions  # noqa: F401 — registers extension queries
 from quill_agent_dashboard_pbi_etl_spark.plans import registry

@@ -686,50 +686,33 @@ def minhash_signature_df(
     id_col: str = "doc_id",
     num_hashes: int = 16,
     shingle_n: int = 3,
-    per_row: bool = True,
 ) -> DataFrame:
     """MinHash signatures: sig[i] = min over shingles of (a_i·h + b_i) mod P
-    with h = md5-derived base hash — ONE md5 per shingle, then ``num_hashes``
+    with h = :func:`shingle_hash` — ONE md5 per shingle, then ``num_hashes``
     integer transforms (the classic universal-hash family), instead of
     ``num_hashes`` cryptographic hashes per shingle.
 
-    Default path is per-row array transforms: ZERO shuffle (the exploded
-    groupBy alternative moves |docs|×|shingles| rows — measured 33% slower
-    warm and 5× slower cold from the bigger plan). Set ``per_row=False`` for
-    corpora with monster documents, where exploding spreads one document's
-    shingles across tasks instead of pinning them to one. md5 base keeps
-    every value portable to the SQL oracle. Returns (id, sig_0..sig_{H-1}).
+    Per-row array transforms: ZERO shuffle (an exploded groupBy would move
+    |docs|×|shingles| rows — measured 33% slower warm and 5× slower cold
+    from the bigger plan). md5 base keeps every value portable to the SQL
+    oracle. Returns (id, sig_0..sig_{H-1}).
     """
     from ..sources.readers import ensure_min_partitions
 
-    if per_row:
-        hashes = F.transform(
-            shingles(F.col(text_col), shingle_n),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-            % MINHASH_PRIME,
-        )
-        sig_cols = [
-            F.array_min(
-                F.transform(
-                    F.col("__hs"), lambda h: (h * (2 * i + 1) + (7777 * i + 1)) % MINHASH_PRIME
-                )
-            ).alias(f"sig_{i}")
-            for i in range(num_hashes)
-        ]
-        return (
-            ensure_min_partitions(docs)
-            .select(F.col(id_col), hashes.alias("__hs"))
-            .select(id_col, *sig_cols)
-        )
-
-    sh = ensure_min_partitions(docs).select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), shingle_n)).alias("shingle")
-    ).withColumn("h", shingle_hash(F.col("shingle")))
-    aggs = [
-        F.min((F.col("h") * (2 * i + 1) + (7777 * i + 1)) % MINHASH_PRIME).alias(f"sig_{i}")
+    hashes = F.transform(shingles(F.col(text_col), shingle_n), shingle_hash)
+    sig_cols = [
+        F.array_min(
+            F.transform(
+                F.col("__hs"), lambda h: (h * (2 * i + 1) + (7777 * i + 1)) % MINHASH_PRIME
+            )
+        ).alias(f"sig_{i}")
         for i in range(num_hashes)
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return (
+        ensure_min_partitions(docs)
+        .select(F.col(id_col), hashes.alias("__hs"))
+        .select(id_col, *sig_cols)
+    )
 
 
 def minhash_band_buckets(

@@ -136,137 +136,3 @@ def close_gap_sessions(
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
-
-def state_v2_available() -> bool:
-    """Capability probe for the Spark 4 state-v2 runtime
-    (``transformWithStateInPandas``): its driver↔worker wire protocol is
-    protobuf-based, so the Python environment must provide
-    ``google.protobuf``. Deployment clusters additionally need the RocksDB
-    state-store provider configured; that is a session setting the caller
-    owns (see :func:`close_gap_sessions_v2`)."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-def close_gap_sessions_auto(
-    fact: DataFrame,
-    gap_minutes: int = 30,
-    watermark_delay: str | None = "10 minutes",
-    time_col: str = "EventTime",
-    key_col: str = "AgentID",
-    id_col: str = "EventID",
-) -> DataFrame:
-    """Deployment entry point for gap-session closing: the state-v2 operator
-    where the runtime supports it (disk-spillable RocksDB state — the 100 TB
-    path), else the ``applyInPandasWithState`` v1 operator. Both emit the
-    identical closed-session contract, so callers and tests are
-    implementation-agnostic."""
-    impl = selected_gap_session_impl()
-    return impl(fact, gap_minutes, watermark_delay, time_col, key_col, id_col)
-
-
-def selected_gap_session_impl():
-    """The implementation :func:`close_gap_sessions_auto` will dispatch to in
-    this runtime — exposed so tests can assert WHICH path their environment
-    exercises instead of silently validating the fallback."""
-    return close_gap_sessions_v2 if state_v2_available() else close_gap_sessions
-
-
-def close_gap_sessions_v2(
-    fact: DataFrame,
-    gap_minutes: int = 30,
-    watermark_delay: str | None = "10 minutes",
-    time_col: str = "EventTime",
-    key_col: str = "AgentID",
-    id_col: str = "EventID",
-) -> DataFrame:
-    """Same closed-session semantics as :func:`close_gap_sessions`, on the
-    Spark 4 state-v2 API (``transformWithStateInPandas`` + explicit timers).
-
-    Why keep both: state v2 runs only on the RocksDB state-store provider
-    (disk-spillable state — at 100 TB / millions of agents the HDFS-backed
-    in-memory store of the v1 operator becomes the bottleneck), supports
-    state TTL natively, and decouples timers from the single per-group
-    timeout slot. The caller must set
-    ``spark.sql.streaming.stateStore.providerClass`` to the
-    ``RocksDBStateStoreProvider`` before starting the query.
-
-    Runtime requirement: the state-v2 driver/executor protocol is
-    protobuf-based, so the Python environment needs the ``protobuf``
-    package (not installed in this dev container — the test suite skips the
-    v2 test when ``google.protobuf`` is absent; the operator itself is the
-    100 TB-cluster deployment path).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    gap_ms = gap_minutes * 60_000
-    out_cols = [f.name for f in SESSION_OUTPUT_SCHEMA]
-
-    class GapSessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._session = handle.getValueState("session", SESSION_STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            agent = key[0]
-            closed: list[dict[str, Any]] = []
-            pdf = pd.concat(list(rows), ignore_index=True).sort_values(time_col)
-            open_s: tuple[int, int, int, str, str] | None = (
-                tuple(self._session.get()) if self._session.exists() else None
-            )
-            prev_timer = None if open_s is None else open_s[1] + gap_ms
-            for ts, eid in zip(
-                pdf[time_col].astype("int64") // 1_000_000, pdf[id_col].astype(str)
-            ):
-                ts = int(ts)
-                if open_s is None:
-                    open_s = (ts, ts, 1, eid, eid)
-                elif ts - open_s[1] > gap_ms:
-                    closed.append(_session_row(agent, open_s))
-                    open_s = (ts, ts, 1, eid, eid)
-                else:
-                    open_s = (open_s[0], ts, open_s[2] + 1, open_s[3], eid)
-            self._session.update(open_s)
-            # One live timer per key: retire the previous session's timer and
-            # arm the new close deadline (fires when the watermark passes it).
-            if prev_timer is not None and prev_timer != open_s[1] + gap_ms:
-                self._handle.deleteTimer(prev_timer)
-            self._handle.registerTimer(open_s[1] + gap_ms)
-            if closed:
-                yield pd.DataFrame(closed, columns=out_cols)
-
-        def handleExpiredTimer(
-            self, key: tuple, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ) -> Iterator[pd.DataFrame]:
-            if self._session.exists():
-                s = tuple(self._session.get())
-                # Guard against a stale timer outliving a session it no
-                # longer describes (extended by later events).
-                if expiredTimerInfo.getExpiryTimeInMs() >= s[1] + gap_ms:
-                    self._session.clear()
-                    yield pd.DataFrame(
-                        [_session_row(key[0], s)], columns=out_cols
-                    )
-
-        def close(self) -> None:
-            pass
-
-    stream = fact
-    if fact.isStreaming and watermark_delay is not None:
-        stream = fact.withWatermark(time_col, watermark_delay)
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        GapSessionProcessor(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="EventTime",
-    )

@@ -257,7 +257,7 @@ def test_bloom_bucketed_probe_single_broadcast_materialization(spark):
     # text, and it passes on Spark 4.1 — but the toString layout is not a
     # stable API across minor versions. If this assertion ever breaks on a
     # Spark upgrade, port it to the UI REST SQL endpoint's final executed
-    # plan (the approach tools/plan_audit.py and probe_weak_scaling.py
+    # plan (the approach tools/plan_audit.py and tools/capture_plans.py
     # already use), which reports the plan that actually ran.
     plan = (
         out._jdf.queryExecution()

@@ -1,64 +1,32 @@
-"""The mechanical third-run falsification rule (tools/probe_common.py):
-min-of-N wall pairs disagreeing >1.5x are ambient-contaminated and must be
-flagged before any rule cites them."""
+"""The committed SCALE_LADDER.json keeps its adjudicated cells.
+
+``tools/bench_ladder.py``, ``tools/bench_streaming.py`` and
+``tools/bench_ledger_gates.py`` read, update and rewrite this file; a rerun
+must merge into it, never overwrite the cells that were flagged
+``ambient_suspect`` (min-of-N walls more than 1.5x apart) or preserved as
+superseded or falsified results.
+"""
 
 from __future__ import annotations
 
 import json
-import sys
+import os
 
-sys.path.insert(0, "/root/repo/tools")
-
-from probe_common import AMBIENT_WALL_RATIO, ambient_suspect, annotate_ladder
-
-
-def test_ambient_suspect_signature():
-    assert AMBIENT_WALL_RATIO == 1.5
-    # the r10 killed cell's pre-gate pair (93.8 vs 157.3): suspect
-    assert ambient_suspect([93.801, 157.32])
-    # a clean fresh-JVM alternated pair (sf300_ab bloom 77.8/66.9): not
-    assert not ambient_suspect([77.8, 66.9])
-    # exactly at the boundary: not suspect (strict >)
-    assert not ambient_suspect([10.0, 15.0])
-    assert ambient_suspect([10.0, 15.01])
-    # degenerate inputs can't be judged
-    assert not ambient_suspect([])
-    assert not ambient_suspect([42.0])
-    assert not ambient_suspect([None, 10.0])
-    # min-of-3 with one ambient outlier still flags
-    assert ambient_suspect([10.0, 11.0, 30.0])
+LADDER = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_LADDER.json"
+)
 
 
-def test_annotate_ladder_retro_flags(tmp_path):
-    """Retro-annotation flags both node-level `walls` lists and summary
-    `<name>_walls` keys, idempotently."""
-    path = tmp_path / "ladder.json"
-    path.write_text(
-        json.dumps(
-            {
-                "grid": {
-                    "cell_a": {"walls": [50.0, 100.0], "wall_sec": 50.0},
-                    "cell_b": {"walls": [50.0, 55.0], "wall_sec": 50.0},
-                },
-                "summary": {"exact_walls": [100.7, 73.3], "exact_min_sec": 73.3},
-            }
-        )
-    )
-    flagged = annotate_ladder(str(path))
-    data = json.loads(path.read_text())
-    assert data["grid"]["cell_a"]["ambient_suspect"] is True
-    assert data["grid"]["cell_b"]["ambient_suspect"] is False
-    assert data["summary"]["exact_ambient_suspect"] is False
-    assert flagged == [".grid.cell_a"]
-    # idempotent
-    assert annotate_ladder(str(path)) == flagged
+def _ladder() -> dict:
+    with open(LADDER) as fh:
+        return json.load(fh)
 
 
 def test_committed_ladder_carries_the_flags():
     """The shipped SCALE_LADDER.json was re-adjudicated under the rule: the
     r10 narrative's ambient-degraded cells carry the flag; the fresh-JVM
     alternated-order cells do not."""
-    data = json.load(open("/root/repo/SCALE_LADDER.json"))
+    data = _ladder()
     flip = data["streaming_ledger_gate"]["flip_point"]
     # the killed 0.60x cell: its pre-gate pair (the cell's one strategy
     # besides "exact") is flagged
@@ -89,7 +57,7 @@ def test_committed_ladder_pins_the_r13_gate_adjudication():
     under its own key (the judge checks that negative and falsified
     results are not silently overwritten), and the final summaries say
     what the round concluded."""
-    data = json.load(open("/root/repo/SCALE_LADDER.json"))
+    data = _ladder()
 
     # streaming drain: three acts — pre-fix multifile (the 2.9x
     # regression), one-file-per-day-still-broken (the falsified

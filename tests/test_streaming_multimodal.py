@@ -391,124 +391,76 @@ def test_ledger_gated_sink_recovers_claimed_but_unwritten_events(
 
 
 def test_stateful_session_close_auto(spark, tmp_path):
-    """Gap sessions through ``close_gap_sessions_auto`` — the deployment
-    entry that probes the runtime and picks the state-v2 operator
-    (``transformWithStateInPandas`` + RocksDB store) when ``google.protobuf``
-    is available, else the ``applyInPandasWithState`` v1 operator. The
-    emitted closed-session contract is identical either way; this test also
-    asserts WHICH implementation the probe selected, so a silent fallback in
-    a protobuf-equipped environment fails instead of masquerading as v2
-    coverage. The real v2 wire path has its own protobuf-gated direct test
-    below."""
-    from quill_agent_dashboard_pbi_etl_spark.streaming import stateful
-
-    v2 = stateful.state_v2_available()
-    selected = stateful.selected_gap_session_impl()
-    assert (selected is stateful.close_gap_sessions_v2) == v2
-    assert (selected is stateful.close_gap_sessions) == (not v2)
-    _run_gap_session_scenario(
-        spark, tmp_path, stateful.close_gap_sessions_auto, use_rocksdb=v2
-    )
-
-
-def test_stateful_session_close_v2_direct(spark, tmp_path):
-    """The state-v2 operator (``transformWithStateInPandas`` + RocksDB)
-    called DIRECTLY — skipped (visibly, not silently) where the protobuf
-    wire dependency is absent, so protobuf-equipped environments always
-    exercise the real v2 path regardless of what the auto probe would do."""
-    pytest.importorskip("google.protobuf")
-    from quill_agent_dashboard_pbi_etl_spark.streaming.stateful import (
-        close_gap_sessions_v2,
-    )
-
-    _run_gap_session_scenario(
-        spark, tmp_path, close_gap_sessions_v2, use_rocksdb=True
-    )
-
-
-def _run_gap_session_scenario(spark, tmp_path, close_fn, use_rocksdb):
-    """Shared two-batch gap-session scenario: within-batch gap close,
-    watermark-timeout close, and a cross-batch close restored from the
-    checkpoint. ``close_fn`` is any implementation of the closed-session
-    contract."""
+    """Gap sessions through ``close_gap_sessions`` over two micro-batches:
+    within-batch gap close, watermark-timeout close, and a cross-batch close
+    restored from the checkpoint."""
     import json as _json
+
+    from quill_agent_dashboard_pbi_etl_spark.streaming.stateful import (
+        close_gap_sessions,
+    )
 
     landing = tmp_path / "landing"
     landing.mkdir()
     out = tmp_path / "sessions"
     ckpt = tmp_path / "ckpt"
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    if use_rocksdb:  # state v2 runs only on the RocksDB provider
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+    def run_batch():
+        from quill_agent_dashboard_pbi_etl_spark.functions.adapter import (
+            normalize_webhooks,
         )
-    try:
+        from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
+            envelopes_to_webhook_shape,
+        )
 
-        def run_batch():
-            from quill_agent_dashboard_pbi_etl_spark.functions.adapter import (
-                normalize_webhooks,
-            )
-            from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
-                envelopes_to_webhook_shape,
-            )
+        stream = read_envelope_stream(spark, str(landing))
+        fact = normalize_webhooks(envelopes_to_webhook_shape(stream))
+        sessions = close_gap_sessions(fact, gap_minutes=30)
+        q = sessions.writeStream.foreachBatch(
+            lambda df, _b: df.write.mode("append").parquet(str(out))
+        ).outputMode("update").option(
+            "checkpointLocation", str(ckpt)
+        ).trigger(availableNow=True).start()
+        q.awaitTermination(180)
 
-            stream = read_envelope_stream(spark, str(landing))
-            fact = normalize_webhooks(envelopes_to_webhook_shape(stream))
-            sessions = close_fn(fact, gap_minutes=30)
-            q = sessions.writeStream.foreachBatch(
-                lambda df, _b: df.write.mode("append").parquet(str(out))
-            ).outputMode("update").option(
-                "checkpointLocation", str(ckpt)
-            ).trigger(availableNow=True).start()
-            q.awaitTermination(180)
+    with open(landing / "b1.json", "w") as f:
+        for eid, created, owner in (
+            (1, "2024-01-15T12:00:00", 42),
+            (2, "2024-01-15T12:10:00", 42),
+            (3, "2024-01-15T14:00:00", 42),
+            (4, "2024-01-15T12:05:00", 7),
+        ):
+            env = _envelope(eid, created=created)
+            body = _json.loads(env["body"])
+            body["body"]["owner_id"] = owner
+            env["body"] = _json.dumps(body)
+            f.write(_json.dumps(env) + "\n")
+    run_batch()
 
-        with open(landing / "b1.json", "w") as f:
-            for eid, created, owner in (
-                (1, "2024-01-15T12:00:00", 42),
-                (2, "2024-01-15T12:10:00", 42),
-                (3, "2024-01-15T14:00:00", 42),
-                (4, "2024-01-15T12:05:00", 7),
-            ):
-                env = _envelope(eid, created=created)
-                body = _json.loads(env["body"])
-                body["body"]["owner_id"] = owner
-                env["body"] = _json.dumps(body)
-                f.write(_json.dumps(env) + "\n")
-        run_batch()
+    got = {
+        (r.AgentID, str(r.session_start), r.n_events, r.first_event, r.last_event)
+        for r in spark.read.parquet(str(out)).collect()
+    }
+    assert got == {
+        ("42", "2024-01-15 12:00:00", 2, "ALOWARE:1", "ALOWARE:2"),
+        ("7", "2024-01-15 12:05:00", 1, "ALOWARE:4", "ALOWARE:4"),
+    }
 
-        got = {
-            (r.AgentID, str(r.session_start), r.n_events, r.first_event, r.last_event)
-            for r in spark.read.parquet(str(out)).collect()
-        }
-        assert got == {
-            ("42", "2024-01-15 12:00:00", 2, "ALOWARE:1", "ALOWARE:2"),
-            ("7", "2024-01-15 12:05:00", 1, "ALOWARE:4", "ALOWARE:4"),
-        }
+    # Cross-batch: agent 42 at 16:00 closes its 14:00 session via the gap
+    # rule, with state and timers restored from the checkpoint.
+    with open(landing / "b2.json", "w") as f:
+        f.write(_json.dumps(_envelope(5, created="2024-01-15T16:00:00")) + "\n")
+    run_batch()
 
-        # Cross-batch: agent 42 at 16:00 closes its 14:00 session via the gap
-        # rule, with state and timers restored from the checkpoint.
-        with open(landing / "b2.json", "w") as f:
-            f.write(_json.dumps(_envelope(5, created="2024-01-15T16:00:00")) + "\n")
-        run_batch()
-
-        got = {
-            (r.AgentID, str(r.session_start), r.n_events, r.first_event, r.last_event)
-            for r in spark.read.parquet(str(out)).collect()
-        }
-        assert got == {
-            ("42", "2024-01-15 12:00:00", 2, "ALOWARE:1", "ALOWARE:2"),
-            ("42", "2024-01-15 14:00:00", 1, "ALOWARE:3", "ALOWARE:3"),
-            ("7", "2024-01-15 12:05:00", 1, "ALOWARE:4", "ALOWARE:4"),
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
+    got = {
+        (r.AgentID, str(r.session_start), r.n_events, r.first_event, r.last_event)
+        for r in spark.read.parquet(str(out)).collect()
+    }
+    assert got == {
+        ("42", "2024-01-15 12:00:00", 2, "ALOWARE:1", "ALOWARE:2"),
+        ("42", "2024-01-15 14:00:00", 1, "ALOWARE:3", "ALOWARE:3"),
+        ("7", "2024-01-15 12:05:00", 1, "ALOWARE:4", "ALOWARE:4"),
+    }
 
 
 def test_streaming_windowed_rollup(spark, tmp_path):

@@ -20,7 +20,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from quill_agent_dashboard_pbi_etl_spark.plans import extensions  # noqa: F401
 from quill_agent_dashboard_pbi_etl_spark.plans.registry import QUERIES
@@ -171,7 +172,7 @@ def main() -> None:
         i = argv.index("--rungs")
         rung_filter = set(argv[i + 1].split(","))
         argv = argv[:i] + argv[i + 2 :]
-    ladder_root = argv[0] if argv else "/root/repo/scale_ladder"
+    ladder_root = argv[0] if argv else os.path.join(ROOT, "scale_ladder")
     rungs = [
         (name, path or os.path.join(ladder_root, name), scale)
         for name, path, scale in RUNGS
@@ -218,9 +219,10 @@ def main() -> None:
     # bench_ledger_gates.py / bench_streaming.py merge foreign top-level
     # sections (ledger_gate_crossover, streaming_ingest*) into the same file,
     # and a wholesale replace here would silently delete them.
+    ladder_path = os.path.join(ROOT, "SCALE_LADDER.json")
     out: dict = {}
-    if os.path.exists("/root/repo/SCALE_LADDER.json"):
-        with open("/root/repo/SCALE_LADDER.json") as fh:
+    if os.path.exists(ladder_path):
+        with open(ladder_path) as fh:
             out = json.load(fh)
     partial = only is not None or rung_filter is not None
     for section, payload in (("timings_sec", timings), ("rows", rows)):
@@ -280,7 +282,7 @@ def main() -> None:
                     math.log(t2 / t1) / math.log(scale_of[r2] / scale_of[r1]), 2
                 )
     out["scaling_exponents"] = exponents
-    with open("/root/repo/SCALE_LADDER.json", "w") as fh:
+    with open(ladder_path, "w") as fh:
         json.dump(out, fh, indent=1)
         fh.write("\n")
     print(json.dumps({"exponents": exponents}, indent=1))

@@ -36,7 +36,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -214,7 +215,7 @@ def run_ledger_mode(
         finally:
             shutil.rmtree(work, ignore_errors=True)
 
-    path = "/root/repo/SCALE_LADDER.json"
+    path = os.path.join(ROOT, "SCALE_LADDER.json")
     data = json.load(open(path)) if os.path.exists(path) else {}
     data.setdefault("streaming_ledger_gate", {}).update(out)
     data["streaming_ledger_gate"]["note"] = (
@@ -238,12 +239,12 @@ def main() -> None:
         single_batch = "--single-batch" in argv
         if single_batch:
             argv.remove("--single-batch")
-        ladder_root = argv[0] if argv else "/root/repo/scale_ladder"
+        ladder_root = argv[0] if argv else os.path.join(ROOT, "scale_ladder")
         run_ledger_mode(
             ladder_root, argv[1:] or list(RUNGS), single_batch=single_batch
         )
         return
-    ladder_root = argv[0] if argv else "/root/repo/scale_ladder"
+    ladder_root = argv[0] if argv else os.path.join(ROOT, "scale_ladder")
     wanted = argv[1:] or list(RUNGS)
     spark = get_spark(app_name="bench-streaming")
     spark.sparkContext.setLogLevel("ERROR")
@@ -296,7 +297,7 @@ def main() -> None:
         finally:
             shutil.rmtree(work, ignore_errors=True)
 
-    path = "/root/repo/SCALE_LADDER.json"
+    path = os.path.join(ROOT, "SCALE_LADDER.json")
     section = "streaming_ingest_rocksdb" if rocksdb else "streaming_ingest"
     data = json.load(open(path)) if os.path.exists(path) else {}
     data.setdefault(section, {}).update(out)

@@ -9,12 +9,13 @@ Usage: python tools/check_types.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from quill_agent_dashboard_pbi_etl_spark.session import get_spark
 from quill_agent_dashboard_pbi_etl_spark.plans import extensions  # noqa: F401

@@ -31,7 +31,7 @@ cross-replica pairs are never near-dups:
   growth).
 
 Usage: python tools/make_scale_ladder.py [out_root]
-Writes <out_root>/sf{0.3,1,3,10,30,100} (default /root/repo/scale_ladder —
+Writes <out_root>/sf{0.3,1,3,10,30,100} (default scale_ladder/ at the repo root —
 gitignored; ~4.5 GB total with the sf100 rung, which alone is ~3.1 GB).
 """
 
@@ -142,7 +142,9 @@ def main() -> None:
         i = argv.index("--rungs")
         only = set(argv[i + 1].split(","))
         del argv[i : i + 2]
-    out_root = argv[0] if argv else "/root/repo/scale_ladder"
+    out_root = argv[0] if argv else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scale_ladder"
+    )
     rungs = [
         ("sf0.3", 3),
         ("sf1", 10),

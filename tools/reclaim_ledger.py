@@ -34,9 +34,10 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def build_events(spark, landing_dir: str):
