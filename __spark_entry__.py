@@ -62,32 +62,31 @@ def _wrap(fn: registry.Query) -> registry.Query:
 
 # The driver's correctness sweep checks the FIRST 50 entries of queries() in
 # iteration order. Round-15 rotation policy: (a) the full round-13-dated
-# backlog — exactly the 45 r13-window keys (the "queries_dropped" list of
-# PERF_r14.json), which would cross the two-round freshness boundary this
-# round. This backlog ALREADY contains the r14 verdict's mandated
+# backlog — the 44 still-registered r13-window keys (the "queries_dropped"
+# list of PERF_r14.json), which would cross the two-round freshness boundary
+# this round. This backlog ALREADY contains the r14 verdict's mandated
 # changed-path canaries (ann_ivf_topk / ann_ivf_trained_topk /
-# ann_ivf_recall / approx_distinct_agents_check — VERDICT next-round item
-# 2) plus the queries this round's pair-generation and CC-loop changes
-# touch most (dup_clusters, dedup_survivors, corpus_pipeline_full,
+# ann_ivf_recall / approx_distinct_agents_check — VERDICT next-round item 2)
+# plus the queries this round's pair-generation and CC-loop changes touch
+# most (dup_clusters, dedup_survivors, corpus_pipeline_full,
 # dedup_minhash_lsh). (b) five r14-green entries re-checked EARLY because
 # round-15 code changes their paths: semantic_dup_clusters (CC observe
 # fusion), dedup_ngram_jaccard (size-ratio prefilter + first()-carried
 # sizes), simhash_near_dup (branchless votes), and time_filter_today /
-# adapter_normalize (webhook_mapping.py gained the nd-barrier escape
-# hatch; default-on plans are unchanged, these canaries prove it).
-# (a)+(b) = exactly 50. Four (a) entries are engine-native/approximate ops
-# with no DuckDB oracle — rows-only BY DESIGN, each paired with an
-# oracle-backed contract in the same window (approx_distinct_agents ↔
+# adapter_normalize (webhook_mapping.py gained the nd-barrier escape hatch;
+# default-on plans are unchanged, these canaries prove it). (a)+(b) = 49;
+# slot 50 is the first registry query outside the list (fact_error_log,
+# oracle-backed). Four (a) entries are engine-native/approximate ops with no
+# DuckDB oracle — rows-only BY DESIGN, each paired with an oracle-backed
+# contract in the same window (approx_distinct_agents ↔
 # approx_distinct_agents_check; value_percentiles_approx ↔
 # value_percentiles_approx_check; ann_ivf_topk / ann_ivf_trained_topk ↔
 # ann_ivf_recall) — declared in _ROWS_ONLY_WINDOW_OK below. Every entry
-# outside the window was driver-green in round 14 with unchanged code
-# since; tools/check_oracle.py still sweeps all entries regardless of
-# order.
+# outside the window was driver-green in round 14 with unchanged code since;
+# tools/check_oracle.py still sweeps all entries regardless of order.
 _DRIVER_PRIORITY = [
     # -- (a) round-13-dated backlog hitting the two-round staleness boundary --
     "ann_cosine_topk",
-    "ann_cosine_topk_vectorized",
     "ann_ivf_recall",            # r14+r15 changed path: IVF literal argmax
     "ann_ivf_topk",              # rows-only, contract = ann_ivf_recall
     "ann_ivf_trained_topk",      # rows-only, contract = ann_ivf_recall

@@ -7,10 +7,8 @@ per-batch, not per-row, and each partition streams through without
 materializing.
 
 Codec support is two-tier. ``decode_asset`` really decodes the formats that
-need nothing beyond ``wave``, ``struct``, ``zlib`` and numpy: PCM WAV,
-uncompressed 24-bit BMP, binary (P6) PPM and PNG across the full profile
-surface the spec defines (all five color types, bit depths 1-16, Adam7
-interlace, all five scanline filters). Every other payload, JPEG included,
+need nothing beyond ``wave``, ``struct`` and numpy: PCM WAV, uncompressed
+24-bit BMP and binary (P6) PPM. Every other payload, PNG and JPEG included,
 raises ``NotImplementedError``: that raise is the hook where a production
 codec library (PIL, torchaudio, pyav) plugs in. ``fake_decode`` remains the
 dependency-free stand-in for pipelines over arbitrary payloads. The
@@ -24,7 +22,6 @@ import hashlib
 import io
 import struct
 import wave
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -95,6 +92,8 @@ def _decode_bmp(payload: bytes) -> tuple[list[float], int]:
     width, height = struct.unpack_from("<ii", payload, 18)
     bpp = struct.unpack_from("<H", payload, 28)[0]
     compression = struct.unpack_from("<I", payload, 30)[0]
+    if width < 0:  # a negative height is legal: it marks a top-down raster
+        raise ValueError(f"negative BMP width {width}")
     if bpp != 24 or compression != 0:
         raise NotImplementedError(f"BMP bpp={bpp} compression={compression}")
     row_stride = (width * 3 + 3) // 4 * 4  # rows pad to 4-byte boundaries
@@ -137,285 +136,20 @@ def _decode_ppm(payload: bytes) -> tuple[list[float], int]:
     return _mean_rgb_mat(mat, width * height), 1
 
 
-_PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
-
-
-def _unfilter_average_row(line: "np.ndarray", prev: "np.ndarray", channels: int) -> None:
-    """Average (filter 3) for one scanline, in place. The predictor reads the
-    *decoded* left pixel, so the recurrence is sequential by spec; the loop
-    runs over plain Python ints (lists) — ~3× faster than numpy scalar
-    indexing — and only this row type and Paeth still loop at all."""
-    cur = line.tolist()
-    up = prev.tolist()
-    for i in range(channels):
-        cur[i] = (cur[i] + (up[i] >> 1)) & 0xFF
-    for i in range(channels, len(cur)):
-        cur[i] = (cur[i] + ((cur[i - channels] + up[i]) >> 1)) & 0xFF
-    line[:] = cur
-
-
-def _unfilter_paeth_row(line: "np.ndarray", prev: "np.ndarray", channels: int) -> None:
-    """Paeth (filter 4) for one scanline, in place. Same sequential-by-spec
-    structure as Average. ``pa = |p−a| = |b−c|`` does not depend on the
-    decoded left pixel, so it is precomputed vectorized; the loop carries
-    only the genuinely sequential terms."""
-    cur = line.tolist()
-    up = prev.tolist()
-    stride = len(cur)
-    # pa = |b - c| and (b - 2c) are left-independent → one vectorized pass
-    bi = prev.astype(np.int16)
-    ci = np.zeros(stride, dtype=np.int16)
-    ci[channels:] = bi[:-channels]
-    pa_pre = np.abs(bi - ci).tolist()
-    bm2c = (bi - 2 * ci).tolist()
-    c_pre = ci.tolist()
-    for i in range(channels):
-        cur[i] = (cur[i] + up[i]) & 0xFF  # a = c = 0 → predictor is b
-    for i in range(channels, stride):
-        a = cur[i - channels]
-        c = c_pre[i]
-        pb = a - c
-        if pb < 0:
-            pb = -pb
-        pc = a + bm2c[i]
-        if pc < 0:
-            pc = -pc
-        pa = pa_pre[i]
-        if pa <= pb and pa <= pc:
-            pred = a
-        elif pb <= pc:
-            pred = up[i]
-        else:
-            pred = c
-        cur[i] = (cur[i] + pred) & 0xFF
-    line[:] = cur
-
-
-def _unfilter_scanlines(raw: bytes, height: int, stride: int, channels: int) -> "np.ndarray":
-    """Decode the inflated PNG byte stream (filter byte + scanline per row)
-    into a (height, stride) uint8 matrix, byte-identical to the per-byte
-    reference in tools/png_scalar_reference.py (differential test). None is
-    a memcpy, Up is one wrapping uint8 add, Sub is a per-channel prefix sum
-    mod 256 (the decoded row IS the running sum of the raw deltas);
-    Average/Paeth — whose predictor reads the *decoded* left pixel,
-    sequential by spec — fall to the tightened per-pixel row kernels.
-    """
-    arr = np.frombuffer(raw, dtype=np.uint8).reshape(height, stride + 1)
-    filters = arr[:, 0]
-    bad = filters[(filters > 4)]
-    if bad.size:
-        raise ValueError(f"invalid PNG filter type {int(bad[0])}")
-    out = np.ascontiguousarray(arr[:, 1:])
-    prev = np.zeros(stride, dtype=np.uint8)
-    for r in range(height):
-        f = int(filters[r])
-        line = out[r]
-        if f == 0:  # None
-            pass
-        elif f == 1:  # Sub → per-channel cumulative sum mod 256
-            csum = np.cumsum(line.reshape(-1, channels), axis=0, dtype=np.uint32)
-            line[:] = (csum & 0xFF).astype(np.uint8).reshape(-1)
-        elif f == 2:  # Up → wrapping uint8 add
-            np.add(line, prev, out=line)
-        elif f == 3:
-            _unfilter_average_row(line, prev, channels)
-        else:  # f == 4
-            _unfilter_paeth_row(line, prev, channels)
-        prev = line
-    return out
-
-
-# Adam7 interlace pass geometry: (x_start, y_start, x_step, y_step). Every
-# pixel belongs to exactly one pass, so channel SUMS over the passes equal
-# the sums over the de-interlaced image — the mean-RGB feature contract
-# never needs pixel re-positioning.
-_ADAM7 = (
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
-    (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-)
-# Samples per pixel and legal bit depths per color type (PNG spec §11.2.2).
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-_PNG_DEPTHS = {
-    0: (1, 2, 4, 8, 16),
-    2: (8, 16),
-    3: (1, 2, 4, 8),
-    4: (8, 16),
-    6: (8, 16),
-}
-
-
-def _png_pass_dims(width: int, height: int, p: int) -> tuple[int, int]:
-    xs, ys, xstep, ystep = _ADAM7[p]
-    return (
-        max(0, (width - xs + xstep - 1) // xstep),
-        max(0, (height - ys + ystep - 1) // ystep),
-    )
-
-
-def _png_subimage_rgb_sums(
-    mat: "np.ndarray",
-    width: int,
-    color_type: int,
-    bit_depth: int,
-    palette: "np.ndarray | None",
-) -> tuple["np.ndarray", int]:
-    """Unfiltered scanline bytes of one (sub)image → (RGB channel sums on
-    the 0-255 scale, pixel count). All lanes are whole-matrix numpy: 16-bit
-    samples recombine as big-endian pairs and rescale by /257 (65535→255);
-    sub-byte gray/palette samples unpack MSB-first via ``np.unpackbits``;
-    palette indices gather through the PLTE matrix; gray replicates to the
-    three channels; alpha is excluded (the RGB/RGBA parity contract).
-    Integer-valued float64 sums are exact below 2^53."""
-    ch = _PNG_CHANNELS[color_type]
-    if bit_depth == 16:
-        arr = mat.reshape(mat.shape[0], -1).astype(np.float64)
-        px = ((arr[:, 0::2] * 256.0 + arr[:, 1::2]) / 257.0).reshape(-1, ch)
-    elif bit_depth == 8:
-        px = mat.reshape(-1, ch).astype(np.float64)
-    else:  # 1/2/4-bit gray values or palette indices, packed MSB-first
-        bits = np.unpackbits(mat, axis=1)
-        groups = bits[:, : (bits.shape[1] // bit_depth) * bit_depth].reshape(
-            mat.shape[0], -1, bit_depth
-        )
-        weights = (1 << np.arange(bit_depth - 1, -1, -1)).astype(np.uint16)
-        vals = (groups * weights).sum(axis=2)[:, :width].astype(np.float64)
-        if color_type == 0:  # spec sample scaling: max sample → 255
-            vals *= 255.0 / ((1 << bit_depth) - 1)
-        px = vals.reshape(-1, 1)
-    if color_type == 3:
-        if palette is None:
-            raise ValueError("palette PNG missing PLTE chunk")
-        idx = px[:, 0].astype(np.int64)
-        if idx.size and int(idx.max()) >= palette.shape[0]:
-            raise ValueError("PNG palette index out of range")
-        rgb = palette[idx]
-    elif color_type in (0, 4):
-        g = px[:, 0]
-        rgb = np.stack([g, g, g], axis=1)
-    else:
-        rgb = px[:, :3]
-    return rgb.sum(axis=0), rgb.shape[0]
-
-
-def _decode_png(payload: bytes) -> tuple[list[float], int]:
-    """PNG → ([mean_r, mean_g, mean_b], 1), stdlib + numpy only, covering
-    the FULL profile surface the spec defines: all five color types
-    (grayscale, truecolor, palette, gray+alpha, RGBA), every legal bit
-    depth (1/2/4/8/16), and both interlace methods (none / Adam7).
-
-    A real decoder, not a sniffer: chunk CRCs are verified (zlib.crc32),
-    IDAT fragments are concatenated and inflated as one zlib stream, and
-    every scanline filter the spec defines (None/Sub/Up/Average/Paeth,
-    RFC 2083 §6) is unfiltered byte-exactly — vectorized per row where the
-    spec's data dependencies allow (see :func:`_unfilter_scanlines`;
-    filter offsets use the spec's bytes-per-pixel, so 16-bit and RGBA
-    strides unfilter with the same kernels). Adam7 streams decode pass by
-    pass; because every pixel is in exactly one pass, the mean-RGB
-    contract needs only per-pass channel sums, never de-interleaving.
-    Alpha is parsed but excluded from the channel means so RGB and RGBA
-    containers of the same pixels featurize identically (matching the
-    BMP/PPM contract); 16-bit samples rescale by 1/257 so a ×257-widened
-    8-bit image featurizes identically to its 8-bit original. Malformed
-    payloads (truncated chunks/CRCs, corrupt deflate streams, illegal
-    IHDR combinations, missing PLTE) raise ``ValueError``, the same
-    contract as the other codecs."""
-    if payload[:8] != _PNG_SIGNATURE:
-        raise ValueError("not a PNG payload")
-    pos = 8
-    width = height = None
-    bit_depth = color_type = interlace = None
-    palette = None
-    idat = bytearray()
-    while pos + 12 <= len(payload):
-        (length,) = struct.unpack_from(">I", payload, pos)
-        # bound covers data AND the trailing CRC word: a chunk whose data
-        # fits but whose CRC is cut off is truncated, not a struct.error
-        if pos + 12 + length > len(payload):
-            raise ValueError("truncated PNG chunk")
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        (crc,) = struct.unpack_from(">I", payload, pos + 8 + length)
-        if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-        pos += 12 + length
-        if ctype == b"IHDR":
-            width, height = struct.unpack_from(">II", data, 0)
-            bit_depth, color_type, _comp, _filt, interlace = data[8:13]
-        elif ctype == b"PLTE":
-            if length % 3 or length == 0:
-                raise ValueError("PNG PLTE length not a multiple of 3")
-            palette = (
-                np.frombuffer(data, dtype=np.uint8)
-                .reshape(-1, 3)
-                .astype(np.float64)
-            )
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-    if width is None:
-        raise ValueError("PNG missing IHDR")
-    if (
-        color_type not in _PNG_DEPTHS
-        or bit_depth not in _PNG_DEPTHS[color_type]
-        or interlace not in (0, 1)
-    ):
-        raise ValueError(
-            f"illegal PNG IHDR (bit_depth={bit_depth}, "
-            f"color_type={color_type}, interlace={interlace})"
-        )
-    channels = _PNG_CHANNELS[color_type]
-    bpp = max(1, channels * bit_depth // 8)  # spec filter byte offset
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except zlib.error as exc:
-        raise ValueError(f"corrupt PNG IDAT stream: {exc}") from exc
-
-    def sub_stride(w: int) -> int:
-        return (w * channels * bit_depth + 7) // 8
-
-    if interlace == 0:
-        passes = [(width, height)]
-    else:  # Adam7: empty passes contribute zero bytes (spec §8.2)
-        passes = [_png_pass_dims(width, height, p) for p in range(7)]
-    expected = sum((sub_stride(pw) + 1) * ph for pw, ph in passes if pw and ph)
-    if len(raw) != expected:
-        raise ValueError("PNG pixel data size mismatch")
-    count = width * height
-    if not count:
-        return [0.0] * 3, 1
-    total = np.zeros(3, dtype=np.float64)
-    seen = 0
-    offset = 0
-    for pw, ph in passes:
-        if not pw or not ph:
-            continue
-        st = sub_stride(pw)
-        seg = raw[offset : offset + (st + 1) * ph]
-        offset += (st + 1) * ph
-        decoded = _unfilter_scanlines(seg, ph, st, bpp)
-        sums, n = _png_subimage_rgb_sums(decoded, pw, color_type, bit_depth, palette)
-        total += sums
-        seen += n
-    if seen != count:
-        raise ValueError("PNG pixel count mismatch")
-    return [float(s) / count / 255.0 for s in total], 1
 def decode_asset(payload: bytes, modality: str) -> tuple[list[float], int]:
-    """Real decoder: magic-sniffs PCM WAV, PNG, 24-bit BMP and P6 PPM and
+    """Real decoder: magic-sniffs PCM WAV, 24-bit BMP and P6 PPM and
     extracts (feature_vector, frame_count).
 
     A payload with one of those magics that cannot be parsed (truncated
-    header, raster or chunk, negative PPM dimensions, a PNG CRC mismatch,
-    corrupt deflate stream or illegal IHDR, a WAV that ``wave`` rejects)
-    raises ``ValueError``. A recognized container in a variant these
-    decoders do not handle (24/32-bit PCM, compressed or non-24-bit BMP,
-    PPM maxval other than 255) raises ``NotImplementedError``, and so does
-    every other magic, JPEG included: that raise is the hook where
-    PIL/torchaudio/pyav plug in on a production image."""
+    header or raster, negative BMP width or PPM dimensions, a WAV that
+    ``wave`` rejects) raises ``ValueError``. A recognized container in a
+    variant these decoders do not handle (24/32-bit PCM, compressed or
+    non-24-bit BMP, PPM maxval other than 255) raises
+    ``NotImplementedError``, and so does every other magic, PNG and JPEG
+    included: that raise is the hook where PIL/torchaudio/pyav plug in on
+    a production image."""
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         return _decode_wav(payload)
-    if payload[:8] == _PNG_SIGNATURE:
-        return _decode_png(payload)
     if payload[:2] == b"BM":
         return _decode_bmp(payload)
     if payload[:2] == b"P6":
@@ -481,194 +215,6 @@ def make_bmp_bytes(seed: int, width: int = 8, height: int = 8) -> bytes:
 def make_ppm_bytes(seed: int, width: int = 8, height: int = 8) -> bytes:
     """Deterministic binary PPM (P6) payload."""
     return b"P6\n%d %d\n255\n" % (width, height) + _lcg_bytes(seed, width * height * 3)
-
-
-def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(data))
-        + ctype
-        + data
-        + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-    )
-
-
-def make_png_bytes(
-    seed: int, width: int = 8, height: int = 8, rgba: bool = False
-) -> bytes:
-    """Deterministic non-interlaced 8-bit PNG payload holding the SAME
-    logical RGB pixels as ``make_ppm_bytes``/``make_bmp_bytes`` for a given
-    seed (``rgba=True`` adds an opaque alpha channel), so cross-container
-    feature equality pins the whole zlib + unfilter path. Scanline filters
-    cycle 0→4 by row — every filter type the spec defines is exercised on
-    any image ≥5 rows, making the synthesizer a genuine encoder, not a
-    filter-0-only shortcut."""
-    channels = 4 if rgba else 3
-    stride = width * channels
-    rgb = np.frombuffer(_lcg_bytes(seed, width * height * 3), dtype=np.uint8)
-    img = rgb.reshape(height, width, 3)
-    if rgba:
-        img = np.concatenate(
-            [img, np.full((height, width, 1), 255, dtype=np.uint8)], axis=2
-        )
-    lines = np.ascontiguousarray(img.reshape(height, stride))
-    # ENCODING has no sequential dependency — every predictor input (left,
-    # up, up-left) is an original pixel, known up front — so all five filter
-    # transforms vectorize over the whole image; each row then selects its
-    # cycling r%5 variant. Byte-identical to the per-byte reference encoder
-    # (differential test vs tools/png_scalar_reference.py).
-    up = np.zeros_like(lines)
-    up[1:] = lines[:-1]
-    left = np.zeros_like(lines)
-    left[:, channels:] = lines[:, :-channels]
-    upleft = np.zeros_like(lines)
-    upleft[:, channels:] = up[:, :-channels]
-    ai = left.astype(np.int16)
-    bi = up.astype(np.int16)
-    ci = upleft.astype(np.int16)
-    p = ai + bi - ci
-    pa, pb, pc = np.abs(p - ai), np.abs(p - bi), np.abs(p - ci)
-    paeth_pred = np.where(
-        (pa <= pb) & (pa <= pc), ai, np.where(pb <= pc, bi, ci)
-    ).astype(np.uint8)
-    variants = np.stack(
-        [
-            lines,
-            lines - left,  # Sub (uint8 wrap)
-            lines - up,  # Up
-            lines - ((ai + bi) >> 1).astype(np.uint8),  # Average
-            lines - paeth_pred,  # Paeth
-        ]
-    )
-    row_idx = np.arange(height)
-    filtered = np.zeros((height, stride + 1), dtype=np.uint8)
-    filtered[:, 0] = row_idx % 5
-    filtered[:, 1:] = variants[row_idx % 5, row_idx]
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 6 if rgba else 2, 0, 0, 0)
-    return (
-        _PNG_SIGNATURE
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(filtered.tobytes(), 6))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def make_png_profile_bytes(
-    seed: int,
-    width: int = 8,
-    height: int = 8,
-    color_type: int = 2,
-    bit_depth: int = 8,
-    interlace: int = 0,
-) -> bytes:
-    """Deterministic PNG across the FULL profile surface: any legal
-    (color_type, bit_depth) pair from the spec plus both interlace
-    methods. All rows use filter 0 — the five-filter variety is already
-    pinned by :func:`make_png_bytes`; THIS synthesizer exists so the
-    differential tests can pin every sample-layout lane (palette gather,
-    sub-byte unpack, 16-bit recombine, gray replicate, Adam7 pass walk)
-    against an equivalent rendering of the same pixels. Sample content
-    derives from the LCG stream; 16-bit samples are the 8-bit values
-    ×257, so an image and its widened twin must featurize identically."""
-    ch = _PNG_CHANNELS[color_type]
-    if bit_depth not in _PNG_DEPTHS[color_type]:
-        raise ValueError(f"illegal PNG profile ({color_type}, {bit_depth})")
-    maxv = (1 << bit_depth) - 1
-    base = np.frombuffer(_lcg_bytes(seed, width * height * 3), dtype=np.uint8)
-    plte = b""
-    if color_type == 3:
-        n_entries = 1 << bit_depth
-        plte = _lcg_bytes(seed + 1, 3 * n_entries)
-        samples = (
-            (base[: width * height] % n_entries)
-            .reshape(height, width, 1)
-            .astype(np.uint16)
-        )
-    elif color_type in (0, 4):
-        g = base[: width * height].reshape(height, width, 1).astype(np.uint16)
-        if bit_depth < 8:
-            g >>= 8 - bit_depth
-        elif bit_depth == 16:
-            g *= 257
-        samples = g
-        if color_type == 4:
-            samples = np.concatenate(
-                [samples, np.full((height, width, 1), maxv, dtype=np.uint16)],
-                axis=2,
-            )
-    else:
-        rgb = base[: width * height * 3].reshape(height, width, 3).astype(np.uint16)
-        if bit_depth == 16:
-            rgb = rgb * 257
-        samples = rgb
-        if color_type == 6:
-            samples = np.concatenate(
-                [samples, np.full((height, width, 1), maxv, dtype=np.uint16)],
-                axis=2,
-            )
-
-    def pack_rows(sub: "np.ndarray") -> bytes:
-        h_ = sub.shape[0]
-        flat = sub.reshape(h_, -1)
-        if bit_depth == 16:
-            inter = np.empty((h_, flat.shape[1] * 2), dtype=np.uint8)
-            inter[:, 0::2] = (flat >> 8).astype(np.uint8)
-            inter[:, 1::2] = (flat & 0xFF).astype(np.uint8)
-            rows = inter
-        elif bit_depth == 8:
-            rows = flat.astype(np.uint8)
-        else:
-            bits = (
-                ((flat[..., None] >> np.arange(bit_depth - 1, -1, -1)) & 1)
-                .astype(np.uint8)
-                .reshape(h_, -1)
-            )
-            pad = (-bits.shape[1]) % 8
-            if pad:
-                bits = np.concatenate(
-                    [bits, np.zeros((h_, pad), dtype=np.uint8)], axis=1
-                )
-            rows = np.packbits(bits, axis=1)
-        return b"".join(b"\x00" + r.tobytes() for r in rows)
-
-    if interlace == 0:
-        raw = pack_rows(samples)
-    else:
-        raw = b"".join(
-            pack_rows(samples[ys::ystep, xs::xstep])
-            for xs, ys, xstep, ystep in _ADAM7
-            if samples[ys::ystep, xs::xstep].size
-        )
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, bit_depth, color_type, 0, 0, interlace
-    )
-    out = _PNG_SIGNATURE + _png_chunk(b"IHDR", ihdr)
-    if plte:
-        out += _png_chunk(b"PLTE", plte)
-    return out + _png_chunk(b"IDAT", zlib.compress(raw, 6)) + _png_chunk(b"IEND", b"")
-
-
-# Named profile stripes for synthesize_codec_assets_from_documents: each one
-# routes a contract-level slice of the registered real-decode query
-# through a decoder lane the profile tests pin in isolation (palette gather,
-# sub-byte unpack, Adam7 pass walk, 16-bit recombine).
-
-def make_png_palette_bytes(seed: int, width: int = 8, height: int = 8) -> bytes:
-    """Deterministic indexed-color PNG (color type 3, 4-bit depth — PLTE
-    gather + sub-byte unpack lanes)."""
-    return make_png_profile_bytes(seed, width, height, color_type=3, bit_depth=4)
-
-
-def make_png_interlaced_bytes(seed: int, width: int = 8, height: int = 8) -> bytes:
-    """Deterministic Adam7-interlaced truecolor PNG."""
-    return make_png_profile_bytes(
-        seed, width, height, color_type=2, bit_depth=8, interlace=1
-    )
-
-
-def make_png16_bytes(seed: int, width: int = 8, height: int = 8) -> bytes:
-    """Deterministic 16-bit truecolor PNG (samples = 8-bit values ×257, so
-    it featurizes identically to its 8-bit twin)."""
-    return make_png_profile_bytes(seed, width, height, color_type=2, bit_depth=16)
 
 
 def fake_decode(
@@ -746,12 +292,10 @@ def synthesize_assets_from_documents(docs: DataFrame) -> DataFrame:
 
 def synthesize_codec_assets_from_documents(docs: DataFrame) -> DataFrame:
     """Build a multimodal asset table whose payloads are REAL codec bytes
-    (WAV / BMP / PPM / PNG, striped by doc_id and seeded by it) so
+    (WAV / BMP / PPM, striped by doc_id and seeded by it) so
     ``extract_features(..., use_real_decoder=True)`` exercises actual
-    decoding — zlib inflate + scanline unfiltering on the PNG rows. The
-    stripe set covers the PNG decoder's profile surface at contract level:
-    five-filter truecolor, palette, Adam7 and 16-bit. Generation runs in
-    mapInPandas — payloads are born on executors, never on the driver."""
+    decoding. Generation runs in mapInPandas — payloads are born on
+    executors, never on the driver."""
     out_schema = "asset_id long, modality string, content binary, mime_type string"
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -759,10 +303,6 @@ def synthesize_codec_assets_from_documents(docs: DataFrame) -> DataFrame:
             ("audio", "audio/wav", make_wav_bytes),
             ("image", "image/bmp", make_bmp_bytes),
             ("image", "image/x-portable-pixmap", make_ppm_bytes),
-            ("image", "image/png", make_png_bytes),
-            ("image", "image/png", make_png_palette_bytes),
-            ("image", "image/png", make_png_interlaced_bytes),
-            ("image", "image/png", make_png16_bytes),
         ]
         for pdf in batches:
             rows = []

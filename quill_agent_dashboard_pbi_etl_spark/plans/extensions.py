@@ -526,13 +526,10 @@ def q_multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal REAL-decode pipeline: synthesize genuine codec payloads
     per document (mapInPandas, executor-side) and decode them with the
     stdlib + numpy decoders behind decode_asset — PCM RMS features for
-    the WAV stripe, RGB channel means for the BMP, PPM and PNG stripes
-    (five-filter truecolor, palette, Adam7 and 16-bit PNG, so the
-    registered query exercises every layout lane the profile tests pin in
-    isolation). The decode math is not SQL-expressible, so this
-    registers rows-only; exact feature values are locked by
-    tests/test_multimodal_codecs.py golden vectors against independent
-    wave/struct references and a per-byte PNG reference."""
+    the WAV stripe, RGB channel means for the BMP and PPM stripes. The
+    decode math is not SQL-expressible, so this registers rows-only;
+    exact feature values are locked by tests/test_multimodal_codecs.py
+    golden vectors against independent wave/struct references."""
     from ..functions.multimodal import (
         extract_features,
         synthesize_codec_assets_from_documents,
@@ -540,10 +537,9 @@ def q_multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.readers import ensure_min_partitions
 
     # Synthesis and decode run row by row in Python workers (LCG payload,
-    # container write, parse or inflate + unfilter, sha256), a CPU-heavy
-    # projection of the kind ensure_min_partitions exists for: single-file
-    # test data scans as ONE task, which would funnel every document
-    # through one worker.
+    # container write, parse, sha256), a CPU-heavy projection of the kind
+    # ensure_min_partitions exists for: single-file test data scans as ONE
+    # task, which would funnel every document through one worker.
     docs = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
     assets = synthesize_codec_assets_from_documents(docs)
     return extract_features(assets, use_real_decoder=True).select(
@@ -565,31 +561,6 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = similarity.collect_rows(emb.filter(F.col("vec_id") < 8), "vec_id")
     queries = emb.filter(F.col("vec_id") < 10)
     return similarity.ivf_topk(emb, queries, centroids, k=5)
-
-
-@register(
-    "ann_cosine_topk_vectorized",
-    """
-WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qvec FROM embeddings WHERE vec_id < 10),
-c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cvec FROM embeddings),
-scored AS (
-  SELECT query_id, neighbor_id,
-         round(list_cosine_similarity(qvec, cvec), 6) AS cosine_sim
-  FROM q JOIN c ON query_id != neighbor_id
-),
-ranked AS (
-  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine_sim DESC, neighbor_id) AS BIGINT) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, rank, cosine_sim FROM ranked WHERE rank <= 5
-""",
-)
-def q_ann_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same exact top-5 as ann_cosine_topk, kept under its own name for
-    the driver window and the oracle sweep: both run
-    similarity.brute_force_topk."""
-    return q_ann_cosine_topk(spark, sf_dir)
 
 
 @register("ann_ivf_trained_topk")  # approximate (learned index) — rows-only

@@ -2,7 +2,7 @@
 
 test_plan_quality.py pins deep properties on hand-picked queries; this file
 asserts the cheap global invariants on EVERY registry query's compiled plan
-(plan-only — nothing executes), so a regression anywhere in the 95-query
+(plan-only — nothing executes), so a regression anywhere in the registry
 surface fails the suite even if no targeted test covers that query:
 
 - no CartesianProduct, ever — an accidental unkeyed join at 100 TB is a
@@ -50,8 +50,8 @@ def test_global_plan_invariants(spark, name):
     # that is the right object — AQE only ever swaps join strategies downward
     # (e.g. SMJ → broadcast); it never INTRODUCES CartesianProduct /
     # BatchEvalPython / BroadcastNestedLoopJoin nodes absent from the initial
-    # plan — and it keeps the 95-query sweep collect-free. Do not "fix" this
-    # into a collect-first test.
+    # plan — and it keeps the sweep over every registry query collect-free.
+    # Do not "fix" this into a collect-first test.
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: unkeyed cartesian join"
     if name in BNLJ_BY_DESIGN:
