@@ -9,13 +9,17 @@ rows-only).
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from quill_agent_dashboard_pbi_etl_spark.plans import extensions  # noqa: F401 — registers extension queries
 from quill_agent_dashboard_pbi_etl_spark.plans import registry
@@ -60,112 +64,37 @@ def _wrap(fn: registry.Query) -> registry.Query:
     return wrapped
 
 
-# The driver's correctness sweep checks the FIRST 50 entries of queries() in
-# iteration order. Round-15 rotation policy: (a) the full round-13-dated
-# backlog — the 44 still-registered r13-window keys (the "queries_dropped"
-# list of PERF_r14.json), which would cross the two-round freshness boundary
-# this round. This backlog ALREADY contains the r14 verdict's mandated
-# changed-path canaries (ann_ivf_topk / ann_ivf_trained_topk /
-# ann_ivf_recall / approx_distinct_agents_check — VERDICT next-round item 2)
-# plus the queries this round's pair-generation and CC-loop changes touch
-# most (dup_clusters, dedup_survivors, corpus_pipeline_full,
-# dedup_minhash_lsh). (b) five r14-green entries re-checked EARLY because
-# round-15 code changes their paths: semantic_dup_clusters (CC observe
-# fusion), dedup_ngram_jaccard (size-ratio prefilter + first()-carried
-# sizes), simhash_near_dup (branchless votes), and time_filter_today /
-# adapter_normalize (webhook_mapping.py gained the nd-barrier escape hatch;
-# default-on plans are unchanged, these canaries prove it). (a)+(b) = 49;
-# slot 50 is the first registry query outside the list (fact_error_log,
-# oracle-backed). Four (a) entries are engine-native/approximate ops with no
-# DuckDB oracle — rows-only BY DESIGN, each paired with an oracle-backed
-# contract in the same window (approx_distinct_agents ↔
-# approx_distinct_agents_check; value_percentiles_approx ↔
-# value_percentiles_approx_check; ann_ivf_topk / ann_ivf_trained_topk ↔
-# ann_ivf_recall) — declared in _ROWS_ONLY_WINDOW_OK below. Every entry
-# outside the window was driver-green in round 14 with unchanged code since;
-# tools/check_oracle.py still sweeps all entries regardless of order.
-_DRIVER_PRIORITY = [
-    # -- (a) round-13-dated backlog hitting the two-round staleness boundary --
-    "ann_cosine_topk",
-    "ann_ivf_recall",            # r14+r15 changed path: IVF literal argmax
-    "ann_ivf_topk",              # rows-only, contract = ann_ivf_recall
-    "ann_ivf_trained_topk",      # rows-only, contract = ann_ivf_recall
-    "approx_distinct_agents",    # rows-only, contract = _check below
-    "approx_distinct_agents_check",  # r14 changed path: HLL-state cut
-    "corpus_pipeline_full",      # r15 changed path: survivor-only gate
-    "corpus_shards",
-    "corpus_stats_by_source",
-    "decontamination_flags",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_survivors",           # r15 changed path: CC observe + prefilter
-    "dim_agent_sync",
-    "doc_fingerprint",
-    "dup_clusters",              # r15 changed path: CC observe + prefilter
-    "embedding_near_dup",
-    "frequent_tokens",
-    "hubspot_stub",
-    "lang_id",
-    "quality_scores",
-    "repetition_stats",
-    "rollup_grouping_sets",
-    "sequence_packing",
-    "stratified_sample",
-    "time_filter_last_month",
-    "time_filter_last_week",
-    "time_filter_this_month",
-    "time_filter_this_week",
-    "time_filter_yesterday",
-    "token_counts",
-    "tpch_q10_returned_revenue",
-    "tpch_q11_important_stock",
-    "tpch_q12_shipmode_priority",
-    "tpch_q13_order_count_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q21_sole_late_supplier",
-    "tpch_q22_idle_customers",
-    "tpch_q8_market_share",
-    "value_percentiles",
-    "value_percentiles_approx",  # rows-only, contract = _check below
-    "value_percentiles_approx_check",
-    # -- (b) r14-green, re-checked early: round-15 code touches their paths --
-    "semantic_dup_clusters",     # connected_components observe fusion
-    "dedup_ngram_jaccard",       # size-ratio prefilter, sizes via first()
-    "simhash_near_dup",          # branchless vote kernel
-    "time_filter_today",         # webhook_mapping barrier escape hatch
-    "adapter_normalize",         # same module; proves default plans unchanged
-]
+def _green(rec: dict) -> bool:
+    """A verdict that checked the query: an oracle match, or a rows-only
+    check (``err == "no_oracle"``) that recorded a row count."""
+    if rec.get("err") is None:
+        return bool(rec.get("rows_match", False))
+    rows = rec.get("spark_rows")
+    return rec.get("err") == "no_oracle" and isinstance(rows, int) and rows >= 0
 
-# In-window entries deliberately checked rows-only (no DuckDB oracle — the
-# op is engine-native/approximate). Each has an oracle-backed contract also
-# in the window: approx_distinct_agents ↔ approx_distinct_agents_check
-# (exact-count cross-check), value_percentiles_approx ↔
-# value_percentiles_approx_check (rank-error contract), ann_ivf_topk /
-# ann_ivf_trained_topk ↔ ann_ivf_recall (recall vs the oracled brute-force
-# side). multimodal_real_decode and embedding_near_dup_lsh were rows-only-
-# checked in round 14 with their oracled contracts and sit outside this
-# window, so they must NOT appear here (the invariants test asserts the
-# allowlist is exact).
-_ROWS_ONLY_WINDOW_OK = {
-    "approx_distinct_agents",
-    "value_percentiles_approx",
-    "ann_ivf_topk",
-    "ann_ivf_trained_topk",
-}
+
+def driver_order(names: Iterable[str], correctness_files: Iterable[str]) -> list[str]:
+    """``names`` ordered by the last round each was green in the
+    ``CORRECTNESS_r<round>.json`` verdicts, stalest first. A name never green
+    sorts first; ties keep ``names`` order; verdicts for other names are
+    ignored."""
+    last: dict[str, int] = {}
+    for path in correctness_files:
+        rnd = int(re.search(r"_r(\d+)", os.path.basename(path)).group(1))
+        with open(path) as f:
+            for name, rec in json.load(f).items():
+                if _green(rec):
+                    last[name] = max(last.get(name, 0), rnd)
+    return sorted(names, key=lambda n: last.get(n, 0))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator (SURVEY.md §2 + north-star ops),
-    ordered so the driver's 50-query cap yields maximum fresh coverage."""
-    missing = [n for n in _DRIVER_PRIORITY if n not in registry.QUERIES]
-    assert not missing, f"_DRIVER_PRIORITY references unknown queries: {missing}"
-    ordered = {name: _wrap(registry.QUERIES[name]) for name in _DRIVER_PRIORITY}
-    for name, fn in registry.QUERIES.items():
-        if name not in ordered:
-            ordered[name] = _wrap(fn)
-    return ordered
+    """One entry per implemented operator (SURVEY.md §2 + north-star ops).
+    The correctness sweep checks the first 50 entries, so they are
+    the least recently verified: the order comes from the verdict files next
+    to this module, read at call time."""
+    files = glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json"))
+    return {n: _wrap(registry.QUERIES[n]) for n in driver_order(registry.QUERIES, files)}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -10,13 +10,13 @@ Scale posture (100 TB):
 - ``connected_components`` is iterative min-label propagation over DataFrame
   joins — every round is one equi-join + one groupBy (shuffle on node id),
   never a cross join, and lineage is truncated per round with
-  ``materialize.pin`` (default eager ``localCheckpoint``; ``spark.graft.pin``
-  selects reliable checkpointing on preemptible clusters) so the plan does
-  not grow with iterations. Near-dup
-  graphs are dense little cliques (diameter 1-3), so the loop converges in
-  2-4 rounds; ``max_iter`` caps pathological chains. On a real cluster the
-  same loop runs with checkpointing to HDFS/S3; the label frontier is tiny
-  relative to the corpus (only docs that appear in some pair).
+  ``materialize.pin`` (eager; ``spark.graft.pin`` selects reliable
+  checkpointing on preemptible clusters) so the plan does not grow with
+  iterations. Near-dup graphs are dense little cliques (diameter 1-3), so
+  the loop converges in 2-4 rounds; ``max_iter`` caps pathological chains.
+  On a real cluster the same loop runs with checkpointing to HDFS/S3; the
+  label frontier is tiny relative to the corpus (only docs that appear in
+  some pair).
 - Sampling is HASH-based, not RNG-based: ``md5(key) % 100 < pct`` is
   reproducible across runs, engines, partitionings and retries — the only
   sampling discipline that is auditable at 100 TB (and the reason it keeps a
@@ -55,7 +55,7 @@ def _pin_step_counting_changes(df: DataFrame) -> tuple[DataFrame, int]:
         obs,
         F.count(F.when(F.col("label") != F.col("old_label"), 1)).alias("changed"),
     ).select("node", "label")
-    pinned = pin(observed, required=True)
+    pinned = pin(observed)
     return pinned, int(obs.get["changed"])
 
 
@@ -89,12 +89,10 @@ def connected_components(
     # symmetric closure is an explode of [(a,b),(b,a)], NOT a self-union —
     # a union's two branches would each execute the caller's edge DAG inside
     # this one checkpoint action.
-    # required=True: lineage truncation is STRUCTURAL for this loop, not an
-    # optimization — with pass-through pinning each round's plan would embed
-    # the previous round ~3x (neighbor join, propagate join, pointer jump)
-    # plus the convergence count, re-executing the caller's whole edge DAG
-    # O(3^rounds) times. The 'none' strategy therefore still materializes
-    # here (see operators/materialize.py).
+    # Lineage truncation is STRUCTURAL for this loop, not an optimization:
+    # unpinned, each round's plan would embed the previous round ~3x
+    # (neighbor join, propagate join, pointer jump) plus the convergence
+    # count, re-executing the caller's whole edge DAG O(3^rounds) times.
     sym = pin(
         e.select(
             F.explode(
@@ -104,8 +102,7 @@ def connected_components(
                 )
             ).alias("p")
         )
-        .select("p.a", "p.b"),
-        required=True,
+        .select("p.a", "p.b")
     )
     # Identity labels stay LAZY: both round-0 references (the neighbor join
     # and the propagate join) recompute the distinct from SYM'S PINNED BLOCKS
@@ -160,7 +157,7 @@ def connected_components(
         )
 
     if max_iter < 2:  # degenerate cap: one propagate, no convergence proof
-        step = pin(one_round(labels, jump=False), required=True)
+        step = pin(one_round(labels, jump=False))
         unpin(sym)  # step is materialized; the edge pin is dead weight now
         return step.select("node", F.col("label").alias("cluster_id"))
 

@@ -596,9 +596,9 @@ def ledger_update_atomic(
             ledger = read_ledger(spark, ledger_path, now_epoch=now_epoch)
         except Exception:  # first writer bootstraps an empty ledger
             ledger = spark.createDataFrame([], LEDGER_SCHEMA)
-        survivors = pin(
-            ledger_gate(events, ledger, key_col, now_epoch), required=True
-        )
+        # Snapshot the survivors under the lock: a later lazy execution
+        # must not see the ledger this cycle appends to.
+        survivors = pin(ledger_gate(events, ledger, key_col, now_epoch))
         new_entries = ledger_new_entries(survivors, seen_at, key_col, ttl_days)
         append_ledger(new_entries, ledger_path)
     return survivors
@@ -792,10 +792,9 @@ def minhash_lsh_pairs(
     """
     # Materialize the narrow bucket table: the self-join below would otherwise
     # recompute the whole shingle→signature pipeline for BOTH sides. pin()
-    # (default: eager localCheckpoint) instead of persist(): blocks are
-    # released when the DF is GC'd, so a long session running many queries
-    # doesn't accumulate cached partitions; spark.graft.pin selects reliable
-    # checkpointing on preemptible clusters (operators/materialize.py).
+    # instead of persist(): blocks are released when the DF is GC'd, so a
+    # long session running many queries doesn't accumulate cached partitions
+    # (operators/materialize.py).
     buckets = pin(
         minhash_band_buckets(docs, text_col, id_col, num_hashes, bands, shingle_n)
     )

@@ -1,9 +1,11 @@
-"""Mid-plan materialization with an explicit reliability/speed dial.
+"""Mid-plan materialization with an explicit executor-loss posture.
 
 Several operators reuse an expensive intermediate (near-dup candidate pairs
 joined 2-3×, iterative label propagation whose plan would otherwise grow per
-iteration). They pin that intermediate through :func:`pin`, whose strategy is
-a session conf rather than a hardcoded ``localCheckpoint``:
+iteration), or must snapshot rows before the files beneath them change (the
+ledger gate under its lock). They pin that intermediate through
+:func:`pin`, whose strategy is a session conf rather than a hardcoded
+``localCheckpoint``:
 
 ``spark.graft.pin`` =
   ``localCheckpoint`` (default)
@@ -18,14 +20,10 @@ a session conf rather than a hardcoded ``localCheckpoint``:
       (HDFS/object store): survives executor loss — the 100 TB posture on
       preemptible fleets. Requires the checkpoint dir to be configured;
       costs one write+read of the intermediate.
-  ``none``
-      Pass through: keeps full lineage (always recomputable — maximum fault
-      tolerance) at the cost of recomputing the intermediate per reuse.
-      Straight-line operators tolerate this (a bounded number of extra
-      passes); ITERATIVE operators do not — without per-round truncation the
-      plan embeds the previous round several times over, so recompute grows
-      exponentially in round count. Such sites pass ``required=True`` and
-      keep materializing under ``none``.
+
+Both strategies materialize eagerly: every caller relies on it, either for
+lineage truncation or for a snapshot that later lazy executions must not
+recompute.
 
 This makes the executor-loss trade-off a deployment choice instead of a
 hidden property of the operator internals.
@@ -38,19 +36,10 @@ from pyspark.sql import DataFrame
 PIN_CONF = "spark.graft.pin"
 
 
-def pin(df: DataFrame, required: bool = False) -> DataFrame:
-    """Materialize ``df`` per the session's ``spark.graft.pin`` strategy.
-
-    ``required=True`` marks sites where materialization is a CORRECTNESS
-    contract, not an optimization (e.g. the ledger gate must snapshot its
-    survivors before the ledger lock releases, or a later lazy execution
-    would observe a mutated ledger): there ``none`` falls back to
-    ``localCheckpoint`` instead of passing through.
-    """
-    strategy = df.sparkSession.conf.get(PIN_CONF, "localCheckpoint")
-    if strategy == "none" and not required:
-        return df
-    if strategy == "checkpoint":
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` eagerly per the session's ``spark.graft.pin``
+    strategy (``checkpoint``, else ``localCheckpoint``)."""
+    if df.sparkSession.conf.get(PIN_CONF, "localCheckpoint") == "checkpoint":
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
 
@@ -71,8 +60,7 @@ def unpin(df: DataFrame) -> None:
     ladder rung previously OOMed on the third execution for the same
     reason). Reliable ``checkpoint`` frames keep their on-disk copy — for
     them this only drops the memory replica. No-op for frames that are not
-    pinned materializations (strategy ``none`` pass-throughs, derived
-    plans).
+    pinned materializations (derived plans).
     """
     try:
         lp = df._jdf.queryExecution().analyzed()

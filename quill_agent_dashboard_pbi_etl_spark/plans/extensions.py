@@ -882,10 +882,11 @@ WHERE g.keep
 )
 def q_corpus_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-star flagship: the WHOLE training-data prep pipeline as one
-    DataFrame graph — near-dup pairs (PPJoin Jaccard) → connected-components
-    duplicate clusters → canonical survivor per cluster → Gopher-style
-    quality gate → deterministic per-language stratified sample → output
-    shard assignment. The training-data analog of ingest_pipeline_full, and
+    DataFrame graph — near-dup pairs (exact 3-gram Jaccard ≥ 0.5 from the
+    inverted-index co-occurrence join, ``dedup.ngram_jaccard_pairs``) →
+    connected-components duplicate clusters → canonical survivor per
+    cluster → Gopher-style quality gate → deterministic per-language
+    stratified sample → output shard assignment. The training-data analog of ingest_pipeline_full, and
     every stage is the SAME operator its standalone query uses, so the full
     composition is verified end-to-end against one DuckDB oracle (recursive-
     CTE closure + ratio CTEs + md5 sample buckets). Plan shape: the pair

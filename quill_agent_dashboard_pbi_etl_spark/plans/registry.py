@@ -25,9 +25,11 @@ from ..operators import dedup, gates, rollups, similarity, skew, star
 from ..operators.materialize import pin
 from ..sources.readers import load_table
 from ..sources.webhook_mapping import (
+    LEDGER_TTL_DAYS,
     NORMALIZED_CTE,
     NOW_ANCHOR,
     NOW_ANCHOR_DATE,
+    NOW_EPOCH,
     WEBHOOKS_CTE,
     _KNOWN_TZ_SQL,
     events_as_webhooks,
@@ -205,23 +207,9 @@ def q_ledger_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a synthetic prior run: every event seen before 2024-01-10; entries seen
     before 2024-01-06 have expired at the 2024-01-20 anchor (14-day TTL) so
     they no longer block."""
-    import datetime as dt
-
     fact = normalized_fact(spark, sf_dir).withColumnRenamed("EventID", "dedup_key")
-    ledger = (
-        fact.filter(F.col("EventTime") < F.lit("2024-01-10 00:00:00").cast("timestamp"))
-        .select(
-            F.col("dedup_key").alias("pk"),
-            F.col("EventTime").alias("seenAt"),
-            (F.unix_timestamp("EventTime") + 14 * 86400).alias("expiresAt"),
-        )
-    )
-    now_epoch = int(
-        dt.datetime.strptime(NOW_ANCHOR, "%Y-%m-%d %H:%M:%S")
-        .replace(tzinfo=dt.timezone.utc)
-        .timestamp()
-    )
-    survivors = dedup.ledger_gate(fact, ledger, key_col="dedup_key", now_epoch=now_epoch)
+    ledger = _synthetic_ledger(fact, "dedup_key")
+    survivors = dedup.ledger_gate(fact, ledger, key_col="dedup_key", now_epoch=NOW_EPOCH)
     return survivors.select(
         F.col("dedup_key").alias("EventID"), "AgentID", "FactDateKey", "MetricID"
     )
@@ -253,25 +241,14 @@ def q_ledger_gate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     a full shuffle of the event batch — then only the duplicate+fpp sliver
     shuffles here. The normalize pass is pinned: it feeds the bitmap build,
     both bloom branches, and the synthetic-ledger side (4 consumers)."""
-    import datetime as dt
-
     fact = pin(
         normalized_fact(spark, sf_dir).withColumnRenamed("EventID", "dedup_key")
     )
-    ledger = fact.filter(
-        F.col("EventTime") < F.lit("2024-01-10 00:00:00").cast("timestamp")
-    ).select(
-        F.col("dedup_key").alias("pk"),
-        F.col("EventTime").alias("seenAt"),
-        (F.unix_timestamp("EventTime") + 14 * 86400).alias("expiresAt"),
-    )
-    now_epoch = int(
-        dt.datetime.strptime(NOW_ANCHOR, "%Y-%m-%d %H:%M:%S")
-        .replace(tzinfo=dt.timezone.utc)
-        .timestamp()
-    )
     survivors = dedup.ledger_gate_bloom(
-        fact, ledger, key_col="dedup_key", now_epoch=now_epoch
+        fact,
+        _synthetic_ledger(fact, "dedup_key"),
+        key_col="dedup_key",
+        now_epoch=NOW_EPOCH,
     )
     return survivors.select(
         F.col("dedup_key").alias("EventID"), "AgentID", "FactDateKey", "MetricID"
@@ -297,6 +274,19 @@ def q_roster_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = normalized_fact(spark, sf_dir)
     return gates.roster_gate(fact, _synthetic_roster(spark, sf_dir)).select(
         "EventID", "AgentID", "FactDateKey", "MetricID"
+    )
+
+
+def _synthetic_ledger(fact: DataFrame, key_col: str) -> DataFrame:
+    """The ledger of a synthetic prior run: every event seen before
+    2024-01-10, each entry live for ``LEDGER_TTL_DAYS`` from its event time
+    (the oracles' ``_LEDGER_CTE``)."""
+    return fact.filter(
+        F.col("EventTime") < F.lit("2024-01-10 00:00:00").cast("timestamp")
+    ).select(
+        F.col(key_col).alias("pk"),
+        F.col("EventTime").alias("seenAt"),
+        (F.unix_timestamp("EventTime") + LEDGER_TTL_DAYS * 86400).alias("expiresAt"),
     )
 
 
@@ -408,28 +398,15 @@ def q_ledger_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K4 ledger append side: the (pk, seenAt, expiresAt) rows written for
     events that passed the gate — the conditional-write marking of
     ledger.repo.ts:5-35 as a set operation."""
-    import datetime as dt
-
     fact = normalized_fact(spark, sf_dir).withColumnRenamed("EventID", "dedup_key")
-    ledger = fact.filter(
-        F.col("EventTime") < F.lit("2024-01-10 00:00:00").cast("timestamp")
-    ).select(
-        F.col("dedup_key").alias("pk"),
-        F.col("EventTime").alias("seenAt"),
-        (F.unix_timestamp("EventTime") + 14 * 86400).alias("expiresAt"),
-    )
-    now_epoch = int(
-        dt.datetime.strptime(NOW_ANCHOR, "%Y-%m-%d %H:%M:%S")
-        .replace(tzinfo=dt.timezone.utc)
-        .timestamp()
-    )
-    survivors = dedup.ledger_gate(fact, ledger, key_col="dedup_key", now_epoch=now_epoch)
+    ledger = _synthetic_ledger(fact, "dedup_key")
+    survivors = dedup.ledger_gate(fact, ledger, key_col="dedup_key", now_epoch=NOW_EPOCH)
     # keep-first arrival per key, then derive the ledger row
     entries = survivors.groupBy("dedup_key").agg(F.min("EventTime").alias("EventTime"))
     return entries.select(
         F.col("dedup_key").alias("pk"),
         F.date_format("EventTime", "yyyy-MM-dd HH:mm:ss").alias("seenAt"),
-        (F.unix_timestamp("EventTime") + 14 * 86400).alias("expiresAt"),
+        (F.unix_timestamp("EventTime") + LEDGER_TTL_DAYS * 86400).alias("expiresAt"),
     )
 
 
@@ -472,31 +449,17 @@ def q_ingest_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     A4 goal join. Catalyst sees the whole chain: filters reach the scan, the
     dims broadcast, and the only wide shuffles are the dedup window and the
     final rollup."""
-    import datetime as dt
-
     # The fact feeds three branches (dedup, the synthetic ledger, the
     # synthetic roster); materialize the one normalize pass instead of paying
-    # the expression-heavy adapter chain 3×. pin() (default eager
-    # localCheckpoint): blocks release on GC instead of living for the whole
-    # session; spark.graft.pin selects reliable checkpointing on preemptible
-    # clusters. In production the ledger/roster are separate small tables and
-    # no cache is needed.
+    # the expression-heavy adapter chain 3×. pin() releases its blocks on GC
+    # instead of holding them for the whole session. In production the
+    # ledger/roster are separate small tables and no cache is needed.
     fact = pin(normalized_fact(spark, sf_dir))
     kept = dedup.keep_first(fact, ["EventID"], [F.col("EventTime"), F.col("Notes")])
-    ledger = fact.filter(
-        F.col("EventTime") < F.lit("2024-01-10 00:00:00").cast("timestamp")
-    ).select(
-        F.col("EventID").alias("pk"),
-        F.col("EventTime").alias("seenAt"),
-        (F.unix_timestamp("EventTime") + 14 * 86400).alias("expiresAt"),
-    )
-    now_epoch = int(
-        dt.datetime.strptime(NOW_ANCHOR, "%Y-%m-%d %H:%M:%S")
-        .replace(tzinfo=dt.timezone.utc)
-        .timestamp()
-    )
     gated = dedup.ledger_gate(
-        kept.withColumnRenamed("EventID", "dedup_key"), ledger, now_epoch=now_epoch
+        kept.withColumnRenamed("EventID", "dedup_key"),
+        _synthetic_ledger(fact, "EventID"),
+        now_epoch=NOW_EPOCH,
     ).withColumnRenamed("dedup_key", "EventID")
     roster = (
         fact.select("AgentID")

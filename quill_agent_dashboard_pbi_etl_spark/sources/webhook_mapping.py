@@ -29,6 +29,8 @@ where k = CAST(props->'$.k' AS BIGINT).
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,6 +39,11 @@ from pyspark.sql import functions as F
 # so every relative filter is deterministic across engines and run dates.
 NOW_ANCHOR = "2024-01-20 12:00:00"
 NOW_ANCHOR_DATE = "2024-01-20"
+NOW_EPOCH = int(  # NOW_ANCHOR as UTC epoch seconds: the ledger TTL clock
+    dt.datetime.strptime(NOW_ANCHOR, "%Y-%m-%d %H:%M:%S")
+    .replace(tzinfo=dt.timezone.utc)
+    .timestamp()
+)
 LEDGER_TTL_DAYS = 14  # DYNAMO_TTL_DAYS default (ledger.repo.ts:10-12)
 
 TZ_BY_MOD = ["UTC", "America/New_York", "America/Los_Angeles", "Europe/Berlin", "Asia/Tokyo"]

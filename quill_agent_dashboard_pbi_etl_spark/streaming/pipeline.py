@@ -23,6 +23,7 @@ graph compiles once and runs under Structured Streaming:
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -46,6 +47,24 @@ def read_envelope_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 64)
         .json(landing_dir)
     )
+
+
+def _start_foreach_batch(
+    stream: DataFrame,
+    body: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    trigger_seconds: int,
+    available_now: bool,
+) -> StreamingQuery:
+    """Start ``body`` as the stream's foreachBatch sink. ``available_now=True``
+    drains the backlog then stops (tests, backfills); otherwise it triggers
+    every ``trigger_seconds``."""
+    writer = stream.writeStream.foreachBatch(body).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=f"{trigger_seconds} seconds").start()
 
 
 def envelopes_to_webhook_shape(envelopes: DataFrame) -> DataFrame:
@@ -114,14 +133,9 @@ def start_fact_sink(
             .parquet(output_dir)
         )
 
-    writer = fact_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        fact_stream, write_batch, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def start_ledger_gated_fact_sink(
@@ -223,17 +237,9 @@ def start_ledger_gated_fact_sink(
         # sf100 single-batch drain an unpinned body that consumed it three
         # times re-parsed ~30 GB of JSONL per consumer: 744 s vs 330 s).
         # The pin is micro-batch-sized; blocks are released by the
-        # ContextCleaner when the batch's DataFrames go out of scope. This
-        # is a PERF pin (correctness rides on the `claims` pin below), so
-        # it honors the session's `spark.graft.pin=none` escape hatch — at
-        # tiny SLA-paced triggers the eager checkpoint job is measurable
-        # overhead (~2 s/batch at 25k-event batches) while the lineage it
-        # saves is pennies.
+        # ContextCleaner when the batch's DataFrames go out of scope.
         unique = pin(
-            keep_first(
-                batch_df, ["EventID"], [F.col("EventTime"), F.col("Notes")]
-            ),
-            required=False,
+            keep_first(batch_df, ["EventID"], [F.col("EventTime"), F.col("Notes")])
         )
         with LedgerLock(ledger_path):
             try:
@@ -280,8 +286,7 @@ def start_ledger_gated_fact_sink(
                     F.lit(now + ttl_days * 86400).cast("long").alias("expiresAt"),
                     F.lit(tag).alias("writer_id"),
                 )
-                .observe(obs, F.count(F.lit(1)).alias("n")),
-                required=True,
+                .observe(obs, F.count(F.lit(1)).alias("n"))
             )
             # An all-duplicate batch claims nothing — skip the append so a
             # long-running stream doesn't shed one empty parquet file set
@@ -342,14 +347,9 @@ def start_ledger_gated_fact_sink(
             .parquet(f"{output_dir}/gen={gen}/batch_id={batch_id}")
         )
 
-    writer = fact_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        fact_stream, write_batch, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 # --------------------------------------------------------------------------- #
@@ -357,6 +357,16 @@ def start_ledger_gated_fact_sink(
 # --------------------------------------------------------------------------- #
 
 DOC_JSON_SCHEMA = "doc_id long, text string, lang string, source string, event_time timestamp"
+
+
+def read_document_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
+    """Documents from a JSON landing directory, one ``DOC_JSON_SCHEMA`` row
+    per line."""
+    return (
+        spark.readStream.schema(DOC_JSON_SCHEMA)
+        .option("maxFilesPerTrigger", 64)
+        .json(landing_dir)
+    )
 
 
 def streaming_corpus_gate(
@@ -382,11 +392,7 @@ def streaming_corpus_gate(
     from ..functions import text as T
     from ..operators.dedup import normalize_text
 
-    docs = (
-        spark.readStream.schema(DOC_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .json(landing_dir)
-    )
+    docs = read_document_stream(spark, landing_dir)
     gated = docs.filter(
         (T.token_count(F.col("text")) >= min_tokens)
         & (T.punct_ratio(F.col("text")) <= max_punct_ratio)
@@ -423,11 +429,7 @@ def streaming_quality_drift(
     """
     from ..functions import text as T
 
-    docs = (
-        spark.readStream.schema(DOC_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .json(landing_dir)
-    )
+    docs = read_document_stream(spark, landing_dir)
     keep = T.quality_keep_prepped().cast("long")
     return (
         T.with_text_prep(docs)
@@ -505,11 +507,7 @@ def start_streaming_near_dup_gate(
     from ..functions import text as T
     from ..operators.dedup import minhash_band_buckets
 
-    docs = (
-        spark.readStream.schema(DOC_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .json(landing_dir)
-    )
+    docs = read_document_stream(spark, landing_dir)
     gated_stream = docs.filter(
         (T.token_count(F.col("text")) >= min_tokens)
         & (T.punct_ratio(F.col("text")) <= max_punct_ratio)
@@ -563,14 +561,9 @@ def start_streaming_near_dup_gate(
                 buckets.unpersist()
             batch_df.unpersist()
 
-    writer = gated_stream.writeStream.foreachBatch(gate_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        gated_stream, gate_batch, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 _GENERATION_MARKER = "__spark_graft_generation"
@@ -786,10 +779,8 @@ def reclaim_orphaned_claims(
         return spark.createDataFrame([], ledger_schema)
 
     # Materialize the orphan rows BEFORE any rewrite touches the files
-    # beneath the plan (required pin: correctness, not perf).
-    orphans = pin(
-        ledger.filter(F.col("writer_id").isin(orphan_tags)), required=True
-    )
+    # beneath the plan.
+    orphans = pin(ledger.filter(F.col("writer_id").isin(orphan_tags)))
 
     def _gc_partial_output(tags) -> None:
         # GC the orphans' uncommitted partial output (no _SUCCESS by
@@ -816,10 +807,7 @@ def reclaim_orphaned_claims(
             F.col("pk").alias("EventID"), F.col("writer_id").alias("reclaim_tag")
         )
         matched = pin(
-            to_physical_rows(events)
-            .dropDuplicates(["EventID"])
-            .join(keys, "EventID"),
-            required=True,
+            to_physical_rows(events).dropDuplicates(["EventID"]).join(keys, "EventID")
         )
         # Coverage gate: an orphan pk the re-supplied source did NOT carry
         # must not be retagged — retagging with zero quarantine rows would
@@ -834,10 +822,7 @@ def reclaim_orphaned_claims(
             F.col("EventID").alias("pk"),
             F.col("reclaim_tag").alias("writer_id"),
         ).distinct()
-        uncovered = pin(
-            orphans.join(covered, ["pk", "writer_id"], "left_anti"),
-            required=True,
-        )
+        uncovered = pin(orphans.join(covered, ["pk", "writer_id"], "left_anti"))
         n_uncovered = uncovered.count()
         if n_uncovered:
             sample = [r.pk for r in uncovered.select("pk").limit(5).collect()]
@@ -894,7 +879,7 @@ def reclaim_orphaned_claims(
                 ["EventID", "reclaim_tag"],
                 "left_anti",
             )
-            to_write = pin(matched.unionByName(carried), required=True)
+            to_write = pin(matched.unionByName(carried))
         (
             to_write.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -930,10 +915,7 @@ def reclaim_orphaned_claims(
     rewrite_ledger_atomic(spark, ledger_path, _transform, schema=ledger_schema)
 
     if mode == "quarantine":
-        return pin(
-            orphans.join(covered, ["pk", "writer_id"], "left_semi"),
-            required=True,
-        )
+        return pin(orphans.join(covered, ["pk", "writer_id"], "left_semi"))
     return orphans
 
 
@@ -994,14 +976,53 @@ def _commit_state_version(
         storage.delete_tree(f"{root}/v={old}")
 
 
+def _start_snapshot_fold_sink(
+    stream: DataFrame,
+    state_path: str,
+    schema: str,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    checkpoint_dir: str,
+    trigger_seconds: int,
+    available_now: bool,
+    storage: StateStorage | None,
+) -> StreamingQuery:
+    """foreachBatch sink that folds each micro-batch into the latest
+    committed snapshot under ``state_path``: ``merge(batch_df, prev)`` is
+    committed as the next version (:func:`_commit_state_version`).
+
+    Batch tags bind to the INCARNATION identity (uuid marker inside the
+    checkpoint dir): a same-incarnation retry of batch N carries the same
+    tag and is a no-op, while batch N of a rebuilt checkpoint — even at the
+    same path — gets a fresh generation and folds."""
+    gen = _generation_id(checkpoint_dir, storage)
+
+    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        batch_tag = f"{gen}-b{batch_id}"
+        prev, ver, tag = _read_latest_state(
+            batch_df.sparkSession, state_path, schema, storage
+        )
+        if tag == batch_tag:
+            return  # retry of an already-committed batch — idempotent no-op
+        _commit_state_version(
+            merge(batch_df, prev), state_path, ver + 1, batch_tag, storage=storage
+        )
+
+    return _start_foreach_batch(
+        stream, fold_batch, checkpoint_dir, trigger_seconds, available_now
+    )
+
+
+_CMS_SCHEMA = "seed int, bucket bigint, cnt bigint"
+
+
 def read_cms_counters(
     spark: SparkSession, counters_path: str, storage: StateStorage | None = None
 ) -> DataFrame:
     """Latest committed CMS counter snapshot (pair with
     ``sketches.cms_estimate``)."""
-    df, _, _ = _read_latest_state(
-        spark, counters_path, "seed int, bucket bigint, cnt bigint", storage
-    )
+    df, _, _ = _read_latest_state(spark, counters_path, _CMS_SCHEMA, storage)
     return df
 
 
@@ -1038,40 +1059,18 @@ def start_cms_counter_sink(
     """
     from ..operators.sketches import cms_counters
 
-    counter_schema = "seed int, bucket bigint, cnt bigint"
-    # Batch tags bind to the INCARNATION identity (uuid marker inside the
-    # checkpoint dir): a same-incarnation retry of batch N carries the same
-    # tag (→ no-op), while batch N of a rebuilt checkpoint — even at the
-    # same path — gets a fresh generation and folds.
-    gen = _generation_id(checkpoint_dir, storage)
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        prev, ver, tag = _read_latest_state(
-            spark, counters_path, counter_schema, storage
-        )
-        if tag == f"{gen}-b{batch_id}":
-            return  # retry of an already-committed batch — idempotent no-op
-        merged = (
+    def merge(batch_df: DataFrame, prev: DataFrame) -> DataFrame:
+        return (
             cms_counters(batch_df, key_col, depth, width)
             .unionByName(prev)
             .groupBy("seed", "bucket")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        _commit_state_version(
-            merged, counters_path, ver + 1, f"{gen}-b{batch_id}", storage=storage
-        )
 
-    writer = keys_stream.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_snapshot_fold_sink(
+        keys_stream, counters_path, _CMS_SCHEMA, merge,
+        checkpoint_dir, trigger_seconds, available_now, storage,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def start_hll_distinct_sink(
@@ -1097,35 +1096,20 @@ def start_hll_distinct_sink(
     property the CMS counter sink does NOT have). State persists as the same
     crash-safe versioned snapshots as the CMS sink.
     """
-    schema = f"{group_col} string, sketch binary"
-    gen = _generation_id(checkpoint_dir, storage)  # see the CMS sink's note
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        prev, ver, tag = _read_latest_state(spark, sketch_path, schema, storage)
-        if tag == f"{gen}-b{batch_id}":
-            return  # retry of an already-committed batch — idempotent no-op
-        merged = (
+    def merge(batch_df: DataFrame, prev: DataFrame) -> DataFrame:
+        return (
             batch_df.groupBy(group_col)
             .agg(F.hll_sketch_agg(value_col).alias("sketch"))
             .unionByName(prev)
             .groupBy(group_col)
             .agg(F.hll_union_agg("sketch").alias("sketch"))
         )
-        _commit_state_version(
-            merged, sketch_path, ver + 1, f"{gen}-b{batch_id}", storage=storage
-        )
 
-    writer = keyed_stream.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_snapshot_fold_sink(
+        keyed_stream, sketch_path, f"{group_col} string, sketch binary", merge,
+        checkpoint_dir, trigger_seconds, available_now, storage,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def hll_estimates(

@@ -1,4 +1,4 @@
-"""Materialization strategy dial (operators/materialize.pin)."""
+"""Materialization strategies (operators/materialize.pin)."""
 
 from __future__ import annotations
 
@@ -15,18 +15,6 @@ def test_pin_default_is_local_checkpoint(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Range" not in plan
     assert "Scan ExistingRDD" in plan or "LogicalRDD" in plan
-
-
-def test_pin_none_passes_through_unless_required(spark):
-    df = spark.range(10)
-    spark.conf.set(PIN_CONF, "none")
-    try:
-        assert pin(df) is df  # pure lineage kept — recompute-safe
-        required = pin(df, required=True)  # correctness sites still pin
-        assert required is not df
-        assert required.count() == 10
-    finally:
-        spark.conf.unset(PIN_CONF)
 
 
 def test_pin_reliable_checkpoint(spark, tmp_path):

@@ -23,6 +23,9 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from quill_agent_dashboard_pbi_etl_spark.operators.materialize import (
+    release_dead_blocks,
+)
 from quill_agent_dashboard_pbi_etl_spark.plans import extensions  # noqa: F401
 from quill_agent_dashboard_pbi_etl_spark.plans.registry import QUERIES
 from quill_agent_dashboard_pbi_etl_spark.session import get_spark
@@ -127,25 +130,6 @@ RUNGS = [
 ]
 
 
-def _release_blocks(spark) -> None:
-    """Drop cached tables AND orphaned localCheckpoint blocks between runs.
-
-    ``pin()`` intermediates are GC-released by design: their RDD blocks stay
-    in the block manager until the Python DataFrame is collected AND the JVM
-    notices. Back-to-back executions of a checkpoint-heavy query at the sf10
-    rung stack three generations of dead blocks in one heap — measured
-    failure mode: the third execution of dedup_ngram_jaccard@sf10 dies in
-    BroadcastExchange build ("Not enough memory to build and broadcast")
-    inside an 8 GiB JVM even though each single execution fits comfortably.
-    An explicit gc() on both sides makes the measured runs independent —
-    exactly what distinct executors would be."""
-    import gc
-
-    spark.catalog.clearCache()
-    gc.collect()  # release Python-side DataFrame refs → JVM refs
-    spark.sparkContext._jvm.System.gc()  # reclaim the dropped RDD blocks
-
-
 def main() -> None:
     # args: [ladder_root] [--only name1,name2] [--max-rung sfX]
     # [--rungs sfX,sfY] — --only re-times a subset and merges into the
@@ -205,10 +189,10 @@ def main() -> None:
                     t0 = time.perf_counter()
                     fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
                     best = min(best, time.perf_counter() - t0)
-                    _release_blocks(spark)
+                    release_dead_blocks(spark)
                 timings[q][rung] = round(best, 3)
                 rows[q][rung] = fn(spark, sf_dir).count()
-                _release_blocks(spark)
+                release_dead_blocks(spark)
             except Exception as exc:
                 timings[q][rung] = -1.0
                 rows[q][rung] = -1

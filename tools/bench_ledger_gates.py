@@ -25,7 +25,6 @@ Usage: python tools/bench_ledger_gates.py [ladder_root] [rung ...]
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import math
 import os
@@ -40,7 +39,8 @@ from pyspark.sql import functions as F
 from quill_agent_dashboard_pbi_etl_spark.operators import dedup
 from quill_agent_dashboard_pbi_etl_spark.operators.materialize import pin
 from quill_agent_dashboard_pbi_etl_spark.plans.registry import (
-    NOW_ANCHOR,
+    NOW_EPOCH,
+    _synthetic_ledger,
     normalized_fact,
 )
 from quill_agent_dashboard_pbi_etl_spark.session import get_spark
@@ -65,11 +65,6 @@ def main() -> None:
     argv = sys.argv[1:]
     ladder_root = argv[0] if argv else os.path.join(ROOT, "scale_ladder")
     wanted = argv[1:] or list(RUNGS)
-    now_epoch = int(
-        dt.datetime.strptime(NOW_ANCHOR, "%Y-%m-%d %H:%M:%S")
-        .replace(tzinfo=dt.timezone.utc)
-        .timestamp()
-    )
     spark = get_spark(app_name="bench-ledger-gates")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -79,35 +74,26 @@ def main() -> None:
         if not os.path.isdir(sf_dir):
             continue
         fact = pin(
-            normalized_fact(spark, sf_dir).withColumnRenamed(
-                "EventID", "dedup_key"
-            ),
-            required=True,
+            normalized_fact(spark, sf_dir).withColumnRenamed("EventID", "dedup_key")
         )
-        ledger = fact.filter(
-            F.col("EventTime") < F.lit("2024-01-10 00:00:00").cast("timestamp")
-        ).select(
-            F.col("dedup_key").alias("pk"),
-            F.col("EventTime").alias("seenAt"),
-            (F.unix_timestamp("EventTime") + 14 * 86400).alias("expiresAt"),
-        )
-        ledger = pin(ledger, required=True)  # a real prior-run table, not lineage
+        # a real prior-run table, not lineage
+        ledger = pin(_synthetic_ledger(fact, "dedup_key"))
 
         res: dict[str, float | int] = {"events": fact.count()}
         t0 = time.perf_counter()
         exact = dedup.ledger_gate(
-            fact, ledger, key_col="dedup_key", now_epoch=now_epoch
+            fact, ledger, key_col="dedup_key", now_epoch=NOW_EPOCH
         )
         _noop(exact)
         res["exact_sec"] = round(time.perf_counter() - t0, 3)
 
         t0 = time.perf_counter()
         live_n = (
-            ledger.filter(F.col("expiresAt") >= F.lit(now_epoch)).count()
+            ledger.filter(F.col("expiresAt") >= F.lit(NOW_EPOCH)).count()
         )  # charged to the bloom side: sizing needs the cardinality
         num_bits = max(1 << 16, int(1.44 * live_n * math.log2(1 / 0.01)))
         bloom = dedup.ledger_gate_bloom(
-            fact, ledger, key_col="dedup_key", now_epoch=now_epoch,
+            fact, ledger, key_col="dedup_key", now_epoch=NOW_EPOCH,
             num_bits=num_bits,
         )
         _noop(bloom)
@@ -127,7 +113,7 @@ def main() -> None:
         # nor network on one box — the cut matters on network-bound
         # clusters, so record the volume itself.
         live_for_maybes = ledger.filter(
-            F.col("expiresAt") >= F.lit(now_epoch)
+            F.col("expiresAt") >= F.lit(NOW_EPOCH)
         ).select(F.col("pk").alias("dedup_key"))
         flagged = dedup.bloom_maybe_flag_bucketed(
             fact,
@@ -154,14 +140,14 @@ def main() -> None:
             t0 = time.perf_counter()
             _noop(
                 dedup.ledger_gate(
-                    fact, ledger, key_col="dedup_key", now_epoch=now_epoch
+                    fact, ledger, key_col="dedup_key", now_epoch=NOW_EPOCH
                 )
             )
             res["exact_sec_nobcast"] = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
             _noop(
                 dedup.ledger_gate_bloom(
-                    fact, ledger, key_col="dedup_key", now_epoch=now_epoch,
+                    fact, ledger, key_col="dedup_key", now_epoch=NOW_EPOCH,
                     num_bits=num_bits,
                 )
             )

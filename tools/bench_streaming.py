@@ -131,11 +131,10 @@ def run_ledger_mode(
     costs from per-event costs. Results land under "<rung>_single_batch".
 
     Results merge into SCALE_LADDER.json["streaming_ledger_gate"]."""
-    import datetime as dt
-
     from quill_agent_dashboard_pbi_etl_spark.operators import dedup
     from quill_agent_dashboard_pbi_etl_spark.plans.registry import (
-        NOW_ANCHOR,
+        NOW_EPOCH,
+        _synthetic_ledger,
         normalized_fact,
     )
     from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
@@ -145,11 +144,6 @@ def run_ledger_mode(
 
     spark = get_spark(app_name="bench-streaming-ledger")
     spark.sparkContext.setLogLevel("ERROR")
-    now_epoch = int(
-        dt.datetime.strptime(NOW_ANCHOR, "%Y-%m-%d %H:%M:%S")
-        .replace(tzinfo=dt.timezone.utc)
-        .timestamp()
-    )
 
     out: dict[str, dict] = {}
     for rung in wanted:
@@ -164,14 +158,8 @@ def run_ledger_mode(
 
             # Seed ledger + batch-side expected survivor count.
             fact_b = normalized_fact(spark, sf_dir)
-            seed = fact_b.filter(
-                F.col("EventTime")
-                < F.lit("2024-01-10 00:00:00").cast("timestamp")
-            ).select(
-                F.col("EventID").alias("pk"),
-                F.col("EventTime").alias("seenAt"),
-                (F.unix_timestamp("EventTime") + 14 * 86400).alias("expiresAt"),
-                F.lit("seed").alias("writer_id"),
+            seed = _synthetic_ledger(fact_b, "EventID").withColumn(
+                "writer_id", F.lit("seed")
             )
             seed_path = os.path.join(work, "ledger_seed")
             seed.write.mode("overwrite").parquet(seed_path)
@@ -181,7 +169,7 @@ def run_ledger_mode(
                 ),
                 spark.read.parquet(seed_path),
                 key_col="dedup_key",
-                now_epoch=now_epoch,
+                now_epoch=NOW_EPOCH,
             ).count()
 
             cell: dict = {"events_in": n_events, "expected_survivors": expected}
@@ -198,7 +186,7 @@ def run_ledger_mode(
                 sink,
                 os.path.join(work, "ckpt"),
                 available_now=True,
-                now_epoch=now_epoch,
+                now_epoch=NOW_EPOCH,
             )
             q.awaitTermination(3600)
             wall = time.perf_counter() - t0
