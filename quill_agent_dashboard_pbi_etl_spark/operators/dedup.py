@@ -493,21 +493,20 @@ def rewrite_ledger_atomic(spark, ledger_path: str, transform, schema=None):
     dir, then publish it with a two-rename swap. A crash at ANY point is
     recoverable by the next run's :func:`finish_interrupted_ledger_swap`
     — the live path never holds a partially-written ledger the way a
-    delete-then-overwrite would. POSIX paths only (the rename swap); on
-    object stores use a Delta/Iceberg ledger where DELETE/MERGE are
-    transactional. Returns the rewritten DataFrame (reading the new
-    files). Used by TTL compaction (``sinks.compact_ledger``) and the
-    streaming orphan-reclaim job.
+    delete-then-overwrite would. POSIX paths only (the rename swap):
+    object-store ledger paths raise ``NotImplementedError``. Returns the
+    rewritten DataFrame (reading the new files). Used by TTL compaction
+    (``sinks.compact_ledger``) and the streaming orphan-reclaim job.
 
     LAYOUT-PRESERVING: on an expiry-partitioned ledger
     (``sinks.append_ledger(partition_by_expiry=True)``) the scratch dir is
     written with the same ``expiryDay=`` partitioning, so a rewrite (TTL
-    compaction on the flat path, orphan release/retag) never silently
+    compaction on the flat path, orphan release) never silently
     flattens the production layout. ``transform`` stays layout-agnostic:
     the partition column is dropped before the transform runs and
     RE-DERIVED from ``expiresAt`` afterwards — valid because ``expiryDay``
     is a pure UTC function of ``expiresAt`` (``sinks.expiry_day_col``), so
-    any transform that filters/retags rows (or even rewrites
+    any transform that filters rows (or even rewrites
     ``expiresAt``) yields the correct partition for every surviving row by
     construction."""
     import os
@@ -521,9 +520,8 @@ def rewrite_ledger_atomic(spark, ledger_path: str, transform, schema=None):
 
     if "://" in ledger_path:
         raise NotImplementedError(
-            "rewrite_ledger_atomic publishes via a POSIX rename swap; for "
-            "object-store ledgers use a Delta/Iceberg ledger table where "
-            "row-level DELETE/MERGE are transactional"
+            "rewrite_ledger_atomic publishes via a POSIX rename swap; "
+            "object-store ledger paths are not supported"
         )
     with LedgerLock(ledger_path):
         finish_interrupted_ledger_swap(ledger_path)

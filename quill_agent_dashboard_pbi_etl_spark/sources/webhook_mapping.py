@@ -200,7 +200,7 @@ webhooks AS (
 # generated from the SAME source as the engine (adapter.KNOWN_TIMEZONES =
 # zoneinfo.available_timezones()) so both sides accept every valid IANA zone
 # and fall back to UTC for anything else, byte-identically.
-from quill_agent_dashboard_pbi_etl_spark.functions.adapter import (
+from ..functions.adapter import (
     KNOWN_TIMEZONES,
     timestamp_family_sql,
 )

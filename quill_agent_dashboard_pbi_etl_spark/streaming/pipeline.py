@@ -209,10 +209,10 @@ def start_ledger_gated_fact_sink(
     checkpoint is rebuilt while such a batch is outstanding, its claims are
     orphaned (live in the ledger under a dead tag) and those events land in
     no output. :func:`reclaim_orphaned_claims` closes that window after the
-    fact — it finds dead-tag claims whose output never committed and either
-    releases them (the next replay re-admits the events) or re-emits the
-    events to a quarantine output; operationally, still prefer draining the
-    stream before deleting a checkpoint. Output layout is
+    fact — it finds dead-tag claims whose output never committed and
+    deletes them, so the next replay re-admits the events exactly once;
+    operationally, still prefer draining the stream before deleting a
+    checkpoint. Output layout is
     ``gen=<id>/batch_id=<n>/FactDateKey=<d>/``; readers of ``output_dir``
     see ``gen``/``batch_id`` as partition columns — do not mix
     differently-laid-out data in one output root.
@@ -608,10 +608,10 @@ def _generation_id(checkpoint_dir: str, storage: StateStorage | None = None) -> 
 # --------------------------------------------------------------------------- #
 
 # The ledger-gated sink's claim tags: <12-hex generation id>-b<batch id>.
-# Rows whose writer_id does not match (batch ledger_update rows, rows
-# already retagged "reclaimed:<tag>") are never reclaim candidates.
+# Rows whose writer_id does not match are never reclaim candidates: batch
+# ledger_update rows, and the "reclaimed:<tag>" rows an older ledger may
+# still hold (they stay protective claims until their TTL expires).
 _SINK_TAG_RE = r"^([0-9a-f]{12})-b(\d+)$"
-_RECLAIMED_PREFIX = "reclaimed:"
 
 
 def _live_generations(
@@ -636,11 +636,7 @@ def reclaim_orphaned_claims(
     ledger_path: str,
     output_dir: str,
     live_checkpoint_dirs=(),
-    mode: str = "release",
-    events: DataFrame | None = None,
-    quarantine_dir: str | None = None,
     storage: StateStorage | None = None,
-    allow_partial: bool = False,
 ) -> DataFrame:
     """Maintenance job closing the ledger-gated sink's one loss window
     (:func:`start_ledger_gated_fact_sink` crash-safety docstring): a batch
@@ -656,66 +652,32 @@ def reclaim_orphaned_claims(
     has no committed output: Spark's commit protocol stamps ``_SUCCESS``
     in ``output_dir/gen=<g>/batch_id=<n>`` only after the batch's
     overwrite completes, so its absence is exactly "died before writing".
-    Uncommitted partial output files under an orphaned tag's directory are
-    deleted (they are protocol garbage a raw parquet reader would
-    otherwise surface) — immediately in release mode, but in quarantine
-    mode only AFTER the coverage gate passes: on a shortfall raise those
-    partials are the last on-disk trace of the uncovered events, so a
-    raise deletes nothing.
 
-    ``mode="release"`` deletes the orphaned claim rows: the next replay of
-    the source through the (new-generation) stream re-admits those events
-    exactly once — the natural recovery when the source is replayable.
-    ``mode="quarantine"`` re-emits the events instead: ``events`` (the
-    replayable source re-run through the batch ingest graph — normalized
-    facts carrying at least the physical row columns, unique per EventID)
-    is joined to the orphaned keys and written to
-    ``quarantine_dir/reclaim_tag=<tag>/`` for operator triage, then the
-    claims are RETAGGED ``reclaimed:<tag>`` — still protective (the gate
-    keeps suppressing those keys, so nothing double-emits) but no longer
-    orphan candidates. Both modes are idempotent: re-running after a crash
-    at any point re-derives the same orphan set and the quarantine write
-    is a per-tag dynamic-partition overwrite that carries forward any
-    previously-quarantined rows of the re-identified tags, so a reclaimed
-    event lands in quarantine exactly once.
+    The job deletes the orphaned claim rows, so the next replay of the
+    source through the (new-generation) stream re-admits those events
+    exactly once. Uncommitted partial output files under an orphaned
+    tag's directory are deleted first (they are protocol garbage a raw
+    parquet reader would otherwise surface). Idempotent: a rerun after a
+    crash at any point re-derives the same orphan set, and a rerun after
+    success finds nothing.
 
-    Quarantine mode VERIFIES coverage before it retags: every orphaned pk
-    must be present in ``events`` (the contract says the replayable source
-    re-supplies them — an operator re-running with a truncated source
-    would otherwise retag claims whose events landed NOWHERE, turning the
-    loss invisible). On a shortfall the default is to raise ``ValueError``
-    with the uncovered count and sample keys, leaving the ledger, the
-    quarantine dir AND the orphans' partial output untouched so a later
-    run with a fuller source can still reclaim. Under
-    ``allow_partial=True`` only the COVERED claim rows are retagged and
-    quarantined; uncovered claims keep their dead tag and remain orphan
-    candidates (the shortfall is logged). A tag covered incrementally
-    across such runs accumulates: rows quarantined by an earlier run that
-    the current source does not re-supply are carried forward through the
-    partition overwrite (new rows win per EventID), so the fuller-source
-    rerun this contract advertises extends the triage records instead of
-    clobbering them.
-
-    The ledger rewrite (a filter/retag needs row deletion parquet cannot
-    do in place) goes through ``operators.dedup.rewrite_ledger_atomic`` —
-    a full scan → scratch dir → two-rename swap under the ``LedgerLock``,
-    with every crash point recoverable by
-    ``finish_interrupted_ledger_swap`` at the next run — never
-    delete-then-rewrite at the live path. Claims appended by
-    a concurrent (locked) sink between orphan identification and the
+    The ledger rewrite (row deletion parquet cannot do in place) goes
+    through ``operators.dedup.rewrite_ledger_atomic`` — a full scan →
+    scratch dir → two-rename swap under the ``LedgerLock``, with every
+    crash point recoverable by ``finish_interrupted_ledger_swap`` at the
+    next run — never delete-then-rewrite at the live path. Claims appended
+    by a concurrent (locked) sink between orphan identification and the
     rewrite are preserved: the rewrite re-reads the ledger under the lock
-    and only drops/retags the identified tags, which no live writer can
-    ever re-issue (generation ids are unique per incarnation). Run it with
-    the FULL list of live checkpoint dirs for every pipeline sharing the
+    and only drops the identified tags, which no live writer can ever
+    re-issue (generation ids are unique per incarnation). Run it with the
+    FULL list of live checkpoint dirs for every pipeline sharing the
     ledger — omitting one makes its in-flight batch look orphaned. POSIX
     ledger paths only (the rename swap).
 
-    Returns the claim rows actually reclaimed (pk, seenAt, expiresAt,
-    writer_id), materialized before the rewrite — all identified orphans
-    in release mode / full-coverage quarantine, only the covered rows
-    under ``allow_partial=True``. Driver-side state is the distinct dead
-    TAG list (generations × batches — operations-scale, never data-scale;
-    the claims themselves stay distributed).
+    Returns the claim rows reclaimed (pk, seenAt, expiresAt, writer_id),
+    materialized before the rewrite. Driver-side state is the distinct
+    dead TAG list (generations × batches — operations-scale, never
+    data-scale; the claims themselves stay distributed).
     """
     from ..operators.dedup import (
         LedgerLock,
@@ -724,10 +686,6 @@ def reclaim_orphaned_claims(
     )
     from ..operators.materialize import pin
 
-    if mode not in ("release", "quarantine"):
-        raise ValueError(f"mode must be 'release' or 'quarantine', got {mode!r}")
-    if mode == "quarantine" and (events is None or quarantine_dir is None):
-        raise ValueError("mode='quarantine' requires events= and quarantine_dir=")
     if "://" in ledger_path:
         raise NotImplementedError(
             "reclaim_orphaned_claims rewrites the ledger via a POSIX rename "
@@ -782,140 +740,27 @@ def reclaim_orphaned_claims(
     # beneath the plan.
     orphans = pin(ledger.filter(F.col("writer_id").isin(orphan_tags)))
 
-    def _gc_partial_output(tags) -> None:
-        # GC the orphans' uncommitted partial output (no _SUCCESS by
-        # definition) so raw readers of output_dir never see half a batch.
-        # This runs BEFORE the ledger rewrite: deleting partial files never
-        # creates _SUCCESS, so the orphan set stays re-derivable — a crash
-        # anywhere after this point still re-identifies the same tags on
-        # the next run. The reverse order (rewrite first) would leak the
-        # partial files permanently: once the tags are dropped/retagged,
-        # nothing re-derives the GC list.
-        for tag in tags:
-            g, _, bid = tag.partition("-b")
-            out_storage.delete_tree(
-                f"{output_dir.rstrip('/')}/gen={g}/batch_id={bid}"
-            )
-
-    covered = None
-    if mode == "release":
-        _gc_partial_output(orphan_tags)
-    else:
-        # Idempotent re-emission: per-tag dynamic-partition overwrite, so a
-        # crash-rerun rewrites the same partitions instead of appending.
-        keys = orphans.select(
-            F.col("pk").alias("EventID"), F.col("writer_id").alias("reclaim_tag")
-        )
-        matched = pin(
-            to_physical_rows(events).dropDuplicates(["EventID"]).join(keys, "EventID")
-        )
-        # Coverage gate: an orphan pk the re-supplied source did NOT carry
-        # must not be retagged — retagging with zero quarantine rows would
-        # suppress the key forever with no triage record. Checked before
-        # anything is written OR deleted: a raise leaves ledger, quarantine
-        # AND the orphans' partial output files untouched — in exactly the
-        # truncated-source scenario this gate detects, those partials are
-        # the only remaining on-disk trace of the uncovered events, so the
-        # GC below is deferred until the gate passes (release mode GCs
-        # immediately: the replay source is the recovery there).
-        covered = matched.select(
-            F.col("EventID").alias("pk"),
-            F.col("reclaim_tag").alias("writer_id"),
-        ).distinct()
-        uncovered = pin(orphans.join(covered, ["pk", "writer_id"], "left_anti"))
-        n_uncovered = uncovered.count()
-        if n_uncovered:
-            sample = [r.pk for r in uncovered.select("pk").limit(5).collect()]
-            if not allow_partial:
-                raise ValueError(
-                    f"quarantine shortfall: {n_uncovered} orphaned claim(s) "
-                    f"have no matching EventID in the re-supplied events "
-                    f"source (sample pks: {sample}); nothing was retagged. "
-                    f"Re-run with a fuller source, or pass "
-                    f"allow_partial=True to reclaim only the covered claims."
-                )
-            import warnings
-
-            warnings.warn(
-                f"reclaim_orphaned_claims: allow_partial — leaving "
-                f"{n_uncovered} uncovered claim(s) as orphan candidates "
-                f"(sample pks: {sample})",
-                stacklevel=2,
-            )
-        # GC only the tags whose every claim is covered this run: a tag
-        # with uncovered claims keeps its partial output — it is the last
-        # on-disk trace of those events and they are still advertised as
-        # reclaimable by a later fuller-source run (deleting it here would
-        # contradict the shortfall contract above). The distinct-tag
-        # collect is operations-scale (dead tags), never data-scale.
-        if n_uncovered:
-            uncovered_tags = {
-                r.writer_id
-                for r in uncovered.select("writer_id").distinct().collect()
-            }
-            _gc_partial_output([t for t in orphan_tags if t not in uncovered_tags])
-        else:
-            _gc_partial_output(orphan_tags)
-        # A tag can be quarantined INCREMENTALLY across runs (allow_partial
-        # run 1 covers some pks; a later run with a fuller source covers
-        # more — the uncovered rows kept their dead tag, so the tag is
-        # re-identified). The dynamic overwrite replaces whole reclaim_tag=
-        # partitions, so carry forward any previously-quarantined rows of
-        # these tags that this run's source did not re-supply — otherwise
-        # the rerun the docstring advertises would destroy run 1's triage
-        # records. New rows win on (EventID, reclaim_tag); the union is
-        # pinned because the write overwrites the very files it was read
-        # from.
-        to_write = matched
-        try:
-            existing = spark.read.parquet(quarantine_dir).filter(
-                F.col("reclaim_tag").isin(orphan_tags)
-            )
-        except Exception:  # first quarantine write at this dir
-            existing = None
-        if existing is not None:
-            carried = existing.join(
-                matched.select("EventID", "reclaim_tag"),
-                ["EventID", "reclaim_tag"],
-                "left_anti",
-            )
-            to_write = pin(matched.unionByName(carried))
-        (
-            to_write.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("reclaim_tag")
-            .parquet(quarantine_dir)
-        )
+    # GC the orphans' uncommitted partial output (no _SUCCESS by
+    # definition) so raw readers of output_dir never see half a batch.
+    # This runs BEFORE the ledger rewrite: deleting partial files never
+    # creates _SUCCESS, so the orphan set stays re-derivable — a crash
+    # anywhere after this point still re-identifies the same tags on the
+    # next run. The reverse order (rewrite first) would leak the partial
+    # files permanently: once the tags are dropped, nothing re-derives the
+    # GC list.
+    for tag in orphan_tags:
+        g, _, bid = tag.partition("-b")
+        out_storage.delete_tree(f"{output_dir.rstrip('/')}/gen={g}/batch_id={bid}")
 
     # The rewrite re-reads the ledger under the lock: claims appended since
     # identification are preserved verbatim (their tags are live by
     # construction — no live writer can ever re-issue a dead tag).
-    if mode == "release":
-        def _transform(current: DataFrame) -> DataFrame:
-            return current.filter(~F.col("writer_id").isin(orphan_tags))
-    else:
-        # Retag per-ROW against the covered (pk, writer_id) pairs — an
-        # uncovered claim keeps its dead tag and stays reclaimable. The
-        # covered side is pinned (localCheckpoint), so the join inside the
-        # locked rewrite never re-reads the ledger files being swapped.
-        cov_marked = covered.withColumn("__cov", F.lit(True))
-
-        def _transform(current: DataFrame) -> DataFrame:
-            return (
-                current.join(cov_marked, ["pk", "writer_id"], "left")
-                .withColumn(
-                    "writer_id",
-                    F.when(
-                        F.col("__cov"),
-                        F.concat(F.lit(_RECLAIMED_PREFIX), F.col("writer_id")),
-                    ).otherwise(F.col("writer_id")),
-                )
-                .select("pk", "seenAt", "expiresAt", "writer_id")
-            )
-    rewrite_ledger_atomic(spark, ledger_path, _transform, schema=ledger_schema)
-
-    if mode == "quarantine":
-        return pin(orphans.join(covered, ["pk", "writer_id"], "left_semi"))
+    rewrite_ledger_atomic(
+        spark,
+        ledger_path,
+        lambda current: current.filter(~F.col("writer_id").isin(orphan_tags)),
+        schema=ledger_schema,
+    )
     return orphans
 
 

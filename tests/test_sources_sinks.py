@@ -701,7 +701,7 @@ def test_read_ledger_tolerates_concurrent_partition_drop(spark, tmp_path):
 def test_rewrite_ledger_atomic_preserves_partitioned_layout(spark, tmp_path):
     """Directive r12-3: the locked rewrite on an expiry-partitioned ledger
     must keep the layout (expiryDay= dirs re-derived from expiresAt), so
-    retag/release reclaims never silently flatten the production layout;
+    orphan-release reclaims never silently flatten the production layout;
     transforms stay layout-agnostic (they see no expiryDay column)."""
     import datetime as dt
     import os

@@ -777,9 +777,7 @@ def test_batch_streaming_drift_parity(spark, tmp_path):
 # Orphaned-claims reclaim job (the ledger sink's one loss window, closed)
 # --------------------------------------------------------------------------- #
 
-def _build_orphan_scenario(
-    spark, tmp_path, n_orphans=1, partition_by_expiry=False
-):
+def _build_orphan_scenario(spark, tmp_path, partition_by_expiry=False):
     """Reproduce the documented loss window with a REAL mid-batch kill:
 
     1. instance 1 (ckpt1, generation g1) drains event 10 — batch 0 claims
@@ -829,10 +827,9 @@ def _build_orphan_scenario(
         (tmp_path / "ckpt1" / "__spark_graft_generation").read_text().strip()
     )
 
-    # 2. batch 1 claims ALOWARE:1..n then dies before writing output
+    # 2. batch 1 claims ALOWARE:1 then dies before writing output
     with open(landing / "b.json", "w") as f:
-        for i in range(1, n_orphans + 1):
-            f.write(_json.dumps(_envelope(i)) + "\n")
+        f.write(_json.dumps(_envelope(1)) + "\n")
     real_proj = _pl.to_physical_rows
 
     def _boom(df):
@@ -857,79 +854,48 @@ def _build_orphan_scenario(
     emitted = sorted(r.EventID for r in spark.read.parquet(str(out)).collect())
     assert emitted == ["ALOWARE:10"]  # batch-0 output survives; event 1 lost
 
-    batch_events = _pl.streaming_fact_pipeline(
-        spark.read.schema(_pl.ENVELOPE_JSON_SCHEMA).json(str(landing))
-    )
     return {
         "ledger": ledger,
         "out": str(out),
         "ckpt2": str(tmp_path / "ckpt2"),
         "g1": g1,
-        "events": batch_events,
-        "landing": landing,
         "now_epoch": now_epoch,
         "run_instance": run_instance,
     }
 
 
-def test_reclaim_orphaned_claims_quarantine_exactly_once(spark, tmp_path):
-    """VERDICT-prescribed scenario: kill between claim and output write,
-    replace the checkpoint, reclaim in quarantine mode — the orphaned event
-    lands in quarantine EXACTLY once (idempotent under rerun), the
-    dead-but-committed tag is untouched, and the retagged claim still
-    suppresses the key on future replays."""
-    from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
-        reclaim_orphaned_claims,
-    )
-
-    s = _build_orphan_scenario(spark, tmp_path)
-    qdir = str(tmp_path / "quarantine")
-
-    reclaimed = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]],
-        mode="quarantine", events=s["events"], quarantine_dir=qdir,
-    )
-    rows = reclaimed.collect()
-    assert [(r.pk, r.writer_id) for r in rows] == [
-        ("ALOWARE:1", f"{s['g1']}-b1")
-    ]
-    quarantined = spark.read.parquet(qdir).collect()
-    assert [(r.EventID, r.reclaim_tag) for r in quarantined] == [
-        ("ALOWARE:1", f"{s['g1']}-b1")
-    ]
-    # ledger: orphan retagged (still protective), committed claim untouched
-    led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
-    assert led["ALOWARE:1"] == f"reclaimed:{s['g1']}-b1"
-    assert led["ALOWARE:10"] == f"{s['g1']}-b0"
-    # rerun is a no-op: same quarantine content, nothing newly reclaimed
-    again = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]],
-        mode="quarantine", events=s["events"], quarantine_dir=qdir,
-    )
-    assert again.count() == 0
-    assert spark.read.parquet(qdir).count() == 1
-    # retagged claim still gates: a fresh replay emits nothing new
-    s["run_instance"]("ckpt3")
-    emitted = sorted(r.EventID for r in spark.read.parquet(s["out"]).collect())
-    assert emitted == ["ALOWARE:10"]
-
-
 def test_reclaim_orphaned_claims_release_readmits_once(spark, tmp_path):
-    """Release mode: the orphaned claim rows are deleted, so the next replay
-    re-admits the lost event exactly once; the committed claim keeps
-    suppressing its key."""
+    """Kill between claim and output write, replace the checkpoint, reclaim:
+    the orphaned claim rows are deleted, so the next replay re-admits the
+    lost event exactly once; the committed claim keeps suppressing its key;
+    a rerun reclaims nothing; and a legacy ``reclaimed:<tag>`` row (written
+    by older versions) is neither returned nor removed — it is no sink tag,
+    so it stays a protective claim."""
+    import datetime as _dt
+
     from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
         reclaim_orphaned_claims,
     )
 
     s = _build_orphan_scenario(spark, tmp_path)
-    reclaimed = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]], mode="release"
-    )
+    legacy_tag = f"reclaimed:{s['g1']}-b1"  # embeds the orphan's dead tag
+    legacy = ("LEGACY:1", _dt.datetime(2024, 1, 15), s["now_epoch"] + 86400, legacy_tag)
+    spark.createDataFrame(
+        [legacy], "pk string, seenAt timestamp, expiresAt long, writer_id string"
+    ).write.mode("append").parquet(s["ledger"])
+
+    reclaimed = reclaim_orphaned_claims(spark, s["ledger"], s["out"], [s["ckpt2"]])
     assert [r.pk for r in reclaimed.collect()] == ["ALOWARE:1"]
     led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
     assert "ALOWARE:1" not in led
     assert led["ALOWARE:10"] == f"{s['g1']}-b0"
+    assert led["LEGACY:1"] == legacy_tag
+
+    # rerun is a no-op: nothing reclaimed, ledger unchanged
+    before = sorted(spark.read.parquet(s["ledger"]).collect())
+    again = reclaim_orphaned_claims(spark, s["ledger"], s["out"], [s["ckpt2"]])
+    assert again.count() == 0
+    assert sorted(spark.read.parquet(s["ledger"]).collect()) == before
 
     s["run_instance"]("ckpt3")
     emitted = sorted(r.EventID for r in spark.read.parquet(s["out"]).collect())
@@ -938,216 +904,6 @@ def test_reclaim_orphaned_claims_release_readmits_once(spark, tmp_path):
     s["run_instance"]("ckpt4")
     emitted = sorted(r.EventID for r in spark.read.parquet(s["out"]).collect())
     assert emitted == ["ALOWARE:1", "ALOWARE:10"]
-
-
-def test_reclaim_quarantine_shortfall_raises_and_retags_nothing(spark, tmp_path):
-    """An events source that does NOT re-supply an orphaned EventID must not
-    let quarantine mode retag that claim (retag + zero quarantine rows =
-    permanently invisible loss). Default: raise, ledger untouched, so a
-    later run with a fuller source can still reclaim."""
-    from pyspark.sql import functions as F
-
-    from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
-        reclaim_orphaned_claims,
-    )
-
-    s = _build_orphan_scenario(spark, tmp_path)
-    qdir = str(tmp_path / "quarantine")
-    truncated = s["events"].filter(F.col("EventID") != "ALOWARE:1")
-
-    with pytest.raises(ValueError, match="quarantine shortfall"):
-        reclaim_orphaned_claims(
-            spark, s["ledger"], s["out"], [s["ckpt2"]],
-            mode="quarantine", events=truncated, quarantine_dir=qdir,
-        )
-    # nothing retagged, nothing quarantined — the claim is still an orphan
-    led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
-    assert led["ALOWARE:1"] == f"{s['g1']}-b1"
-    import os
-    assert not os.path.exists(qdir) or not [
-        f for f in os.listdir(qdir) if f.startswith("reclaim_tag=")
-    ]
-    # a later run with the FULL source reclaims normally
-    reclaimed = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]],
-        mode="quarantine", events=s["events"], quarantine_dir=qdir,
-    )
-    assert [r.pk for r in reclaimed.collect()] == ["ALOWARE:1"]
-    led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
-    assert led["ALOWARE:1"] == f"reclaimed:{s['g1']}-b1"
-
-
-def test_reclaim_quarantine_allow_partial_leaves_uncovered_claims(spark, tmp_path):
-    """allow_partial=True with a truncated source: the uncovered claim keeps
-    its dead tag (still a reclaim candidate) and the return carries only the
-    covered rows — here, none."""
-    from pyspark.sql import functions as F
-
-    from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
-        reclaim_orphaned_claims,
-    )
-
-    s = _build_orphan_scenario(spark, tmp_path)
-    qdir = str(tmp_path / "quarantine")
-    truncated = s["events"].filter(F.col("EventID") != "ALOWARE:1")
-
-    reclaimed = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]],
-        mode="quarantine", events=truncated, quarantine_dir=qdir,
-        allow_partial=True,
-    )
-    assert reclaimed.count() == 0
-    led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
-    assert led["ALOWARE:1"] == f"{s['g1']}-b1"  # NOT retagged — reclaimable
-    # the fuller source then covers it
-    reclaimed = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]],
-        mode="quarantine", events=s["events"], quarantine_dir=qdir,
-        allow_partial=True,
-    )
-    assert [r.pk for r in reclaimed.collect()] == ["ALOWARE:1"]
-    led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
-    assert led["ALOWARE:1"] == f"reclaimed:{s['g1']}-b1"
-    quarantined = spark.read.parquet(qdir).collect()
-    assert [(r.EventID, r.reclaim_tag) for r in quarantined] == [
-        ("ALOWARE:1", f"{s['g1']}-b1")
-    ]
-
-
-def test_reclaim_quarantine_shortfall_preserves_partial_output(spark, tmp_path):
-    """ADVICE r12: in quarantine mode the partial-output GC is deferred
-    until the coverage gate passes — on a shortfall raise the orphans'
-    uncommitted output files are the LAST on-disk trace of the uncovered
-    events, so the raise must leave them intact (along with ledger and
-    quarantine dir). A later full-source run then reclaims normally and
-    GCs the partials."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
-        reclaim_orphaned_claims,
-    )
-
-    s = _build_orphan_scenario(spark, tmp_path)
-    qdir = str(tmp_path / "quarantine")
-    # fabricate the partial (no _SUCCESS) output the dead batch left behind
-    partial = os.path.join(s["out"], f"gen={s['g1']}", "batch_id=1")
-    os.makedirs(partial)
-    with open(os.path.join(partial, "part-00000.parquet"), "wb") as f:
-        f.write(b"partial")
-    truncated = s["events"].filter(F.col("EventID") != "ALOWARE:1")
-
-    with pytest.raises(ValueError, match="quarantine shortfall"):
-        reclaim_orphaned_claims(
-            spark, s["ledger"], s["out"], [s["ckpt2"]],
-            mode="quarantine", events=truncated, quarantine_dir=qdir,
-        )
-    # the raise deleted NOTHING: partials intact, claim untouched
-    assert os.path.exists(os.path.join(partial, "part-00000.parquet"))
-    led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
-    assert led["ALOWARE:1"] == f"{s['g1']}-b1"
-
-    # full source: gate passes → partials GC'd, claim retagged
-    reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]],
-        mode="quarantine", events=s["events"], quarantine_dir=qdir,
-    )
-    assert not os.path.exists(partial)
-    led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
-    assert led["ALOWARE:1"] == f"reclaimed:{s['g1']}-b1"
-
-
-def test_reclaim_quarantine_allow_partial_rerun_merges(spark, tmp_path):
-    """ADVICE r12 (medium): a tag covered INCREMENTALLY across allow_partial
-    runs must accumulate quarantine records, not clobber them. Run 1's
-    source covers only ALOWARE:1 (retagged + quarantined); run 2's source
-    covers only ALOWARE:2 — the tag is re-identified (2 kept its dead tag)
-    and the partition overwrite must carry run 1's row forward."""
-    from pyspark.sql import functions as F
-
-    from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
-        reclaim_orphaned_claims,
-    )
-
-    s = _build_orphan_scenario(spark, tmp_path, n_orphans=2)
-    qdir = str(tmp_path / "quarantine")
-    tag = f"{s['g1']}-b1"
-
-    only1 = s["events"].filter(F.col("EventID") == "ALOWARE:1")
-    got = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]],
-        mode="quarantine", events=only1, quarantine_dir=qdir,
-        allow_partial=True,
-    )
-    assert [r.pk for r in got.collect()] == ["ALOWARE:1"]
-    assert [
-        (r.EventID, r.reclaim_tag)
-        for r in spark.read.parquet(qdir).collect()
-    ] == [("ALOWARE:1", tag)]
-
-    # run 2: a DIFFERENT slice of the source — covers only the remaining
-    # orphan; run 1's triage record must survive the partition overwrite
-    only2 = s["events"].filter(F.col("EventID") == "ALOWARE:2")
-    got = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]],
-        mode="quarantine", events=only2, quarantine_dir=qdir,
-        allow_partial=True,
-    )
-    assert [r.pk for r in got.collect()] == ["ALOWARE:2"]
-    quarantined = sorted(
-        (r.EventID, r.reclaim_tag) for r in spark.read.parquet(qdir).collect()
-    )
-    assert quarantined == [("ALOWARE:1", tag), ("ALOWARE:2", tag)]
-    led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
-    assert led["ALOWARE:1"] == f"reclaimed:{tag}"
-    assert led["ALOWARE:2"] == f"reclaimed:{tag}"
-
-
-def test_reclaim_allow_partial_keeps_uncovered_tags_partial_output(
-    spark, tmp_path
-):
-    """A tag that still has UNCOVERED claims after an allow_partial run
-    must keep its partial output — it is the last on-disk trace of the
-    uncovered events, which the shortfall contract advertises as
-    reclaimable by a later fuller-source run. Only a fully-covered tag's
-    partials are GC'd."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
-        reclaim_orphaned_claims,
-    )
-
-    s = _build_orphan_scenario(spark, tmp_path, n_orphans=2)
-    qdir = str(tmp_path / "quarantine")
-    partial = os.path.join(s["out"], f"gen={s['g1']}", "batch_id=1")
-    os.makedirs(partial)
-    with open(os.path.join(partial, "part-00000.parquet"), "wb") as f:
-        f.write(b"partial")
-
-    # run 1 covers only ALOWARE:1 — the tag still has an uncovered claim
-    only1 = s["events"].filter(F.col("EventID") == "ALOWARE:1")
-    got = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]],
-        mode="quarantine", events=only1, quarantine_dir=qdir,
-        allow_partial=True,
-    )
-    assert [r.pk for r in got.collect()] == ["ALOWARE:1"]
-    assert os.path.exists(
-        os.path.join(partial, "part-00000.parquet")
-    ), "partial output of a not-fully-covered tag was GC'd"
-
-    # run 2 covers the remainder — now the tag is fully covered and GC'd
-    only2 = s["events"].filter(F.col("EventID") == "ALOWARE:2")
-    got = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]],
-        mode="quarantine", events=only2, quarantine_dir=qdir,
-        allow_partial=True,
-    )
-    assert [r.pk for r in got.collect()] == ["ALOWARE:2"]
-    assert not os.path.exists(partial)
 
 
 def test_partitioned_streaming_ledger_gate_parity_and_layout(spark, tmp_path):
@@ -1338,10 +1094,10 @@ def test_partitioned_replay_across_utc_midnight_recovers_claims(spark, tmp_path)
 
 
 def test_reclaim_on_partitioned_streaming_ledger(spark, tmp_path):
-    """The reclaim job on a partitioned streaming ledger: quarantine mode
-    retags through the layout-preserving rewrite (expiryDay= dirs survive),
-    the retagged claim still gates, and an injected crash at the rewrite is
-    recoverable with the layout intact."""
+    """The reclaim job on a partitioned streaming ledger: the orphan is
+    released through the layout-preserving rewrite (expiryDay= dirs
+    survive), an injected crash at the rewrite is recoverable with the
+    layout intact, and a fresh replay re-admits the event exactly once."""
     import os
 
     from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
@@ -1349,7 +1105,6 @@ def test_reclaim_on_partitioned_streaming_ledger(spark, tmp_path):
     )
 
     s = _build_orphan_scenario(spark, tmp_path, partition_by_expiry=True)
-    qdir = str(tmp_path / "quarantine")
     assert any(
         d.startswith("expiryDay=") for d in os.listdir(s["ledger"])
     ), "scenario ledger is not partitioned"
@@ -1366,26 +1121,17 @@ def test_reclaim_on_partitioned_streaming_ledger(spark, tmp_path):
     os.rename = _boom
     try:
         with pytest.raises(Exception, match="injected crash"):
-            reclaim_orphaned_claims(
-                spark, s["ledger"], s["out"], [s["ckpt2"]],
-                mode="quarantine", events=s["events"], quarantine_dir=qdir,
-            )
+            reclaim_orphaned_claims(spark, s["ledger"], s["out"], [s["ckpt2"]])
     finally:
         os.rename = real_rename
 
-    # The crash hit the SECOND rename: scratch was fully written and the
-    # quarantine row committed, so recovery (finish_interrupted_ledger_swap
-    # at the rerun's entry) COMPLETES the swap — the retag is durable and
-    # the rerun correctly finds nothing left to reclaim. Crash-safe means
-    # exactly-once, not re-run-visible.
-    got = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]],
-        mode="quarantine", events=s["events"], quarantine_dir=qdir,
-    )
+    # The crash hit the SECOND rename: scratch was fully written, so
+    # recovery (finish_interrupted_ledger_swap at the rerun's entry)
+    # COMPLETES the swap — the release is durable and the rerun correctly
+    # finds nothing left to reclaim. Crash-safe means exactly-once, not
+    # re-run-visible.
+    got = reclaim_orphaned_claims(spark, s["ledger"], s["out"], [s["ckpt2"]])
     assert got.count() == 0
-    assert [
-        (r.EventID, r.reclaim_tag) for r in spark.read.parquet(qdir).collect()
-    ] == [("ALOWARE:1", f"{s['g1']}-b1")]
     assert any(d.startswith("expiryDay=") for d in os.listdir(s["ledger"]))
     assert not os.path.exists(s["ledger"] + ".reclaim-new")
     assert not os.path.exists(s["ledger"] + ".reclaim-old")
@@ -1393,11 +1139,12 @@ def test_reclaim_on_partitioned_streaming_ledger(spark, tmp_path):
         r.pk: r.writer_id
         for r in spark.read.parquet(s["ledger"]).drop("expiryDay").collect()
     }
-    assert led["ALOWARE:1"] == f"reclaimed:{s['g1']}-b1"
-    # the retagged claim still gates: a fresh replay emits nothing new
+    assert "ALOWARE:1" not in led
+    assert led["ALOWARE:10"] == f"{s['g1']}-b0"
+    # a fresh replay re-admits the released event exactly once
     s["run_instance"]("ckpt3")
     emitted = sorted(r.EventID for r in spark.read.parquet(s["out"]).collect())
-    assert emitted == ["ALOWARE:10"]
+    assert emitted == ["ALOWARE:1", "ALOWARE:10"]
 
 
 def test_reclaim_gc_runs_before_ledger_rewrite(spark, tmp_path):
@@ -1428,24 +1175,20 @@ def test_reclaim_gc_runs_before_ledger_rewrite(spark, tmp_path):
     _dedup.rewrite_ledger_atomic = _boom
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
-            reclaim_orphaned_claims(
-                spark, s["ledger"], s["out"], [s["ckpt2"]], mode="release"
-            )
+            reclaim_orphaned_claims(spark, s["ledger"], s["out"], [s["ckpt2"]])
     finally:
         _dedup.rewrite_ledger_atomic = real_rewrite
     assert not os.path.exists(partial)  # GC happened before the rewrite
     led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
     assert led["ALOWARE:1"] == f"{s['g1']}-b1"  # claim survived the crash
     # the orphan set was re-derivable: the rerun reclaims normally
-    reclaimed = reclaim_orphaned_claims(
-        spark, s["ledger"], s["out"], [s["ckpt2"]], mode="release"
-    )
+    reclaimed = reclaim_orphaned_claims(spark, s["ledger"], s["out"], [s["ckpt2"]])
     assert [r.pk for r in reclaimed.collect()] == ["ALOWARE:1"]
 
 
 def test_reclaim_ledger_cli_smoke(spark, tmp_path):
-    """tools/reclaim_ledger.py: one command = reclaim (quarantine) +
-    compaction, RUNBOOK defaults; prints/returns the JSON summary."""
+    """tools/reclaim_ledger.py: one command = reclaim + compaction, RUNBOOK
+    defaults; prints/returns the JSON summary."""
     import os
     import sys
 
@@ -1455,15 +1198,11 @@ def test_reclaim_ledger_cli_smoke(spark, tmp_path):
     import reclaim_ledger as _cli
 
     s = _build_orphan_scenario(spark, tmp_path)
-    qdir = str(tmp_path / "quarantine")
     summary = _cli.main(
         [
             "--ledger", s["ledger"],
             "--output-dir", s["out"],
             "--live-ckpt", s["ckpt2"],
-            "--mode", "quarantine",
-            "--events-landing", str(s["landing"]),
-            "--quarantine-dir", qdir,
             "--compact",
             "--now-epoch", str(s["now_epoch"]),
         ],
@@ -1473,8 +1212,8 @@ def test_reclaim_ledger_cli_smoke(spark, tmp_path):
     assert summary["reclaimed_pks_sample"] == ["ALOWARE:1"]
     assert summary["compacted"] == 0  # nothing expired at the scenario clock
     led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
-    assert led["ALOWARE:1"] == f"reclaimed:{s['g1']}-b1"
-    assert spark.read.parquet(qdir).count() == 1
+    assert "ALOWARE:1" not in led
+    assert led["ALOWARE:10"] == f"{s['g1']}-b0"
 
 
 def test_finish_interrupted_ledger_swap_states(tmp_path):

@@ -7,6 +7,7 @@ resolve the repository root from their own ``__file__``.
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import re
@@ -99,4 +100,22 @@ def test_no_script_hard_codes_a_checkout_path():
             for lit in set(_ABS_PATH.findall(path.read_text())):
                 if _names_a_checkout(lit):
                     offenders.append(f"{path.relative_to(ROOT)}: {lit}")
+    assert not offenders, offenders
+
+
+def test_package_never_imports_itself_by_name():
+    """Modules inside the package import each other relatively, so a copy
+    of the package under another name imports its own modules, not the
+    checkout's."""
+    offenders = []
+    for path in sorted((ROOT / PACKAGE).rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom) and node.level == 0:
+                names = [node.module or ""]
+            elif isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            if any(n == PACKAGE or n.startswith(PACKAGE + ".") for n in names):
+                offenders.append(f"{path.relative_to(ROOT)}:{node.lineno}")
     assert not offenders, offenders

@@ -4,30 +4,24 @@ hygiene" as ONE command instead of a Python signature.
 Wraps the two maintenance jobs in the order an operator wants them after a
 checkpoint loss/replacement:
 
-  1. ``reclaim_orphaned_claims`` (streaming/pipeline.py) — recover claims a
-     dead generation left in the ledger with no committed output. Default
-     mode is ``release`` (the replay re-admits the events); ``quarantine``
-     re-emits them to a triage dir from the replayable landing source and
-     retags the claims.
+  1. ``reclaim_orphaned_claims`` (streaming/pipeline.py) — delete the claims
+     a dead generation left in the ledger with no committed output, so the
+     next replay re-admits their events exactly once.
   2. ``sinks.compact_ledger`` (``--compact``) — TTL compaction, a
      crash-safe locked in-place rewrite dropping expired rows.
 
 RUNBOOK defaults are encoded here: pass EVERY live pipeline's checkpoint
 dir (``--live-ckpt``, repeatable — omitting one makes its in-flight batch
-look orphaned); quarantine mode refuses to retag claims the re-supplied
-source does not cover (``--allow-partial`` to downgrade that to a warning
-and leave the uncovered claims reclaimable). POSIX ledger paths only; an
-object-store ledger belongs on the Delta/Iceberg MERGE path where this
-window does not exist.
+look orphaned). POSIX ledger paths only: object-store ledgers are
+unsupported (``rewrite_ledger_atomic`` raises ``NotImplementedError``).
 
 Usage:
     python tools/reclaim_ledger.py --ledger /data/ledger \\
         --output-dir /data/fact --live-ckpt /ckpt/pipelineA \\
-        [--mode release|quarantine] \\
-        [--events-landing /data/landing --quarantine-dir /data/triage] \\
-        [--allow-partial] [--compact] [--now-epoch N]
+        [--compact] [--now-epoch N] [--binpack-min-files N]
 
-Prints one JSON line: {"reclaimed": N, "mode": ..., "compacted": N|null}.
+Prints one JSON line: {"reclaimed": N, "reclaimed_pks_sample": [...],
+"compacted": N|null}.
 """
 
 from __future__ import annotations
@@ -38,16 +32,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def build_events(spark, landing_dir: str):
-    """Re-derive the normalized event stream from the replayable landing
-    dir — the same batch graph the quarantine contract documents."""
-    from quill_agent_dashboard_pbi_etl_spark.streaming import pipeline as pl
-
-    return pl.streaming_fact_pipeline(
-        spark.read.schema(pl.ENVELOPE_JSON_SCHEMA).json(landing_dir)
-    )
 
 
 def main(argv=None, spark=None) -> dict:
@@ -62,21 +46,6 @@ def main(argv=None, spark=None) -> dict:
         help="a LIVE pipeline's checkpoint dir; repeat for every pipeline "
         "sharing the ledger (RUNBOOK: omitting one makes its in-flight "
         "batch look orphaned)",
-    )
-    ap.add_argument("--mode", choices=("release", "quarantine"), default="release")
-    ap.add_argument(
-        "--events-landing",
-        help="quarantine mode: the replayable landing dir the events are "
-        "re-derived from",
-    )
-    ap.add_argument(
-        "--quarantine-dir", help="quarantine mode: triage output dir"
-    )
-    ap.add_argument(
-        "--allow-partial", action="store_true",
-        help="quarantine mode: tolerate a source that does not re-supply "
-        "every orphaned key — covered claims are reclaimed, uncovered ones "
-        "stay reclaim candidates (default: raise on shortfall)",
     )
     ap.add_argument(
         "--compact", action="store_true",
@@ -93,10 +62,6 @@ def main(argv=None, spark=None) -> dict:
         "(sinks.binpack_ledger_closed_days); pass 0 to disable",
     )
     args = ap.parse_args(argv)
-    if args.mode == "quarantine" and not (
-        args.events_landing and args.quarantine_dir
-    ):
-        ap.error("--mode quarantine requires --events-landing and --quarantine-dir")
 
     from quill_agent_dashboard_pbi_etl_spark.sinks import compact_ledger
     from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
@@ -111,23 +76,10 @@ def main(argv=None, spark=None) -> dict:
         spark.sparkContext.setLogLevel("ERROR")
 
     try:
-        events = (
-            build_events(spark, args.events_landing)
-            if args.mode == "quarantine"
-            else None
-        )
         reclaimed = reclaim_orphaned_claims(
-            spark,
-            args.ledger,
-            args.output_dir,
-            args.live_ckpt,
-            mode=args.mode,
-            events=events,
-            quarantine_dir=args.quarantine_dir,
-            allow_partial=args.allow_partial,
+            spark, args.ledger, args.output_dir, args.live_ckpt
         )
         summary = {
-            "mode": args.mode,
             "reclaimed": reclaimed.count(),
             "reclaimed_pks_sample": [
                 r.pk for r in reclaimed.select("pk").limit(10).collect()
