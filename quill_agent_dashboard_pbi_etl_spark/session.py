@@ -6,13 +6,16 @@ timestamps to UTC instants and derives business dates per-row in an IANA tz —
 UTC internally; the DuckDB correctness oracle does the same explicitly).
 
 Scale posture: AQE on (runtime coalesce, skew-join splitting, dynamic broadcast
-selection), shuffle partitions sized for the local harness but overridable via
-``SPARK_GRAFT_SHUFFLE_PARTITIONS`` for cluster runs.
+selection). Shuffle partitions default to the task slots of a local master
+(``local[N]`` -> N, ``local[*]`` -> the JVM's core count) and to 32 on any
+other master; ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` overrides both (on a cluster,
+2-4x total executor cores; on one box, when the data outgrows its memory).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -23,11 +26,36 @@ DEFAULT_APP_NAME = "quill-agent-dashboard-pbi-etl-spark"
 # the working directory.
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# Generated classes Spark keeps compiled. One pass over the whole registry
+# generates about 910 distinct classes (NOTES.md r18). Spark's default of 100
+# is fewer than one batch refresh's ~100 once its LRU segments evict early,
+# so every refresh recompiled most of them.
+CODEGEN_CACHE_ENTRIES = 2048
+
+# Shuffle partitions on a non-local master. A cluster's parallelism at start-up
+# says little about its size under dynamic allocation, so it is not used.
+CLUSTER_SHUFFLE_PARTITIONS = 32
+
+
+def _default_shuffle_partitions(spark: SparkSession) -> int:
+    """One shuffle partition per task slot of a local master, else
+    ``CLUSTER_SHUFFLE_PARTITIONS``.
+
+    More partitions than slots buy nothing on one box and cost a task launch
+    each in every stage that cannot coalesce them: AQE may not change the
+    partitioning of a cached plan, so a persisted relation keeps all of them.
+    """
+    sc = spark.sparkContext
+    if re.fullmatch(r"local(\[[^\]]*\])?", sc.master):
+        # local / local[N] / local[*] / local[N,F]: the context's default
+        # parallelism is its slot count (the JVM's cores for local[*]).
+        return sc.defaultParallelism
+    return CLUSTER_SHUFFLE_PARTITIONS
+
 
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -38,16 +66,12 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         # Determinism / oracle parity
         .config("spark.sql.session.timeZone", "UTC")
-        # Shuffle sizing: explicit floor for local; AQE coalesces down at runtime.
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Adaptive execution: runtime re-plan, skew-join splitting, partition
         # coalescing — the first line of defense at 100 TB.
         .config("spark.sql.adaptive.enabled", "true")
@@ -58,6 +82,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Arrow for the (few) Pandas-UDF extension ops.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Static: only a session that starts the JVM sets it.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Parquet scans: vectorized reader + pushdown are defaults, pinned here
         # so a misconfigured cluster profile can't silently disable them.
         .config("spark.sql.parquet.filterPushdown", "true")
@@ -76,4 +102,10 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        partitions = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or str(
+            _default_shuffle_partitions(spark)
+        )
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    return spark

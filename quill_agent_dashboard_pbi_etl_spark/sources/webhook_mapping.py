@@ -79,8 +79,11 @@ def _nd_barrier(col: F.Column) -> F.Column:
     simplifier, and Spark 4's optimizer constant-folds range-provable
     ``rand()`` comparisons, erasing the barrier (both verified in the
     optimized plan).
+
+    The seed is fixed so two builds of the same query print the same plan;
+    ``Shuffle`` stays non-deterministic to Catalyst whatever its seed.
     """
-    return F.element_at(F.shuffle(F.array(col)), 1)
+    return F.element_at(F.shuffle(F.array(col), 0), 1)
 
 
 def events_as_webhooks(events: DataFrame) -> DataFrame:

@@ -225,8 +225,6 @@ def start_ledger_gated_fact_sink(
     gen = _generation_id(checkpoint_dir, storage)  # immutable per incarnation
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         now = now_epoch if now_epoch is not None else int(time.time())
         tag = f"{gen}-b{batch_id}"
@@ -237,10 +235,17 @@ def start_ledger_gated_fact_sink(
         # sf100 single-batch drain an unpinned body that consumed it three
         # times re-parsed ~30 GB of JSONL per consumer: 744 s vs 330 s).
         # The pin is micro-batch-sized; blocks are released by the
-        # ContextCleaner when the batch's DataFrames go out of scope.
+        # ContextCleaner when the batch's DataFrames go out of scope. Its
+        # row count rides the pin's job as an Observation: an empty batch
+        # (nothing landed, or only dead letters) returns here, before the
+        # lock, with no ledger append and no output directory.
+        seen = Observation()
         unique = pin(
             keep_first(batch_df, ["EventID"], [F.col("EventTime"), F.col("Notes")])
+            .observe(seen, F.count(F.lit(1)).alias("n"))
         )
+        if seen.get["n"] == 0:
+            return
         with LedgerLock(ledger_path):
             try:
                 # Partition-prunes expired expiryDay= dirs on the

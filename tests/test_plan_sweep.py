@@ -95,3 +95,25 @@ def test_nd_barrier_keeps_consumer_filters_above_spreading_exchange(spark):
             "exchange — the single-task-scan-stage regression is back"
         )
 
+
+
+def test_nd_barrier_prints_the_same_plan_every_build(spark):
+    """The barrier's ``shuffle`` carries a fixed seed, so two builds of
+    ``events_as_webhooks`` print the same barrier in the optimized plan and
+    plan captures of one tree can be diffed without masking seeds."""
+    import re
+
+    from quill_agent_dashboard_pbi_etl_spark.sources.readers import load_table
+    from quill_agent_dashboard_pbi_etl_spark.sources.webhook_mapping import (
+        events_as_webhooks,
+    )
+
+    def barrier_text() -> list[str]:
+        df = events_as_webhooks(load_table(spark, SF_SMALL, "events"))
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        # expression ids (#<n>) differ per build; the seed must not
+        return re.findall(r"shuffle\(.*?Some\(-?\d+\)\)", re.sub(r"#\d+L?", "", plan))
+
+    first, second = barrier_text(), barrier_text()
+    assert first, "no shuffle(...) barrier in the optimized plan"
+    assert first == second

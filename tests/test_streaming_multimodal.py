@@ -390,6 +390,61 @@ def test_ledger_gated_sink_recovers_claimed_but_unwritten_events(
     assert tag.startswith(gen)
 
 
+def test_ledger_gated_sink_dead_letter_only_batch_posts_nothing(spark, tmp_path):
+    """A micro-batch whose landing file holds only envelopes the adapter
+    drops (inbound events) normalizes to zero rows. The sink returns before
+    the ledger cycle: nothing posted, the ledger's files unchanged, and no
+    ``batch_id=`` output directory for that batch."""
+    import datetime as _dt
+    import json as _json
+
+    from quill_agent_dashboard_pbi_etl_spark.functions.adapter import (
+        normalize_webhooks,
+    )
+    from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
+        envelopes_to_webhook_shape,
+        start_ledger_gated_fact_sink,
+    )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    out = tmp_path / "fact"
+    ledger = tmp_path / "ledger"
+    now_epoch = int(_dt.datetime(2024, 1, 20, tzinfo=_dt.timezone.utc).timestamp())
+
+    def drain():
+        stream = read_envelope_stream(spark, str(landing))
+        fact = normalize_webhooks(envelopes_to_webhook_shape(stream))
+        q = start_ledger_gated_fact_sink(
+            fact, str(ledger), str(out), str(tmp_path / "ckpt"),
+            available_now=True, now_epoch=now_epoch,
+        )
+        q.awaitTermination(180)
+
+    def ledger_files():
+        return sorted(
+            str(p.relative_to(ledger)) for p in ledger.rglob("*") if p.is_file()
+        )
+
+    with open(landing / "b1.json", "w") as f:
+        f.write(_json.dumps(_envelope(1)) + "\n")
+    drain()
+    files_before = ledger_files()
+    assert files_before
+    assert [p.name for p in out.glob("gen=*/batch_id=*")] == ["batch_id=0"]
+
+    with open(landing / "b2.json", "w") as f:
+        for eid in (2, 3):
+            f.write(_json.dumps(_envelope(eid, event="inbound_call")) + "\n")
+    drain()
+
+    assert ledger_files() == files_before
+    assert [r.pk for r in spark.read.parquet(str(ledger)).collect()] == ["ALOWARE:1"]
+    assert [p.name for p in out.glob("gen=*/batch_id=*")] == ["batch_id=0"]
+    got = [r.EventID for r in spark.read.parquet(str(out)).collect()]
+    assert got == ["ALOWARE:1"]
+
+
 def test_stateful_session_close_auto(spark, tmp_path):
     """Gap sessions through ``close_gap_sessions`` over two micro-batches:
     within-batch gap close, watermark-timeout close, and a cross-batch close
