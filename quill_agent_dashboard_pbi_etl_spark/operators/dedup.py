@@ -74,24 +74,6 @@ def ledger_gate(
     return gate_anti_join(events, live, key_col)
 
 
-def ledger_new_entries(
-    survivors: DataFrame,
-    seen_at: Column,
-    key_col: str = "dedup_key",
-    ttl_days: int = 14,
-) -> DataFrame:
-    """K4 ledger append rows for events that passed the gate:
-    ``(pk, seenAt, expiresAt=now+ttl)`` (ledger.repo.ts:5-35). Caller appends
-    to the ledger table (single-writer; :func:`ledger_update_atomic` is the
-    concurrent-writer path).
-    """
-    return survivors.select(
-        F.col(key_col).alias("pk"),
-        seen_at.alias("seenAt"),
-        (F.unix_timestamp(seen_at) + ttl_days * 86400).alias("expiresAt"),
-    ).dropDuplicates(["pk"])
-
-
 def bloom_words(
     keys: DataFrame,
     key_col: str = "pk",
@@ -320,7 +302,7 @@ def is_broadcast_flip_regime(
     anti-join measured faster on one box (``SCALE_LADDER.json
     small_batch_gate``). ``None`` estimates (Catalyst couldn't size the
     plan) and a ``None`` threshold (an unparsable conf value — e.g. a
-    suffix ``_parse_spark_bytes`` doesn't know) are never the flip regime
+    suffix ``parse_spark_bytes`` doesn't know) are never the flip regime
     — the caller keeps the plain shape.
 
     The ``2*big >= threshold`` floor (r14) bounds the regime to where
@@ -409,7 +391,8 @@ class LedgerLock:
     The reference gets per-key atomicity from DynamoDB conditional writes
     (ledger.repo.ts:16-27); a parquet ledger has no conditional write, so two
     concurrent gate+append cycles could both see a key as new and both mark
-    it. This lock serializes whole cycles via atomic ``O_CREAT|O_EXCL`` file
+    it. This lock serializes whole cycles (``sinks.check_and_mark``, the one
+    ledger write, and the maintenance rewrites) via atomic ``O_CREAT|O_EXCL`` file
     creation (POSIX-atomic, works on shared filesystems that honor O_EXCL).
     A stale lock (holder died) is broken after ``stale_sec``. This lock is
     the engine's one concurrent-writer mechanism for the ledger.
@@ -556,50 +539,6 @@ def rewrite_ledger_atomic(spark, ledger_path: str, transform, schema=None):
     final = spark.read.schema(schema) if schema is not None else spark.read
     out = final.parquet(ledger_path)
     return out.drop("expiryDay") if "expiryDay" in out.columns else out
-
-
-def ledger_update_atomic(
-    events: DataFrame,
-    ledger_path: str,
-    seen_at: Column,
-    key_col: str = "dedup_key",
-    ttl_days: int = 14,
-    now_epoch: int | None = None,
-) -> DataFrame:
-    """D3+K4 as one atomic cycle safe under CONCURRENT writers: lock →
-    read ledger → anti-join gate → append new keys → unlock, returning the
-    gated survivors. Two pipeline runs racing on overlapping keys can never
-    both mark the same pk (the concurrent-append test locks this contract).
-
-    The returned survivors are materialized (collect-free ``localCheckpoint``)
-    before the lock releases, so the gate's view of the ledger cannot be
-    invalidated by a later writer re-running this plan lazily.
-
-    Layout-aware: on an expiry-partitioned ledger the gate read
-    partition-prunes the expired ``expiryDay=`` directories
-    (``sinks.read_ledger``; the row-level ``expiresAt`` filter inside
-    :func:`ledger_gate` stays authoritative for the boundary day) and the
-    append matches the existing layout (``sinks.append_ledger`` auto-
-    detect) — a flat append into a partitioned root would break partition
-    discovery for every later reader.
-    """
-    from ..schemas import LEDGER_SCHEMA
-    from ..sinks import append_ledger, read_ledger
-
-    spark = events.sparkSession
-    if now_epoch is None:
-        now_epoch = int(time.time())
-    with LedgerLock(ledger_path):
-        try:
-            ledger = read_ledger(spark, ledger_path, now_epoch=now_epoch)
-        except Exception:  # first writer bootstraps an empty ledger
-            ledger = spark.createDataFrame([], LEDGER_SCHEMA)
-        # Snapshot the survivors under the lock: a later lazy execution
-        # must not see the ledger this cycle appends to.
-        survivors = pin(ledger_gate(events, ledger, key_col, now_epoch))
-        new_entries = ledger_new_entries(survivors, seen_at, key_col, ttl_days)
-        append_ledger(new_entries, ledger_path)
-    return survivors
 
 
 # --------------------------------------------------------------------------- #

@@ -143,6 +143,9 @@ LEDGER_SCHEMA = StructType(
         StructField("expiresAt", LongType(), False),  # epoch seconds TTL
     ]
 )
+# The claim ledger as sinks.check_and_mark writes it: LEDGER_SCHEMA plus the
+# writer_id claim tag.
+LEDGER_DDL = "pk string, seenAt timestamp, expiresAt long, writer_id string"
 
 # --------------------------------------------------------------------------- #
 # Roster snapshot (ring-group availability report, dimagent.sync.service.ts:35-46).

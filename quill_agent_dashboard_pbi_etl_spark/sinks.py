@@ -2,7 +2,8 @@
 
 The reference's sink is the Power BI Push Dataset REST API (append rows, clear
 table, create dataset). Spark-side the table store is date-partitioned parquet
-(concurrent ledger writers serialize on ``operators.dedup.LedgerLock``); a
+(concurrent ledger writers go through :func:`check_and_mark`, which
+serializes on ``operators.dedup.LedgerLock``); a
 REST push sink is kept as a ``foreachPartition`` hook honoring the public Push API limits
 (≤10k rows/POST, 120 POSTs/min, 1M rows/hr).
 """
@@ -14,7 +15,7 @@ import math
 import os
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -24,6 +25,7 @@ from .schemas import (
     DIM_METRIC_SCHEMA,
     DIM_SHIFT_SCHEMA,
     FACT_EVENT_SCHEMA,
+    LEDGER_DDL,
     LEDGER_SCHEMA,
 )
 
@@ -199,8 +201,8 @@ def append_ledger(
 ) -> None:
     """K4 ledger append after a successful gate+post cycle. Single-writer per
     pipeline run; concurrent writers go through
-    ``operators.dedup.ledger_update_atomic``, which holds the ``LedgerLock``
-    across the whole gate+append cycle (SURVEY.md §7 risk register).
+    :func:`check_and_mark`, which holds the ``LedgerLock`` across the
+    whole gate+append cycle (SURVEY.md §7 risk register).
 
     ``partition_by_expiry=True`` lays the ledger out as
     ``expiryDay=<UTC date of expiresAt>/`` partitions — the RUNBOOK "Ledger
@@ -300,13 +302,112 @@ def read_ledger(
     return df
 
 
-def prune_ledger(spark: SparkSession, path: str, now_epoch: int) -> DataFrame:
-    """S5 ledger reader: load the ledger table and drop expired entries
-    (ledger.repo.ts:16-27 existence check reads; DynamoDB expires async
-    within ~48h). Read-only — the explicit rewrite job that actually
-    reclaims the storage is :func:`compact_ledger`."""
-    live = spark.read.parquet(path).filter(F.col("expiresAt") >= F.lit(now_epoch))
-    return live
+def check_and_mark(
+    events: DataFrame,
+    ledger_path: str,
+    tag: str,
+    now_epoch: int,
+    ttl_days: int = 14,
+    partition_by_expiry: bool | None = None,
+) -> DataFrame:
+    """K4 ``checkAndMark`` for a whole batch (ledger.repo.ts:5-35), the
+    engine's one ledger write: under the :class:`LedgerLock`, gate
+    ``events`` against the live ledger and append the survivors as claims
+    ``(pk, seenAt, expiresAt = now + ttl, writer_id = tag)``; then return
+    the ``events`` whose key ``tag`` owns in the durable ledger.
+
+    ``events`` carries ``EventID`` and ``EventTime`` with one row per
+    ``EventID`` (the caller collapses within-batch duplicates and pins the
+    batch: it is read twice, by the gate and by the returned semi-join).
+    Two writers racing on overlapping keys can never both claim one key.
+    ``expiresAt`` is PROCESSING time + TTL, matching the gate's wall-clock
+    filter and the reference (``now + DYNAMO_TTL_DAYS``): a claim protects
+    for ``ttl_days`` from when it was MADE, so late or backfill data older
+    than the TTL still dedups. ``partition_by_expiry`` passes through to
+    :func:`append_ledger` verbatim (``None`` follows the existing layout).
+
+    Crash safety (effectively-once output): claims are the commit point.
+    The caller tags each batch uniquely (the streaming sink uses
+    ``<generation>-b<batch id>``, the generation being a uuid persisted in
+    the checkpoint dir, so tags are unique across stream incarnations AND
+    across pipelines sharing one ledger), and the survivors are derived by
+    READING BACK the keys the tag owns. A retry with the same tag at any
+    crash point reconstructs the identical survivor set from the durable
+    claims (keys it claimed before the crash are still tagged as its own,
+    NOT silently dropped as duplicates, which is what a mark-then-write
+    sink without tags would do), and the sink's per-batch output overwrite
+    is idempotent. Across checkpoint replacement: the rebuilt stream's
+    batch N carries a fresh generation, so it can neither adopt the old
+    incarnation's claims (no duplicate re-emission) nor overwrite the old
+    incarnation's committed output (a replayed event lands in exactly the
+    one output whose batch claimed its key, never twice), with ONE loss
+    window: a batch that claimed keys and crashed before writing output is
+    recoverable only by the SAME incarnation's retry. If the checkpoint is
+    rebuilt while such a batch is outstanding, its claims are orphaned
+    (live in the ledger under a dead tag) and those events land in no
+    output.
+    ``streaming.pipeline.reclaim_orphaned_claims`` closes that window after
+    the fact: it finds dead-tag claims whose output never committed and
+    deletes them, so the next replay re-admits the events exactly once;
+    operationally, still prefer draining the stream before deleting a
+    checkpoint.
+
+    ``read_ledger``/``append_ledger`` are looked up as module globals and
+    ``pin``/``ledger_gate`` imported at call time, so wrappers installed on
+    those module attributes see every call."""
+    from .operators.dedup import LedgerLock, ledger_gate
+    from .operators.materialize import pin
+
+    spark = events.sparkSession
+    with LedgerLock(ledger_path):
+        try:
+            # Partition-prunes expired expiryDay= dirs on the partitioned
+            # layout; the gate's row-level TTL filter stays authoritative
+            # for the boundary day.
+            ledger = read_ledger(spark, ledger_path, now_epoch=now_epoch)
+        except Exception:  # first writer bootstraps the ledger
+            ledger = spark.createDataFrame([], LEDGER_DDL)
+        # pin: materialize the claim set once under the lock; its row count
+        # rides the pin's own job as an Observation, so deciding whether to
+        # append costs no extra job and the append does not re-run the gate.
+        n = Observation()
+        claims = pin(
+            ledger_gate(events, ledger, "EventID", now_epoch)
+            .select(
+                F.col("EventID").alias("pk"),
+                F.col("EventTime").alias("seenAt"),
+                F.lit(now_epoch + ttl_days * 86400).cast("long").alias("expiresAt"),
+                F.lit(tag).alias("writer_id"),
+            )
+            .observe(n, F.count(F.lit(1)).alias("n"))
+        )
+        # An all-duplicate batch claims nothing: no empty file set per call.
+        if n.get["n"] > 0:
+            append_ledger(claims, ledger_path, partition_by_expiry=partition_by_expiry)
+    # Read back outside the lock: replay-stable even after a crash above.
+    # Deliberately NO ignoreMissingFiles: a concurrent locked rewrite
+    # (reclaim / flat compaction rename-swap) racing this read must FAIL the
+    # call so the retry replays cleanly, never read an empty ledger while
+    # the claims stand (the caller would commit an empty output and
+    # suppress the events forever). Partitioned compaction only drops days
+    # strictly before today, which the prune below never reads.
+    source = spark.read.schema(LEDGER_DDL).parquet(ledger_path)
+    if "expiryDay" in source.columns:
+        # RANGE prune, not equality on day(now + ttl): a retry that crossed
+        # a UTC midnight recomputes day(now + ttl) one day PAST where the
+        # first attempt's claims landed. Any claim the tag still owns
+        # expires in [day(now), day(now + ttl)] for every attempt's `now`.
+        source = source.filter(
+            (F.col("expiryDay") >= F.lit(utc_day_of(now_epoch)).cast("date"))
+            & (
+                F.col("expiryDay")
+                <= F.lit(utc_day_of(now_epoch + ttl_days * 86400)).cast("date")
+            )
+        )
+    claimed = source.filter(F.col("writer_id") == tag).select(
+        F.col("pk").alias("EventID")
+    )
+    return events.join(claimed, "EventID", "left_semi")
 
 
 def binpack_ledger_closed_days(
@@ -338,7 +439,7 @@ def binpack_ledger_closed_days(
     :func:`compact_ledger`'s job to drop whole.
 
     Reader safety, in order of exposure: writers and locked readers (the
-    streaming sink's gate, ``ledger_update_atomic``) serialize on the
+    gate inside :func:`check_and_mark`) serialize on the
     lock — no exposure. Unlocked readers race an ADD-THEN-UNLINK
     sequence: the packed file lands in the day directory first (one
     atomic rename), and only then are the old files unlinked — a reader
@@ -363,7 +464,6 @@ def binpack_ledger_closed_days(
 
     if now_epoch is None:
         now_epoch = int(_time.time())
-    base_schema = "pk string, seenAt timestamp, expiresAt long, writer_id string"
     cutoff_day = utc_day_of(now_epoch)
     packed: dict[str, int] = {}
     with LedgerLock(path):
@@ -396,7 +496,7 @@ def binpack_ledger_closed_days(
             ]
             day_schema = ", ".join(
                 s
-                for s in base_schema.split(", ")
+                for s in LEDGER_DDL.split(", ")
                 if s.split(" ")[0] in cols
             )
             (

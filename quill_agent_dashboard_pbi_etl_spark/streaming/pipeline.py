@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.adapter import normalize_webhooks, to_physical_rows
-from ..schemas import ALOWARE_BODY_SCHEMA
+from ..schemas import ALOWARE_BODY_SCHEMA, LEDGER_DDL
 from .state_store import StateStorage, storage_for
 
 # Landing-dir JSON shape: one envelope per line {source, body, receivedAt}.
@@ -188,47 +188,25 @@ def start_ledger_gated_fact_sink(
     backfills/replays of historical event time (default: wall clock per
     batch).
 
-    Crash safety (effectively-once output): claims are the commit point.
-    Each batch CLAIMS its new keys in the ledger tagged ``writer_id =
-    <generation>-b<id>`` (the generation id is a uuid persisted in the
-    checkpoint dir — see :func:`_generation_id` — so tags are unique across
-    stream incarnations AND across pipelines sharing one ledger), then
-    derives its survivors by READING BACK the keys its tag owns, and finally
-    overwrites its own ``gen=<generation>/batch_id=N`` output subdirectory.
-    A retry at any crash point reconstructs the identical survivor set from
-    the durable claims (keys it claimed before the crash are still tagged as
-    its own — NOT silently dropped as duplicates, which is what a
-    mark-then-write sink without tags would do) and the per-batch overwrite
-    is idempotent. Across checkpoint replacement: the rebuilt stream's batch
-    N carries a fresh generation, so it can neither adopt the old
-    incarnation's claims (no duplicate re-emission) nor overwrite the old
-    incarnation's committed output — a replayed event lands in exactly the
-    one subdirectory whose batch claimed its key, never twice — with ONE
-    loss window: a batch that claimed keys and crashed before writing
-    output is recoverable only by the SAME incarnation's retry. If the
-    checkpoint is rebuilt while such a batch is outstanding, its claims are
-    orphaned (live in the ledger under a dead tag) and those events land in
-    no output. :func:`reclaim_orphaned_claims` closes that window after the
-    fact — it finds dead-tag claims whose output never committed and
-    deletes them, so the next replay re-admits the events exactly once;
-    operationally, still prefer draining the stream before deleting a
-    checkpoint. Output layout is
+    Crash safety: each batch claims through :func:`sinks.check_and_mark`
+    under the tag ``<generation>-b<id>`` (the generation id is a uuid
+    persisted in the checkpoint dir, see :func:`_generation_id`), then
+    overwrites its own ``gen=<generation>/batch_id=N`` output
+    subdirectory, so a retry rebuilds the same survivors from its durable
+    claims and rewrites the same directory. Output layout is
     ``gen=<id>/batch_id=<n>/FactDateKey=<d>/``; readers of ``output_dir``
     see ``gen``/``batch_id`` as partition columns — do not mix
     differently-laid-out data in one output root.
     """
-    from ..operators.dedup import LedgerLock, gate_anti_join, keep_first
+    from ..operators.dedup import keep_first
     from ..operators.materialize import pin
-    from ..sinks import append_ledger, read_ledger, utc_day_of
+    from ..sinks import check_and_mark
 
-    sink_ledger_schema = "pk string, seenAt timestamp, expiresAt long, writer_id string"
     gen = _generation_id(checkpoint_dir, storage)  # immutable per incarnation
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         now = now_epoch if now_epoch is not None else int(time.time())
-        tag = f"{gen}-b{batch_id}"
-        # pin: `unique` is consumed 2× (claims anti-join + the survivors
+        # pin: `unique` is consumed 2× (the claim gate + the survivors
         # semi-join). Without it, every consumer re-executes the batch's
         # full upstream lineage — for a file-source batch that is the
         # ENTIRE JSON parse + normalize + keep_first window again (at the
@@ -246,105 +224,10 @@ def start_ledger_gated_fact_sink(
         )
         if seen.get["n"] == 0:
             return
-        with LedgerLock(ledger_path):
-            try:
-                # Partition-prunes expired expiryDay= dirs on the
-                # partitioned layout (the scan paid every trigger); the
-                # row-level TTL filter below stays authoritative for the
-                # boundary day. Flat layout: plain full read, as before.
-                ledger = read_ledger(spark, ledger_path, now_epoch=now)
-            except Exception:  # first batch bootstraps the ledger
-                ledger = spark.createDataFrame([], sink_ledger_schema)
-            live = ledger.filter(F.col("expiresAt") >= F.lit(now)).select(
-                F.col("pk").alias("EventID")
-            )
-            # Exact gate through the ONE join-shape selector shared with the
-            # batch gates: the BROADCAST-FLIP pathology — Spark can only
-            # build the RIGHT side of a left-anti join, so a live-ledger
-            # estimate landing UNDER the broadcast threshold while being the
-            # LARGER side hash-builds millions of live keys per trigger
-            # (measured ~5.7 s/trigger over an 8-batch drain on the pruned
-            # partitioned layout; SCALE_LADDER.json streaming_ledger_layout
-            # + small_batch_gate) — auto-inverts to anti_join_small_left in
-            # exactly that regime; outside it the plain anti-join stands.
-            # Estimates are driver-side plan stats (no job). See
-            # operators.dedup.gate_anti_join.
-            new_events = gate_anti_join(unique, live, "EventID")
-            # pin: materialize the claim set once under the lock; its row
-            # count rides the pin's own job as an Observation, so deciding
-            # whether to append costs no extra Spark job and the append
-            # does not re-run the ledger anti-join. keep_first already
-            # left one row per EventID, so the claims need no dedup.
-            obs = Observation()
-            claims = pin(
-                new_events
-                .select(
-                    F.col("EventID").alias("pk"),
-                    F.col("EventTime").alias("seenAt"),
-                    # expiresAt is PROCESSING time + TTL, matching the gate's
-                    # wall-clock filter and the reference's checkAndMark
-                    # (ledger.repo.ts:12, `now + DYNAMO_TTL_DAYS`): a claim
-                    # protects for ttl_days from when it was MADE. Deriving
-                    # it from event time would pre-expire claims for
-                    # late/backfill data older than the TTL, silently
-                    # re-admitting their duplicates in later micro-batches.
-                    F.lit(now + ttl_days * 86400).cast("long").alias("expiresAt"),
-                    F.lit(tag).alias("writer_id"),
-                )
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-            )
-            # An all-duplicate batch claims nothing — skip the append so a
-            # long-running stream doesn't shed one empty parquet file set
-            # per trigger.
-            if obs.get["n"] > 0:
-                # The sink's three-valued flag passes through verbatim:
-                # None follows the existing layout, an explicit True/False
-                # establishes-or-enforces it (append_ledger raises on a
-                # contradiction).
-                append_ledger(
-                    claims,
-                    ledger_path,
-                    partition_by_expiry=partition_by_expiry,
-                )
-        # Verify outside the lock: survivors = the keys THIS tag owns in the
-        # durable ledger — replay-stable even if we crashed mid-cycle above.
-        # Deliberately NO ignoreMissingFiles here: a concurrent locked
-        # rewrite (reclaim / flat compaction rename-swap) racing this
-        # unlocked read must FAIL the batch — the retry replays cleanly —
-        # never read an empty ledger and commit an empty output WITH
-        # _SUCCESS while the claims stand (that would suppress the events
-        # forever). Partitioned compaction can't race this read into
-        # missing files either way: it only drops days strictly before
-        # today, and this read prunes to [today, today+ttl].
-        claimed_src = spark.read.schema(sink_ledger_schema).parquet(
-            ledger_path
+        survivors = check_and_mark(
+            unique, ledger_path, f"{gen}-b{batch_id}", now, ttl_days,
+            partition_by_expiry,
         )
-        if "expiryDay" in claimed_src.columns:
-            # RANGE prune, not equality on day(now + ttl): a crash-replay
-            # of a batch that already appended claims recomputes `now`,
-            # and if the retry crossed a UTC midnight the recomputed
-            # day(now + ttl) is one day PAST the day the first attempt's
-            # claims landed in — an equality prune would read back zero
-            # claims for this tag and commit an EMPTY output with
-            # _SUCCESS while the claims stand, suppressing the events
-            # forever (and reclaim_orphaned_claims would skip the tag:
-            # its output looks committed). Any claim this tag still owns
-            # expires strictly in the future, so >= day(now) keeps every
-            # replay-relevant claim regardless of midnight crossings;
-            # <= day(now + ttl) bounds the scan to the TTL window (an
-            # earlier attempt's expiresAt = now1 + ttl <= now + ttl, so
-            # the upper bound can never exclude this tag's claims).
-            claimed_src = claimed_src.filter(
-                (F.col("expiryDay") >= F.lit(utc_day_of(now)).cast("date"))
-                & (
-                    F.col("expiryDay")
-                    <= F.lit(utc_day_of(now + ttl_days * 86400)).cast("date")
-                )
-            )
-        claimed = claimed_src.filter(F.col("writer_id") == tag).select(
-            F.col("pk").alias("EventID")
-        )
-        survivors = unique.join(claimed, "EventID", "left_semi")
         (
             to_physical_rows(survivors)
             .write.mode("overwrite")
@@ -613,9 +496,10 @@ def _generation_id(checkpoint_dir: str, storage: StateStorage | None = None) -> 
 # --------------------------------------------------------------------------- #
 
 # The ledger-gated sink's claim tags: <12-hex generation id>-b<batch id>.
-# Rows whose writer_id does not match are never reclaim candidates: batch
-# ledger_update rows, and the "reclaimed:<tag>" rows an older ledger may
-# still hold (they stay protective claims until their TTL expires).
+# Rows whose writer_id does not match are never reclaim candidates: rows
+# appended untagged or under a tag of another form, and the
+# "reclaimed:<tag>" rows an older ledger may still hold (they stay
+# protective claims until their TTL expires).
 _SINK_TAG_RE = r"^([0-9a-f]{12})-b(\d+)$"
 
 
@@ -698,7 +582,6 @@ def reclaim_orphaned_claims(
             "supported"
         )
 
-    ledger_schema = "pk string, seenAt timestamp, expiresAt long, writer_id string"
     live_gens = _live_generations(live_checkpoint_dirs, storage)
     out_storage = storage or storage_for(output_dir)
 
@@ -707,7 +590,7 @@ def reclaim_orphaned_claims(
     try:
         from ..sinks import ledger_is_partitioned
 
-        reader = spark.read.schema(ledger_schema)
+        reader = spark.read.schema(LEDGER_DDL)
         if ledger_is_partitioned(ledger_path):
             # This unlocked read races compact_ledger's locked partition
             # drops; a vanished expiryDay= dir held only fully-expired
@@ -717,7 +600,7 @@ def reclaim_orphaned_claims(
             reader = reader.option("ignoreMissingFiles", "true")
         ledger = reader.parquet(ledger_path)
     except Exception:  # no ledger yet — nothing to reclaim
-        return spark.createDataFrame([], ledger_schema)
+        return spark.createDataFrame([], LEDGER_DDL)
     if "expiryDay" in ledger.columns:  # expiry-partitioned layout
         ledger = ledger.drop("expiryDay")
 
@@ -739,7 +622,7 @@ def reclaim_orphaned_claims(
         if "_SUCCESS" not in out_storage.list_dir(batch_out):
             orphan_tags.append(tag)
     if not orphan_tags:
-        return spark.createDataFrame([], ledger_schema)
+        return spark.createDataFrame([], LEDGER_DDL)
 
     # Materialize the orphan rows BEFORE any rewrite touches the files
     # beneath the plan.
@@ -764,7 +647,7 @@ def reclaim_orphaned_claims(
         spark,
         ledger_path,
         lambda current: current.filter(~F.col("writer_id").isin(orphan_tags)),
-        schema=ledger_schema,
+        schema=LEDGER_DDL,
     )
     return orphans
 

@@ -117,7 +117,9 @@ def test_create_dataset_and_fact_roundtrip(spark, tmp_path):
 
 
 def test_ledger_bootstrap_append_prune(spark, tmp_path):
-    """K4/K5 + TTL prune."""
+    """K4/K5 + TTL prune: only the live entry still gates its key."""
+    from quill_agent_dashboard_pbi_etl_spark.operators import dedup
+
     path = str(tmp_path / "ledger")
     sinks.ledger_bootstrap(spark, path)
     import datetime as dt
@@ -127,7 +129,10 @@ def test_ledger_bootstrap_append_prune(spark, tmp_path):
         "pk string, seenAt timestamp, expiresAt long",
     )
     sinks.append_ledger(entries, path)
-    live = sinks.prune_ledger(spark, path, now_epoch=500)
+    ledger = sinks.read_ledger(spark, path, now_epoch=500)
+    keys = ledger.select("pk")
+    admitted = dedup.ledger_gate(keys, ledger, "pk", now_epoch=500)
+    live = keys.subtract(admitted)
     assert {r.pk for r in live.collect()} == {"k2"}
 
 
