@@ -197,13 +197,12 @@ def anti_join_small_left(
     join, so a 12.5k-event micro-batch gating against a 10.7M-key live
     ledger either sort-merge-shuffles all 10.7M rows (estimate above the
     broadcast threshold) or — worse — builds a fresh 10.7M-key broadcast
-    hash per trigger when partition pruning drops the estimate just UNDER
-    the threshold (the r13 streaming layout A/B: the pruned ledger's
-    honest 55 MB estimate flipped the gate to BroadcastHashJoin BuildRight
-    and cost ~5.7 s/trigger over an 8-batch drain — a long-lived streaming
-    JVM rebuilding and GC'ing the broadcast every trigger amplifies what a
-    clean one-shot JVM prices at ~0.3 s. Better stats, worse plan;
-    ``SCALE_LADDER.json streaming_ledger_layout`` + ``small_batch_gate``).
+    hash per trigger when the ledger's estimate lands just UNDER the
+    threshold (measured in r13: a 55 MB estimate flipped the gate to
+    BroadcastHashJoin BuildRight and cost ~5.7 s/trigger over an 8-batch
+    drain — a long-lived streaming JVM rebuilding and GC'ing the broadcast
+    every trigger amplifies what a clean one-shot JVM prices at ~0.3 s;
+    SCALE.md, ``SCALE_LADDER.json`` ``small_batch_gate``).
     Both broadcasts here are bounded by the SMALL side; the big side is
     scanned once, map-side, and never shuffled. Identical result to the
     plain anti-join: ``left ∖ (right ⋉ left) = left ∖ right`` (null keys
@@ -481,25 +480,12 @@ def rewrite_ledger_atomic(spark, ledger_path: str, transform, schema=None):
     rewritten DataFrame (reading the new files). Used by TTL compaction
     (``sinks.compact_ledger``) and the streaming orphan-reclaim job.
 
-    LAYOUT-PRESERVING: on an expiry-partitioned ledger
-    (``sinks.append_ledger(partition_by_expiry=True)``) the scratch dir is
-    written with the same ``expiryDay=`` partitioning, so a rewrite (TTL
-    compaction on the flat path, orphan release) never silently
-    flattens the production layout. ``transform`` stays layout-agnostic:
-    the partition column is dropped before the transform runs and
-    RE-DERIVED from ``expiresAt`` afterwards — valid because ``expiryDay``
-    is a pure UTC function of ``expiresAt`` (``sinks.expiry_day_col``), so
-    any transform that filters rows (or even rewrites
-    ``expiresAt``) yields the correct partition for every surviving row by
-    construction."""
+    One layout: the scratch dir is written flat. An ``expiryDay``
+    partition column (a root from an older release that partitioned the
+    ledger by expiry day) is dropped before ``transform`` runs, so any
+    rewrite of such a root migrates it flat."""
     import os
     import shutil
-
-    from ..sinks import (
-        expiry_day_col,
-        ledger_is_partitioned,
-        mark_ledger_partitioned,
-    )
 
     if "://" in ledger_path:
         raise NotImplementedError(
@@ -508,37 +494,17 @@ def rewrite_ledger_atomic(spark, ledger_path: str, transform, schema=None):
         )
     with LedgerLock(ledger_path):
         finish_interrupted_ledger_swap(ledger_path)
-        partitioned = ledger_is_partitioned(ledger_path)
         reader = spark.read.schema(schema) if schema is not None else spark.read
         current = reader.parquet(ledger_path)
         if "expiryDay" in current.columns:
             current = current.drop("expiryDay")
-        rewritten = transform(current)
         new, old = ledger_path + ".reclaim-new", ledger_path + ".reclaim-old"
-        if partitioned:
-            # One file per expiry day (same small-files hygiene as
-            # sinks.append_ledger — a rewrite is also the natural point
-            # where a day's accumulated per-append files re-compact).
-            (
-                rewritten.withColumn("expiryDay", expiry_day_col())
-                .repartition(F.col("expiryDay"))
-                .write.mode("overwrite")
-                .partitionBy("expiryDay")
-                .parquet(new)
-            )
-            # The durable layout marker lives in the dir being swapped
-            # out — re-create it in the scratch so the swap can't shed it
-            # (an all-rows-dropped rewrite would otherwise leave a fresh-
-            # looking root that auto-detects flat).
-            mark_ledger_partitioned(new)
-        else:
-            rewritten.write.mode("overwrite").parquet(new)
+        transform(current).write.mode("overwrite").parquet(new)
         os.rename(ledger_path, old)
         os.rename(new, ledger_path)
         shutil.rmtree(old, ignore_errors=True)
     final = spark.read.schema(schema) if schema is not None else spark.read
-    out = final.parquet(ledger_path)
-    return out.drop("expiryDay") if "expiryDay" in out.columns else out
+    return final.parquet(ledger_path)
 
 
 # --------------------------------------------------------------------------- #

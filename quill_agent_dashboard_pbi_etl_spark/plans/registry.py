@@ -385,7 +385,7 @@ def q_hubspot_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {NORMALIZED_CTE}, {_LEDGER_CTE}
 SELECT n.EventID AS pk,
        strftime(min(n.EventTime), '%Y-%m-%d %H:%M:%S') AS seenAt,
-       CAST(floor(epoch(min(n.EventTime))) AS BIGINT) + 14*86400 AS expiresAt
+       CAST(epoch(TIMESTAMP '{NOW_ANCHOR}') AS BIGINT) + 14*86400 AS expiresAt
 FROM normalized n
 WHERE n.EventID NOT IN (
   SELECT pk FROM ledger
@@ -397,7 +397,10 @@ GROUP BY n.EventID
 def q_ledger_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K4 ledger append side: the (pk, seenAt, expiresAt) rows written for
     events that passed the gate — the conditional-write marking of
-    ledger.repo.ts:5-35 as a set operation."""
+    ledger.repo.ts:5-35 as a set operation. ``expiresAt`` is processing
+    time + TTL, the rule of ``sinks.check_and_mark`` (the engine's one
+    ledger write): a claim protects for ``LEDGER_TTL_DAYS`` from when it
+    was made, not from its event time."""
     fact = normalized_fact(spark, sf_dir).withColumnRenamed("EventID", "dedup_key")
     ledger = _synthetic_ledger(fact, "dedup_key")
     survivors = dedup.ledger_gate(fact, ledger, key_col="dedup_key", now_epoch=NOW_EPOCH)
@@ -406,7 +409,7 @@ def q_ledger_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     return entries.select(
         F.col("dedup_key").alias("pk"),
         F.date_format("EventTime", "yyyy-MM-dd HH:mm:ss").alias("seenAt"),
-        (F.unix_timestamp("EventTime") + LEDGER_TTL_DAYS * 86400).alias("expiresAt"),
+        F.lit(NOW_EPOCH + LEDGER_TTL_DAYS * 86400).cast("long").alias("expiresAt"),
     )
 
 

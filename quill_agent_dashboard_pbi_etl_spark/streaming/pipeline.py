@@ -148,30 +148,13 @@ def start_ledger_gated_fact_sink(
     available_now: bool = False,
     now_epoch: int | None = None,
     storage: StateStorage | None = None,
-    partition_by_expiry: bool | None = None,
 ) -> StreamingQuery:
     """K4 under streaming: per-micro-batch atomic ledger gate+mark against an
     EXTERNAL parquet ledger (the reference's DynamoDB cycle verbatim,
-    ledger.repo.ts:16-27), then the K1 append sink.
-
-    ``partition_by_expiry`` carries ``sinks.append_ledger``'s three-valued
-    contract through unchanged (ADVICE r13 — the flag used to map False to
-    "follow existing", making it impossible to ENFORCE flat): ``True``
-    keeps the ledger in the expiry-partitioned production layout, every
-    per-batch gate scan partition-prunes the expired ``expiryDay=``
-    directories at the manifest — the scan the stream pays EVERY trigger —
-    and the read-back verify prunes to the ``[day(now), day(now + ttl)]``
-    window its claims can live in; ``False`` enforces the flat layout; the
-    default ``None`` follows whatever layout the ledger already has (a
-    fresh path starts flat). Claims, tags, crash recovery, and the reclaim
-    job are layout-independent: the rewrite path
-    (``rewrite_ledger_atomic``) preserves the partitioning by re-deriving
-    ``expiryDay`` from ``expiresAt``. An explicit ``True``/``False`` that
-    contradicts an EXISTING ledger's layout fails loudly at the first
-    claim append (``sinks.append_ledger`` raises) rather than mixing
-    layouts under one root — Spark reads a mixed root by silently dropping
-    the flat rows, which would hide every prior claim from the gate and
-    re-admit its duplicates.
+    ledger.repo.ts:16-27), then the K1 append sink. The ledger is flat
+    parquet (``sinks.append_ledger``); a root an older release partitioned
+    by expiry day fails the first claim until one ``sinks.compact_ledger``
+    run rewrites it flat.
 
     Why this exists alongside ``dropDuplicatesWithinWatermark``: the state-
     store dedup horizon lives INSIDE the streaming checkpoint — rebuild the
@@ -225,8 +208,7 @@ def start_ledger_gated_fact_sink(
         if seen.get["n"] == 0:
             return
         survivors = check_and_mark(
-            unique, ledger_path, f"{gen}-b{batch_id}", now, ttl_days,
-            partition_by_expiry,
+            unique, ledger_path, f"{gen}-b{batch_id}", now, ttl_days
         )
         (
             to_physical_rows(survivors)
@@ -588,21 +570,9 @@ def reclaim_orphaned_claims(
     with LedgerLock(ledger_path):
         finish_interrupted_ledger_swap(ledger_path)
     try:
-        from ..sinks import ledger_is_partitioned
-
-        reader = spark.read.schema(LEDGER_DDL)
-        if ledger_is_partitioned(ledger_path):
-            # This unlocked read races compact_ledger's locked partition
-            # drops; a vanished expiryDay= dir held only fully-expired
-            # claims, which no longer gate anything (their events re-admit
-            # on replay), so skipping its files is semantically exact —
-            # the same argument as sinks.read_ledger.
-            reader = reader.option("ignoreMissingFiles", "true")
-        ledger = reader.parquet(ledger_path)
+        ledger = spark.read.schema(LEDGER_DDL).parquet(ledger_path)
     except Exception:  # no ledger yet — nothing to reclaim
         return spark.createDataFrame([], LEDGER_DDL)
-    if "expiryDay" in ledger.columns:  # expiry-partitioned layout
-        ledger = ledger.drop("expiryDay")
 
     # Dead-generation sink tags, then keep only those without committed
     # output. The distinct-tag collect is bounded driver-side state.

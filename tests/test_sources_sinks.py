@@ -129,7 +129,7 @@ def test_ledger_bootstrap_append_prune(spark, tmp_path):
         "pk string, seenAt timestamp, expiresAt long",
     )
     sinks.append_ledger(entries, path)
-    ledger = sinks.read_ledger(spark, path, now_epoch=500)
+    ledger = sinks.read_ledger(spark, path)
     keys = ledger.select("pk")
     admitted = dedup.ledger_gate(keys, ledger, "pk", now_epoch=500)
     live = keys.subtract(admitted)
@@ -166,591 +166,58 @@ def test_compact_ledger_rewrites_in_place(spark, tmp_path):
     assert not os.path.exists(path + ".lock")
 
 
-def test_expiry_partitioned_ledger_layout_and_gate_parity(spark, tmp_path):
-    """append_ledger(partition_by_expiry=True) lays out expiryDay=<D>/
-    partitions; read_ledger returns the same logical rows as the flat
-    layout (partition column dropped) and partition-prunes expired days
-    when given now_epoch; the gate result is identical across layouts."""
+def test_legacy_partitioned_ledger_is_refused_then_migrated_by_compaction(
+    spark, tmp_path
+):
+    """A root holding expiryDay= directories (the layout an older release
+    wrote) is never appended to: a flat file in it would be invisible to
+    every reader. check_and_mark refuses it and names compact_ledger; one
+    compact_ledger run rewrites it flat, drops the expired claim, and every
+    live claim still gates its key."""
     import datetime as dt
     import os
 
-    from quill_agent_dashboard_pbi_etl_spark.operators.dedup import ledger_gate
-
+    now = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
     day = 86400
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    entries = spark.createDataFrame(
-        [
-            ("a", dt.datetime(2024, 1, 1), t0 - 2 * day),   # expired, old day
-            ("b", dt.datetime(2024, 1, 2), t0 - 3600),      # expired TODAY
-            ("c", dt.datetime(2024, 1, 3), t0 + 3600),      # live, today
-            ("d", dt.datetime(2024, 1, 4), t0 + 5 * day),   # live, future day
-        ],
-        "pk string, seenAt timestamp, expiresAt long",
+    path = str(tmp_path / "ledger")
+    (
+        spark.createDataFrame(
+            [
+                ("A:1", dt.datetime(2024, 1, 1), now - 2 * day, "old-b0"),
+                ("A:2", dt.datetime(2024, 1, 2), now + 3 * day, "old-b1"),
+                ("A:3", dt.datetime(2024, 1, 3), now + 9 * day, "old-b2"),
+            ],
+            "pk string, seenAt timestamp, expiresAt long, writer_id string",
+        )
+        .withColumn(
+            "expiryDay",
+            F.date_from_unix_date(F.floor(F.col("expiresAt") / day).cast("int")),
+        )
+        .write.partitionBy("expiryDay")
+        .parquet(path)
     )
-    flat, part = str(tmp_path / "flat"), str(tmp_path / "part")
-    sinks.append_ledger(entries, flat)
-    sinks.append_ledger(entries, part, partition_by_expiry=True)
-    assert any(d.startswith("expiryDay=") for d in os.listdir(part))
-
-    got = {
-        (r.pk, r.expiresAt)
-        for r in sinks.read_ledger(spark, part).collect()
-    }
-    assert got == {(r.pk, r.expiresAt) for r in entries.collect()}
-    assert "expiryDay" not in sinks.read_ledger(spark, part).columns
+    open(os.path.join(path, "_LEDGER_LAYOUT_PARTITIONED"), "w").close()
 
     events = spark.createDataFrame(
-        [("a",), ("b",), ("c",), ("d",), ("e",)], "dedup_key string"
+        [(f"A:{i}", dt.datetime(2024, 1, 9)) for i in (1, 2, 3, 4)],
+        "EventID string, EventTime timestamp",
     )
-    survivors_flat = {
-        r.dedup_key
-        for r in ledger_gate(
-            events, sinks.read_ledger(spark, flat), now_epoch=t0
-        ).collect()
-    }
-    survivors_part = {
-        r.dedup_key
-        for r in ledger_gate(
-            events, sinks.read_ledger(spark, part, now_epoch=t0), now_epoch=t0
-        ).collect()
-    }
-    # expired a/b re-admit; live c/d blocked; e unseen
-    assert survivors_flat == survivors_part == {"a", "b", "e"}
-
-
-def test_read_ledger_prunes_expired_partitions_in_plan(spark, tmp_path):
-    """The now_epoch predicate must land as a PARTITION filter on the scan
-    (whole expired days never leave the manifest), not a post-scan row
-    filter. Partition filters are fixed at analysis time, so the initial
-    plan is the right object here."""
-    import datetime as dt
-
-    day = 86400
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    entries = spark.createDataFrame(
-        [
-            ("a", dt.datetime(2024, 1, 1), t0 - 2 * day),
-            ("d", dt.datetime(2024, 1, 4), t0 + 5 * day),
-        ],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    path = str(tmp_path / "ledger")
-    sinks.append_ledger(entries, path, partition_by_expiry=True)
-    plan = (
-        sinks.read_ledger(spark, path, now_epoch=t0)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan
-    assert "expiryDay" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-    assert "2024-01-10" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-
-
-def test_compact_ledger_partitioned_drops_whole_days(spark, tmp_path):
-    """On the expiry-partitioned layout, compaction drops exactly the fully
-    expired day directories (no rewrite, no swap debris), keeps the
-    boundary day whole (row-level TTL still gates it), counts the dropped
-    rows, and reruns as a no-op."""
-    import datetime as dt
-    import os
-
-    day = 86400
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    entries = spark.createDataFrame(
-        [
-            ("a", dt.datetime(2024, 1, 1), t0 - 2 * day),   # day 2024-01-08
-            ("a2", dt.datetime(2024, 1, 1), t0 - 2 * day),  # same dead day
-            ("b", dt.datetime(2024, 1, 2), t0 - 3600),      # boundary day, expired
-            ("c", dt.datetime(2024, 1, 3), t0 + 3600),      # boundary day, live
-            ("d", dt.datetime(2024, 1, 4), t0 + 5 * day),   # future day
-        ],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    path = str(tmp_path / "ledger")
-    sinks.append_ledger(entries, path, partition_by_expiry=True)
-
-    dropped = sinks.compact_ledger(spark, path, now_epoch=t0)
-    assert dropped == 2  # only the 2024-01-08 partition is fully past
-    left = {r.pk for r in sinks.read_ledger(spark, path).collect()}
-    assert left == {"b", "c", "d"}  # boundary day intact (b still gated out row-level)
-    days = sorted(
-        d for d in os.listdir(path) if d.startswith("expiryDay=")
-    )
-    assert days == ["expiryDay=2024-01-10", "expiryDay=2024-01-15"]
-    # idempotent; no lock/swap debris
-    assert sinks.compact_ledger(spark, path, now_epoch=t0) == 0
-    assert not os.path.exists(path + ".lock")
-    assert not os.path.exists(path + ".reclaim-new")
-    # the NEXT day's run retires the then-complete boundary day
-    assert sinks.compact_ledger(spark, path, now_epoch=t0 + day) == 2
-    assert {r.pk for r in sinks.read_ledger(spark, path).collect()} == {"d"}
-
-
-def _seed_accreted_ledger(spark, path, t0):
-    """Partitioned ledger with per-append file accretion: 3 live days
-    (d+1, d+2, d+3 — the max is the OPEN day) × 3 appends each, plus one
-    fully expired day. Returns the expected live row set."""
-    import datetime as dt
-
-    day = 86400
-    for i in range(3):  # three appends -> three files per day dir
-        entries = spark.createDataFrame(
-            [
-                (f"a{i}", dt.datetime(2024, 1, 9), t0 + 1 * day + i),
-                (f"b{i}", dt.datetime(2024, 1, 9), t0 + 2 * day + i),
-                (f"c{i}", dt.datetime(2024, 1, 9), t0 + 3 * day + i),
-            ],
-            "pk string, seenAt timestamp, expiresAt long",
-        )
-        sinks.append_ledger(entries, path, partition_by_expiry=True)
-    dead = spark.createDataFrame(
-        [("x", dt.datetime(2024, 1, 1), t0 - 2 * day)],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    sinks.append_ledger(dead, path, partition_by_expiry=True)
-    return {f"{p}{i}" for p in "abc" for i in range(3)}
-
-
-def test_binpack_closed_days_packs_and_preserves_rows(spark, tmp_path):
-    """Directive r13-2: bin-packing rewrites each CLOSED live day (not the
-    max/open day, not expired days) down to one file, preserves the exact
-    row set and the partitioned layout, heals exact-duplicate crash
-    debris, and is idempotent."""
-    import datetime as dt
-    import os
-    import shutil
-
-    day = 86400
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    path = str(tmp_path / "ledger")
-    live_pks = _seed_accreted_ledger(spark, path, t0)
-
-    def files_of(d):
-        full = os.path.join(path, d)
-        return sorted(
-            f for f in os.listdir(full) if f.endswith(".parquet")
-        )
-
-    days = sorted(d for d in os.listdir(path) if d.startswith("expiryDay="))
-    assert len(days) == 4  # 1 expired + 3 live
-    for d in days[1:]:
-        assert len(files_of(d)) == 3
-
-    # exact-duplicate crash debris in a closed day: a previous pack died
-    # between the rename and the unlinks
-    debris_day = days[1]
-    src = os.path.join(path, debris_day, files_of(debris_day)[0])
-    shutil.copy(src, os.path.join(path, debris_day, "packed-debris.parquet"))
-
-    before = {
-        tuple(r)
-        for r in sinks.read_ledger(spark, path, now_epoch=t0)
-        .filter(F.col("expiresAt") >= t0)
-        .collect()
-    }
-    packed = sinks.binpack_ledger_closed_days(
-        spark, path, now_epoch=t0, min_files=2
-    )
-    # the two CLOSED live days packed (debris counted); open + expired untouched
-    assert packed == {days[1]: 4, days[2]: 3}
-    assert len(files_of(days[1])) == 1
-    assert len(files_of(days[2])) == 1
-    assert len(files_of(days[3])) == 3  # open day keeps its files
-    assert len(files_of(days[0])) >= 1  # expired day untouched
-
-    after_df = sinks.read_ledger(spark, path, now_epoch=t0).filter(
-        F.col("expiresAt") >= t0
-    )
-    after = {tuple(r) for r in after_df.collect()}
-    assert after == before
-    assert after_df.count() == len(before)  # debris duplicates healed
-    assert {r.pk for r in after_df.collect()} == live_pks
-
-    # idempotent: a second run finds nothing above the threshold
-    assert sinks.binpack_ledger_closed_days(
-        spark, path, now_epoch=t0, min_files=2
-    ) == {}
-    assert not os.path.exists(os.path.join(path, ".binpack-scratch"))
+    with pytest.raises(ValueError, match="compact_ledger"):
+        sinks.check_and_mark(events, path, "new-b0", now_epoch=now)
+    assert not [f for f in os.listdir(path) if f.endswith(".parquet")]
     assert not os.path.exists(path + ".lock")
 
-
-def test_compact_ledger_binpack_optin(spark, tmp_path):
-    """compact_ledger(binpack_min_files=N) drops expired days AND packs
-    closed live days in one maintenance call; the default keeps the pure
-    TTL contract (no live-day rewrites)."""
-    import datetime as dt
-    import os
-
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    path = str(tmp_path / "ledger")
-    live_pks = _seed_accreted_ledger(spark, path, t0)
-
-    # default: expired day dropped, live days untouched
-    assert sinks.compact_ledger(spark, path, now_epoch=t0) == 1
-    days = sorted(d for d in os.listdir(path) if d.startswith("expiryDay="))
-    assert len(days) == 3
-    assert all(
-        sum(
-            1
-            for f in os.listdir(os.path.join(path, d))
-            if f.endswith(".parquet")
-        )
-        == 3
-        for d in days
-    )
-
-    # opt-in: closed days packed
-    assert sinks.compact_ledger(spark, path, now_epoch=t0, binpack_min_files=2) == 0
-    counts = [
-        sum(
-            1
-            for f in os.listdir(os.path.join(path, d))
-            if f.endswith(".parquet")
-        )
-        for d in days
-    ]
-    assert counts == [1, 1, 3]
-    assert {
-        r.pk for r in sinks.read_ledger(spark, path, now_epoch=t0).collect()
-    } == live_pks
-
-
-def test_ledger_layout_survives_full_expiry_compaction(spark, tmp_path):
-    """ADVICE r13 (layout amnesia): after compaction drops EVERY expiryDay=
-    directory of a fully-expired partitioned ledger, the layout choice must
-    stay durable — the next auto-detected append (partition_by_expiry=None,
-    e.g. a sink started with the default) must re-establish the PARTITIONED
-    layout, not silently flip the production ledger to flat."""
-    import datetime as dt
-    import os
-
-    day = 86400
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    entries = spark.createDataFrame(
-        [("a", dt.datetime(2024, 1, 1), t0 - 2 * day)],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    path = str(tmp_path / "ledger")
-    sinks.append_ledger(entries, path, partition_by_expiry=True)
-
-    assert sinks.compact_ledger(spark, path, now_epoch=t0) == 1
-    assert not any(d.startswith("expiryDay=") for d in os.listdir(path))
-    # the emptied root still knows it is partitioned...
-    assert sinks.ledger_layout(path) is True
-    # ...so an auto-detect append stays partitioned
-    fresh = spark.createDataFrame(
-        [("b", dt.datetime(2024, 1, 11), t0 + 5 * day)],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    sinks.append_ledger(fresh, path, partition_by_expiry=None)
-    assert any(d.startswith("expiryDay=") for d in os.listdir(path))
-    # and an explicit flat append against the emptied root fails loudly
-    with pytest.raises(ValueError, match="already holds a"):
-        sinks.append_ledger(fresh, path, partition_by_expiry=False)
-    # read path unaffected by the marker file
-    assert {r.pk for r in sinks.read_ledger(spark, path).collect()} == {"b"}
-
-
-def test_ledger_layout_marker_survives_atomic_rewrite(spark, tmp_path):
-    """The durable layout marker must ride through rewrite_ledger_atomic's
-    two-rename swap (the marker lives in the dir being swapped out), even
-    when the transform drops every row."""
-    import datetime as dt
-    import os
-
-    from quill_agent_dashboard_pbi_etl_spark.operators.dedup import (
-        rewrite_ledger_atomic,
-    )
-
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    entries = spark.createDataFrame(
-        [("a", dt.datetime(2024, 1, 1), t0 + 86400)],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    path = str(tmp_path / "ledger")
-    sinks.append_ledger(entries, path, partition_by_expiry=True)
-
-    rewrite_ledger_atomic(
-        spark,
-        path,
-        lambda df: df.filter("1=0"),
-        schema="pk string, seenAt timestamp, expiresAt long",
-    )
-    assert not any(d.startswith("expiryDay=") for d in os.listdir(path))
-    assert sinks.ledger_layout(path) is True
-    # explicit reset is the one path that forgets the layout
-    sinks.ledger_bootstrap(spark, path)
-    assert sinks.ledger_layout(path) is False or not os.path.isfile(
-        os.path.join(path, sinks.LEDGER_LAYOUT_MARKER)
-    )
-
-
-def test_ledger_expiry_day_is_utc_under_non_utc_session(spark, tmp_path):
-    """Directive r12-4: the expiryDay derivation must be hard-UTC epoch
-    arithmetic, immune to spark.sql.session.timeZone — otherwise a non-UTC
-    session writing or reading the ledger shifts day boundaries against
-    compact_ledger's hard-UTC cutoff. Pin: under America/New_York, the
-    layout, the read-side pruning cutoff, and the compaction cutoff all
-    agree with the UTC session's."""
-    import datetime as dt
-
-    day = 86400
-    # 2024-01-10 02:00 UTC == 2024-01-09 21:00 in New York: a session-tz
-    # derivation would bucket this expiry into the WRONG day (01-09).
-    t_edge = int(dt.datetime(2024, 1, 10, 2, tzinfo=dt.timezone.utc).timestamp())
-    entries = spark.createDataFrame(
-        [
-            ("edge", dt.datetime(2024, 1, 1), t_edge),
-            ("old", dt.datetime(2024, 1, 1), t_edge - 3 * day),
-            ("new", dt.datetime(2024, 1, 1), t_edge + 3 * day),
-        ],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    path = str(tmp_path / "ledger")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        sinks.append_ledger(entries, path, partition_by_expiry=True)
-        import os
-
-        days = sorted(
-            d for d in os.listdir(path) if d.startswith("expiryDay=")
-        )
-        assert days == [
-            "expiryDay=2024-01-07",
-            "expiryDay=2024-01-10",  # NOT 2024-01-09 (the NY-local day)
-            "expiryDay=2024-01-13",
-        ]
-        # read-side pruning at now = t_edge keeps the UTC boundary day
-        live = {
-            r.pk
-            for r in sinks.read_ledger(spark, path, now_epoch=t_edge).collect()
-        }
-        assert live == {"edge", "new"}
-        # compaction cutoff agrees: drops exactly the 01-07 dir
-        assert sinks.compact_ledger(spark, path, now_epoch=t_edge) == 1
-        left = {r.pk for r in sinks.read_ledger(spark, path).collect()}
-        assert left == {"edge", "new"}
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-
-
-def test_append_ledger_auto_matches_existing_layout(spark, tmp_path):
-    """append_ledger's default (partition_by_expiry=None) auto-detects the
-    existing layout — a default append into a partitioned root must land
-    partitioned (a flat file there breaks partition discovery for every
-    later reader), and a default append to a fresh/flat path stays flat."""
-    import datetime as dt
-    import os
-
-    day = 86400
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    first = spark.createDataFrame(
-        [("a", dt.datetime(2024, 1, 1), t0 + day)],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    more = spark.createDataFrame(
-        [("b", dt.datetime(2024, 1, 2), t0 + 2 * day)],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-
-    part = str(tmp_path / "part")
-    sinks.append_ledger(first, part, partition_by_expiry=True)
-    sinks.append_ledger(more, part)  # default: must match the layout
-    assert not [
-        f for f in os.listdir(part) if f.endswith(".parquet")
-    ], "default append dropped a flat file into a partitioned root"
-    got = {r.pk for r in sinks.read_ledger(spark, part).collect()}
-    assert got == {"a", "b"}
-
-    flat = str(tmp_path / "flat")
-    sinks.append_ledger(first, flat)  # fresh path: default stays flat
-    sinks.append_ledger(more, flat)
-    assert not [
-        d for d in os.listdir(flat) if d.startswith("expiryDay=")
-    ]
-    assert {r.pk for r in sinks.read_ledger(spark, flat).collect()} == {"a", "b"}
-
-    # An EXPLICIT flag contradicting the existing layout must raise, both
-    # directions — Spark reads a mixed root by silently dropping the flat
-    # rows, which would hide prior claims from every gate.
-    import pytest
-
-    with pytest.raises(ValueError, match="already holds a flat ledger"):
-        sinks.append_ledger(more, flat, partition_by_expiry=True)
-    with pytest.raises(ValueError, match="already holds a expiry-partitioned"):
-        sinks.append_ledger(more, part, partition_by_expiry=False)
-    # nothing was written by the refused appends
-    assert {r.pk for r in sinks.read_ledger(spark, flat).collect()} == {"a", "b"}
-    assert {r.pk for r in sinks.read_ledger(spark, part).collect()} == {"a", "b"}
-
-
-def test_compact_ledger_partitioned_counts_only_verified_deletes(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r12: (a) a failed rmtree must not contribute its rows to the
-    returned dropped count (they'd be double-counted next run); (b) a
-    crash-leftover EMPTY expiryDay= dir must not break the next run's read
-    (explicit schema, no inference over empty dirs)."""
-    import datetime as dt
-    import os
-    import shutil
-
-    day = 86400
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    entries = spark.createDataFrame(
-        [
-            ("a", dt.datetime(2024, 1, 1), t0 - 3 * day),
-            ("a2", dt.datetime(2024, 1, 1), t0 - 3 * day),
-            ("b", dt.datetime(2024, 1, 2), t0 - 2 * day),
-            ("c", dt.datetime(2024, 1, 3), t0 + 3 * day),
-        ],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    path = str(tmp_path / "ledger")
-    sinks.append_ledger(entries, path, partition_by_expiry=True)
-    blocked = os.path.join(path, "expiryDay=2024-01-07")
-    assert os.path.isdir(blocked)
-
-    real_rmtree = shutil.rmtree
-
-    def failing_rmtree(p, *a, **k):
-        if str(p) == blocked:
-            raise OSError("injected delete failure")
-        return real_rmtree(p, *a, **k)
-
-    monkeypatch.setattr(shutil, "rmtree", failing_rmtree)
-    # 2024-01-07 (a, a2) delete fails -> only 2024-01-08 (b) counts
-    assert sinks.compact_ledger(spark, path, now_epoch=t0) == 1
-    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
-    # retry drops the previously-failed dir, counting it exactly once
-    assert sinks.compact_ledger(spark, path, now_epoch=t0) == 2
-
-    # crash-leftover EMPTY partition dir: next run must not choke on it
-    os.makedirs(os.path.join(path, "expiryDay=2024-01-05"))
-    assert sinks.compact_ledger(spark, path, now_epoch=t0) == 0
-    assert {r.pk for r in sinks.read_ledger(spark, path).collect()} == {"c"}
-
-
-def test_append_ledger_partitioned_writes_one_file_per_day(spark, tmp_path):
-    """Small-files hygiene: one append = one parquet file per expiry day,
-    however many shuffle partitions the entries arrive in. Without the
-    day-key repartition each append fans out into (shuffle partitions ×
-    days) files and every later gate scan pays per-file open cost for all
-    of them — measured 2.9× slower on the 20M-key streaming drain
-    (SCALE_LADDER.json streaming_ledger_layout, pre-fix cell)."""
-    import datetime as dt
-    import os
-
-    day = 86400
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    entries = spark.range(2000).select(
-        F.concat(F.lit("pk-"), F.col("id")).alias("pk"),
-        F.lit(dt.datetime(2024, 1, 1)).alias("seenAt"),
-        (F.lit(t0) + (F.col("id") % 3) * day).alias("expiresAt"),
-    ).repartition(16)  # deliberately many input partitions
-    path = str(tmp_path / "ledger")
-    sinks.append_ledger(entries, path, partition_by_expiry=True)
-    day_dirs = [d for d in os.listdir(path) if d.startswith("expiryDay=")]
-    assert len(day_dirs) == 3
-    for d in day_dirs:
-        files = [
-            f
-            for f in os.listdir(os.path.join(path, d))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) == 1, (d, files)
-    # a second append adds exactly one more file per touched day
-    sinks.append_ledger(entries, path)  # auto-detects the layout
-    for d in day_dirs:
-        files = [
-            f
-            for f in os.listdir(os.path.join(path, d))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) == 2, (d, files)
-
-
-def test_read_ledger_tolerates_concurrent_partition_drop(spark, tmp_path):
-    """ADVICE r12: a gate scan holds no lock, so compact_ledger's partition
-    drops can delete files between this reader's listing and its tasks.
-    The partitioned read sets ignoreMissingFiles — semantically exact,
-    because compaction only removes fully-expired days the row-level TTL
-    filter would drop anyway."""
-    import datetime as dt
-    import shutil
-
-    day = 86400
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    entries = spark.createDataFrame(
-        [
-            ("a", dt.datetime(2024, 1, 1), t0 - 3 * day),
-            ("c", dt.datetime(2024, 1, 3), t0 + 3 * day),
-        ],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    path = str(tmp_path / "ledger")
-    sinks.append_ledger(entries, path, partition_by_expiry=True)
-
-    led = sinks.read_ledger(spark, path, now_epoch=t0)  # listing happens here
-    # concurrent compaction drops the expired day before the scan runs
-    shutil.rmtree(str(tmp_path / "ledger" / "expiryDay=2024-01-07"))
-    assert {r.pk for r in led.collect()} == {"c"}
-    # an unpruned read (no now_epoch) survives too: the vanished rows are
-    # exactly the ones every gate's TTL filter would discard
-    led_all = sinks.read_ledger(spark, path)
-    assert {r.pk for r in led_all.collect()} == {"c"}
-
-
-def test_rewrite_ledger_atomic_preserves_partitioned_layout(spark, tmp_path):
-    """Directive r12-3: the locked rewrite on an expiry-partitioned ledger
-    must keep the layout (expiryDay= dirs re-derived from expiresAt), so
-    orphan-release reclaims never silently flatten the production layout;
-    transforms stay layout-agnostic (they see no expiryDay column)."""
-    import datetime as dt
-    import os
-
-    from pyspark.sql import functions as F
-
-    from quill_agent_dashboard_pbi_etl_spark.operators.dedup import (
-        rewrite_ledger_atomic,
-    )
-
-    day = 86400
-    t0 = int(dt.datetime(2024, 1, 10, 12, tzinfo=dt.timezone.utc).timestamp())
-    entries = spark.createDataFrame(
-        [
-            ("a", dt.datetime(2024, 1, 1), t0 - 3 * day),
-            ("c", dt.datetime(2024, 1, 3), t0 + 3 * day),
-            ("d", dt.datetime(2024, 1, 4), t0 + 5 * day),
-        ],
-        "pk string, seenAt timestamp, expiresAt long",
-    )
-    path = str(tmp_path / "ledger")
-    sinks.append_ledger(entries, path, partition_by_expiry=True)
-    before = sorted(d for d in os.listdir(path) if d.startswith("expiryDay="))
-
-    seen_cols = {}
-
-    def drop_a(df):
-        seen_cols["cols"] = df.columns
-        return df.filter(F.col("pk") != "a")
-
-    rewrite_ledger_atomic(spark, path, drop_a)
-    assert "expiryDay" not in seen_cols["cols"]  # transform is layout-blind
-    after = sorted(d for d in os.listdir(path) if d.startswith("expiryDay="))
-    assert after == [d for d in before if d != "expiryDay=2024-01-07"]
-    got = {r.pk for r in sinks.read_ledger(spark, path).collect()}
-    assert got == {"c", "d"}
-    # pruning still plans as a partition filter on the rewritten ledger
-    plan = (
-        sinks.read_ledger(spark, path, now_epoch=t0)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan
+    assert sinks.compact_ledger(spark, path, now_epoch=now) == 1
+    assert not [d for d in os.listdir(path) if d.startswith("expiryDay=")]
+    assert set(sinks.read_ledger(spark, path).columns) == {
+        "pk", "seenAt", "expiresAt", "writer_id"
+    }
+    out = sinks.check_and_mark(events, path, "new-b0", now_epoch=now)
+    assert sorted(r.EventID for r in out.collect()) == ["A:1", "A:4"]
+    owners = {r.pk: r.writer_id for r in sinks.read_ledger(spark, path).collect()}
+    assert owners == {
+        "A:1": "new-b0", "A:2": "old-b1", "A:3": "old-b2", "A:4": "new-b0"
+    }
 
 
 def test_push_rows_rest_chunking(spark):

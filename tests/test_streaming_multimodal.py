@@ -832,7 +832,7 @@ def test_batch_streaming_drift_parity(spark, tmp_path):
 # Orphaned-claims reclaim job (the ledger sink's one loss window, closed)
 # --------------------------------------------------------------------------- #
 
-def _build_orphan_scenario(spark, tmp_path, partition_by_expiry=False):
+def _build_orphan_scenario(spark, tmp_path):
     """Reproduce the documented loss window with a REAL mid-batch kill:
 
     1. instance 1 (ckpt1, generation g1) drains event 10 — batch 0 claims
@@ -866,7 +866,6 @@ def _build_orphan_scenario(spark, tmp_path, partition_by_expiry=False):
         q = _pl.start_ledger_gated_fact_sink(
             fact, ledger, str(out), str(tmp_path / ckpt_name),
             available_now=True, now_epoch=now_epoch,
-            partition_by_expiry=partition_by_expiry,
         )
         if expect_fail:
             with pytest.raises(Exception):
@@ -961,126 +960,14 @@ def test_reclaim_orphaned_claims_release_readmits_once(spark, tmp_path):
     assert emitted == ["ALOWARE:1", "ALOWARE:10"]
 
 
-def test_partitioned_streaming_ledger_gate_parity_and_layout(spark, tmp_path):
-    """Directive r12-3: the streaming claim sink on an expiry-PARTITIONED
-    ledger — same emitted output as the flat run (gate parity), the ledger
-    keeps its expiryDay= layout across claim appends, duplicates stay
-    gated across restarts, and the per-batch gate scan partition-prunes."""
-    import json as _json
-    import os
-
-    from quill_agent_dashboard_pbi_etl_spark.functions.adapter import (
-        normalize_webhooks,
-    )
-    from quill_agent_dashboard_pbi_etl_spark.streaming import pipeline as _pl
-
-    import datetime as _dt
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    now_epoch = int(_dt.datetime(2024, 1, 20, tzinfo=_dt.timezone.utc).timestamp())
-    with open(landing / "a.json", "w") as f:
-        f.write(_json.dumps(_envelope(1)) + "\n")
-        f.write(_json.dumps(_envelope(2)) + "\n")
-
-    outs = {}
-    for layout, flag in (("flat", False), ("part", True)):
-        out = str(tmp_path / f"fact_{layout}")
-        ledger = str(tmp_path / f"ledger_{layout}")
-
-        def run(ckpt):
-            stream = _pl.read_envelope_stream(spark, str(landing))
-            fact = normalize_webhooks(_pl.envelopes_to_webhook_shape(stream))
-            q = _pl.start_ledger_gated_fact_sink(
-                fact, ledger, out, str(tmp_path / f"{ckpt}_{layout}"),
-                available_now=True, now_epoch=now_epoch,
-                partition_by_expiry=flag,
-            )
-            q.awaitTermination(180)
-
-        run("ckpt1")
-        # duplicate replay from a fresh checkpoint: the external ledger
-        # (not stream state) must gate both events out
-        run("ckpt2")
-        outs[layout] = sorted(
-            r.EventID for r in spark.read.parquet(out).collect()
-        )
-        part_dirs = [
-            d for d in os.listdir(ledger) if d.startswith("expiryDay=")
-        ]
-        if flag:
-            assert part_dirs, "partitioned sink lost its layout"
-            # claims expire ttl_days after now_epoch — UTC day 2024-02-03
-            assert part_dirs == ["expiryDay=2024-02-03"]
-        else:
-            assert not part_dirs
-
-    assert outs["flat"] == outs["part"] == ["ALOWARE:1", "ALOWARE:2"]
-
-
-def test_sink_partition_flag_is_three_valued(spark, tmp_path):
-    """ADVICE r13 (API asymmetry): the sink forwards append_ledger's
-    bool|None contract — explicit False now ENFORCES flat (fails loudly
-    against a partitioned ledger instead of silently following it), and
-    the default None follows the existing layout."""
-    import datetime as _dt
-    import json as _json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from quill_agent_dashboard_pbi_etl_spark import sinks
-    from quill_agent_dashboard_pbi_etl_spark.functions.adapter import (
-        normalize_webhooks,
-    )
-    from quill_agent_dashboard_pbi_etl_spark.streaming import pipeline as _pl
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    now_epoch = int(_dt.datetime(2024, 1, 20, tzinfo=_dt.timezone.utc).timestamp())
-    with open(landing / "a.json", "w") as f:
-        f.write(_json.dumps(_envelope(1)) + "\n")
-    ledger = str(tmp_path / "ledger")
-    seed = spark.createDataFrame(
-        [("seed-x", _dt.datetime(2024, 1, 19), now_epoch + 14 * 86400)],
-        "pk string, seenAt timestamp, expiresAt long",
-    ).withColumn("writer_id", F.lit("seed"))
-    sinks.append_ledger(seed, ledger, partition_by_expiry=True)
-
-    def run(flag, ckpt, expect_fail):
-        stream = _pl.read_envelope_stream(spark, str(landing))
-        fact = normalize_webhooks(_pl.envelopes_to_webhook_shape(stream))
-        q = _pl.start_ledger_gated_fact_sink(
-            fact, ledger, str(tmp_path / "fact"), str(tmp_path / ckpt),
-            available_now=True, now_epoch=now_epoch,
-            partition_by_expiry=flag,
-        )
-        if expect_fail:
-            with pytest.raises(Exception, match="already holds a"):
-                q.awaitTermination(180)
-        else:
-            q.awaitTermination(180)
-
-    # explicit False against the partitioned ledger: loud failure, no write
-    run(False, "ckpt_false", expect_fail=True)
-    # default None: follows the partitioned layout
-    run(None, "ckpt_none", expect_fail=False)
-    assert any(d.startswith("expiryDay=") for d in os.listdir(ledger))
-    led = spark.read.parquet(ledger)
-    assert {r.pk for r in led.collect()} == {"seed-x", "ALOWARE:1"}
-
-
 def test_partitioned_replay_across_utc_midnight_recovers_claims(spark, tmp_path):
-    """ADVICE r13 (high): a batch that appended its claims and crashed
-    before writing output must recover its survivors on replay EVEN WHEN
-    the retry crosses a UTC midnight. The verify read-back on a
-    partitioned ledger prunes expiryDay partitions; an equality prune on
-    day(now + ttl) recomputes `now` at retry time, lands one day past the
-    day the first attempt's claims landed in, reads back zero claims, and
-    commits an EMPTY output with _SUCCESS while the claims stand — the
-    events would be suppressed forever and reclaim would skip the tag
-    (its output looks committed). The range prune keeps every claim the
-    tag still owns."""
+    """A batch that appended its claims and crashed before writing output
+    must recover its survivors on replay EVEN WHEN the retry crosses a UTC
+    midnight. The retry recomputes `now` (and so `now + ttl`); if the
+    read-back of the tag's claims depended on it, the retry would read
+    back zero claims and commit an EMPTY output with _SUCCESS while the
+    claims stand — the events would be suppressed forever and reclaim
+    would skip the tag (its output looks committed)."""
     import datetime as _dt
     import json as _json
     import os
@@ -1096,7 +983,7 @@ def test_partitioned_replay_across_utc_midnight_recovers_claims(spark, tmp_path)
     ledger = str(tmp_path / "ledger")
     ckpt = str(tmp_path / "ckpt")
     # attempt 1 runs 30 s before a UTC midnight; the retry 30 s after it —
-    # day(now + ttl) differs between the attempts (2024-02-03 vs 2024-02-04)
+    # the UTC day of now + ttl differs between the attempts
     now1 = int(
         _dt.datetime(2024, 1, 20, 23, 59, 30, tzinfo=_dt.timezone.utc).timestamp()
     )
@@ -1111,7 +998,6 @@ def test_partitioned_replay_across_utc_midnight_recovers_claims(spark, tmp_path)
         q = _pl.start_ledger_gated_fact_sink(
             fact, ledger, out, ckpt,
             available_now=True, now_epoch=now_epoch,
-            partition_by_expiry=True,
         )
         if expect_fail:
             with pytest.raises(Exception):
@@ -1119,8 +1005,8 @@ def test_partitioned_replay_across_utc_midnight_recovers_claims(spark, tmp_path)
         else:
             q.awaitTermination(180)
 
-    # attempt 1: claims land in expiryDay=2024-02-03, then the batch dies
-    # between the claim append and the output write
+    # attempt 1: claims land in the ledger, then the batch dies between
+    # the claim append and the output write
     real_proj = _pl.to_physical_rows
 
     def _boom(df):
@@ -1132,14 +1018,11 @@ def test_partitioned_replay_across_utc_midnight_recovers_claims(spark, tmp_path)
     finally:
         _pl.to_physical_rows = real_proj
     assert os.listdir(ledger), "attempt 1 must have appended its claims"
-    assert any(
-        d.startswith("expiryDay=2024-02-03") for d in os.listdir(ledger)
-    )
 
     # retry: SAME checkpoint (same generation, same batch id → same tag),
     # but `now` has crossed the midnight. The gate sees the live claims
     # (nothing new to claim); the verify read-back must still find the
-    # tag's day-2024-02-03 claims and emit the event.
+    # tag's claims and emit the event.
     run(now2)
     emitted = sorted(r.EventID for r in spark.read.parquet(out).collect())
     assert emitted == ["ALOWARE:1"], (
@@ -1149,23 +1032,19 @@ def test_partitioned_replay_across_utc_midnight_recovers_claims(spark, tmp_path)
 
 
 def test_reclaim_on_partitioned_streaming_ledger(spark, tmp_path):
-    """The reclaim job on a partitioned streaming ledger: the orphan is
-    released through the layout-preserving rewrite (expiryDay= dirs
-    survive), an injected crash at the rewrite is recoverable with the
-    layout intact, and a fresh replay re-admits the event exactly once."""
+    """The reclaim job on a streaming ledger: the orphan is released
+    through the atomic rewrite, an injected crash at the rewrite's swap is
+    recoverable, and a fresh replay re-admits the event exactly once."""
     import os
 
     from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
         reclaim_orphaned_claims,
     )
 
-    s = _build_orphan_scenario(spark, tmp_path, partition_by_expiry=True)
-    assert any(
-        d.startswith("expiryDay=") for d in os.listdir(s["ledger"])
-    ), "scenario ledger is not partitioned"
+    s = _build_orphan_scenario(spark, tmp_path)
 
     # crash INSIDE the rewrite (after scratch write, before the swap):
-    # recovery must restore a readable, still-partitioned ledger
+    # recovery must restore a readable ledger
     real_rename = os.rename
 
     def _boom(src, dst):
@@ -1187,13 +1066,9 @@ def test_reclaim_on_partitioned_streaming_ledger(spark, tmp_path):
     # re-run-visible.
     got = reclaim_orphaned_claims(spark, s["ledger"], s["out"], [s["ckpt2"]])
     assert got.count() == 0
-    assert any(d.startswith("expiryDay=") for d in os.listdir(s["ledger"]))
     assert not os.path.exists(s["ledger"] + ".reclaim-new")
     assert not os.path.exists(s["ledger"] + ".reclaim-old")
-    led = {
-        r.pk: r.writer_id
-        for r in spark.read.parquet(s["ledger"]).drop("expiryDay").collect()
-    }
+    led = {r.pk: r.writer_id for r in spark.read.parquet(s["ledger"]).collect()}
     assert "ALOWARE:1" not in led
     assert led["ALOWARE:10"] == f"{s['g1']}-b0"
     # a fresh replay re-admits the released event exactly once

@@ -18,7 +18,7 @@ unsupported (``rewrite_ledger_atomic`` raises ``NotImplementedError``).
 Usage:
     python tools/reclaim_ledger.py --ledger /data/ledger \\
         --output-dir /data/fact --live-ckpt /ckpt/pipelineA \\
-        [--compact] [--now-epoch N] [--binpack-min-files N]
+        [--compact] [--now-epoch N]
 
 Prints one JSON line: {"reclaimed": N, "reclaimed_pks_sample": [...],
 "compacted": N|null}.
@@ -55,12 +55,6 @@ def main(argv=None, spark=None) -> dict:
         "--now-epoch", type=int, default=None,
         help="compaction cutoff override (default: wall clock)",
     )
-    ap.add_argument(
-        "--binpack-min-files", type=int, default=8,
-        help="with --compact on a partitioned ledger: also bin-pack each "
-        "CLOSED live day holding more than this many per-append files "
-        "(sinks.binpack_ledger_closed_days); pass 0 to disable",
-    )
     args = ap.parse_args(argv)
 
     from quill_agent_dashboard_pbi_etl_spark.sinks import compact_ledger
@@ -88,10 +82,7 @@ def main(argv=None, spark=None) -> dict:
         }
         if args.compact:
             summary["compacted"] = compact_ledger(
-                spark,
-                args.ledger,
-                now_epoch=args.now_epoch,
-                binpack_min_files=(args.binpack_min_files or None),
+                spark, args.ledger, now_epoch=args.now_epoch
             )
         print(json.dumps(summary))
         return summary
